@@ -5,9 +5,9 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 /** Fixture-table loaders (TESTDATA.md / FIXTURES.md §B).
   *
   * Each driver fixture is a single parquet file under the scale-factor dir.
-  * Always loaded with the parquet-embedded schema (explicit, not inferred at
-  * read time — parquet files carry their own StructType), so filters and
-  * column pruning push down to the scan.
+  * No schema is declared here: every load resolves the file and reads the
+  * schema from its parquet footer on the driver, once per load. Filters and
+  * column pruning still push down to the scan.
   */
 object Tables {
   val names: Seq[String] = Seq(

@@ -26,7 +26,12 @@ object Verify {
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
         .parquet(s"$outDir/$name")
       catch { case e: Throwable =>
-        System.err.println(s"[verify] $name failed: ${e.getMessage}")
+        // drop any previous run's output so the oracle compare cannot pass on it
+        val out = new org.apache.hadoop.fs.Path(s"$outDir/$name")
+        out.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(out, true)
+        val root = org.apache.commons.lang3.exception.ExceptionUtils.getRootCause(e)
+        System.err.println(
+          s"[verify] $name failed: ${root.getClass.getName}: ${root.getMessage}")
       }
       // Same session hygiene as Bench.releasePinnedBlocks: several queries
       // pin blocks (persist / lazy localCheckpoint) that outlive their

@@ -739,6 +739,10 @@ object Graph {
         $"est", $"n_nodes_sketched")
   }
 
+  /** The q294/q380 seed label domain: nations 0 until LpLabelK. It
+    * builds the seed filter and sizes the packed per-node vote counters. */
+  val LpLabelK = 5
+
   /** Semi-supervised label propagation — the CLASSIFICATION member of
     * the graph family (components assign CONNECTIVITY q76, PageRank
     * VALUES q197, BFS REACH q288; this assigns CLASSES): suppliers in
@@ -784,14 +788,11 @@ object Graph {
     import s.implicits._
     val nodes = edges.select($"src".as("node"))
     val seeds = nodes.join(
-      Tables.supplier(s, dir).filter($"s_nationkey" < 5)
+      Tables.supplier(s, dir).filter($"s_nationkey" < LpLabelK)
         .select(($"s_suppkey" * 2 + 1).as("node"),
           $"s_nationkey".cast("long").as("label")),
       Seq("node"))
     var layers = List(graft.operators.Pinned.checkpointAsIs(seeds, "node"))
-    // The seed label domain is nations 0–4 (the `s_nationkey < 5` seed
-    // filter above) — FIXED, so per-node votes pack into 5 counters.
-    val LpLabelK = 5
     (1 to 3).foreach { round =>
       val frontier = layers.head
       // Round-20 vote packing (guide §2.3/§2.4 — the q290 value-array

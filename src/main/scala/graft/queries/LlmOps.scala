@@ -6,7 +6,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.types.DecimalType
 
 import graft.Tables
-import graft.operators.{Pinned, TextOps, TwoPass, VectorOps}
+import graft.operators.{Fixpoint, Pinned, TextOps, TwoPass, VectorOps}
 import Portable._
 
 /** LLM-data-pipeline operators (north-star mandate): dedup (exact, MinHash-
@@ -826,23 +826,16 @@ object LlmOps {
     * minimum doc_id (so a keep-one-per-cluster policy is `doc_id == lab`).
     * Output: one row per multi-doc cluster with its sorted member list.
     *
-    * Algorithm: iterative min-label propagation to the unique fixpoint —
-    * label(v) ← min over {v} ∪ neighbors(v) of label; each round is one
-    * shuffled join+agg over the EDGE list (candidate pairs only, df-capped
-    * by the band scheme — never the corpus). The driver-side work per round
-    * is a single scalar (sum of labels as decimal(38,0): monotone decreasing
-    * and wrap-free — a BIGINT sum would silently wrap at the doc-id
-    * cardinalities a 100 TB corpus carries, and a wrapped "increase" would
-    * exit the loop before the fixpoint with wrong labels and no error)
-    * used as the convergence test; rounds ≤ component diameter,
-    * which for LSH bucket graphs is tiny (members of a bucket form a
-    * clique, so chains only arise across buckets). At true 100 TB scale
-    * with adversarial long chains you'd switch the iteration body to
+    * Algorithm: min-label propagation to the unique fixpoint
+    * ([[Fixpoint.minLabel]]); each round is one shuffled join+agg over the
+    * EDGE list (candidate pairs only, df-capped by the band scheme — never
+    * the corpus). Rounds ≤ component diameter, which for LSH bucket graphs
+    * is tiny (members of a bucket form a clique, so chains only arise
+    * across buckets), hence no pointer jump. At true 100 TB scale with
+    * adversarial long chains you'd switch the iteration body to
     * large-star/small-star contraction (O(log n) rounds, same fixpoint,
-    * same join/agg primitives); the declared formulation keeps the
-    * per-round plan identical and the fixpoint IS the oracle-checked
-    * contract. Lineage is cut per round with localCheckpoint so the plan
-    * does not deepen with iteration count. */
+    * same join/agg primitives); the fixpoint IS the oracle-checked
+    * contract. */
   def dedupClusters(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     dedupLabels(s, dir)
@@ -864,46 +857,14 @@ object LlmOps {
     val keyed = lshKeyed(s, dir).repartition($"band", $"bkey")
     val a = keyed.select($"doc_id".as("sa"), $"band", $"bkey")
     val b = keyed.select($"doc_id".as("ta"), $"band".as("band2"), $"bkey".as("bkey2"))
-    // directed both ways + self-loops: label(src) = min over dst of label(dst).
-    // pairs is materialized once (localCheckpoint); nodes/edges/iterations
-    // all read the materialized pair list, never the digest pipeline.
+    // directed both ways; pinned once (lazy: the fixpoint's first gate
+    // materializes it), so nodes, edges and every round read the pair
+    // list, never the digest pipeline.
     val pairs = a.join(b, $"band" === $"band2" && $"bkey" === $"bkey2" && $"sa" =!= $"ta")
       .select($"sa".as("src"), $"ta".as("dst")).distinct()
-      .localCheckpoint(eager = false) // the first labelSum materializes it
-    val nodes = pairs.select($"src").distinct()
-    val ed = pairs.unionByName(nodes.select($"src", $"src".as("dst")))
-    // LAZY pins (optimization-round rework): the eager checkpoint paid
-    // two actions per round — materialization plus the label-sum gate.
-    // With a lazy pin the labelSum job itself materializes the round's
-    // labels (the q345 loop's one-job-per-round shape); every later
-    // reader hits the pinned blocks. (An Observation-metric fusion of
-    // the sum into the checkpoint job was measured SLOWER — the
-    // listener-bus delivery lags each round by ~100 ms. So was the r20
-    // keyed-pin alignment of ed/labels via the Pinned helpers — their
-    // AQE-off subplan compile ran every per-round stage at the static
-    // 32-partition width, 10×+ the task time; see dbscanCensus.)
-    var labels = nodes.select($"src".as("doc"), $"src".as("lab"))
       .localCheckpoint(eager = false)
-    // coalesce: sum over an EMPTY label set (a corpus with zero LSH
-    // collisions) is null, and a bare getDecimal would NPE before the loop
-    // even decides it has nothing to do. decimal(38,0) holds up to ~10^19
-    // max-long labels without wrapping; BIGINT wraps at ~10 of them.
-    def labelSum(): java.math.BigDecimal = labels
-      .agg(coalesce(
-        org.apache.spark.sql.functions.sum($"lab".cast("decimal(38,0)")),
-        lit(BigDecimal(0)).cast("decimal(38,0)")))
-      .head.getDecimal(0)
-    var prevSum: java.math.BigDecimal = null
-    var sum = labelSum()
-    while (prevSum == null || sum.compareTo(prevSum) < 0) {
-      labels = ed.join(labels, $"dst" === $"doc")
-        .groupBy($"src").agg(min($"lab").as("lab"))
-        .select($"src".as("doc"), $"lab")
-        .localCheckpoint(eager = false) // one job per round: the labelSum
-      prevSum = sum
-      sum = labelSum()
-    }
-    labels
+    Fixpoint.minLabel(pairs, pairs.select($"src".as("node")).distinct(), jump = false)
+      .select($"node".as("doc"), $"lab")
   }
 
   /** Cluster SURVIVORSHIP — the keep-one policy applied to q76's near-dup
@@ -916,10 +877,11 @@ object LlmOps {
     * survivor + how many were removed. */
   def clusterSurvivorship(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val labels = dedupLabels(s, dir)
-    val sizes = labels.groupBy($"lab").agg(count(lit(1)).as("n_docs"))
+    // labels + cluster size in one eager pin: no second labels read for sizes
+    val members = dedupLabels(s, dir)
+      .withColumn("n_docs", count(lit(1)).over(Window.partitionBy($"lab")))
       .filter($"n_docs" >= 2)
-    val members = labels.join(sizes, "lab")
+      .localCheckpoint()
       .join(Tables.documents(s, dir)
           .select($"doc_id", length($"text").cast("long").as("len")),
         $"doc" === $"doc_id")
@@ -7478,45 +7440,15 @@ object LlmOps {
       .localCheckpoint(eager = false) // read by cores + non-cores
     val cores = deg.filter($"nn" >= DbscanMinPts).select($"ia".as("v"))
       .localCheckpoint(eager = false)
-    // NEGATIVE RESULT (r20, kept as documentation): pinning coreEdges and
-    // the per-round labels HASH-PLACED on the join keys (Pinned helpers)
-    // to make each round's join exchange-free was measured 2.5–3.5×
-    // SLOWER end to end (q345 5.4→13.2 s, q361 5.9→18.3 s; task time
-    // 2→277 s / 5→354 s): the Pinned helpers compile their subplan with
-    // AQE OFF, so every per-round stage ran at the static 32-partition
-    // width instead of AQE-coalescing to ~1 task — per-task overhead
-    // swamped the saved exchanges. Keyed pins pay off for ONE-TIME
-    // corpus-scale relations (adjacency builds), not for tiny per-round
-    // iterates; these stay plain lazy localCheckpoints.
+    // self-pairs dropped: the fixpoint adds the self-loops itself
     val coreEdges = nbr
+      .filter($"ia" =!= $"ib")
       .join(broadcast(cores.select($"v".as("ia"))), Seq("ia"), "semi")
       .join(broadcast(cores.select($"v".as("ib"))), Seq("ib"), "semi")
+      .select($"ia".as("src"), $"ib".as("dst"))
       .localCheckpoint(eager = false) // read every fixpoint round
-    var labels = cores.select($"v".as("doc"), $"v".as("lab"))
-      .localCheckpoint(eager = false) // materialized by the first labelSum
-    def labelSum(): java.math.BigDecimal = labels
-      .agg(coalesce(sum($"lab".cast(DecimalType(38, 0))),
-        lit(BigDecimal(0)).cast(DecimalType(38, 0))))
-      .head.getDecimal(0)
-    var prevSum: java.math.BigDecimal = null
-    var curSum = labelSum()
-    while (prevSum == null || curSum.compareTo(prevSum) < 0) {
-      val propagated = coreEdges.join(labels, $"ib" === $"doc")
-        .groupBy($"ia").agg(min($"lab").as("lab"))
-        .select($"ia".as("doc"), $"lab")
-      // pointer jump: labels are core ids, always present as docs
-      // (a second jump per round was measured SLOWER — the extra
-      // intermediate pin costs more than the ~3 saved rounds; so was an
-      // Observation-metric fusion of the sum into the checkpoint job —
-      // listener-bus delivery lags each round by ~100 ms)
-      labels = propagated.as("l")
-        .join(propagated.select($"doc".as("ld"), $"lab".as("ll")).as("r"),
-          col("l.lab") === col("r.ld"))
-        .select(col("l.doc").as("doc"), col("r.ll").as("lab"))
-        .localCheckpoint(eager = false) // one job per round: the labelSum
-      prevSum = curSum
-      curSum = labelSum()
-    }
+    val labels = Fixpoint.minLabel(coreEdges, cores.select($"v".as("node")), jump = true)
+      .select($"node".as("doc"), $"lab")
     val border = nbr
       .join(broadcast(deg.filter($"nn" < DbscanMinPts).select($"ia")),
         Seq("ia"), "semi")

@@ -3,7 +3,6 @@ package graft.queries
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
-import org.apache.spark.sql.types.DecimalType
 
 import graft.Tables
 import Portable._
@@ -1669,8 +1668,13 @@ object Relational {
           val futs = tasks.map(t => pool.submit(
             new java.util.concurrent.Callable[T] { def call(): T = t() }))
           // every future is awaited (Try) before the first failure is
-          // rethrown, so no job is left running when this method exits
-          futs.map(f => scala.util.Try(f.get())).map(_.get)
+          // rethrown (as its root cause, not the pool's wrapper), so no
+          // job is left running when this method exits
+          futs.map(f => scala.util.Try(f.get())).map {
+            case scala.util.Failure(e: java.util.concurrent.ExecutionException)
+                if e.getCause != null => throw e.getCause
+            case r => r.get
+          }
         }
         runAll(distincts.values.toSeq.map(df => () => {
           s.sparkContext.setJobDescription("q303: column distinct pin")
@@ -1684,7 +1688,11 @@ object Relational {
         pool.shutdown()
         pool.awaitTermination(10, java.util.concurrent.TimeUnit.MINUTES): Unit
       }
-    perPair.reduce(_ unionAll _).orderBy($"col_a", $"col_b")
+    // no pair passed the screen: zero verdict rows, same schema
+    perPair.reduceOption(_ unionAll _)
+      .getOrElse(Seq.empty[(String, String, Long, Long, Long, Long, String)]
+        .toDF("col_a", "col_b", "n_a", "n_b", "a_not_in_b", "b_not_in_a", "relation"))
+      .orderBy($"col_a", $"col_b")
   }
 
   /** Incremental materialized-view maintenance with RETRACTIONS — the
@@ -2018,40 +2026,13 @@ object Relational {
     val (classed, _) = linkageClassed(s, dir)
     val matched = classed.filter($"link_class" === "match")
       .select($"id_a".as("src"), $"id_b".as("dst"))
-    // min-label propagation to the fixpoint over matched records only
-    // (q76's loop: decimal label sum is the convergence gate — monotone
-    // decreasing, wrap-free at any key cardinality)
     val pairs = matched
       .unionAll(matched.select($"dst".as("src"), $"src".as("dst")))
       .distinct()
-      .localCheckpoint(eager = false) // the first labelSum materializes it
-    val nodes = pairs.select($"src").distinct()
-    val ed = pairs.unionByName(nodes.select($"src", $"src".as("dst")))
-    // LAZY pins (optimization-round rework): the eager checkpoint paid
-    // two actions per round — materialization plus the label-sum gate;
-    // with a lazy pin the labelSum job itself materializes the round's
-    // labels (the q345 loop's one-job-per-round shape). An Observation-
-    // metric fusion was measured SLOWER (listener-bus lag per round), and
-    // so was the r20 keyed-pin alignment of ed/labels (Pinned helpers):
-    // their AQE-off subplan compile ran every per-round stage at the
-    // static 32-partition width — measured 3.9→5.8 s / task 3.4→29.9 s
-    // on this query; see dbscanCensus for the full negative result.
-    var labels = nodes.select($"src".as("rec"), $"src".as("lab"))
-      .localCheckpoint(eager = false)
-    def labelSum(): java.math.BigDecimal = labels
-      .agg(coalesce(sum($"lab".cast(DecimalType(38, 0))),
-        lit(BigDecimal(0)).cast(DecimalType(38, 0))))
-      .head.getDecimal(0)
-    var prevSum: java.math.BigDecimal = null
-    var curSum = labelSum()
-    while (prevSum == null || curSum.compareTo(prevSum) < 0) {
-      labels = ed.join(labels, $"dst" === $"rec")
-        .groupBy($"src").agg(min($"lab").as("lab"))
-        .select($"src".as("rec"), $"lab")
-        .localCheckpoint(eager = false) // one job per round: the labelSum
-      prevSum = curSum
-      curSum = labelSum()
-    }
+      .localCheckpoint(eager = false) // the fixpoint's first gate materializes it
+    val labels = graft.operators.Fixpoint
+      .minLabel(pairs, pairs.select($"src".as("node")).distinct(), jump = false)
+      .select($"node".as("rec"), $"lab")
     // every record gets an entity: its component label, or itself
     val ents = Tables.customer(s, dir)
       .select($"c_custkey", $"c_name", cents($"c_acctbal").as("bal_c"))

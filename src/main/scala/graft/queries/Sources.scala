@@ -657,7 +657,11 @@ object Sources {
       // running when this method exits, racing whatever runs next
       // (including a retry's overwrite of the same paths)
       val errs = futs.flatMap(f => scala.util.Try(f.get()).failed.toOption)
-      errs.headOption.foreach(e => throw e)
+      errs.headOption.foreach {
+        case e: java.util.concurrent.ExecutionException if e.getCause != null =>
+          throw e.getCause
+        case e => throw e
+      }
     } finally {
       pool.shutdown()
       pool.awaitTermination(10, java.util.concurrent.TimeUnit.MINUTES): Unit

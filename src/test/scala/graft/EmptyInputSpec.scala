@@ -18,7 +18,7 @@ class EmptyInputSpec extends SparkSpec {
   private lazy val dir: String = {
     val d = Files.createTempDirectory("empty_input").toString
     // schema-exact empty tables: read the fixture, keep zero rows
-    for (t <- Seq("orders", "documents")) {
+    for (t <- Seq("orders", "documents", "customer", "lineitem", "supplier")) {
       spark.read.parquet(s"$sfDir/$t.parquet")
         .limit(0)
         .coalesce(1).write.mode("overwrite").parquet(s"$d/$t.parquet")
@@ -26,8 +26,9 @@ class EmptyInputSpec extends SparkSpec {
     d
   }
 
+  // q303: empty tables pass no column pair through its sketch screen
   for (name <- Seq("q341_theil_sen_trend", "q343_holt_linear",
-      "q348_bootstrap_ci")) {
+      "q348_bootstrap_ci", "q303_inclusion_direction")) {
     test(s"$name emits zero rows on an empty table (no error, no NULL row)") {
       assert(SparkEntry.queries(name)(spark, dir).collect().isEmpty)
     }

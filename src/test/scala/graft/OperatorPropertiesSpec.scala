@@ -5728,4 +5728,38 @@ class OperatorPropertiesSpec extends SparkSpec {
     assert(fx.head.getAs[Double]("fleiss_kappa") === expect)
     assert(fx.head.getAs[Long]("n_keep_votes") === k.toLong)
   }
+
+  test("Fixpoint.minLabel matches a driver-side min-id union-find on symmetric graphs") {
+    import graft.operators.Fixpoint
+    // reference: union-find whose root is always the set's minimum id
+    def unionFind(ids: Seq[Long], es: Seq[(Long, Long)]): Map[Long, Long] = {
+      val parent = scala.collection.mutable.Map(ids.map(v => v -> v): _*)
+      def find(v: Long): Long =
+        if (parent(v) == v) v else { val r = find(parent(v)); parent(v) = r; r }
+      es.foreach { case (a, b) =>
+        val (ra, rb) = (find(a), find(b))
+        parent(math.max(ra, rb)) = math.min(ra, rb)
+      }
+      ids.map(v => v -> find(v)).toMap
+    }
+    val random = for {
+      n <- Gen.choose(1, 24)
+      ids <- Gen.listOfN(n, Gen.choose(0L, 1000L)).map(_.distinct)
+      m <- Gen.choose(0, 2 * n)
+      es <- Gen.listOfN(m, Gen.zip(Gen.oneOf(ids), Gen.oneOf(ids)))
+    } yield (ids, es.filter { case (a, b) => a != b })
+    val chain = (10L to 1L by -1).toList // 9 hops; the minimum sits at one end
+    val fixed = Seq(
+      (Seq.empty[Long], Seq.empty[(Long, Long)]),                  // no nodes at all
+      (Seq(5L, 7L, 9L), Seq.empty[(Long, Long)]),                  // empty edge set
+      (Seq(1L, 2L, 3L, 40L), Seq(3L -> 2L)),                       // isolated nodes
+      (Seq(8L, 3L, 6L, 1L, 4L), Seq(8L -> 3L, 3L -> 6L, 4L -> 1L)), // two components
+      (chain, chain.zip(chain.tail)))
+    for ((ids, es) <- fixed ++ samples(random, 8); jump <- Seq(false, true)) {
+      val sym = (es ++ es.map(_.swap)).distinct
+      val got = Fixpoint.minLabel(sym.toDF("src", "dst"), ids.toDF("node"), jump)
+        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+      assert(got === unionFind(ids, es), s"nodes=$ids edges=$es jump=$jump")
+    }
+  }
 }

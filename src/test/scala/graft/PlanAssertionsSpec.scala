@@ -855,4 +855,30 @@ class PlanAssertionsSpec extends SparkSpec {
         s"$q: per-layer anti-join chain reappeared (pair-state regression):\n$p")
     }
   }
+
+  test("Fixpoint round: one keyed min aggregate under AQE, no repartition") {
+    import org.apache.spark.sql.catalyst.expressions.aggregate.{AggregateExpression, Min}
+    import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Join, RepartitionByExpression}
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+    import spark.implicits._
+    // pinned inputs, as the kernel's rounds see them
+    val ed = Seq((1L, 2L), (2L, 1L), (1L, 1L), (2L, 2L)).toDF("src", "dst")
+      .localCheckpoint()
+    val labels = Seq((1L, 1L), (2L, 2L)).toDF("node", "lab").localCheckpoint()
+    for (jump <- Seq(false, true)) {
+      val qe = graft.operators.Fixpoint.round(ed, labels, jump).queryExecution
+      assert(qe.executedPlan.isInstanceOf[AdaptiveSparkPlanExec])
+      val plan = qe.optimizedPlan
+      // the jump's self-join reads the same subtree twice: count distinct nodes
+      val aggs = plan.collect { case a: Aggregate => a }.map(_.canonicalized).distinct
+      assert(aggs.size === 1, plan.treeString)
+      val agg = aggs.head.asInstanceOf[Aggregate]
+      assert(agg.groupingExpressions.nonEmpty)
+      assert(agg.aggregateExpressions.flatMap(_.collect {
+        case AggregateExpression(_: Min, _, _, _, _) => 1 }).size === 1)
+      assert(plan.collect { case j: Join => j.canonicalized }.distinct.size ===
+        (if (jump) 2 else 1))
+      assert(plan.collect { case r: RepartitionByExpression => r }.isEmpty)
+    }
+  }
 }
