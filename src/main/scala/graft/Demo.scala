@@ -56,7 +56,7 @@ object Demo {
     val viaGen = Seq(("2026-08-12.html", html)).toDF("file", "value")
       .selectExpr("graft_extract_listings(file, value)")
     println("generator rows: " + viaGen.count())
-    val emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
+    val emb = Tables.embeddings(spark, graft.queries.Oracle.sfDir)
     val topk = graft.plans.SimilarityOps.cosineTopK(
       emb.limit(3), emb("vec_id"), emb("embedding"),
       emb, emb("vec_id"), emb("embedding"), k = 2)

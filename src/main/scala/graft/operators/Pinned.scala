@@ -36,13 +36,16 @@ object Pinned {
     * deployment that needs executor-loss survival sets
     * `SPARK_GRAFT_PIN_MODE=reliable` (and a durable
     * `sparkContext.setCheckpointDir`, e.g. an object-store path via
-    * `SPARK_GRAFT_CHECKPOINT_DIR`): every pin then writes through the
-    * reliable checkpoint path — same plan shape, same recorded
-    * partitioning, recomputable after any loss, at the cost of one
-    * distributed-FS round trip per pin. Pin SIZE is bounded by the
-    * callers: every pinned relation is either census/vocabulary-sized
-    * or one |V|/|E|-row iterate of a loop — never a multiple of the
-    * corpus (the corpus-sized ensemble base pins toks+digests once
+    * `SPARK_GRAFT_CHECKPOINT_DIR`; without either, the pin fails at
+    * once): every pin then writes through the reliable checkpoint path —
+    * same plan shape, same recorded partitioning, recomputable after any
+    * loss, at the cost of one distributed-FS round trip per pin. The
+    * frame is persisted first, so the checkpoint write reads the blocks
+    * the pin's first action cached instead of computing the subtree a
+    * second time; the harness's end-of-query cache release frees them.
+    * Pin SIZE is bounded by the callers: every pinned relation is either
+    * census/vocabulary-sized or one |V|/|E|-row iterate of a loop — never
+    * a multiple of the corpus (the corpus-sized ensemble base pins toks+digests once
     * INSTEAD of seven corpus scans; that trade is documented at its
     * call site). */
   private def pinMode: String =
@@ -54,13 +57,20 @@ object Pinned {
 
   /** Lazy checkpoint in the configured [[pinMode]] — the one place the
     * local-vs-reliable decision lives. */
-  def pin(df: DataFrame): DataFrame = pinMode match {
+  def pin(df: DataFrame): DataFrame =
+    pin(df, pinMode, sys.env.get("SPARK_GRAFT_CHECKPOINT_DIR"))
+
+  /** [[pin]] with the mode and the `SPARK_GRAFT_CHECKPOINT_DIR` value
+    * passed in rather than read from the environment. */
+  private[graft] def pin(df: DataFrame, mode: String,
+      checkpointDir: Option[String]): DataFrame = mode match {
     case "reliable" =>
-      sys.env.get("SPARK_GRAFT_CHECKPOINT_DIR").foreach { d =>
-        if (df.sparkSession.sparkContext.getCheckpointDir.isEmpty)
-          df.sparkSession.sparkContext.setCheckpointDir(d)
-      }
-      df.checkpoint(eager = false)
+      val sc = df.sparkSession.sparkContext
+      if (sc.getCheckpointDir.isEmpty) sc.setCheckpointDir(checkpointDir.getOrElse(
+        throw new IllegalStateException(
+          "SPARK_GRAFT_PIN_MODE=reliable needs a checkpoint directory: set " +
+            "SPARK_GRAFT_CHECKPOINT_DIR or call sparkContext.setCheckpointDir")))
+      df.persist().checkpoint(eager = false)
     case _ => df.localCheckpoint(eager = false)
   }
 

@@ -286,7 +286,7 @@ object Graph {
     * fails CI before a build dies. Shared by q288/q291/q294/q301; q290
     * keeps the weighted PAIR build (its per-pair trade counts need the
     * (src,dst) grain). */
-  private def tradeAdjacency(s: SparkSession, dir: String): DataFrame = {
+  private[graft] def tradeAdjacency(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     val raw = Tables.orders(s, dir)
       .join(Tables.lineitem(s, dir), $"o_orderkey" === $"l_orderkey")
@@ -783,7 +783,7 @@ object Graph {
     * throughout (round-15): the seed join inherits the adjacency's
     * hash(node) placement, and each round's picks end in their own
     * groupBy(node) exchange carried through the anti-chain. */
-  private def lpLayersUnion(s: SparkSession, dir: String,
+  private[graft] def lpLayersUnion(s: SparkSession, dir: String,
       edges: DataFrame): DataFrame = {
     import s.implicits._
     val nodes = edges.select($"src".as("node"))

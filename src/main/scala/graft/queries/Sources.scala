@@ -385,7 +385,7 @@ object Sources {
     * the same sizes filesystem-side). */
   def fileMetadata(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    s.read.parquet(s"$dir/lineitem.parquet")
+    Tables.lineitem(s, dir)
       .select($"l_orderkey", $"_metadata.file_name".as("fname"))
       .groupBy($"fname")
       .agg(count(lit(1)).as("n_rows"), max($"l_orderkey").as("max_key"))

@@ -881,4 +881,33 @@ class PlanAssertionsSpec extends SparkSpec {
       assert(plan.collect { case r: RepartitionByExpression => r }.isEmpty)
     }
   }
+
+  test("q290 widest path: no (seed, node) grouping, one node-keyed 40-slot fold") {
+    import org.apache.spark.sql.catalyst.expressions.aggregate.{AggregateExpression, Max}
+    import org.apache.spark.sql.catalyst.plans.logical.Aggregate
+    // hops 1-2 are pinned; hop 3's fold and the per-seed census are lazy
+    val plan = SparkEntry.queries("q290_widest_path_census")(spark, sfDir)
+      .queryExecution.optimizedPlan
+    val aggs = plan.collect { case a: Aggregate => a }
+    assert(aggs.forall(_.groupingExpressions.size == 1),
+      s"a multi-key (pair-state) grouping reappeared:\n$plan")
+    val folds = aggs.filter(_.aggregateExpressions.flatMap(_.collect {
+      case AggregateExpression(_: Max, _, _, _, _) => 1 }).size == 40)
+    assert(folds.size === 1, plan.treeString)
+    assert(folds.head.groupingExpressions.head.references.map(_.name).toSet ===
+      Set("node"))
+  }
+
+  test("q294/q380 label propagation: one vnode-keyed aggregate per vote round") {
+    import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Window}
+    import graft.queries.Graph
+    // the layers both queries share; rounds 1-2 are pinned, round 3 is lazy
+    val plan = Graph.lpLayersUnion(spark, sfDir, Graph.tradeAdjacency(spark, sfDir))
+      .queryExecution.optimizedPlan
+    val aggs = plan.collect { case a: Aggregate => a }
+    assert(aggs.size === 1, plan.treeString)
+    assert(aggs.head.groupingExpressions.flatMap(_.references).map(_.name) ===
+      Seq("vnode"))
+    assert(plan.collect { case w: Window => w }.isEmpty, plan.treeString)
+  }
 }
