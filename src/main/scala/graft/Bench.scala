@@ -1,5 +1,6 @@
 package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import graft.operators.Pinned
 object Bench {
   /** Execute the query's REAL plan: a noop-format write runs the full
     * executed plan — final sorts, wide projections, everything Verify
@@ -9,25 +10,9 @@ object Bench {
   private def exec(df: DataFrame): Unit =
     df.write.mode("overwrite").format("noop").save()
 
-  /** Bench-session hygiene, run after every query execution (outside the
-    * timed region): several declared queries pin blocks for intra-query
-    * reuse (`persist` / lazy `localCheckpoint` — q76, q109/q110, q149,
-    * q181, q197, q202, q204) and nothing inside the query can release
-    * them (the pin must outlive the query's own action). One JVM running
-    * 200+ queries × 3 iterations otherwise accumulates storage memory
-    * monotonically, and round 7 showed that contaminating UNCHANGED
-    * queries' timings up to 10× (q129 3.4 s → 35.5 s with an identical
-    * plan). Unpersist is safe here: every iteration rebuilds its
-    * DataFrame from scratch, so no later action re-reads these blocks. */
-  private def releasePinnedBlocks(spark: SparkSession): Unit = {
-    spark.catalog.clearCache()
-    spark.sparkContext.getPersistentRDDs.values
-      .foreach(_.unpersist(blocking = false))
-  }
-
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
     // Optional comma-separated query filter (e.g. the sf1 soak runs just
     // the fact-table join/agg subset); empty/unset = the full set.
     val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY")
@@ -58,18 +43,7 @@ object Bench {
         case other => sys.error(s"unknown SPARK_GRAFT_BENCH_ORDER: $other")
       }
     }
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .withExtensions(new graft.functions.GraftExtensions)
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // UTC like every other entry point: the NTZ fallback in
-      // Tables.readEvents casts wall-clock NTZ to session-zone LTZ, so a
-      // non-UTC session zone would shift event timestamps and change the
-      // session/as-of workloads being timed.
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.builder(cpus).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     // Warm-up: run the whole set once at the smallest SF so the timed pass
     // below measures query execution, not JVM JIT + whole-stage-codegen
@@ -79,7 +53,7 @@ object Bench {
     if (new java.io.File(warmDir).isDirectory && warmDir != sfDir)
       queries.foreach { case (_, fn) =>
         try exec(fn(spark, warmDir)) catch { case _: Throwable => () }
-        releasePinnedBlocks(spark)
+        Pinned.releaseAll(spark)
       }
     // n timed iterations per query, report the per-query MEDIAN and the
     // total of medians: single-shot timings on this box show ±3× jitter on
@@ -103,7 +77,7 @@ object Bench {
             false
         }
         val dt = (System.nanoTime() - t0) / 1e9
-        releasePinnedBlocks(spark) // hygiene is not part of the query's time
+        Pinned.releaseAll(spark) // hygiene is not part of the query's time
         (name, dt, ok)
       }
     }

@@ -1,6 +1,6 @@
 package graft
 import java.nio.file.{Files, Paths}
-import org.apache.spark.sql.SparkSession
+import graft.operators.Pinned
 
 /** Optimization-round plan artifacts: write `.explain("formatted")` for the
   * named declared queries (all by default) to <outDir>/<name>_<tag>.txt so
@@ -16,15 +16,9 @@ object PlanDump {
     val names = if (args.length > 2) args.drop(2).toSeq
                 else SparkEntry.queries.keys.toSeq.sorted
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .withExtensions(new graft.functions.GraftExtensions)
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
+    val spark = GraftSession.builder(cpus)
       .config("spark.sql.maxToStringFields", 200)
-      .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     Files.createDirectories(Paths.get(outDir))
@@ -34,9 +28,7 @@ object PlanDump {
         org.apache.spark.sql.execution.FormattedMode)
       Files.writeString(Paths.get(s"$outDir/${n}_$tag.txt"), txt)
       // pins/persists from plan construction must not leak across queries
-      spark.catalog.clearCache()
-      spark.sparkContext.getPersistentRDDs.values
-        .foreach(_.unpersist(blocking = false))
+      Pinned.releaseAll(spark)
       println(s"[plandump] wrote $outDir/${n}_$tag.txt")
     }
     spark.stop()

@@ -1,6 +1,6 @@
 package graft
 import org.apache.spark.scheduler._
-import org.apache.spark.sql.SparkSession
+import graft.operators.Pinned
 import java.util.concurrent.atomic.{AtomicInteger, AtomicLong}
 
 /** Optimization-round measurement probe (guide §1): run named queries with
@@ -46,16 +46,9 @@ object Probe {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
     val iters = sys.env.getOrElse("SPARK_GRAFT_PROBE_ITERS", "3").toInt
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .withExtensions(new graft.functions.GraftExtensions)
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.builder(cpus).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     val acc = new Acc
     spark.sparkContext.addSparkListener(acc)
@@ -63,21 +56,17 @@ object Probe {
     def run(n: String): Unit =
       SparkEntry.queries(n)(spark, sfDir)
         .write.mode("overwrite").format("noop").save()
-    def clean(): Unit = {
-      spark.catalog.clearCache()
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = false))
-    }
     // warm once at sf0.001 for codegen/JIT
     names.foreach { n =>
       try SparkEntry.queries(n)(spark, "/root/testdata/sf0.001")
         .write.mode("overwrite").format("noop").save()
       catch { case _: Throwable => () }
-      clean()
+      Pinned.releaseAll(spark)
     }
     println(f"${"query"}%-38s ${"wall_s"}%7s ${"jobs"}%5s ${"stg"}%5s ${"tasks"}%6s ${"task_s"}%8s ${"gc_s"}%6s ${"shufMB"}%7s")
     names.foreach { n =>
       val walls = (1 to iters).map { _ =>
-        clean()
+        Pinned.releaseAll(spark)
         Thread.sleep(50)
         acc.reset()
         val t0 = System.nanoTime()

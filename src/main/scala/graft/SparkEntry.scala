@@ -1,24 +1,34 @@
 package graft
 import org.apache.spark.sql.{SparkSession, DataFrame}
 import graft.queries._
-/** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt. */
+/** Driver contract — see SURVEY.md §7. A query is added as one [[Query]]
+  * (name, Spark build, DuckDB oracle SQL) in its module's `declared`. */
 object SparkEntry {
   /** Flagship query on /root/testdata/sf0.001; driver smoke-checks rows>0. */
   def entry(spark: SparkSession): DataFrame =
     Relational.revenueByNation(spark, "/root/testdata/sf0.001")
-  /** One entry per implemented operator from SURVEY.md §2. */
-  def queries: Map[String, (SparkSession, String) => DataFrame] =
-    Relational.queries ++ Aggregates.queries ++ Windows.queries ++
-      Scalars.queries ++ Sources.queries ++ LlmOps.queries ++
-      SqlApi.queries ++ TimeSeries.queries ++ Graph.queries ++ Media.queries
-  /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
-    * the same parquet tables. Omit for non-SQL-expressible ops. */
+
+  /** Every declared query; a name declared twice fails registration. */
+  lazy val declared: Seq[Query] = register(
+    Relational.declared ++ Aggregates.declared ++ Windows.declared ++
+      Scalars.declared ++ Sources.declared ++ LlmOps.declared ++
+      SqlApi.declared ++ TimeSeries.declared ++ Graph.declared ++ Media.declared)
+
+  private[graft] def register(qs: Seq[Query]): Seq[Query] = {
+    val twice = qs.groupBy(_.name).collect { case (n, ds) if ds.size > 1 => n }
+    require(twice.isEmpty, s"query declared twice: ${twice.toSeq.sorted.mkString(", ")}")
+    qs
+  }
+
+  lazy val queries: Map[String, (SparkSession, String) => DataFrame] =
+    declared.map(q => q.name -> q.build).toMap
+
+  /** For each query, equivalent ANSI SQL runnable by DuckDB on the same
+    * parquet tables at the driver's correctness scale. */
   def oracleSql: Map[String, String] = oracleSqlFor(Oracle.sfDir)
 
   /** Oracle SQL rewritten against an arbitrary scale-factor dir (Verify
     * passes its runtime sfDir so results and oracles stay coupled). */
   def oracleSqlFor(dir: String): Map[String, String] =
-    Oracle(Relational.oracles ++ Aggregates.oracles ++ Windows.oracles ++
-      Scalars.oracles ++ Sources.oracles ++ LlmOps.oracles ++
-      SqlApi.oracles ++ TimeSeries.oracles ++ Graph.oracles ++ Media.oracles, dir)
+    declared.map(q => q.name -> Oracle.rewrite(q.oracle, dir)).toMap
 }

@@ -1,5 +1,5 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import graft.operators.Pinned
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json for the DuckDB-oracle compare, and
@@ -8,15 +8,8 @@ import java.nio.file.{Files, Paths}
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .withExtensions(new graft.functions.GraftExtensions)
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
+    val spark = GraftSession.builder(cpus).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
     // Dev-loop filter (comma-separated names); the driver leaves this unset.
@@ -38,12 +31,7 @@ object Verify {
           s"[verify] $name failed: ${root.getClass.getName}: ${root.getMessage}")
         Some((name, root.getClass.getName, String.valueOf(root.getMessage)))
       }
-      // Same session hygiene as Bench.releasePinnedBlocks: several queries
-      // pin blocks (persist / lazy localCheckpoint) that outlive their
-      // action; 200+ queries in one JVM must not accumulate them.
-      spark.catalog.clearCache()
-      spark.sparkContext.getPersistentRDDs.values
-        .foreach(_.unpersist(blocking = false))
+      Pinned.releaseAll(spark)
       failure
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 
 /** Pin an immutable relation hash-partitioned on the keys its consumers
   * iterate against — the cluster contract for iterative algorithms:
@@ -72,6 +72,21 @@ object Pinned {
             "SPARK_GRAFT_CHECKPOINT_DIR or call sparkContext.setCheckpointDir")))
       df.persist().checkpoint(eager = false)
     case _ => df.localCheckpoint(eager = false)
+  }
+
+  /** Release every cached frame and persisted RDD the session holds. The
+    * harnesses (Bench, Verify, Probe, PlanDump) call this after each query,
+    * outside any timed region: several queries pin blocks for intra-query
+    * reuse that nothing inside the query can release (the pin must outlive
+    * the query's own action), and one JVM running 440 queries otherwise
+    * accumulates storage memory monotonically — round 7 saw that inflate
+    * UNCHANGED queries' timings up to 10× (q129 3.4 s → 35.5 s with an
+    * identical plan). Safe because every run rebuilds its DataFrame from
+    * scratch, so no later action re-reads these blocks. */
+  def releaseAll(spark: SparkSession): Unit = {
+    spark.catalog.clearCache()
+    spark.sparkContext.getPersistentRDDs.values
+      .foreach(_.unpersist(blocking = false))
   }
 
   /** Lazy localCheckpoint of `df` hash-partitioned on `keys`, with the

@@ -2831,83 +2831,6 @@ object Aggregates {
       .orderBy($"o_orderpriority")
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q289_fd_discovery" -> fdDiscovery,
-    "q375_spearman_census" -> spearmanCensus,
-    "q376_kendall_tau" -> kendallTau,
-    "q423_ordinal_assoc_panel" -> ordinalAssocPanel,
-    "q427_jonckheere_terpstra" -> jonckheereTerpstra,
-    "q410_partial_correlation" -> partialCorrelation,
-    "q412_ols_influence" -> olsInfluence,
-    "q414_simpson_reversal" -> simpsonReversal,
-    "q437_mantel_haenszel" -> mantelHaenszel,
-    "q415_mean_excess_census" -> meanExcessCensus,
-    "q389_robust_mean_census" -> robustMeanCensus,
-    "q384_gini_concentration" -> giniConcentration,
-    "q280_discount_elasticity" -> discountElasticity,
-    "q281_shipping_delay_sla" -> shippingDelaySla,
-    "q282_return_rate_trend" -> returnRateTrend,
-    "q275_relationship_profile" -> Relational.relationshipProfile,
-    "q276_column_profile" -> columnProfile,
-    "q274_grouped_mode" -> groupedMode,
-    "q266_topk_listagg" -> topkListagg,
-    "q267_percent_of_parent" -> percentOfParent,
-    "q259_reaggregation_invariance" -> reaggregationInvariance,
-    "q255_basket_size_histogram" -> basketSizeHistogram,
-    "q256_equiwidth_histogram" -> equiwidthHistogram,
-    "q251_revenue_concentration" -> revenueConcentration,
-    "q252_nation_trade_balance" -> nationTradeBalance,
-    "q229_segment_migration" -> segmentMigration,
-    "q230_price_volume_decomposition" -> priceVolumeDecomposition,
-    "q224_rfm_segmentation" -> rfmSegmentation,
-    "q225_expectation_audit" -> expectationAudit,
-    "q222_ab_chi2_census" -> abChiSquareCensus,
-    "q212_winsorized_stats" -> winsorizedStats,
-    "q213_decile_lift" -> decileLift,
-    "q201_benford_audit" -> benfordAudit,
-    "q198_skew_census" -> skewCensus,
-    "q195_corr_census" -> corrCensus,
-    "q187_agg_multi_pivot" -> multiMeasurePivot,
-    "q188_fn_nested_struct_hof" -> nestedStructHof,
-    "q185_agg_equidepth_buckets" -> equiDepthBuckets,
-    "q186_agg_minmax_normalize" -> minMaxNormalize,
-    "q171_sliding_distinct_hll" -> slidingDistinctHll,
-    "q169_pareto_frontier" -> paretoFrontier,
-    "q168_agg_bloom_contract" -> bloomFilterContract,
-    "q292_cms_frequency_contract" -> cmsFrequencyContract,
-    "q308_cms_join_size_contract" -> cmsJoinSizeContract,
-    "q309_exact_quantile_selection" -> exactQuantileSelection,
-    "q313_quantile_sketch_rollup" -> quantileSketchRollup,
-    "q310_kmv_intersection_census" -> kmvIntersectionCensus,
-    "q166_agg_mad_outliers" -> madOutliers,
-    "q167_agg_weighted_median" -> weightedMedian,
-    "q162_stat_crosstab" -> crosstabAgg,
-    "q144_agg_percentile_exact" -> percentileExact,
-    "q137_agg_listagg" -> listaggAgg,
-    "q124_agg_mode" -> modeAgg,
-    "q91_agg_regression" -> regressionAgg,
-    "q92_agg_hll_merge" -> hllMergeRollup,
-    "q87_agg_stats_moments" -> statsMoments,
-    "q88_agg_bitwise_bool" -> bitwiseBoolAgg,
-    "q89_agg_arg_extremes" -> argExtremes,
-    "q11_agg_multi_measure" -> multiMeasure,
-    "q12_agg_count_distinct" -> countDistinctAgg,
-    "q13_agg_rollup" -> rollupAgg,
-    "q14_agg_cube" -> cubeAgg,
-    "q36_grouping_sets" -> groupingSetsAgg,
-    "q58_pivot" -> pivotAgg,
-    "q79_unpivot" -> unpivotAgg,
-    "q63_agg_quartiles" -> quartilesAgg,
-    "q73_agg_approx_percentile" -> approxPercentileAgg,
-    "q15_agg_filtered" -> filteredAgg,
-    "q16_agg_string_agg" -> stringAgg,
-    "q17_agg_udaf_weighted_mean" -> udafWeightedMean,
-    "q18_agg_approx_distinct" -> approxDistinct,
-    "q97_agg_bitmap_distinct" -> bitmapDistinctRollup,
-    "q111_agg_heavy_hitters" -> heavyHitters,
-    "q113_typed_mapgroups" -> typedMapGroups
-  )
-
   /** Shared q375/q376 oracle prefix: the (flag, q, d) cell census. */
   private def rankCellsSql: String =
     s"""li AS (SELECT l_returnflag,
@@ -2919,10 +2842,10 @@ object Aggregates {
        |  FROM li GROUP BY 1, 2, 3
        |)""".stripMargin
 
-  val oracles: Map[String, String] = Map(
+  val declared: Seq[Query] = Seq(
     // census selection twins: partial-run trimming arithmetic, the two
     // boundary-rank conditional mins, VARCHAR-routed big casts
-    "q389_robust_mean_census" ->
+    Query("q389_robust_mean_census", robustMeanCensus,
       s"""WITH census AS MATERIALIZED (
          |  SELECT o_orderpriority, x, CAST(count(*) AS BIGINT) AS w FROM (
          |    SELECT o_orderpriority, ${centsSql("o_totalprice")} AS x
@@ -2965,10 +2888,10 @@ object Aggregates {
          |            AS DOUBLE) / CAST(n AS DOUBLE) AS winsorized_mean,
          |       CAST(x_lo AS BIGINT) AS x_lo, CAST(x_hi AS BIGINT) AS x_hi
          |FROM g
-         |ORDER BY o_orderpriority""".stripMargin,
+         |ORDER BY o_orderpriority""".stripMargin),
     // value census + doubled rank sums; the top-decile cut takes
     // min(w, k − cum_above) units from a straddling run
-    "q384_gini_concentration" ->
+    Query("q384_gini_concentration", giniConcentration,
       s"""WITH census AS MATERIALIZED (
          |  SELECT x, CAST(count(*) AS BIGINT) AS w FROM (
          |    SELECT CAST(sum(c) AS BIGINT) AS x
@@ -3007,11 +2930,11 @@ object Aggregates {
          |       CASE WHEN s > 0 THEN
          |         CAST(top_cents AS DOUBLE) / CAST(s AS DOUBLE)
          |       END AS top_decile_share
-         |FROM g, topc""".stripMargin,
+         |FROM g, topc""".stripMargin),
     // ONE 12-cell conditional agg over the fixed {A,N,R} strata →
     // fixed-order three-term rational sums → single-divide OR_MH +
     // the split-factor CMH variance tree
-    "q437_mantel_haenszel" -> {
+    Query("q437_mantel_haenszel", mantelHaenszel, {
       def dbl(x: String) = s"CAST(CAST($x AS VARCHAR) AS DOUBLE)"
       def n(i: Int) = s"(a$i + b$i + c$i + d$i)"
       def term(x: String, y: String, i: Int) =
@@ -3072,10 +2995,10 @@ object Aggregates {
          |                (($crude) - 1.0) * ($orNum / $orDen - 1.0) < 0.0
          |                END, FALSE) AS reversal
          |FROM g""".stripMargin
-    },
+    }),
     // value census → three exact ceil-rank selections → broadcast-theta
     // excess fold (numerator HUGEINT, shared divides)
-    "q415_mean_excess_census" ->
+    Query("q415_mean_excess_census", meanExcessCensus,
       s"""WITH census AS MATERIALIZED (
          |  SELECT ${centsSql("o_totalprice")} AS v,
          |         CAST(count(*) AS BIGINT) AS c
@@ -3116,10 +3039,10 @@ object Aggregates {
          |            THEN ${ratioSql("g.sum_bits", "g.n_exceed")} END
          |         AS dyadic_tail_bits
          |FROM thr t LEFT JOIN g ON g.pct = t.pct
-         |ORDER BY t.pct""".stripMargin,
+         |ORDER BY t.pct""".stripMargin),
     // the q410 r tree at two grains (flag / flag×stratum) → a
     // census-sized sign fold; NULL strata counted, never reversed
-    "q414_simpson_reversal" -> {
+    Query("q414_simpson_reversal", simpsonReversal, {
       def rSql(pre: String) =
         s"CASE WHEN CAST(${pre}n AS HUGEINT) * ${pre}sxx " +
           s"- ${pre}sx * ${pre}sx > 0 " +
@@ -3164,11 +3087,11 @@ object Aggregates {
          |         AS all_reversed
          |FROM strata s JOIN pooled p ON p.l_returnflag = s.l_returnflag
          |GROUP BY 1 ORDER BY 1""".stripMargin
-    },
+    }),
     // one exact moment agg per flag (VARCHAR-routed), closed-form SSE
     // (no float sum crosses a shuffle), per-row influence trees, a
     // total-ordered top-15
-    "q412_ols_influence" ->
+    Query("q412_ols_influence", olsInfluence,
       s"""WITH b AS (
          |  SELECT l_orderkey, l_linenumber, l_returnflag,
          |         CAST(l_quantity AS BIGINT) AS x,
@@ -3226,10 +3149,10 @@ object Aggregates {
          |         AS cooks_d
          |FROM sc
          |ORDER BY cooks_d DESC, l_orderkey ASC, l_linenumber ASC
-         |LIMIT 15""".stripMargin,
+         |LIMIT 15""".stripMargin),
     // one 10-cell exact moment agg per flag; every r is the q375
     // two-sqrt tree (VARCHAR-routed), the partial one fixed tree on top
-    "q410_partial_correlation" -> {
+    Query("q410_partial_correlation", partialCorrelation, {
       def dSql(a: String) = s"CAST(CAST(CAST(n AS HUGEINT) * s$a$a " +
         s"- s$a * s$a AS VARCHAR) AS DOUBLE)"
       def rSql(a: String, b: String) =
@@ -3269,8 +3192,8 @@ object Aggregates {
          |              * sqrt(1.0 - ${rSql("y", "z")} * ${rSql("y", "z")}))
          |       END AS r_xy_given_z
          |FROM m ORDER BY l_returnflag""".stripMargin
-    },
-    "q375_spearman_census" ->
+    }),
+    Query("q375_spearman_census", spearmanCensus,
       s"""WITH $rankCellsSql,
          |qm AS (
          |  SELECT l_returnflag, q,
@@ -3315,8 +3238,8 @@ object Aggregates {
          |           (sqrt(CAST(CAST(n * sxx - sx * sx AS VARCHAR) AS DOUBLE)) *
          |            sqrt(CAST(CAST(n * syy - sy * sy AS VARCHAR) AS DOUBLE))) END AS rho_spearman
          |FROM g
-         |ORDER BY l_returnflag""".stripMargin,
-    "q376_kendall_tau" ->
+         |ORDER BY l_returnflag""".stripMargin),
+    Query("q376_kendall_tau", kendallTau,
       s"""WITH $rankCellsSql,
          |ps AS (
          |  SELECT a.l_returnflag,
@@ -3350,9 +3273,9 @@ object Aggregates {
          |FROM ps
          |JOIN tq ON tq.l_returnflag = ps.l_returnflag
          |JOIN td ON td.l_returnflag = ps.l_returnflag
-         |ORDER BY ps.l_returnflag""".stripMargin,
+         |ORDER BY ps.l_returnflag""".stripMargin),
     // q376's pair fold + tie margins feeding four single-divide trees
-    "q423_ordinal_assoc_panel" ->
+    Query("q423_ordinal_assoc_panel", ordinalAssocPanel,
       s"""WITH $rankCellsSql,
          |ps AS (
          |  SELECT a.l_returnflag,
@@ -3394,10 +3317,10 @@ object Aggregates {
          |FROM ps
          |JOIN tq ON tq.l_returnflag = ps.l_returnflag
          |JOIN td ON td.l_returnflag = ps.l_returnflag
-         |ORDER BY ps.l_returnflag""".stripMargin,
+         |ORDER BY ps.l_returnflag""".stripMargin),
     // the (priority, quantity) census → ordered census² pair fold →
     // the three exact tie-corrected variance ratios, one z tree
-    "q427_jonckheere_terpstra" -> {
+    Query("q427_jonckheere_terpstra", jonckheereTerpstra, {
       val zSql = "(CAST(CAST(z_num AS VARCHAR) AS DOUBLE) " +
         "/ (4.0 * sqrt(var_jt)))"
       val okSql = "var_jt IS NOT NULL AND var_jt > 0.0"
@@ -3464,8 +3387,8 @@ object Aggregates {
          |            WHEN z_num < 0 THEN 'decreasing'
          |            ELSE 'none' END AS direction
          |FROM vj""".stripMargin
-    },
-    "q289_fd_discovery" -> {
+    }),
+    Query("q289_fd_discovery", fdDiscovery, {
       def fdSql(lhs: String, rhs: String): String =
         s"""SELECT '$lhs->$rhs' AS fd,
            |       count(*) AS n_lhs_groups,
@@ -3479,8 +3402,8 @@ object Aggregates {
         fdSql("o_orderdate", "o_orderpriority"),
         fdSql("o_orderpriority", "o_orderstatus"))
         .mkString("SELECT * FROM (\n", "\nUNION ALL\n", "\n)\nORDER BY fd")
-    },
-    "q229_segment_migration" ->
+    }),
+    Query("q229_segment_migration", segmentMigration,
       s"""WITH early AS (
          |  SELECT o_custkey, ntile(5) OVER (ORDER BY spend DESC, o_custkey ASC) AS q_early
          |  FROM (SELECT o_custkey, ${sumLongSql(centsSql("o_totalprice"))} AS spend
@@ -3500,8 +3423,8 @@ object Aggregates {
          |       count(*) AS n_cust
          |FROM early FULL OUTER JOIN late USING (o_custkey)
          |GROUP BY 1, 2
-         |ORDER BY 1, 2""".stripMargin,
-    "q259_reaggregation_invariance" ->
+         |ORDER BY 1, 2""".stripMargin),
+    Query("q259_reaggregation_invariance", reaggregationInvariance,
       // rollup_exact asserted TRUE: if the Spark-side daily→monthly
       // re-roll ever diverges from the direct monthly (a double
       // accumulator sneaking back in), the hash compare fails.
@@ -3511,8 +3434,8 @@ object Aggregates {
          |       TRUE AS rollup_exact
          |FROM lineitem
          |GROUP BY 1, 2
-         |ORDER BY 1, 2""".stripMargin,
-    "q280_discount_elasticity" ->
+         |ORDER BY 1, 2""".stripMargin),
+    Query("q280_discount_elasticity", discountElasticity,
       s"""WITH b AS (
          |  SELECT CAST(floor(l_discount * 100.0 + 0.5) AS INT) AS discount_pct,
          |         count(*) AS n_lines,
@@ -3524,8 +3447,8 @@ object Aggregates {
          |SELECT discount_pct, n_lines, sum_qty, rev_cents,
          |       ${ratioSql("sum_qty", "n_lines")} AS avg_qty
          |FROM b
-         |ORDER BY discount_pct""".stripMargin,
-    "q281_shipping_delay_sla" ->
+         |ORDER BY discount_pct""".stripMargin),
+    Query("q281_shipping_delay_sla", shippingDelaySla,
       """WITH d AS (
         |  SELECT o_orderpriority AS prio,
         |         CAST(date_diff('day', CAST(o_orderdate AS DATE),
@@ -3542,8 +3465,8 @@ object Aggregates {
         |       CAST(min(CASE WHEN rn * 10 >= cnt * 9 THEN delay_days END) AS BIGINT) AS p90_days,
         |       CAST(max(delay_days) AS BIGINT) AS max_days
         |FROM r GROUP BY 1
-        |ORDER BY 1""".stripMargin,
-    "q282_return_rate_trend" ->
+        |ORDER BY 1""".stripMargin),
+    Query("q282_return_rate_trend", returnRateTrend,
       s"""WITH m AS (
          |  SELECT CAST(year(l_shipdate) * 100 + month(l_shipdate) AS INT) AS mon,
          |         count(*) AS n_lines,
@@ -3557,8 +3480,8 @@ object Aggregates {
          |SELECT mon, n_lines, n_returned, return_rate,
          |       return_rate - lag(return_rate) OVER (ORDER BY mon ASC) AS rate_delta
          |FROM r
-         |ORDER BY mon""".stripMargin,
-    "q275_relationship_profile" ->
+         |ORDER BY mon""".stripMargin),
+    Query("q275_relationship_profile", Relational.relationshipProfile,
       """SELECT * FROM (
         |  SELECT 'lineitem->orders' AS relationship,
         |         CAST(max(coalesce(ln, 0)) AS BIGINT) AS max_left,
@@ -3593,8 +3516,8 @@ object Aggregates {
         |  FULL OUTER JOIN (SELECT c_custkey AS k, count(*) AS rn FROM customer GROUP BY 1) r
         |    ON l.k = r.k
         |)
-        |ORDER BY relationship""".stripMargin,
-    "q276_column_profile" ->
+        |ORDER BY relationship""".stripMargin),
+    Query("q276_column_profile", columnProfile,
       s"""WITH o AS (
          |  SELECT o_orderkey, o_custkey, o_orderstatus,
          |         ${centsSql("o_totalprice")} AS price_cents,
@@ -3634,8 +3557,8 @@ object Aggregates {
          |         CAST(count(DISTINCT o_orderpriority) AS BIGINT),
          |         min(o_orderpriority), max(o_orderpriority) FROM o
          |)
-         |ORDER BY col_name""".stripMargin,
-    "q274_grouped_mode" ->
+         |ORDER BY col_name""".stripMargin),
+    Query("q274_grouped_mode", groupedMode,
       """WITH counts AS (
         |  SELECT user_id, CAST(date_trunc('week', ts) AS DATE) AS week,
         |         event_type, count(*) AS cnt
@@ -3649,8 +3572,8 @@ object Aggregates {
         |SELECT week, mode_type, count(*) AS n_users
         |FROM m WHERE rn = 1
         |GROUP BY 1, 2
-        |ORDER BY 1, 2""".stripMargin,
-    "q266_topk_listagg" ->
+        |ORDER BY 1, 2""".stripMargin),
+    Query("q266_topk_listagg", topkListagg,
       s"""WITH spend AS (
          |  SELECT o_custkey, ${sumLongSql(centsSql("o_totalprice"))} AS cents
          |  FROM orders GROUP BY 1
@@ -3668,8 +3591,8 @@ object Aggregates {
          |       CAST(sum(cents) AS BIGINT) AS top3_cents
          |FROM ranked WHERE rn <= 3
          |GROUP BY 1
-         |ORDER BY n_name""".stripMargin,
-    "q267_percent_of_parent" ->
+         |ORDER BY n_name""".stripMargin),
+    Query("q267_percent_of_parent", percentOfParent,
       s"""WITH spend AS (
          |  SELECT o_custkey, ${sumLongSql(centsSql("o_totalprice"))} AS cents
          |  FROM orders GROUP BY 1
@@ -3692,8 +3615,8 @@ object Aggregates {
          |       region_cents,
          |       ${ratioSql("region_cents", "total_cents")} AS region_pct_of_total
          |FROM dec
-         |ORDER BY region, nation""".stripMargin,
-    "q255_basket_size_histogram" ->
+         |ORDER BY region, nation""".stripMargin),
+    Query("q255_basket_size_histogram", basketSizeHistogram,
       s"""WITH per AS (
          |  SELECT o_orderkey, count(l_orderkey) AS n_lines,
          |         coalesce(${sumIntValuedSql("l_quantity")}, 0) AS qty_total
@@ -3707,8 +3630,8 @@ object Aggregates {
          |SELECT n_lines, n_orders, qty_sum,
          |       ${ratioSql("n_orders", "(SELECT sum(n_orders) FROM hist)")} AS share
          |FROM hist
-         |ORDER BY n_lines""".stripMargin,
-    "q256_equiwidth_histogram" ->
+         |ORDER BY n_lines""".stripMargin),
+    Query("q256_equiwidth_histogram", equiwidthHistogram,
       s"""WITH c AS (
          |  SELECT ${centsSql("o_totalprice")} AS v FROM orders
          |), ext AS (SELECT min(v) AS lo, max(v) AS hi FROM c)
@@ -3717,8 +3640,8 @@ object Aggregates {
          |       min(v) AS bucket_min_cents, max(v) AS bucket_max_cents
          |FROM c CROSS JOIN ext
          |GROUP BY 1
-         |ORDER BY 1""".stripMargin,
-    "q251_revenue_concentration" ->
+         |ORDER BY 1""".stripMargin),
+    Query("q251_revenue_concentration", revenueConcentration,
       s"""WITH pc AS (
          |  SELECT o_custkey, ${sumLongSql(centsSql("o_totalprice"))} AS cents
          |  FROM orders GROUP BY 1
@@ -3745,8 +3668,8 @@ object Aggregates {
          |  UNION ALL SELECT 50, c50, n_cust FROM c
          |  UNION ALL SELECT 90, c90, n_cust FROM c
          |)
-         |ORDER BY pct_revenue""".stripMargin,
-    "q252_nation_trade_balance" ->
+         |ORDER BY pct_revenue""".stripMargin),
+    Query("q252_nation_trade_balance", nationTradeBalance,
       s"""WITH exports AS (
          |  SELECT n_name AS nation,
          |         ${sumLongSql(centsSql("l_extendedprice * (1 - l_discount)"))} AS export_cents
@@ -3770,8 +3693,8 @@ object Aggregates {
          |       ${ratioSql("coalesce(export_cents, 0)",
                            "nullif(coalesce(import_cents, 0), 0)")} AS export_import_ratio
          |FROM exports e FULL OUTER JOIN imports i ON e.nation = i.nation
-         |ORDER BY 1""".stripMargin,
-    "q230_price_volume_decomposition" ->
+         |ORDER BY 1""".stripMargin),
+    Query("q230_price_volume_decomposition", priceVolumeDecomposition,
       s"""WITH by_year AS (
          |  SELECT p_brand, CAST(year(l_shipdate) AS INT) AS yr,
          |         ${sumIntValuedSql("l_quantity")} AS qty,
@@ -3787,8 +3710,8 @@ object Aggregates {
          |         - CAST(b.qty AS DOUBLE) * ${ratioSql("a.rev_cents", "a.qty")} AS price_effect
          |FROM (SELECT * FROM by_year WHERE yr = 1999) a
          |JOIN (SELECT * FROM by_year WHERE yr = 2000) b ON a.p_brand = b.p_brand
-         |ORDER BY a.p_brand""".stripMargin,
-    "q224_rfm_segmentation" ->
+         |ORDER BY a.p_brand""".stripMargin),
+    Query("q224_rfm_segmentation", rfmSegmentation,
       s"""WITH rfm AS (
          |  SELECT o_custkey,
          |         date_diff('day', CAST(max(o_orderdate) AS DATE),
@@ -3806,8 +3729,8 @@ object Aggregates {
          |SELECT r_q, f_q, m_q, count(*) AS n_cust,
          |       ${sumLongSql("mon_cents")} AS seg_cents
          |FROM scored GROUP BY 1, 2, 3
-         |ORDER BY 1, 2, 3""".stripMargin,
-    "q225_expectation_audit" ->
+         |ORDER BY 1, 2, 3""".stripMargin),
+    Query("q225_expectation_audit", expectationAudit,
       // The Spark side is one conditional-sum pass per table; the oracle
       // favors readability (one SELECT per check) — same integers.
       s"""SELECT * FROM (
@@ -3847,8 +3770,8 @@ object Aggregates {
          |       CAST(sum(CASE WHEN p_size < 1 OR p_size > 50 THEN 1 ELSE 0 END) AS BIGINT)
          |FROM part
          |)
-         |ORDER BY tbl, check_name""".stripMargin,
-    "q222_ab_chi2_census" ->
+         |ORDER BY tbl, check_name""".stripMargin),
+    Query("q222_ab_chi2_census", abChiSquareCensus,
       s"""WITH o AS (
          |  SELECT CAST(user_id % 2 AS INT) AS variant, event_type,
          |         count(*) AS o
@@ -3865,8 +3788,8 @@ object Aggregates {
          |SELECT variant, event_type, o, r, c, n,
          |       (dd * dd) / ((CAST(n AS DOUBLE) * CAST(r AS DOUBLE)) * CAST(c AS DOUBLE)) AS chi2_cell
          |FROM cells
-         |ORDER BY variant, event_type""".stripMargin,
-    "q212_winsorized_stats" ->
+         |ORDER BY variant, event_type""".stripMargin),
+    Query("q212_winsorized_stats", winsorizedStats,
       s"""WITH o AS (
          |  SELECT o_orderpriority AS prio, ${centsSql("o_totalprice")} AS pc
          |  FROM orders
@@ -3888,8 +3811,8 @@ object Aggregates {
          |       ${ratioSql(s"${sumLongSql("GREATEST(LEAST(pc, hi), lo)")}", "count(*)")} AS winsor_mean_cents
          |FROM o JOIN edges ON prio = e_prio
          |GROUP BY prio
-         |ORDER BY prio""".stripMargin,
-    "q213_decile_lift" ->
+         |ORDER BY prio""".stripMargin),
+    Query("q213_decile_lift", decileLift,
       s"""WITH spend AS (
          |  SELECT o_custkey, ${sumLongSql(centsSql("o_totalprice"))} AS spend
          |  FROM orders GROUP BY 1
@@ -3908,8 +3831,8 @@ object Aggregates {
              "sum(decile_spend) OVER (ORDER BY decile ASC ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)",
              "total_spend")} AS cum_share
          |FROM by_decile CROSS JOIN tot
-         |ORDER BY decile""".stripMargin,
-    "q201_benford_audit" ->
+         |ORDER BY decile""".stripMargin),
+    Query("q201_benford_audit", benfordAudit,
       s"""WITH digits AS (
          |  SELECT CAST(substring(CAST(${centsSql("o_totalprice")} AS VARCHAR), 1, 1) AS INT) AS digit
          |  FROM orders
@@ -3924,8 +3847,8 @@ object Aggregates {
          |       ${ratioSql("n", "total")} - list_extract(
          |         [${BenfordShares.map(d => s"${d}e0").mkString(", ")}],
          |         digit) AS dev_from_benford
-         |FROM tot ORDER BY digit""".stripMargin,
-    "q198_skew_census" ->
+         |FROM tot ORDER BY digit""".stripMargin),
+    Query("q198_skew_census", skewCensus,
       """WITH ko AS (SELECT l_orderkey AS k, count(*) AS cnt FROM lineitem GROUP BY 1),
         |ks AS (SELECT l_suppkey AS k, count(*) AS cnt FROM lineitem GROUP BY 1),
         |co AS (SELECT 'l_orderkey' AS key_col,
@@ -3937,8 +3860,8 @@ object Aggregates {
         |              count(*) AS n_keys, CAST(sum(cnt) AS BIGINT) AS n_rows
         |       FROM ks GROUP BY 1, 2)
         |SELECT * FROM co UNION ALL SELECT * FROM cs
-        |ORDER BY key_col, bucket""".stripMargin,
-    "q195_corr_census" ->
+        |ORDER BY key_col, bucket""".stripMargin),
+    Query("q195_corr_census", corrCensus,
       s"""WITH li AS (SELECT l_returnflag,
          |                   CAST(l_quantity AS BIGINT) AS q,
          |                   ${centsSql("l_extendedprice")} AS p,
@@ -3971,8 +3894,8 @@ object Aggregates {
          |SELECT l_returnflag, n, 'qty_disc' AS pair, c_qty_disc AS corr FROM c
          |UNION ALL
          |SELECT l_returnflag, n, 'price_disc' AS pair, c_price_disc AS corr FROM c
-         |ORDER BY l_returnflag, pair""".stripMargin,
-    "q187_agg_multi_pivot" ->
+         |ORDER BY l_returnflag, pair""".stripMargin),
+    Query("q187_agg_multi_pivot", multiMeasurePivot,
       s"""SELECT o_orderpriority,
          |       count(*) FILTER (o_orderstatus = 'F') AS F_n,
          |       coalesce(${sumLongSql(s"CASE WHEN o_orderstatus = 'F' THEN ${centsSql("o_totalprice")} END")}, 0) AS F_cents,
@@ -3982,8 +3905,8 @@ object Aggregates {
          |       coalesce(${sumLongSql(s"CASE WHEN o_orderstatus = 'P' THEN ${centsSql("o_totalprice")} END")}, 0) AS P_cents
          |FROM orders
          |GROUP BY o_orderpriority
-         |ORDER BY o_orderpriority""".stripMargin,
-    "q188_fn_nested_struct_hof" ->
+         |ORDER BY o_orderpriority""".stripMargin),
+    Query("q188_fn_nested_struct_hof", nestedStructHof,
       s"""SELECT o_custkey,
          |       CAST(len(arr) AS INT) AS n_orders,
          |       CAST(len(list_filter(arr, x -> x.pc > 20000000)) AS INT) AS n_big,
@@ -3998,8 +3921,8 @@ object Aggregates {
          |               ${centsSql("o_totalprice")} AS pc
          |        FROM orders)
          |  GROUP BY o_custkey)
-         |ORDER BY o_custkey""".stripMargin,
-    "q185_agg_equidepth_buckets" ->
+         |ORDER BY o_custkey""".stripMargin),
+    Query("q185_agg_equidepth_buckets", equiDepthBuckets,
       s"""WITH li AS (
          |  SELECT l_returnflag, ${centsSql("l_quantity")} AS qc FROM lineitem
          |),
@@ -4018,8 +3941,8 @@ object Aggregates {
          |       count(*) AS n, min(qc) AS lo, max(qc) AS hi
          |FROM li JOIN edges USING (l_returnflag)
          |GROUP BY li.l_returnflag, bin
-         |ORDER BY l_returnflag, bin""".stripMargin,
-    "q186_agg_minmax_normalize" ->
+         |ORDER BY l_returnflag, bin""".stripMargin),
+    Query("q186_agg_minmax_normalize", minMaxNormalize,
       s"""SELECT l_returnflag, lo, hi,
          |       ${ratioSql("s - n * lo", "(hi - lo) * n")} AS scaled_mean
          |FROM (
@@ -4029,16 +3952,16 @@ object Aggregates {
          |  FROM (SELECT l_returnflag, ${centsSql("l_extendedprice")} AS pc
          |        FROM lineitem)
          |  GROUP BY l_returnflag)
-         |ORDER BY l_returnflag""".stripMargin,
-    "q171_sliding_distinct_hll" ->
+         |ORDER BY l_returnflag""".stripMargin),
+    Query("q171_sliding_distinct_hll", slidingDistinctHll,
       """SELECT win_start, count(DISTINCT user_id) AS exact_users, TRUE AS est_ok
         |FROM (
         |  SELECT day - 6 + CAST(off AS INT) AS win_start, user_id
         |  FROM (SELECT DISTINCT CAST(ts AS DATE) AS day, user_id FROM events),
         |       unnest(range(0, 7)) t(off))
         |GROUP BY win_start
-        |ORDER BY win_start""".stripMargin,
-    "q169_pareto_frontier" ->
+        |ORDER BY win_start""".stripMargin),
+    Query("q169_pareto_frontier", paretoFrontier,
       s"""WITH pts AS (
          |  SELECT o_custkey, count(*) AS n_orders,
          |         ${sumLongSql(centsSql("o_totalprice"))} AS spend_cents
@@ -4056,12 +3979,12 @@ object Aggregates {
          |FROM w
          |WHERE (best_richer IS NULL OR n_orders > best_richer)
          |  AND n_orders = best_tie
-         |ORDER BY spend_cents DESC, o_custkey ASC""".stripMargin,
+         |ORDER BY spend_cents DESC, o_custkey ASC""".stripMargin),
     // contract oracle (q18/q168 pattern): the exact panel counts and N
     // are re-derived from rows; both CMS guarantees are stated as the
     // constants the sketch must earn (no-underestimate is structural,
     // the eps-band is 4+ sigma at this sizing with the seed frozen).
-    "q292_cms_frequency_contract" ->
+    Query("q292_cms_frequency_contract", cmsFrequencyContract,
       """WITH panel AS (
         |  SELECT s_suppkey FROM supplier ORDER BY s_suppkey LIMIT 10
         |), cnt AS (
@@ -4073,11 +3996,11 @@ object Aggregates {
         |       TRUE AS cms_no_underestimate,
         |       TRUE AS cms_within_eps
         |FROM panel LEFT JOIN cnt ON s_suppkey = l_suppkey
-        |ORDER BY s_suppkey""".stripMargin,
+        |ORDER BY s_suppkey""".stripMargin),
     // the KMV census is fully deterministic on the portable 40-bit digest,
     // so the oracle recomputes the ENTIRE sketch pipeline (k-sets, θ,
     // matches, estimate) — no contract flags, plain hash-exact agreement
-    "q310_kmv_intersection_census" ->
+    Query("q310_kmv_intersection_census", kmvIntersectionCensus,
       s"""WITH t AS (
          |  SELECT l_partkey, year(l_shipdate) AS yr FROM lineitem
          |  WHERE year(l_shipdate) IN (1996, 1997)
@@ -4107,10 +4030,10 @@ object Aggregates {
          |SELECT n_a_distinct, n_b_distinct, n_intersect_exact,
          |       theta, CAST(n_match AS BIGINT) AS n_match,
          |       ${ratioSql("n_match * 1099511627776", "theta")} AS est_intersect
-         |FROM ex, th, nm""".stripMargin,
+         |FROM ex, th, nm""".stripMargin),
     // the oracle is the naive global-order formulation of the same rank
     // rule (min v with 100·cum ≥ p·n) — the narrowing must agree exactly
-    "q309_exact_quantile_selection" ->
+    Query("q309_exact_quantile_selection", exactQuantileSelection,
       s"""WITH v AS (SELECT ${centsSql("l_extendedprice")} AS v FROM lineitem),
          |n AS (SELECT count(*) AS n FROM v),
          |c AS (SELECT v, count(*) AS c FROM v GROUP BY 1),
@@ -4118,14 +4041,14 @@ object Aggregates {
          |SELECT (SELECT CAST(n AS BIGINT) FROM n) AS n_lines,
          |       (SELECT min(v) FROM w WHERE cum * 100 >= (SELECT n FROM n) * 50) AS p50_cents,
          |       (SELECT min(v) FROM w WHERE cum * 100 >= (SELECT n FROM n) * 90) AS p90_cents,
-         |       (SELECT min(v) FROM w WHERE cum * 100 >= (SELECT n FROM n) * 99) AS p99_cents""".stripMargin,
+         |       (SELECT min(v) FROM w WHERE cum * 100 >= (SELECT n FROM n) * 99) AS p99_cents""".stripMargin),
     // full replica oracle: the histogram sketch, its cell-wise rollup,
     // the rank reads, AND both contract flags are pure integer
     // arithmetic, so DuckDB re-derives every cell (stronger than the
     // stated-constant pattern — a broken merge diverges numerically,
     // not just boolean-ly). Window sums ride bounded censuses; HUGEINT
     // stays internal (n_rows is CAST).
-    "q313_quantile_sketch_rollup" ->
+    Query("q313_quantile_sketch_rollup", quantileSketchRollup,
       s"""WITH v AS (SELECT l_returnflag AS rf, ${centsSql("l_extendedprice")} AS pc FROM lineitem),
          |leaf AS (SELECT rf, (pc >> 16) AS b, count(*) AS c FROM v GROUP BY 1, 2),
          |parent AS (SELECT b, sum(c) AS c FROM leaf GROUP BY 1),
@@ -4159,14 +4082,14 @@ object Aggregates {
          |        AND e.p90_sketch_cents <= x.p90_exact AND x.p90_exact < e.p90_sketch_cents + 65536
          |        AND e.p99_sketch_cents <= x.p99_exact AND x.p99_exact < e.p99_sketch_cents + 65536) AS sketch_rank_ok
          |FROM est e JOIN ex x USING (scope)
-         |ORDER BY scope""".stripMargin,
+         |ORDER BY scope""".stripMargin),
     // contract oracle (q292/q18 pattern): the exact join size is the
     // ground truth the sketch estimate is graded against; both CM
     // inner-product guarantees are stated as the constants the Spark
     // side must earn. Σ ca·cb folds in HUGEINT/decimal internally but
     // the OUTPUT column is BIGINT (exact to 9.2×10¹⁸ pairs) — raw
     // DECIMAL output columns violate the portability rule.
-    "q308_cms_join_size_contract" ->
+    Query("q308_cms_join_size_contract", cmsJoinSizeContract,
       """WITH t AS (
         |  SELECT l_suppkey, year(l_shipdate) AS yr
         |  FROM lineitem
@@ -4182,19 +4105,19 @@ object Aggregates {
         |       CAST(coalesce(sum(ca * cb), 0) AS BIGINT) AS n_pairs_exact,
         |       TRUE AS cms_no_underestimate,
         |       TRUE AS cms_within_eps
-        |FROM per""".stripMargin,
+        |FROM per""".stripMargin),
     // contract oracle (q18 pattern): member misses MUST be zero (bloom
     // false negatives are impossible) and the FP rate must respect the
     // sizing bound — both stated as constants the Spark side must earn.
-    "q168_agg_bloom_contract" ->
+    Query("q168_agg_bloom_contract", bloomFilterContract,
       """SELECT c_mktsegment,
         |       count(*) AS n_members,
         |       CAST(0 AS BIGINT) AS n_member_misses,
         |       TRUE AS fp_ok
         |FROM customer
         |GROUP BY c_mktsegment
-        |ORDER BY c_mktsegment""".stripMargin,
-    "q166_agg_mad_outliers" ->
+        |ORDER BY c_mktsegment""".stripMargin),
+    Query("q166_agg_mad_outliers", madOutliers,
       s"""WITH li AS (
          |  SELECT l_returnflag, ${centsSql("l_quantity")} AS qc FROM lineitem
          |),
@@ -4219,8 +4142,8 @@ object Aggregates {
          |  FROM wad w JOIN stats st USING (l_returnflag)
          |  WHERE w.ad > st.mad * 3.0
          |  GROUP BY w.l_returnflag) o USING (l_returnflag)
-         |ORDER BY l_returnflag""".stripMargin,
-    "q167_agg_weighted_median" ->
+         |ORDER BY l_returnflag""".stripMargin),
+    Query("q167_agg_weighted_median", weightedMedian,
       s"""WITH li AS (
          |  SELECT l_returnflag, ${centsSql("l_extendedprice")} AS pc,
          |         CAST(l_quantity AS BIGINT) AS qty
@@ -4243,16 +4166,16 @@ object Aggregates {
          |FROM cum JOIN tot USING (l_returnflag)
          |WHERE w_cum * 2 >= w_total
          |GROUP BY l_returnflag
-         |ORDER BY l_returnflag""".stripMargin,
-    "q162_stat_crosstab" ->
+         |ORDER BY l_returnflag""".stripMargin),
+    Query("q162_stat_crosstab", crosstabAgg,
       """SELECT o_orderpriority AS prio,
         |       count(*) FILTER (o_orderstatus = 'F') AS n_f,
         |       count(*) FILTER (o_orderstatus = 'O') AS n_o,
         |       count(*) FILTER (o_orderstatus = 'P') AS n_p
         |FROM orders
         |GROUP BY o_orderpriority
-        |ORDER BY prio""".stripMargin,
-    "q144_agg_percentile_exact" ->
+        |ORDER BY prio""".stripMargin),
+    Query("q144_agg_percentile_exact", percentileExact,
       s"""SELECT l_returnflag,
          |       count(*) AS n,
          |       CAST(quantile_cont(qc, 0.25) AS DOUBLE) AS p25,
@@ -4262,15 +4185,15 @@ object Aggregates {
          |FROM (SELECT l_returnflag, ${centsSql("l_quantity")} AS qc
          |      FROM lineitem)
          |GROUP BY l_returnflag
-         |ORDER BY l_returnflag""".stripMargin,
-    "q137_agg_listagg" ->
+         |ORDER BY l_returnflag""".stripMargin),
+    Query("q137_agg_listagg", listaggAgg,
       """SELECT s_nationkey,
         |       string_agg(s_name, ',' ORDER BY s_name) AS names,
         |       count(*) AS n_supp
         |FROM supplier
         |GROUP BY s_nationkey
-        |ORDER BY s_nationkey""".stripMargin,
-    "q124_agg_mode" ->
+        |ORDER BY s_nationkey""".stripMargin),
+    Query("q124_agg_mode", modeAgg,
       """WITH li AS (SELECT l_returnflag, CAST(l_quantity AS BIGINT) AS qty
         |            FROM lineitem),
         |c AS (SELECT l_returnflag, qty, count(*) AS cnt FROM li GROUP BY 1, 2),
@@ -4289,8 +4212,8 @@ object Aggregates {
         |       (r2.n_tied > 1 OR n.native_mode = r2.qty) AS native_ok
         |FROM r2 JOIN n ON r2.l_returnflag = n.l_returnflag
         |WHERE r2.rn = 1
-        |ORDER BY r2.l_returnflag""".stripMargin,
-    "q91_agg_regression" ->
+        |ORDER BY r2.l_returnflag""".stripMargin),
+    Query("q91_agg_regression", regressionAgg,
       s"""WITH li AS (SELECT l_returnflag,
          |                   ${centsSql("l_extendedprice")} AS pc,
          |                   CAST(l_quantity AS BIGINT) AS qty
@@ -4329,20 +4252,20 @@ object Aggregates {
          |         <= 1e-6 * (abs((CAST(num_c AS DOUBLE) * CAST(num_c AS DOUBLE))
          |                  / (CAST(num_v AS DOUBLE) * CAST(num_y AS DOUBLE))) + 1.0) AS r2_ok
          |FROM e
-         |ORDER BY l_returnflag""".stripMargin,
+         |ORDER BY l_returnflag""".stripMargin),
     // Oracle asserts the merged sketch's contract (q18 pattern, through a
     // union): exact recomputed from rows, within-5% flag expected TRUE.
-    "q92_agg_hll_merge" ->
+    Query("q92_agg_hll_merge", hllMergeRollup,
       """SELECT l_returnflag,
         |       count(DISTINCT l_partkey) AS exact_parts,
         |       TRUE AS merged_within_5pct
         |FROM lineitem
         |GROUP BY l_returnflag
-        |ORDER BY l_returnflag""".stripMargin,
+        |ORDER BY l_returnflag""".stripMargin),
     // Portable trees mirror statsMoments exactly where output values are
     // bit-exact (< 2^53 longs); the price-moment booleans re-check DuckDB's
     // OWN natives against the HUGEINT-exact tree — same 1e-6 hybrid band.
-    "q87_agg_stats_moments" ->
+    Query("q87_agg_stats_moments", statsMoments,
       s"""WITH li AS (SELECT l_returnflag,
          |                   ${centsSql("l_extendedprice")} AS pc,
          |                   CAST(l_quantity AS BIGINT) AS qty
@@ -4379,8 +4302,8 @@ object Aggregates {
          |       abs(cr_n - CAST(num_c AS DOUBLE) / (sqrt(CAST(num_v AS DOUBLE)) * sqrt(CAST(num_y AS DOUBLE))))
          |         <= 1e-6 * (abs(CAST(num_c AS DOUBLE) / (sqrt(CAST(num_v AS DOUBLE)) * sqrt(CAST(num_y AS DOUBLE)))) + 1.0) AS corr_ok
          |FROM d
-         |ORDER BY l_returnflag""".stripMargin,
-    "q88_agg_bitwise_bool" ->
+         |ORDER BY l_returnflag""".stripMargin),
+    Query("q88_agg_bitwise_bool", bitwiseBoolAgg,
       s"""SELECT o_orderpriority,
          |       count(*) AS n_rows,
          |       bit_and(h) AS h_and,
@@ -4393,8 +4316,8 @@ object Aggregates {
          |             CAST(('0x' || substr(md5(CAST(o_orderkey AS VARCHAR)), 1, 10)) AS BIGINT) AS h
          |      FROM orders)
          |GROUP BY o_orderpriority
-         |ORDER BY o_orderpriority""".stripMargin,
-    "q89_agg_arg_extremes" ->
+         |ORDER BY o_orderpriority""".stripMargin),
+    Query("q89_agg_arg_extremes", argExtremes,
       s"""SELECT o_orderpriority,
          |       count(*) AS n_rows,
          |       median(pc) AS median_price_cents,
@@ -4407,8 +4330,8 @@ object Aggregates {
          |             ${centsSql("o_totalprice")} * 1000000000 + o_orderkey AS cmp
          |      FROM orders)
          |GROUP BY o_orderpriority
-         |ORDER BY o_orderpriority""".stripMargin,
-    "q11_agg_multi_measure" ->
+         |ORDER BY o_orderpriority""".stripMargin),
+    Query("q11_agg_multi_measure", multiMeasure,
       s"""SELECT l_returnflag, l_linestatus,
          |       ${sumIntValuedSql("l_quantity")} AS sum_qty,
          |       ${sumLongSql(centsSql("l_extendedprice"))} AS sum_base_cents,
@@ -4420,16 +4343,16 @@ object Aggregates {
          |FROM lineitem
          |WHERE l_shipdate <= TIMESTAMP '1998-09-02 00:00:00'
          |GROUP BY l_returnflag, l_linestatus
-         |ORDER BY l_returnflag, l_linestatus""".stripMargin,
-    "q12_agg_count_distinct" ->
+         |ORDER BY l_returnflag, l_linestatus""".stripMargin),
+    Query("q12_agg_count_distinct", countDistinctAgg,
       """SELECT l_returnflag,
         |       count(DISTINCT l_partkey) AS n_parts,
         |       count(DISTINCT l_suppkey) AS n_supps,
         |       count(*) AS n_rows
         |FROM lineitem
         |GROUP BY l_returnflag
-        |ORDER BY l_returnflag""".stripMargin,
-    "q13_agg_rollup" ->
+        |ORDER BY l_returnflag""".stripMargin),
+    Query("q13_agg_rollup", rollupAgg,
       s"""SELECT r_name, n_name, count(*) AS n_cust,
          |       ${sumLongSql(centsSql("c_acctbal"))} AS acctbal_cents,
          |       CAST(grouping(r_name) AS INT) AS g_region,
@@ -4438,24 +4361,24 @@ object Aggregates {
          |JOIN nation ON c_nationkey = n_nationkey
          |JOIN region ON n_regionkey = r_regionkey
          |GROUP BY ROLLUP (r_name, n_name)
-         |ORDER BY g_region, g_nation, r_name ASC NULLS FIRST, n_name ASC NULLS FIRST""".stripMargin,
-    "q14_agg_cube" ->
+         |ORDER BY g_region, g_nation, r_name ASC NULLS FIRST, n_name ASC NULLS FIRST""".stripMargin),
+    Query("q14_agg_cube", cubeAgg,
       s"""SELECT l_returnflag, l_linestatus, count(*) AS n_rows,
          |       ${sumIntValuedSql("l_quantity")} AS sum_qty,
          |       CAST(grouping(l_returnflag) AS INT) AS g_rf,
          |       CAST(grouping(l_linestatus) AS INT) AS g_ls
          |FROM lineitem
          |GROUP BY CUBE (l_returnflag, l_linestatus)
-         |ORDER BY g_rf, g_ls, l_returnflag ASC NULLS FIRST, l_linestatus ASC NULLS FIRST""".stripMargin,
-    "q36_grouping_sets" ->
+         |ORDER BY g_rf, g_ls, l_returnflag ASC NULLS FIRST, l_linestatus ASC NULLS FIRST""".stripMargin),
+    Query("q36_grouping_sets", groupingSetsAgg,
       s"""SELECT l_returnflag, l_linestatus, count(*) AS n_rows,
          |       ${sumIntValuedSql("l_quantity")} AS sum_qty,
          |       CAST(grouping(l_returnflag) AS INT) AS g_rf,
          |       CAST(grouping(l_linestatus) AS INT) AS g_ls
          |FROM lineitem
          |GROUP BY GROUPING SETS ((l_returnflag, l_linestatus), (l_returnflag), ())
-         |ORDER BY g_rf, g_ls, l_returnflag ASC NULLS FIRST, l_linestatus ASC NULLS FIRST""".stripMargin,
-    "q63_agg_quartiles" ->
+         |ORDER BY g_rf, g_ls, l_returnflag ASC NULLS FIRST, l_linestatus ASC NULLS FIRST""".stripMargin),
+    Query("q63_agg_quartiles", quartilesAgg,
       s"""SELECT l_returnflag,
          |       quantile_cont(pc, 0.25) AS q1_cents,
          |       quantile_cont(pc, 0.5) AS median_cents,
@@ -4463,11 +4386,11 @@ object Aggregates {
          |       count(*) AS n_rows
          |FROM (SELECT l_returnflag, ${centsSql("l_extendedprice")} AS pc FROM lineitem)
          |GROUP BY l_returnflag
-         |ORDER BY l_returnflag""".stripMargin,
+         |ORDER BY l_returnflag""".stripMargin),
     // lag/datediff window twin of the sequential mapGroups computation;
     // ISO date strings render identically from Spark Date.toString and
     // DuckDB VARCHAR casts.
-    "q113_typed_mapgroups" ->
+    Query("q113_typed_mapgroups", typedMapGroups,
       """SELECT o_custkey AS custkey,
         |       count(*) AS n_orders,
         |       coalesce(max(gap), 0) AS max_gap_days,
@@ -4481,22 +4404,22 @@ object Aggregates {
         |  FROM orders
         |)
         |GROUP BY o_custkey
-        |ORDER BY custkey""".stripMargin,
+        |ORDER BY custkey""".stripMargin),
     // Frequent-items census in the sketch's exact regime: the oracle
     // recomputes exact counts and asserts the sketch agreed (TRUE flag);
     // a lost item or drifted count flips the hash red.
-    "q111_agg_heavy_hitters" ->
+    Query("q111_agg_heavy_hitters", heavyHitters,
       """SELECT o_orderpriority,
         |       count(*) AS exact_cnt,
         |       CAST(count(*) AS BIGINT) AS sketch_cnt,
         |       TRUE AS sketch_exact
         |FROM orders
         |GROUP BY o_orderpriority
-        |ORDER BY o_orderpriority""".stripMargin,
+        |ORDER BY o_orderpriority""".stripMargin),
     // Exact nearest-rank p90/p99 recomputed via the same integer-rank
     // window formulation; the within-bound flags assert GK's contract TRUE
     // (the q18 pattern: a sketch regression flips the hash red).
-    "q73_agg_approx_percentile" ->
+    Query("q73_agg_approx_percentile", approxPercentileAgg,
       s"""WITH counts AS (
          |  SELECT l_returnflag, ${centsSql("l_extendedprice")} AS pc, count(*) AS cnt
          |  FROM lineitem GROUP BY 1, 2
@@ -4515,16 +4438,16 @@ object Aggregates {
          |       TRUE AS p99_within_bound
          |FROM ranked
          |GROUP BY l_returnflag
-         |ORDER BY l_returnflag""".stripMargin,
-    "q58_pivot" ->
+         |ORDER BY l_returnflag""".stripMargin),
+    Query("q58_pivot", pivotAgg,
       s"""SELECT l_linestatus,
          |       coalesce(CAST(sum(CASE WHEN l_returnflag = 'A' THEN ${centsSql("l_extendedprice")} END) AS BIGINT), 0) AS cents_a,
          |       coalesce(CAST(sum(CASE WHEN l_returnflag = 'N' THEN ${centsSql("l_extendedprice")} END) AS BIGINT), 0) AS cents_n,
          |       coalesce(CAST(sum(CASE WHEN l_returnflag = 'R' THEN ${centsSql("l_extendedprice")} END) AS BIGINT), 0) AS cents_r
          |FROM lineitem
          |GROUP BY l_linestatus
-         |ORDER BY l_linestatus""".stripMargin,
-    "q79_unpivot" ->
+         |ORDER BY l_linestatus""".stripMargin),
+    Query("q79_unpivot", unpivotAgg,
       s"""SELECT l_orderkey, l_linenumber, measure, value FROM (
          |  SELECT l_orderkey, l_linenumber, 'price_cents' AS measure,
          |         ${centsSql("l_extendedprice")} AS value
@@ -4534,8 +4457,8 @@ object Aggregates {
          |         CAST(l_quantity AS BIGINT) AS value
          |  FROM lineitem WHERE l_orderkey < 100
          |)
-         |ORDER BY l_orderkey, l_linenumber, measure""".stripMargin,
-    "q15_agg_filtered" ->
+         |ORDER BY l_orderkey, l_linenumber, measure""".stripMargin),
+    Query("q15_agg_filtered", filteredAgg,
       s"""SELECT o_orderpriority,
          |       count(*) FILTER (WHERE o_orderstatus = 'F') AS n_finished,
          |       count(*) FILTER (WHERE o_orderstatus <> 'F') AS n_other,
@@ -4543,34 +4466,34 @@ object Aggregates {
          |       count(*) AS n_total
          |FROM orders
          |GROUP BY o_orderpriority
-         |ORDER BY o_orderpriority""".stripMargin,
-    "q16_agg_string_agg" ->
+         |ORDER BY o_orderpriority""".stripMargin),
+    Query("q16_agg_string_agg", stringAgg,
       """SELECT n_name,
         |       string_agg(DISTINCT c_mktsegment, ',' ORDER BY c_mktsegment) AS segments,
         |       count(*) AS n_cust
         |FROM customer JOIN nation ON c_nationkey = n_nationkey
         |GROUP BY n_name
-        |ORDER BY n_name""".stripMargin,
-    "q17_agg_udaf_weighted_mean" ->
+        |ORDER BY n_name""".stripMargin),
+    Query("q17_agg_udaf_weighted_mean", udafWeightedMean,
       s"""SELECT p_brand,
          |       ${ratioSql(sumLongSql(centsSql("p_retailprice") + " * p_size"), sumIntValuedSql("p_size"))} AS wmean_price_cents,
          |       ${sumLongSql(centsSql("p_retailprice") + " * p_size")} AS wsum_cents,
          |       ${sumIntValuedSql("p_size")} AS wtot
          |FROM part
          |GROUP BY p_brand
-         |ORDER BY p_brand""".stripMargin,
+         |ORDER BY p_brand""".stripMargin),
     // The oracle asserts HLL's documented contract: exact count recomputed,
     // within-5% flag expected TRUE. A sketch regression flips the hash red.
-    "q18_agg_approx_distinct" ->
+    Query("q18_agg_approx_distinct", approxDistinct,
       """SELECT l_returnflag,
         |       count(DISTINCT l_partkey) AS exact_parts,
         |       TRUE AS approx_within_5pct
         |FROM lineitem
         |GROUP BY l_returnflag
-        |ORDER BY l_returnflag""".stripMargin,
+        |ORDER BY l_returnflag""".stripMargin),
     // Bitmaps are exact, so the oracle is plain COUNT(DISTINCT) at both
     // rollup levels — any bit-position/bucket/merge defect flips the hash.
-    "q97_agg_bitmap_distinct" ->
+    Query("q97_agg_bitmap_distinct", bitmapDistinctRollup,
       """SELECT prio, n_distinct_cust FROM (
         |  SELECT o_orderpriority AS prio,
         |         count(DISTINCT o_custkey) AS n_distinct_cust
@@ -4578,6 +4501,6 @@ object Aggregates {
         |  UNION ALL
         |  SELECT 'ALL', count(DISTINCT o_custkey) FROM orders
         |)
-        |ORDER BY prio""".stripMargin
+        |ORDER BY prio""".stripMargin)
   )
 }

@@ -1233,22 +1233,6 @@ object Graph {
       .orderBy($"katz64".desc, $"node_id".asc)
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q429_katz_centrality" -> katzCentrality,
-    "q337_kcore_peel_census" -> kcorePeelCensus,
-    "q338_hits_scores" -> hitsScores,
-    "q319_partition_conductance" -> partitionConductance,
-    "q202_triangle_census" -> triangleCensus,
-    "q288_bfs_reachability" -> bfsReachability,
-    "q401_harmonic_centrality" -> harmonicCentrality,
-    "q411_link_prediction" -> linkPredictionCensus,
-    "q290_widest_path_census" -> widestPathCensus,
-    "q291_reach_sketch_census" -> reachSketchCensus,
-    "q294_label_propagation" -> labelPropagation,
-    "q380_modularity_census" -> modularityCensus,
-    "q301_degree_assortativity" -> degreeAssortativity,
-    "q197_pagerank_fixed_point" -> pageRank)
-
   /** One unrolled propagation round for the q294 oracle: majority vote
     * by labeled neighbors (row_number ties to smallest label), clamped
     * union with the previous labeled set. */
@@ -1281,10 +1265,10 @@ object Graph {
        |    AND dst IN (SELECT node FROM s$r))""".stripMargin
   }
 
-  val oracles: Map[String, String] = Map(
+  val declared: Seq[Query] = Seq(
     // distinct symmetric edges → degree → two neighbor-sum joins →
     // the exact 16/4/1 dyadic combination, total-ordered top-10
-    "q429_katz_centrality" ->
+    Query("q429_katz_centrality", katzCentrality,
       s"""WITH e0 AS MATERIALIZED (
          |  SELECT DISTINCT 2 * o_custkey AS src, 2 * l_suppkey + 1 AS dst
          |  FROM orders JOIN lineitem ON o_orderkey = l_orderkey
@@ -1307,8 +1291,8 @@ object Graph {
          |       16 * d.w1 + 4 * w2.w2 + w3.w3 AS katz64,
          |       CAST(16 * d.w1 + 4 * w2.w2 + w3.w3 AS DOUBLE) / 64.0 AS katz
          |FROM deg d JOIN w2 ON w2.src = d.src JOIN w3 ON w3.src = d.src
-         |ORDER BY katz64 DESC, node_id ASC LIMIT 10""".stripMargin,
-    "q337_kcore_peel_census" ->
+         |ORDER BY katz64 DESC, node_id ASC LIMIT 10""".stripMargin),
+    Query("q337_kcore_peel_census", kcorePeelCensus,
       s"""WITH e0 AS MATERIALIZED (
          |  SELECT DISTINCT 2 * o_custkey AS src, 2 * l_suppkey + 1 AS dst
          |  FROM orders JOIN lineitem ON o_orderkey = l_orderkey
@@ -1341,8 +1325,8 @@ object Graph {
          |       CAST(n_edges AS BIGINT) AS n_edges,
          |       coalesce(n_nodes = lag(n_nodes) OVER (ORDER BY round), FALSE)
          |         AS converged
-         |FROM cen ORDER BY round""".stripMargin,
-    "q338_hits_scores" ->
+         |FROM cen ORDER BY round""".stripMargin),
+    Query("q338_hits_scores", hitsScores,
       // HUGEINT sums mirror the Spark side's decimal(38,0); each
       // normalization is the same (score·Scale) // max truncating
       // division over non-negative integers, so scores are bit-identical.
@@ -1379,11 +1363,11 @@ object Graph {
          |  UNION ALL
          |  (SELECT 'hub' AS role, 'c' || ck AS node, h AS score
          |   FROM h2 ORDER BY h DESC, node LIMIT 10))
-         |ORDER BY role, score DESC, node""".stripMargin,
+         |ORDER BY role, score DESC, node""".stripMargin),
     // full-replica oracle: cut/volume/internal are conditional integer
     // sums over the (cn, sn) cell census; φ is the one IEEE divide of
     // exact integers — both engines re-derive it identically
-    "q319_partition_conductance" ->
+    Query("q319_partition_conductance", partitionConductance,
       """WITH e0 AS MATERIALIZED (
         |  SELECT DISTINCT o_custkey AS ck, l_suppkey AS sk
         |  FROM orders JOIN lineitem ON o_orderkey = l_orderkey
@@ -1408,8 +1392,8 @@ object Graph {
         |            THEN CAST(n_cut_edges AS DOUBLE)
         |                 / CAST(least(volume, 2 * (SELECT CAST(m AS BIGINT) FROM tot) - volume) AS DOUBLE)
         |            ELSE 0.0 END AS conductance
-        |FROM per ORDER BY nation""".stripMargin,
-    "q301_degree_assortativity" ->
+        |FROM per ORDER BY nation""".stripMargin),
+    Query("q301_degree_assortativity", degreeAssortativity,
       s"""WITH pairs AS MATERIALIZED (
          |  SELECT DISTINCT 'c' || o_custkey AS src, 's' || l_suppkey AS dst
          |  FROM orders JOIN lineitem ON o_orderkey = l_orderkey
@@ -1441,11 +1425,11 @@ object Graph {
          |                 / sqrt(CAST(m.n * m.sxx - m.sx * m.sx AS DOUBLE)
          |                        * CAST(m.n * m.syy - m.sy * m.sy AS DOUBLE))
          |       END AS assortativity
-         |FROM m""".stripMargin,
+         |FROM m""".stripMargin),
     // q294's propagation replay, then modularity as pure integer SQL:
     // singleton communities keyed by the node itself ('N' || node),
     // labeled ones by 'L' || label — only labeled rows surface
-    "q380_modularity_census" ->
+    Query("q380_modularity_census", modularityCensus,
       s"""WITH pairs AS MATERIALIZED (
          |  SELECT DISTINCT 'c' || o_custkey AS src, 's' || l_suppkey AS dst
          |  FROM orders JOIN lineitem ON o_orderkey = l_orderkey
@@ -1500,8 +1484,8 @@ object Graph {
          |         / CAST(CAST(m2 AS HUGEINT) * m2 AS DOUBLE) AS modularity
          |FROM parts, gt, m2t
          |WHERE label IS NOT NULL
-         |ORDER BY label""".stripMargin,
-    "q294_label_propagation" ->
+         |ORDER BY label""".stripMargin),
+    Query("q294_label_propagation", labelPropagation,
       s"""WITH pairs AS MATERIALIZED (
          |  SELECT DISTINCT 'c' || o_custkey AS src, 's' || l_suppkey AS dst
          |  FROM orders JOIN lineitem ON o_orderkey = l_orderkey
@@ -1525,8 +1509,8 @@ object Graph {
          |  FROM nodes WHERE node NOT IN (SELECT node FROM l3)
          |  GROUP BY 1
          |)
-         |ORDER BY kind, label""".stripMargin,
-    "q291_reach_sketch_census" ->
+         |ORDER BY kind, label""".stripMargin),
+    Query("q291_reach_sketch_census", reachSketchCensus,
       // exact 3-hop reach for the 10-seed panel (the q288 unrolled
       // DISTINCT-hop form), |V| from the edge list, and the sketch
       // tolerance flag stated literally TRUE — the q18/q92 contract:
@@ -1559,8 +1543,8 @@ object Graph {
          |       TRUE AS sketch_within_15pct
          |FROM reach
          |GROUP BY seed
-         |ORDER BY seed""".stripMargin,
-    "q290_widest_path_census" ->
+         |ORDER BY seed""".stripMargin),
+    Query("q290_widest_path_census", widestPathCensus,
       s"""WITH pairs AS MATERIALIZED (
          |  SELECT 'c' || o_custkey AS src, 's' || l_suppkey AS dst,
          |         count(*) AS w
@@ -1599,10 +1583,10 @@ object Graph {
          |FROM b3
          |WHERE node <> seed
          |GROUP BY 1
-         |ORDER BY 1""".stripMargin,
+         |ORDER BY 1""".stripMargin),
     // the distinct trade pairs as neighbor sets; pairs keyed on the
     // NUMERIC seed id; the dyadic 1/deg makes the RA float sum exact
-    "q411_link_prediction" ->
+    Query("q411_link_prediction", linkPredictionCensus,
       s"""WITH pairs AS MATERIALIZED (
         |  SELECT DISTINCT o_custkey AS c, l_suppkey AS sp
         |  FROM orders JOIN lineitem ON o_orderkey = l_orderkey
@@ -1644,12 +1628,12 @@ object Graph {
         |LEFT JOIN common c ON c.ka = sp.ka AND c.kb = sp.kb
         |LEFT JOIN deg da ON da.k = sp.ka
         |LEFT JOIN deg db ON db.k = sp.kb
-        |ORDER BY seed_a, seed_b""".stripMargin,
+        |ORDER BY seed_a, seed_b""".stripMargin),
     // q288's unrolled DISTINCT hops with hop tags min-folded into the
     // BFS distance (a walk of length d exists for every node at
     // distance d, so min(hop) ≡ the layered first-visit), then the
     // exact 6·H census
-    "q401_harmonic_centrality" ->
+    Query("q401_harmonic_centrality", harmonicCentrality,
       s"""WITH pairs AS MATERIALIZED (
         |  SELECT DISTINCT 'c' || o_custkey AS src, 's' || l_suppkey AS dst
         |  FROM orders JOIN lineitem ON o_orderkey = l_orderkey
@@ -1695,8 +1679,8 @@ object Graph {
              "6 * coalesce(n_hop1, 0) + 3 * coalesce(n_hop2, 0) + 2 * coalesce(n_hop3, 0)",
              "6")} AS harmonic
         |FROM seeds s LEFT JOIN cnt ON s.seed = cnt.seed
-        |ORDER BY s.seed""".stripMargin,
-    "q288_bfs_reachability" ->
+        |ORDER BY s.seed""".stripMargin),
+    Query("q288_bfs_reachability", bfsReachability,
       // unrolled DISTINCT hops ∪-folded: set semantics make this
       // provably identical to the Spark side's frontier-minus-visited
       // optimization (both compute "distinct nodes within 3 hops").
@@ -1728,8 +1712,8 @@ object Graph {
         |SELECT seed, CAST(count(*) - 1 AS BIGINT) AS n_reachable_3hop
         |FROM reach
         |GROUP BY 1
-        |ORDER BY 1""".stripMargin,
-    "q202_triangle_census" ->
+        |ORDER BY 1""".stripMargin),
+    Query("q202_triangle_census", triangleCensus,
       // MATERIALIZED on every multiply-referenced CTE: DuckDB inlines CTE
       // references by default, so `e` (read 3x) re-expands und -> mult ->
       // the 6M-row (ok,sp) self-join on every reference — combinatorial
@@ -1780,8 +1764,8 @@ object Graph {
          |SELECT n_nodes, n_edges, n_wedges, n_triangles,
          |       CASE WHEN n_wedges > 0
          |            THEN ${ratioSql("3 * n_triangles", "n_wedges")} END AS clustering_coeff
-         |FROM census CROSS JOIN edges CROSS JOIN tri""".stripMargin,
-    "q197_pagerank_fixed_point" ->
+         |FROM census CROSS JOIN edges CROSS JOIN tri""".stripMargin),
+    Query("q197_pagerank_fixed_point", pageRank,
       // Same MATERIALIZED rationale as q202: e is read by deg/n and all
       // three contribution joins; inlined it would rebuild the 6M-row
       // orders⋈lineitem edge list per reference.
@@ -1813,5 +1797,5 @@ object Graph {
         |              CAST(150000000000 + (85 * coalesce(c3.s, 0)) // 100 AS BIGINT) AS r
         |       FROM n LEFT JOIN c3 ON n.node = c3.node)
         |SELECT node, r AS pr FROM r3
-        |ORDER BY pr DESC, node ASC LIMIT 20""".stripMargin)
+        |ORDER BY pr DESC, node ASC LIMIT 20""".stripMargin))
 }

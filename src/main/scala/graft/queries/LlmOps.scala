@@ -8091,157 +8091,6 @@ object LlmOps {
       .crossJoin(broadcast(stats))
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q355_skipgram_subsample" -> skipgramSubsample,
-    "q350_mmr_rerank" -> mmrRerank,
-    "q351_ece_calibration" -> eceCalibration,
-    "q352_retrieval_eval_census" -> retrievalEvalCensus,
-    "q358_ndcg_at_10" -> ndcgAt10,
-    "q362_rbo_index_fidelity" -> rboIndexFidelity,
-    "q363_adjusted_rand_index" -> adjustedRandIndex,
-    "q364_cohens_kappa" -> cohensKappa,
-    "q365_mann_whitney_u" -> mannWhitneyU,
-    "q366_roc_auc_surprisal" -> rocAucSurprisal,
-    "q373_average_precision" -> averagePrecision,
-    "q381_f1_threshold" -> f1ThresholdPanel,
-    "q382_mcc_eval" -> mccEvalPanel,
-    "q367_permutation_test" -> permutationTest,
-    "q368_brier_decomposition" -> brierDecomposition,
-    "q370_vocab_growth" -> vocabGrowth,
-    "q372_cramers_v" -> cramersV,
-    "q345_dbscan_grid" -> dbscanGrid,
-    "q361_dbscan_auto_eps" -> dbscanAutoEps,
-    "q349_textrank_keywords" -> textrankKeywords,
-    "q348_bootstrap_ci" -> bootstrapCi,
-    "q347_quantile_normalization" -> quantileNormalization,
-    "q344_jl_projection_census" -> jlProjectionCensus,
-    "q328_leakage_safe_split" -> leakageSafeSplit,
-    "q327_bitext_margin_mining" -> bitextMarginMining,
-    "q324_shard_manifest" -> shardManifest,
-    "q325_quality_filter_inference" -> qualityFilterInference,
-    "q221_bigram_coverage" -> bigramCoverage,
-    "q223_containment_dedup" -> containmentDedup,
-    "q210_kwic_context" -> kwicContext,
-    "q204_setsim_prefix_join" -> setSimPrefixJoin,
-    "q181_dense_id_assignment" -> denseIdAssignment,
-    "q180_feature_hashing" -> featureHashing,
-    "q293_importance_resampling" -> importanceResampling,
-    "q295_temperature_mixture" -> temperatureMixture,
-    "q296_matryoshka_census" -> matryoshkaCensus,
-    "q297_bigram_lm_perplexity" -> bigramLmPerplexity,
-    "q298_boilerplate_census" -> boilerplateCensus,
-    "q299_source_overlap_matrix" -> sourceOverlapMatrix,
-    "q311_winnowing_census" -> winnowingCensus,
-    "q312_incremental_lsh_dedup" -> incrementalLshDedup,
-    "q314_duplicate_span_extraction" -> duplicateSpanExtraction,
-    "q315_pareto_frontier" -> paretoFrontier,
-    "q316_eval_span_decontamination" -> evalSpanDecontamination,
-    "q318_hybrid_rrf_fusion" -> hybridRrfFusion,
-    "q321_priority_sample" -> prioritySample,
-    "q304_distribution_drift" -> distributionDrift,
-    "q332_ks_drift_stat" -> ksDriftStat,
-    "q356_cvm_drift_stat" -> cvmDriftStat,
-    "q334_neyman_allocation" -> neymanAllocation,
-    "q335_conformal_threshold" -> conformalThreshold,
-    "q336_isotonic_calibration" -> isotonicCalibration,
-    "q300_pq_codebook_census" -> pqCodebookCensus,
-    "q330_ann_ivf_pq_adc" -> annIvfPqAdc,
-    "q174_cluster_survivorship" -> clusterSurvivorship,
-    "q163_hard_negatives" -> hardNegatives,
-    "q193_knn_label_vote" -> knnLabelVote,
-    "q387_knn_hubness" -> knnHubness,
-    "q388_simpson_diversity" -> simpsonDiversity,
-    "q390_qq_decile_drift" -> qqDecileDrift,
-    "q391_kruskal_wallis" -> kruskalWallis,
-    "q392_dup_saturation" -> dupSaturation,
-    "q393_anova_effect" -> anovaEffect,
-    "q394_cohens_d" -> cohensD,
-    "q395_effective_sample_size" -> effectiveSampleSize,
-    "q396_mcnemar_filter_ab" -> mcnemarFilterAb,
-    "q397_fleiss_kappa_ensemble" -> fleissKappaEnsemble,
-    "q399_bigram_kneser_ney" -> bigramKneserNey,
-    "q400_lof_grid_outliers" -> lofGridOutliers,
-    "q402_cochran_q_filters" -> cochranQFilters,
-    "q403_cliffs_delta_drift" -> cliffsDeltaDrift,
-    "q405_chao1_richness" -> chao1Richness,
-    "q406_good_turing_mass" -> goodTuringMass,
-    "q407_brown_forsythe_drift" -> brownForsytheDrift,
-    "q408_hellinger_lang_drift" -> hellingerLangDrift,
-    "q413_jarque_bera" -> jarqueBeraCensus,
-    "q416_zipf_slope" -> zipfSlopeCensus,
-    "q417_wilson_keep_rates" -> wilsonKeepRates,
-    "q418_wasserstein_drift" -> wassersteinDrift,
-    "q419_energy_distance_drift" -> energyDistanceDrift,
-    "q420_welch_ttest_drift" -> welchTTestDrift,
-    "q424_krippendorff_alpha" -> krippendorffAlpha,
-    "q425_term_burstiness" -> termBurstiness,
-    "q428_hodges_lehmann_shift" -> hodgesLehmannShift,
-    "q430_kendall_w_proxies" -> kendallWProxies,
-    "q432_cronbach_alpha" -> cronbachAlphaProxies,
-    "q433_lin_ccc" -> linCccCharsBudget,
-    "q434_bland_altman" -> blandAltmanCharsBudget,
-    "q435_yule_k" -> yuleKCensus,
-    "q436_cochran_armitage" -> cochranArmitageTrend,
-    "q196_bpe_encode" -> bpeEncode,
-    "q157_bpe_merges" -> bpeMerges,
-    "q329_bpe_merge_loop" -> bpeMergeLoop,
-    "q374_wordpiece_merge_loop" -> wordpieceMergeLoop,
-    "q360_unigram_lm_tokenizer" -> unigramLmTokenizer,
-    "q156_curation_funnel" -> curationFunnel,
-    "q147_quality_gopher" -> qualityGopherRules,
-    "q148_domain_blocklist" -> domainBlocklist,
-    "q149_inverted_index" -> invertedIndex,
-    "q131_quality_unigram_lm" -> qualityUnigramLm,
-    "q132_bm25_search" -> bm25Search,
-    "q133_collocation_pmi" -> collocationPmi,
-    "q127_mix_rebalance" -> mixRebalance,
-    "q128_dedup_lines" -> dedupLinesRebuild,
-    "q40_dedup_exact" -> dedupExact,
-    "q239_token_fertility" -> tokenFertility,
-    "q240_minhash_accuracy_gate" -> minhashAccuracyGate,
-    "q241_deterministic_shuffle" -> deterministicShuffle,
-    "q248_quality_mixture_plan" -> qualityMixturePlan,
-    "q260_consistent_hash_sample" -> consistentHashSample,
-    "q249_ngram_novelty" -> ngramNovelty,
-    "q250_embedding_norm_census" -> embeddingNormCensus,
-    "q41_dedup_minhash_lsh" -> dedupMinhashLsh,
-    "q76_dedup_clusters" -> dedupClusters,
-    "q42_dedup_simhash" -> dedupSimhash,
-    "q43_dedup_ngram_jaccard" -> dedupNgramJaccard,
-    "q44_dedup_embedding" -> dedupEmbedding,
-    "q64_dedup_embedding_banded" -> dedupEmbeddingBanded,
-    "q45_ann_brute_force" -> annBruteForce,
-    "q46_ann_lsh_bucketed" -> annLshBucketed,
-    "q53_ann_ivf" -> annIvf,
-    "q75_ann_ivf_multiprobe" -> annIvfMultiprobe,
-    "q57_ann_custom_topk" -> annCustomTopK,
-    "q70_ann_recall_gate" -> annRecallGate,
-    "q47_text_stats" -> textStats,
-    "q48_lang_id" -> langId,
-    "q49_quality_score" -> qualityScore,
-    "q50_fingerprint" -> fingerprint,
-    "q51_token_count" -> tokenCount,
-    "q52_tfidf_top_terms" -> tfidfTop,
-    "q74_pii_scrub" -> piiScrub,
-    "q78_embed_quantize" -> embedQuantize,
-    "q81_quality_repetition" -> qualityRepetition,
-    "q82_split_assign" -> splitAssign,
-    "q83_chunk_overlap" -> chunkOverlap,
-    "q84_sample_stratified" -> sampleStratified,
-    "q96_decontaminate" -> decontaminate,
-    "q98_pack_sequences" -> packSequences,
-    "q104_dedup_editdistance" -> dedupEditDistance,
-    "q106_sample_weighted" -> sampleWeighted,
-    "q107_profile_corpus" -> profileCorpus,
-    "q108_dedup_substring" -> dedupSubstring,
-    "q109_kmeans_clusters" -> kmeansClusters,
-    "q110_semdedup_prune" -> semdedupPrune,
-    "q114_table_checksum" -> tableChecksum,
-    "q115_url_normalize" -> urlNormalize,
-    "q117_dedup_keep_best" -> dedupKeepBest,
-    "q119_token_histogram" -> tokenHistogram
-  )
-
   /** One unrolled weighted-PageRank round for the q349 oracle. */
   private def trRoundSql(k: Int): String = {
     val prev = s"r${k - 1}"
@@ -8278,8 +8127,8 @@ object LlmOps {
        |  SELECT * FROM $prev UNION ALL SELECT * FROM p$k)""".stripMargin
   }
 
-  val oracles: Map[String, String] = Map(
-    "q355_skipgram_subsample" ->
+  val declared: Seq[Query] = Seq(
+    Query("q355_skipgram_subsample", skipgramSubsample,
       s"""WITH toks AS MATERIALIZED (
          |  SELECT doc_id, u.pos AS pos, u.w AS w
          |  FROM (SELECT doc_id,
@@ -8323,8 +8172,8 @@ object LlmOps {
          |)
          |SELECT center, context, n_pairs, n_occurrences, n_kept, n_pairs_total
          |FROM top30, stats
-         |ORDER BY n_pairs DESC, center, context""".stripMargin,
-    "q350_mmr_rerank" ->
+         |ORDER BY n_pairs DESC, center, context""".stripMargin),
+    Query("q350_mmr_rerank", mmrRerank,
       s"""WITH cand AS MATERIALIZED (
          |  SELECT qid, vid, ve, rel FROM (
          |    SELECT q.vec_id AS qid, c.vec_id AS vid, c.embedding AS ve,
@@ -8347,8 +8196,8 @@ object LlmOps {
          |        FROM cand) WHERE pk = 1
          |), ${(2 to MmrPicks).map(mmrStepSql).mkString(", ")}
          |SELECT qid, pick, vid, rel AS rel_cos, score AS mmr_score
-         |FROM s$MmrPicks ORDER BY qid, pick""".stripMargin,
-    "q351_ece_calibration" ->
+         |FROM s$MmrPicks ORDER BY qid, pick""".stripMargin),
+    Query("q351_ece_calibration", eceCalibration,
       s"""WITH scored AS MATERIALIZED (
          |  SELECT lang,
          |         ${markerCaseSql("fr")} AS predicted,
@@ -8387,8 +8236,8 @@ object LlmOps {
          |        FROM folded)
          |)
          |SELECT bin, n_docs, n_correct, accuracy, conf_mid, n_scored, ece
-         |FROM wb, tot ORDER BY bin""".stripMargin,
-    "q352_retrieval_eval_census" ->
+         |FROM wb, tot ORDER BY bin""".stripMargin),
+    Query("q352_retrieval_eval_census", retrievalEvalCensus,
       s"""WITH per AS MATERIALIZED (
          |  SELECT qid, qlab,
          |         CAST(min(CASE WHEN rel THEN rn END) AS BIGINT)
@@ -8430,10 +8279,10 @@ object LlmOps {
          |)
          |SELECT qid, qlab AS label, first_rel_rank, rel_at_5, rel_at_10,
          |       rr, p_at_5, n_queries, mrr, mean_p_at_5
-         |FROM sc, panelg ORDER BY qid""".stripMargin,
+         |FROM sc, panelg ORDER BY qid""".stripMargin),
     // q352's panel scan + the literal discount table; DCG/IDCG are
     // fixed-order ≤10-step folds so the float columns hash-compare
-    "q358_ndcg_at_10" ->
+    Query("q358_ndcg_at_10", ndcgAt10,
       s"""WITH per AS MATERIALIZED (
          |  SELECT qid, qlab,
          |         list(struct_pack(rn := rn, rel := rel) ORDER BY rn) AS xs
@@ -8478,12 +8327,12 @@ object LlmOps {
          |)
          |SELECT qid, qlab AS label, n_rel_corpus, dcg, idcg, ndcg,
          |       n_queries, mean_ndcg
-         |FROM nd, panelg ORDER BY qid""".stripMargin,
+         |FROM nd, panelg ORDER BY qid""".stripMargin),
     // the shared 2-d grid points, the q345 cell-keyed candidate join
     // minus self-pairs, a (d², ib)-ordered rank window, and the
     // ascending-rank neighbor fold (NULL neighbor kdists propagate —
     // undefined is never flagged)
-    "q400_lof_grid_outliers" ->
+    Query("q400_lof_grid_outliers", lofGridOutliers,
       s"""WITH $jl2PtsSql, cand AS MATERIALIZED (
          |  SELECT a.vec_id AS ia, b.vec_id AS ib,
          |         (a.y0 - b.y0) * (a.y0 - b.y0)
@@ -8521,8 +8370,8 @@ object LlmOps {
          |FROM pts p
          |LEFT JOIN kd ON p.vec_id = kd.ia
          |LEFT JOIN nm ON p.vec_id = nm.ia
-         |ORDER BY p.vec_id""".stripMargin,
-    "q345_dbscan_grid" ->
+         |ORDER BY p.vec_id""".stripMargin),
+    Query("q345_dbscan_grid", dbscanGrid,
       // 2-d slice of the q344 projection replay; components by
       // recursive-CTE reachability + min (the q76 oracle pattern), so
       // the hash compare proves pointer-jumped propagation ≡ the
@@ -8570,10 +8419,10 @@ object LlmOps {
          |         - (SELECT CAST(coalesce(sum(n_core), 0) AS BIGINT) FROM cc)
          |         - (SELECT CAST(coalesce(sum(n_border), 0) AS BIGINT) FROM bc)
          |)
-         |ORDER BY cluster_id""".stripMargin,
+         |ORDER BY cluster_id""".stripMargin),
     // full margins×margins grid (absent cells carry expected mass), χ²
     // folded in cell-sorted order, V and residuals as shared trees
-    "q372_cramers_v" ->
+    Query("q372_cramers_v", cramersV,
       s"""WITH cells AS MATERIALIZED (
          |  SELECT lang, source, CAST(count(*) AS BIGINT) AS n
          |  FROM documents GROUP BY 1, 2
@@ -8616,11 +8465,11 @@ object LlmOps {
          |       (CAST(n_obs AS DOUBLE) - e) / sqrt(e) AS std_residual,
          |       chi2, n_docs, n_langs, n_sources, cramers_v
          |FROM grid, outt
-         |ORDER BY lang, source""".stripMargin,
+         |ORDER BY lang, source""".stripMargin),
     // first-appearance min-agg charges each type to one doc; value
     // bands + a 16-row prefix window; the sublinearity flag is an exact
     // HUGEINT cross-multiply on the half-vs-full checkpoint
-    "q370_vocab_growth" ->
+    Query("q370_vocab_growth", vocabGrowth,
       s"""WITH bounds AS (
          |  SELECT CAST(min(doc_id) AS BIGINT) AS lo,
          |         CAST(max(doc_id) AS BIGINT) AS hi
@@ -8672,10 +8521,10 @@ object LlmOps {
          |SELECT band, n_docs, n_tokens, n_new_types, cum_tokens, cum_types,
          |       sublinear, type_ratio, token_ratio
          |FROM curve, rid
-         |ORDER BY band""".stripMargin,
+         |ORDER BY band""".stripMargin),
     // the confidence-VALUE census (double key from the one shared
     // divide) → three fixed-order folds over the conf-sorted array
-    "q368_brier_decomposition" ->
+    Query("q368_brier_decomposition", brierDecomposition,
       s"""WITH allsc AS MATERIALIZED (
          |  SELECT lang,
          |         ${markerCaseSql("fr")} AS predicted,
@@ -8740,10 +8589,10 @@ object LlmOps {
          |SELECT conf, n_docs, n_correct, accuracy, n_scored, base_rate,
          |       brier, reliability, resolution, uncertainty
          |FROM wb, t3
-         |ORDER BY conf""".stripMargin,
+         |ORDER BY conf""".stripMargin),
     // one md5 bit-slice per doc → 48 reassignment partials → per-b exact
     // difference numerators → the shared single-divide double compare
-    "q367_permutation_test" ->
+    Query("q367_permutation_test", permutationTest,
       s"""WITH base AS MATERIALIZED (
          |  SELECT CAST(len($toksSql) AS BIGINT) AS ntok,
          |         $driftHalfSql AS in_a,
@@ -8788,10 +8637,10 @@ object LlmOps {
          |       b_total, n_geq,
          |       CASE WHEN n_a > 0 AND n_b > 0 THEN
          |         ${ratioSql("1 + n_geq", "b_total + 1")} END AS p_value
-         |FROM cmp, obs""".stripMargin,
+         |FROM cmp, obs""".stripMargin),
     // q131's surprisal chain → score census → the q365 doubled-midrank
     // prefix fold; AUC and rank-Gini are single divides of exact ints
-    "q366_roc_auc_surprisal" ->
+    Query("q366_roc_auc_surprisal", rocAucSurprisal,
       s"""WITH $surprisalCensusSql, cums AS (
          |  SELECT npv, nnv, npv + nnv AS wv,
          |         CAST(sum(npv + nnv) OVER (ORDER BY score
@@ -8811,10 +8660,10 @@ object LlmOps {
          |       CASE WHEN n_pos > 0 AND n_neg > 0 THEN
          |         ${ratioSql("rs2 - n_pos * (n_pos + 1) - n_pos * n_neg", "n_pos * n_neg")}
          |       END AS gini_rank
-         |FROM agg""".stripMargin,
+         |FROM agg""".stripMargin),
     // q366's shared score census → descending-threshold cums → one
     // fixed-order (ascending score) double fold over the term list
-    "q373_average_precision" ->
+    Query("q373_average_precision", averagePrecision,
       s"""WITH $surprisalCensusSql, cums AS (
          |  SELECT score, npv, nnv,
          |         CAST(sum(npv + nnv) OVER (ORDER BY score DESC
@@ -8843,10 +8692,10 @@ object LlmOps {
          |)
          |SELECT n_pos, n_neg, n_thresholds, ap, ap_baseline,
          |       CASE WHEN n_pos > 0 THEN ap / ap_baseline END AS ap_lift
-         |FROM fin""".stripMargin,
+         |FROM fin""".stripMargin),
     // the q373 threshold census → cross-multiplied F1 argmax (ties to
     // the higher threshold) via NOT EXISTS — the q374 oracle stance
-    "q381_f1_threshold" ->
+    Query("q381_f1_threshold", f1ThresholdPanel,
       s"""WITH $surprisalCensusSql, cums AS (
          |  SELECT score,
          |         CAST(sum(npv + nnv) OVER (ORDER BY score DESC
@@ -8877,10 +8726,10 @@ object LlmOps {
          |WHERE NOT EXISTS (SELECT 1 FROM cand b WHERE
          |        CAST(b.f1n AS HUGEINT) * a.f1d > CAST(a.f1n AS HUGEINT) * b.f1d
          |        OR (CAST(b.f1n AS HUGEINT) * a.f1d = CAST(a.f1n AS HUGEINT) * b.f1d
-         |            AND b.score > a.score))""".stripMargin,
+         |            AND b.score > a.score))""".stripMargin),
     // q364's census base collapsed to the binary en-vs-rest confusion;
     // MCC's 4-margin product under ONE sqrt (the q376 stance)
-    "q382_mcc_eval" ->
+    Query("q382_mcc_eval", mccEvalPanel,
       s"""WITH allsc AS (
          |  SELECT lang,
          |         ${markerCaseSql("fr")} AS predicted,
@@ -8912,11 +8761,11 @@ object LlmOps {
          |           / sqrt(CAST(CAST(tp + fp AS HUGEINT) * (tp + fn)
          |                       * (tn + fp) * (tn + fn) AS DOUBLE))
          |       ELSE 0.0 END AS mcc
-         |FROM cm""".stripMargin,
+         |FROM cm""".stripMargin),
     // q332's census/prefix chain; doubled midranks keep every rank an
     // integer, the tie cube-sum rides as HUGEINT → VARCHAR, z is one
     // shared IEEE tree
-    "q365_mann_whitney_u" ->
+    Query("q365_mann_whitney_u", mannWhitneyU,
       s"""WITH base AS (
          |  SELECT lang, CAST(len($toksSql) AS BIGINT) AS ntok,
          |         $driftHalfSql AS in_a
@@ -8971,10 +8820,10 @@ object LlmOps {
          |                 > $MwCritAlpha05
          |       END, FALSE) AS shifted
          |FROM sc
-         |ORDER BY lang""".stripMargin,
+         |ORDER BY lang""".stripMargin),
     // q351's marker-scorer twin → 4×4 confusion census → margins via a
     // FULL class join → exact HUGEINT kappa pieces, three shared divides
-    "q364_cohens_kappa" ->
+    Query("q364_cohens_kappa", cohensKappa,
       s"""WITH allsc AS MATERIALIZED (
          |  SELECT lang,
          |         ${markerCaseSql("fr")} AS predicted,
@@ -9022,10 +8871,10 @@ object LlmOps {
          |SELECT lang, predicted, n_docs, n_scored, n_agree, po, pe, kappa,
          |       n_unscored, n_foreign
          |FROM cells, stats
-         |ORDER BY lang, predicted""".stripMargin,
+         |ORDER BY lang, predicted""".stripMargin),
     // the label × JL-grid-cell contingency census; all pair counting on
     // doubled sums (x·(x−1)), HUGEINT cross-multiplies, one divide each
-    "q363_adjusted_rand_index" ->
+    Query("q363_adjusted_rand_index", adjustedRandIndex,
       s"""WITH proj AS MATERIALIZED (
          |  SELECT vec_id,
          |    list_transform(range(0, 2), j ->
@@ -9076,11 +8925,11 @@ object LlmOps {
          |       CASE WHEN ari_den <> 0
          |            THEN CAST(ari_num AS DOUBLE) / CAST(ari_den AS DOUBLE)
          |            ELSE 1.0 END AS ari
-         |FROM comb""".stripMargin,
+         |FROM comb""".stripMargin),
     // exact-cosine and JL-cosine top-10s (q352 scan + q344 projection),
     // prefix intersections per depth, the integer coefficient fold, one
     // divide; the panel mean folds qid-sorted (q352's pattern)
-    "q362_rbo_index_fidelity" -> {
+    Query("q362_rbo_index_fidelity", rboIndexFidelity, {
       def dd(a: String, b: String): String =
         s"""list_reduce(list_prepend(CAST(0.0 AS DOUBLE),
            |        list_transform($a, (x, i) -> x * ($b)[i])), (s2, v) -> s2 + v)""".stripMargin
@@ -9141,12 +8990,12 @@ object LlmOps {
          |)
          |SELECT qid, overlap_at_10, rbo_scaled, rbo, n_queries, mean_rbo
          |FROM sc, panelg ORDER BY qid""".stripMargin
-    },
+    }),
     // q345's replay with the ε-derivation CTE ahead of it: the probe
     // census, the clamped lattice ε (√ is correctly-rounded IEEE — the
     // one float op before the exact dyadic ε), and the same recursive
     // reachability; the chosen ε rides the output
-    "q361_dbscan_auto_eps" ->
+    Query("q361_dbscan_auto_eps", dbscanAutoEps,
       s"""WITH RECURSIVE proj AS MATERIALIZED (
          |  SELECT vec_id,
          |    list_transform(range(0, 2), j ->
@@ -9223,8 +9072,8 @@ object LlmOps {
          |         - (SELECT CAST(coalesce(sum(n_core), 0) AS BIGINT) FROM cc)
          |         - (SELECT CAST(coalesce(sum(n_border), 0) AS BIGINT) FROM bc)
          |)
-         |ORDER BY cluster_id""".stripMargin,
-    "q349_textrank_keywords" ->
+         |ORDER BY cluster_id""".stripMargin),
+    Query("q349_textrank_keywords", textrankKeywords,
       s"""WITH ft AS (
          |  SELECT list_filter($toksSql, t -> len(t) >= $TrMinTokenLen) AS fts
          |  FROM documents
@@ -9253,8 +9102,8 @@ object LlmOps {
          |r0 AS (SELECT node, CAST($TrScale AS BIGINT) AS r FROM n),
          |${trRoundSql(1)}, ${trRoundSql(2)}, ${trRoundSql(3)}
          |SELECT node AS keyword, r AS pr FROM r3
-         |ORDER BY pr DESC, keyword ASC LIMIT 20""".stripMargin,
-    "q348_bootstrap_ci" ->
+         |ORDER BY pr DESC, keyword ASC LIMIT 20""".stripMargin),
+    Query("q348_bootstrap_ci", bootstrapCi,
       s"""WITH weighted AS (
          |  SELECT ntok, b,
          |         CAST(${poissonCaseSql("u")} AS BIGINT) AS w
@@ -9286,8 +9135,8 @@ object LlmOps {
          |       est_point >= xs[1] AND est_point <= xs[len(xs)]
          |         AS point_in_band
          |FROM arr, point
-         |WHERE len(xs) > 0""".stripMargin,
-    "q347_quantile_normalization" ->
+         |WHERE len(xs) > 0""".stripMargin),
+    Query("q347_quantile_normalization", quantileNormalization,
       s"""WITH base AS (
          |  SELECT source, CAST(len($toksSql) AS BIGINT) AS ntok
          |  FROM documents
@@ -9313,8 +9162,8 @@ object LlmOps {
          |       CAST(min(v) AS BIGINT) AS norm_ntok
          |FROM src JOIN pool ON cum_p * n_s >= cum_s * n_p
          |GROUP BY 1, 2
-         |ORDER BY source, ntok""".stripMargin,
-    "q344_jl_projection_census" ->
+         |ORDER BY source, ntok""".stripMargin),
+    Query("q344_jl_projection_census", jlProjectionCensus,
       // DuckDB's 1-based lambda index ↔ Spark's 0-based: the sign-matrix
       // key uses (i − 1); peer-element access b[i] replaces zip_with.
       // Squares are computed per element then left-fold-summed — the
@@ -9360,11 +9209,11 @@ object LlmOps {
          |       (SELECT proj_checksum FROM stats) AS proj_checksum
          |FROM pairs
          |GROUP BY 1
-         |ORDER BY bucket""".stripMargin,
+         |ORDER BY bucket""".stripMargin),
     // q76's recursive-CTE component chain + the two split censuses; the
     // cluster_aware straddle count is RECOMPUTED (and equals 0), not
     // asserted.
-    "q328_leakage_safe_split" -> {
+    Query("q328_leakage_safe_split", leakageSafeSplit, {
       import graft.operators.TextOps.{MinhashA, MinhashB, MinhashPrime}
       val aList = MinhashA.mkString("[", ", ", "]")
       val bList = MinhashB.mkString("[", ", ", "]")
@@ -9424,8 +9273,8 @@ object LlmOps {
          |  FROM per
          |)
          |ORDER BY scheme""".stripMargin
-    },
-    "q327_bitext_margin_mining" -> {
+    }),
+    Query("q327_bitext_margin_mining", bitextMarginMining, {
       val meanSql = "(list_reduce(list_prepend(CAST(0.0 AS DOUBLE), cs), (a, x) -> a + x) / CAST(len(cs) AS DOUBLE))"
       s"""WITH base AS MATERIALIZED (
          |  SELECT vec_id, lang, embedding
@@ -9460,8 +9309,8 @@ object LlmOps {
          |FROM agg
          |ORDER BY margin DESC, en_id ASC
          |LIMIT 20""".stripMargin
-    },
-    "q324_shard_manifest" ->
+    }),
+    Query("q324_shard_manifest", shardManifest,
       s"""WITH r AS (
          |  SELECT doc_id,
          |         substr(md5('shard:' || CAST(doc_id AS VARCHAR)), 1, 10) AS hhex,
@@ -9484,18 +9333,18 @@ object LlmOps {
          |       bit_xor(digest) AS xor_check,
          |       CAST(CAST(sum(digest) AS HUGEINT) % $ChecksumMod AS BIGINT) AS sum_check,
          |       min(concat(hhex, ':', lpad(CAST(doc_id AS VARCHAR), 12, '0'))) AS first_member
-         |FROM c GROUP BY shard_id ORDER BY shard_id""".stripMargin,
-    "q325_quality_filter_inference" ->
+         |FROM c GROUP BY shard_id ORDER BY shard_id""".stripMargin),
+    Query("q325_quality_filter_inference", qualityFilterInference,
       s"""WITH $qfPerDocSql
          |SELECT lang, count(*) AS n_docs,
          |       ${sumLongSql("CASE WHEN score_bits * tnb > ts * nb THEN 1 ELSE 0 END")} AS n_selected,
          |       ${sumLongSql("score_bits")} AS sum_score_bits,
          |       ${ratioSql("sum(CASE WHEN score_bits * tnb > ts * nb THEN 1 ELSE 0 END)", "count(*)")} AS sel_rate
-         |FROM perdoc, calib GROUP BY lang ORDER BY lang""".stripMargin,
+         |FROM perdoc, calib GROUP BY lang ORDER BY lang""".stripMargin),
     // the shared q325 per-doc chain + the shared q131 vote fragment →
     // 2×2 discordance census → two shared divides; squared numerators
     // HUGEINT → VARCHAR-routed
-    "q396_mcnemar_filter_ab" ->
+    Query("q396_mcnemar_filter_ab", mcnemarFilterAb,
       s"""WITH $qfPerDocSql,
          |qfvotes AS (
          |  SELECT doc_id, score_bits * tnb > ts * nb AS keep
@@ -9531,10 +9380,10 @@ object LlmOps {
          |                   * (n_a_only - n_b_only) AS VARCHAR) AS DOUBLE)
          |           / CAST(n_a_only + n_b_only AS DOUBLE)
          |           > ${Chi2Crit95.head} END, FALSE) AS filters_differ
-         |FROM g""".stripMargin,
+         |FROM g""".stripMargin),
     // the q405 fof census → exact dyadic-band interval overlaps →
     // weighted integer OLS (HUGEINT → VARCHAR under the gate)
-    "q416_zipf_slope" -> {
+    Query("q416_zipf_slope", zipfSlopeCensus, {
       val ddSql = "CAST(CAST(CAST(w AS HUGEINT) * sxx " +
         "- CAST(sx AS HUGEINT) * sx AS VARCHAR) AS DOUBLE)"
       val slopeSql = "CAST(CAST(CAST(w AS HUGEINT) * sxy " +
@@ -9580,10 +9429,10 @@ object LlmOps {
          |                    * CAST(sx AS DOUBLE)) / CAST(w AS DOUBLE)
          |       END AS intercept_bits
          |FROM m ORDER BY lang""".stripMargin
-    },
+    }),
     // value census → cleared-denominator central moments (HUGEINT →
     // VARCHAR) → the q387 three-sqrt skew tree + two-cast kurtosis
-    "q413_jarque_bera" -> {
+    Query("q413_jarque_bera", jarqueBeraCensus, {
       val d2d = "CAST(CAST(d2 AS VARCHAR) AS DOUBLE)"
       val skewSql = s"(sqrt(CAST(n AS DOUBLE)) " +
         s"* CAST(CAST(d3 AS VARCHAR) AS DOUBLE)) " +
@@ -9619,10 +9468,10 @@ object LlmOps {
          |                THEN $jbSql > ${Chi2Crit95(1)} END, FALSE)
          |         AS nonnormal
          |FROM mom ORDER BY lang""".stripMargin
-    },
+    }),
     // per-lang token counts → frequency-of-frequencies → exact
     // Chao1 rational (f1² HUGEINT → VARCHAR under the gate)
-    "q405_chao1_richness" ->
+    Query("q405_chao1_richness", chao1Richness,
       s"""WITH cnts AS MATERIALIZED (
          |  SELECT lang, tok, CAST(count(*) AS BIGINT) AS r
          |  FROM (SELECT lang, unnest($toksSql) AS tok FROM documents)
@@ -9648,10 +9497,10 @@ object LlmOps {
          |           + CAST(CAST(CAST(f1 AS HUGEINT) * (f1 - 1) AS VARCHAR)
          |                  AS DOUBLE) / 2.0
          |       END AS chao1
-         |FROM g ORDER BY lang""".stripMargin,
+         |FROM g ORDER BY lang""".stripMargin),
     // the same fof census → the r = 1..4 smoothed-count ladder, each
     // r* one shared divide; P0 = f1/N rides per lang
-    "q406_good_turing_mass" ->
+    Query("q406_good_turing_mass", goodTuringMass,
       s"""WITH cnts AS MATERIALIZED (
          |  SELECT lang, tok, CAST(count(*) AS BIGINT) AS r
          |  FROM (SELECT lang, unnest($toksSql) AS tok FROM documents)
@@ -9682,10 +9531,10 @@ object LlmOps {
          |            THEN CAST((l.r + 1) * l.f_r_next AS DOUBLE)
          |                 / CAST(l.f_r AS DOUBLE) END AS r_star
          |FROM ladder l JOIN tot t ON t.lang = l.lang
-         |ORDER BY l.lang, l.r""".stripMargin,
+         |ORDER BY l.lang, l.r""".stripMargin),
     // the shared drift split → value census → census-ordered CDF gaps ×
     // value gaps in HUGEINT (VARCHAR-routed), one shared divide
-    "q418_wasserstein_drift" ->
+    Query("q418_wasserstein_drift", wassersteinDrift,
       s"""WITH $driftNtokCensusSql, cums AS (
          |  SELECT ntok,
          |         sum(nav) OVER (ORDER BY ntok
@@ -9713,10 +9562,10 @@ object LlmOps {
          |         CAST(CAST(w1_num AS VARCHAR) AS DOUBLE)
          |           / CAST(CAST(CAST(n_a AS HUGEINT) * n_b AS VARCHAR)
          |                  AS DOUBLE) END AS wasserstein_1
-         |FROM g, tot""".stripMargin,
+         |FROM g, tot""".stripMargin),
     // the same census → ONE census×census pass folding the three
     // |u−v|-weighted sums exactly, then the fixed three-divide tree
-    "q419_energy_distance_drift" -> {
+    Query("q419_energy_distance_drift", energyDistanceDrift, {
       val d2Sql = "2.0 * (CAST(CAST(sab AS VARCHAR) AS DOUBLE) " +
         "/ CAST(CAST(CAST(n_a AS HUGEINT) * n_b AS VARCHAR) AS DOUBLE)) " +
         "- CAST(CAST(saa AS VARCHAR) AS DOUBLE) " +
@@ -9747,10 +9596,10 @@ object LlmOps {
          |         CAST(CAST(CAST(n_a AS HUGEINT) * n_b AS VARCHAR) AS DOUBLE)
          |           / CAST(n_a + n_b AS DOUBLE) * ($d2Sql) END AS energy_t
          |FROM pr, tot""".stripMargin
-    },
+    }),
     // the same census → one moment agg → exact variance numerators →
     // the fixed three-divide Welch t / Satterthwaite df trees
-    "q420_welch_ttest_drift" -> {
+    Query("q420_welch_ttest_drift", welchTTestDrift, {
       val raSql = "(CAST(CAST(va_num AS VARCHAR) AS DOUBLE) " +
         "/ CAST(CAST(CAST(n_a AS HUGEINT) * n_a * (n_a - 1) AS VARCHAR) " +
         "AS DOUBLE))"
@@ -9791,10 +9640,10 @@ object LlmOps {
          |                THEN abs($tSql) > $MwCritAlpha05 END, FALSE)
          |         AS shifted
          |FROM v""".stripMargin
-    },
+    }),
     // the same census → weighted pairwise-difference census → exact
     // lower-median rank selection
-    "q428_hodges_lehmann_shift" ->
+    Query("q428_hodges_lehmann_shift", hodgesLehmannShift,
       s"""WITH $driftNtokCensusSql, diffs AS MATERIALIZED (
          |  SELECT a.ntok - b.ntok AS diff,
          |         ${sumLongSql("a.nav * b.nbv")} AS w
@@ -9817,11 +9666,11 @@ object LlmOps {
          |        FROM diffs), np
          |)
          |SELECT n_a, n_b, n_pairs, hl_shift_tokens
-         |FROM hl, np, tot""".stripMargin,
+         |FROM hl, np, tot""".stripMargin),
     // the shared drift split → value census → census×census dominance
     // fold in HUGEINT (VARCHAR-routed), one shared divide, the literal
     // magnitude CASE tree
-    "q403_cliffs_delta_drift" -> {
+    Query("q403_cliffs_delta_drift", cliffsDeltaDrift, {
       val deltaExpr = "CAST(CAST(gt - lt AS VARCHAR) AS DOUBLE) " +
         "/ CAST(CAST(CAST(n_a AS HUGEINT) * n_b AS VARCHAR) AS DOUBLE)"
       s"""WITH census AS MATERIALIZED (
@@ -9856,10 +9705,10 @@ object LlmOps {
          |              ELSE 'large' END
          |       ELSE 'undefined' END AS magnitude
          |FROM pr, tot""".stripMargin
-    },
+    }),
     // the three shared vote fragments union-tagged → 3-key census →
     // the literal-z Wilson trees
-    "q417_wilson_keep_rates" -> {
+    Query("q417_wilson_keep_rates", wilsonKeepRates, {
       val pSql = "(CAST(k AS DOUBLE) / CAST(n AS DOUBLE))"
       val z = s"$MwCritAlpha05"
       val centerSql = s"($pSql + $z * $z / (2.0 * CAST(n AS DOUBLE)))"
@@ -9900,10 +9749,10 @@ object LlmOps {
          |         ($centerSql + $halfSql) / $denomSql
          |           - ($centerSql - $halfSql) / $denomSql END AS ci_width
          |FROM g ORDER BY filter""".stripMargin
-    },
+    }),
     // the three shared vote fragments → ONE 6-cell moment agg → the
     // shared Q divide (squares HUGEINT → VARCHAR under the gate)
-    "q402_cochran_q_filters" -> {
+    Query("q402_cochran_q_filters", cochranQFilters, {
       val qexpr = "CAST(CAST(2 * (3 * (CAST(ga AS HUGEINT) * ga " +
         "+ CAST(gr AS HUGEINT) * gr + CAST(gl AS HUGEINT) * gl) " +
         "- CAST(t AS HUGEINT) * t) AS VARCHAR) AS DOUBLE) " +
@@ -9938,10 +9787,10 @@ object LlmOps {
          |                THEN $qexpr > ${Chi2Crit95(1)} END, FALSE)
          |         AS raters_differ
          |FROM g""".stripMargin
-    },
+    }),
     // all three shared vote fragments → k-vote census → exact
     // cleared-denominator kappa (HUGEINT → VARCHAR under the gate)
-    "q397_fleiss_kappa_ensemble" ->
+    Query("q397_fleiss_kappa_ensemble", fleissKappaEnsemble,
       s"""WITH $qfPerDocSql,
          |qfvotes AS (
          |  SELECT doc_id, score_bits * tnb > ts * nb AS keep
@@ -9995,10 +9844,10 @@ object LlmOps {
          |)
          |SELECT c.k_keep, c.n_docs, st.*
          |FROM census c, st
-         |ORDER BY c.k_keep""".stripMargin,
+         |ORDER BY c.k_keep""".stripMargin),
     // the q397 vote join → one 3-cell moment agg → the cleared-
     // denominator alpha tree (HUGEINT squares VARCHAR-routed)
-    "q424_krippendorff_alpha" -> {
+    Query("q424_krippendorff_alpha", krippendorffAlpha, {
       val twoPdSql = "2 * CAST(kk AS HUGEINT) * (3 * nn - kk)"
       val aNumSql = s"$twoPdSql - CAST(3 * nn - 1 AS HUGEINT) * sdis"
       val alphaSql = s"(CAST(CAST($aNumSql AS VARCHAR) AS DOUBLE) " +
@@ -10036,10 +9885,10 @@ object LlmOps {
          |       coalesce(CASE WHEN $twoPdSql > 0 THEN $alphaSql >= 0.8 END,
          |                FALSE) AS reliable
          |FROM g""".stripMargin
-    },
+    }),
     // (term, doc) tf pass → term moments with zero-docs implicit →
     // total-order top-K → exact VMR divide + cross-multiplied flag
-    "q425_term_burstiness" -> {
+    Query("q425_term_burstiness", termBurstiness, {
       val varNumSql = "CAST(nn AS HUGEINT) * s2 - CAST(tot AS HUGEINT) * tot"
       val vmrDenSql = "CAST(nn - 1 AS HUGEINT) * tot"
       s"""WITH tf AS (
@@ -10062,10 +9911,10 @@ object LlmOps {
          |                $varNumSql > 2 * ($vmrDenSql) END, FALSE) AS bursty
          |FROM top, nd
          |ORDER BY n_occurrences DESC, term ASC""".stripMargin
-    },
+    }),
     // three integer score censuses → doubled-midrank joins back →
     // one R2 moment agg → the tie-corrected single-divide W tree
-    "q430_kendall_w_proxies" -> {
+    Query("q430_kendall_w_proxies", kendallWProxies, {
       def censusSql(c: String) =
         s"(SELECT $c AS v, CAST(count(*) AS BIGINT) AS w " +
           s"FROM base GROUP BY 1)"
@@ -10111,10 +9960,10 @@ object LlmOps {
          |       CASE WHEN $denSql > 0 THEN
          |         3.0 * CAST(n - 1 AS DOUBLE) * $wSql END AS chi2_friedman
          |FROM g, ties""".stripMargin
-    },
+    }),
     // one 10-moment agg → exact variance/covariance numerators →
     // the single-divide raw alpha + the q414 two-sqrt r trees
-    "q432_cronbach_alpha" -> {
+    Query("q432_cronbach_alpha", cronbachAlphaProxies, {
       def vn(sq: String, sm: String) =
         s"(CAST(n AS HUGEINT) * $sq - CAST($sm AS HUGEINT) * $sm)"
       def cn(sxy: String, sx: String, sy: String) =
@@ -10164,10 +10013,10 @@ object LlmOps {
          |                 AND 1.0 + 2.0 * $rbar <> 0.0 THEN
          |         3.0 * $rbar / (1.0 + 2.0 * $rbar) END AS alpha_std
          |FROM derived""".stripMargin
-    },
+    }),
     // one 5-moment agg → the single-divide population-form CCC +
     // the q414 two-sqrt Pearson tree and one C_b divide
-    "q433_lin_ccc" -> {
+    Query("q433_lin_ccc", linCccCharsBudget, {
       val vx = "(CAST(n AS HUGEINT) * sxx - CAST(sx AS HUGEINT) * sx)"
       val vy = "(CAST(n AS HUGEINT) * syy - CAST(sy AS HUGEINT) * sy)"
       val cxy = "(CAST(n AS HUGEINT) * sxy - CAST(sx AS HUGEINT) * sy)"
@@ -10200,10 +10049,10 @@ object LlmOps {
          |SELECT *, CASE WHEN pearson_r IS NOT NULL AND pearson_r <> 0.0
          |               THEN lin_ccc / pearson_r END AS c_b
          |FROM derived""".stripMargin
-    },
+    }),
     // one 3-moment agg over the diff column → the fixed-IEEE limit
     // tree broadcast to the outside-count re-scan
-    "q434_bland_altman" -> {
+    Query("q434_bland_altman", blandAltmanCharsBudget, {
       val vnum = "(CAST(n AS HUGEINT) * sd2 - CAST(sd1 AS HUGEINT) * sd1)"
       s"""WITH diffs AS MATERIALIZED (
          |  SELECT CAST(n_chars AS BIGINT)
@@ -10240,10 +10089,10 @@ object LlmOps {
          |       CASE WHEN n > 0 THEN ${ratioSql("n_outside", "n")} END
          |         AS frac_outside
          |FROM stats, outside""".stripMargin
-    },
+    }),
     // the shared fof census → one 3-moment agg per lang → the
     // single-divide K and unbiased-D trees
-    "q435_yule_k" ->
+    Query("q435_yule_k", yuleKCensus,
       s"""WITH cnts AS (
          |  SELECT lang, tok, CAST(count(*) AS BIGINT) AS r
          |  FROM (SELECT lang, unnest($toksSql) AS tok FROM documents)
@@ -10268,10 +10117,10 @@ object LlmOps {
          |           / CAST(CAST(CAST(m1 AS HUGEINT) * m1 - m1 AS VARCHAR)
          |                  AS DOUBLE) END AS simpson_repeat
          |FROM g
-         |ORDER BY lang""".stripMargin,
+         |ORDER BY lang""".stripMargin),
     // the shared q131 vote chain → a <=40-row dyadic band census →
     // one 5-moment fold → the three-factor fixed-IEEE Z tree
-    "q436_cochran_armitage" -> {
+    Query("q436_cochran_armitage", cochranArmitageTrend, {
       val num = "(CAST(nn AS HUGEINT) * t - CAST(a AS HUGEINT) * sc1)"
       val cvar = "(CAST(nn AS HUGEINT) * sc2 - CAST(sc1 AS HUGEINT) * sc1)"
       val z = s"(CAST(CAST($num AS VARCHAR) AS DOUBLE) / " +
@@ -10305,8 +10154,8 @@ object LlmOps {
          |              ELSE 'none' END
          |       ELSE 'none' END AS direction
          |FROM g""".stripMargin
-    },
-    "q221_bigram_coverage" ->
+    }),
+    Query("q221_bigram_coverage", bigramCoverage,
       // MATERIALIZED: dt is read by both the model and the test side —
       // inlined, DuckDB would re-run the md5 digest pipeline per reference
       // (the q202 soak lesson).
@@ -10327,8 +10176,8 @@ object LlmOps {
          |FROM test LEFT JOIN model ON test.sh = model.sh
          |GROUP BY 1, 2
          |ORDER BY coverage ASC, doc_id ASC
-         |LIMIT 25""".stripMargin,
-    "q223_containment_dedup" ->
+         |LIMIT 25""".stripMargin),
+    Query("q223_containment_dedup", containmentDedup,
       s"""WITH ex AS MATERIALIZED (
          |  SELECT doc_id, CAST(len(dshin) AS BIGINT) AS nsh, unnest(dshin) AS sh
          |  FROM (SELECT doc_id, list_distinct($shingle3Sql) AS dshin
@@ -10350,8 +10199,8 @@ object LlmOps {
          |)
          |WHERE common * 5 >= n1 * 4
          |ORDER BY containment DESC, doc1 ASC, doc2 ASC
-         |LIMIT 20""".stripMargin,
-    "q210_kwic_context" ->
+         |LIMIT 20""".stripMargin),
+    Query("q210_kwic_context", kwicContext,
       s"""WITH t AS (SELECT $toksSql AS toks FROM documents),
          |e AS (
          |  SELECT toks, unnest(toks) AS tok,
@@ -10365,8 +10214,8 @@ object LlmOps {
          |WHERE tok = 'spark'
          |GROUP BY 1, 2
          |ORDER BY n_occ DESC, prev_tok ASC, next_tok ASC
-         |LIMIT 20""".stripMargin,
-    "q204_setsim_prefix_join" ->
+         |LIMIT 20""".stripMargin),
+    Query("q204_setsim_prefix_join", setSimPrefixJoin,
       s"""WITH dt AS (
          |  SELECT doc_id, unnest(list_distinct($shingle3Sql)) AS sh
          |  FROM (SELECT doc_id, $tokenHashesSql AS th
@@ -10396,15 +10245,15 @@ object LlmOps {
          |       ${ratioSql("common", "n1 + n2 - common")} AS jac
          |FROM inter
          |WHERE common * 2 >= n1 + n2 - common
-         |ORDER BY jac DESC, doc1 ASC, doc2 ASC LIMIT 20""".stripMargin,
-    "q181_dense_id_assignment" ->
+         |ORDER BY jac DESC, doc1 ASC, doc2 ASC LIMIT 20""".stripMargin),
+    Query("q181_dense_id_assignment", denseIdAssignment,
       s"""SELECT tok, freq,
          |       CAST(row_number() OVER (ORDER BY freq DESC, tok ASC) AS BIGINT) AS dense_id
          |FROM (SELECT tok, CAST(count(*) AS BIGINT) AS freq
          |      FROM (SELECT unnest($toksSql) AS tok FROM documents)
          |      GROUP BY tok)
-         |ORDER BY dense_id""".stripMargin,
-    "q300_pq_codebook_census" ->
+         |ORDER BY dense_id""".stripMargin),
+    Query("q300_pq_codebook_census", pqCodebookCensus,
       s"""WITH $qvSql, ${pqPipeSql("_1", 1, 32)}, ${pqPipeSql("_2", 33, 64)}
          |SELECT CAST(s1.code % $PqK AS INT) * $PqK + CAST(s2.code % $PqK AS INT)
          |         AS pq_code,
@@ -10414,13 +10263,13 @@ object LlmOps {
          |       min(s1.vec_id) AS min_vec
          |FROM a2_1 s1 JOIN a2_2 s2 ON s1.vec_id = s2.vec_id
          |GROUP BY 1
-         |ORDER BY 1""".stripMargin,
+         |ORDER BY 1""".stripMargin),
     // q330: the full IVF-PQ replay — 8 generated Lloyd sub-pipelines
     // (q300's machinery at 8×8 dims), coarse cells (q53's CTEs), the
     // per-query ADC distance tables as 4-entry integer lists, the
     // shortlist window, the exact cosine re-rank, and the recall compare
     // (recall_ok literal TRUE — the q70 contract).
-    "q330_ann_ivf_pq_adc" -> {
+    Query("q330_ann_ivf_pq_adc", annIvfPqAdc, {
       val m = PqAdcM
       val pipes = (0 until m)
         .map(j => pqPipeSql(s"_b$j", j * 8 + 1, j * 8 + 8)).mkString(", ")
@@ -10509,8 +10358,8 @@ object LlmOps {
          |       TRUE AS recall_ok
          |FROM top3, rec
          |ORDER BY qid, rn""".stripMargin
-    },
-    "q336_isotonic_calibration" ->
+    }),
+    Query("q336_isotonic_calibration", isotonicCalibration,
       s"""WITH bins AS MATERIALIZED (
          |  SELECT x, CAST(count(*) AS BIGINT) AS n, CAST(sum(y) AS BIGINT) AS npos
          |  FROM (
@@ -10538,8 +10387,8 @@ object LlmOps {
          |       CAST(npos AS DOUBLE) / CAST(n AS DOUBLE) AS raw_rate,
          |       iso_rate
          |FROM bins JOIN fit ON fit.bx = bins.x
-         |ORDER BY score""".stripMargin,
-    "q335_conformal_threshold" ->
+         |ORDER BY score""".stripMargin),
+    Query("q335_conformal_threshold", conformalThreshold,
       s"""WITH base AS MATERIALIZED (
          |  SELECT lang, CAST(len($toksSql) AS BIGINT) AS ntok,
          |         $driftHalfSql AS in_a
@@ -10583,8 +10432,8 @@ object LlmOps {
          |         CAST(n_covered AS DOUBLE) / n_test >= $ConformalCovFloor
          |       END, FALSE) AS coverage_ok
          |FROM cov
-         |ORDER BY lang""".stripMargin,
-    "q334_neyman_allocation" ->
+         |ORDER BY lang""".stripMargin),
+    Query("q334_neyman_allocation", neymanAllocation,
       s"""WITH strata AS MATERIALIZED (
          |  SELECT lang, band, CAST(count(*) AS BIGINT) AS n_docs,
          |         CAST(sum(ntok) AS BIGINT) AS st,
@@ -10655,8 +10504,8 @@ object LlmOps {
          |       (x.base + CASE WHEN pos1 - 1 < leftover THEN 1 ELSE 0 END)
          |         > x.n_docs AS capped
          |FROM pe
-         |ORDER BY lang, band""".stripMargin,
-    "q332_ks_drift_stat" ->
+         |ORDER BY lang, band""".stripMargin),
+    Query("q332_ks_drift_stat", ksDriftStat,
       s"""WITH base AS (
          |  SELECT lang, CAST(len($toksSql) AS BIGINT) AS ntok,
          |         $driftHalfSql AS in_a
@@ -10693,11 +10542,11 @@ object LlmOps {
          |                                   / (CAST(n_a AS DOUBLE) * n_b))
          |       END, FALSE) AS drifted
          |FROM per
-         |ORDER BY lang""".stripMargin,
+         |ORDER BY lang""".stripMargin),
     // q332's census/prefix chain with the weighted square-sum fold; the
     // exact W rides as a digit string (HUGEINT → VARCHAR; Spark
     // decimal(38,0) → string), T is the one shared divide
-    "q356_cvm_drift_stat" ->
+    Query("q356_cvm_drift_stat", cvmDriftStat,
       s"""WITH base AS (
          |  SELECT lang, CAST(len($toksSql) AS BIGINT) AS ntok,
          |         $driftHalfSql AS in_a
@@ -10738,8 +10587,8 @@ object LlmOps {
          |           > $CvmCritAlpha05
          |       END, FALSE) AS drifted
          |FROM per
-         |ORDER BY lang""".stripMargin,
-    "q304_distribution_drift" ->
+         |ORDER BY lang""".stripMargin),
+    Query("q304_distribution_drift", distributionDrift,
       s"""WITH c AS (
          |  SELECT lang,
          |         CASE WHEN ntok >= 40 THEN 'long'
@@ -10766,8 +10615,8 @@ object LlmOps {
          |         / (2.0 * (SELECT na FROM tot) * (SELECT nb FROM tot))
          |         AS tv_distance
          |FROM wt
-         |ORDER BY lang, band""".stripMargin,
-    "q299_source_overlap_matrix" -> {
+         |ORDER BY lang, band""".stripMargin),
+    Query("q299_source_overlap_matrix", sourceOverlapMatrix, {
       import graft.operators.TextOps.{MinhashA, MinhashB, MinhashPrime}
       val minCols = (0 until 12).map(j =>
         s"min((${MinhashA(j)} * h + ${MinhashB(j)}) % $MinhashPrime) AS m$j")
@@ -10799,12 +10648,12 @@ object LlmOps {
          |       ${ratioSql("n_match", "12")} AS est_jaccard
          |FROM pairs
          |ORDER BY src_a, src_b""".stripMargin
-    },
+    }),
     // the winnowing selection is pure integer arithmetic over the
     // portable digests — the oracle replays the rightmost-min window
     // rule exactly (list_reverse/list_position mirrors the Spark
     // reverse/array_position tie-break)
-    "q311_winnowing_census" ->
+    Query("q311_winnowing_census", winnowingCensus,
       s"""WITH d AS MATERIALIZED (
          |  SELECT doc_id, $shingle3Sql AS hs
          |  FROM (SELECT doc_id, $tokenHashesSql AS th
@@ -10835,8 +10684,8 @@ object LlmOps {
          |       CAST(n_fingerprints AS BIGINT) AS n_fingerprints,
          |       CAST(coalesce(n_shared_fp, 0) AS BIGINT) AS n_shared_fp
          |FROM selh s LEFT JOIN sh USING (doc_id)
-         |ORDER BY doc_id""".stripMargin,
-    "q298_boilerplate_census" ->
+         |ORDER BY doc_id""".stripMargin),
+    Query("q298_boilerplate_census", boilerplateCensus,
       s"""WITH base AS MATERIALIZED (
          |  SELECT toks[1] || ' ' || toks[2] || ' ' || toks[3] AS head_sh,
          |         toks[-3] || ' ' || toks[-2] || ' ' || toks[-1] AS tail_sh
@@ -10853,10 +10702,10 @@ object LlmOps {
          |SELECT kind, shingle, CAST(n_docs AS BIGINT) AS n_docs,
          |       ${ratioSql("n_docs", "(SELECT n_eligible FROM ne)")} AS share
          |FROM c WHERE n_docs >= 2
-         |ORDER BY kind, n_docs DESC, shingle""".stripMargin,
+         |ORDER BY kind, n_docs DESC, shingle""".stripMargin),
     // q297's chain with prefix-type / continuation-type tables and the
     // exact cleared-denominator KN rational inside the dyadic bits
-    "q399_bigram_kneser_ney" ->
+    Query("q399_bigram_kneser_ney", bigramKneserNey,
       s"""WITH d AS MATERIALIZED (
          |  SELECT doc_id, $toksSql AS toks,
          |         CAST(('0x' || substr(md5('lm:' || CAST(doc_id AS VARCHAR)),
@@ -10928,8 +10777,8 @@ object LlmOps {
          |            THEN ${ratioSql("a.sb", "a.n_bigrams")} END AS mean_bits
          |FROM (SELECT doc_id, is_train FROM d) dd
          |LEFT JOIN agg a ON dd.doc_id = a.doc_id
-         |ORDER BY dd.doc_id""".stripMargin,
-    "q297_bigram_lm_perplexity" ->
+         |ORDER BY dd.doc_id""".stripMargin),
+    Query("q297_bigram_lm_perplexity", bigramLmPerplexity,
       s"""WITH d AS MATERIALIZED (
          |  SELECT doc_id, $toksSql AS toks,
          |         CAST(('0x' || substr(md5('lm:' || CAST(doc_id AS VARCHAR)),
@@ -10982,8 +10831,8 @@ object LlmOps {
          |            THEN ${ratioSql("a.sb", "a.n_bigrams")} END AS mean_bits
          |FROM (SELECT doc_id, is_train FROM d) dd
          |LEFT JOIN agg a ON dd.doc_id = a.doc_id
-         |ORDER BY dd.doc_id""".stripMargin,
-    "q296_matryoshka_census" -> {
+         |ORDER BY dd.doc_id""".stripMargin),
+    Query("q296_matryoshka_census", matryoshkaCensus, {
       // prefix-k self-dot with the exact q45 op tree: float products,
       // sequential double fold over a FIXED element order
       def pdot(k: Int): String =
@@ -11008,8 +10857,8 @@ object LlmOps {
          |         AS dims_for_90pct
          |FROM r
          |ORDER BY vec_id""".stripMargin
-    },
-    "q295_temperature_mixture" ->
+    }),
+    Query("q295_temperature_mixture", temperatureMixture,
       s"""WITH mass AS (
          |  SELECT lang, CAST(sum(len($toksSql)) AS BIGINT) AS n_tokens
          |  FROM documents GROUP BY 1
@@ -11035,8 +10884,8 @@ object LlmOps {
          |SELECT lang, n_tokens, CAST(w AS BIGINT) AS weight,
          |       CAST(base + CASE WHEN rk <= (SELECT r FROM short)
          |                        THEN 1 ELSE 0 END AS BIGINT) AS alloc
-         |FROM rk ORDER BY lang""".stripMargin,
-    "q293_importance_resampling" ->
+         |FROM rk ORDER BY lang""".stripMargin),
+    Query("q293_importance_resampling", importanceResampling,
       s"""WITH toks AS MATERIALIZED (
          |  SELECT doc_id, lang,
          |         CAST(CAST(('0x' || substr(md5(tok), 1, 10)) AS BIGINT) % 64
@@ -11067,8 +10916,8 @@ object LlmOps {
          |       CAST(coalesce(sc.score_bits, 0) AS BIGINT) AS score_bits,
          |       coalesce(sc.score_bits, 0) > 0 AS selected
          |FROM (SELECT doc_id FROM documents) d LEFT JOIN sc ON d.doc_id = sc.doc_id
-         |ORDER BY d.doc_id""".stripMargin,
-    "q180_feature_hashing" ->
+         |ORDER BY d.doc_id""".stripMargin),
+    Query("q180_feature_hashing", featureHashing,
       s"""WITH cells AS (
          |  SELECT doc_id, CAST(th % 64 AS INT) AS bucket,
          |         CAST(sum(CASE WHEN (th & 64) = 0 THEN 1 ELSE -1 END) AS BIGINT) AS v
@@ -11086,9 +10935,9 @@ object LlmOps {
          |       array_to_string(list_transform(range(0, 64),
          |         i -> coalesce(m[CAST(i AS INT)][1], CAST(0 AS BIGINT))), ',') AS fvec
          |FROM maps
-         |ORDER BY doc_id""".stripMargin,
+         |ORDER BY doc_id""".stripMargin),
     // Kish ESS/deff as exact rationals; VARCHAR-routed big casts
-    "q395_effective_sample_size" ->
+    Query("q395_effective_sample_size", effectiveSampleSize,
       s"""WITH base AS MATERIALIZED (
          |  SELECT source, CAST(len($toksSql) AS BIGINT) AS w FROM documents
          |), per AS (
@@ -11124,9 +10973,9 @@ object LlmOps {
          |           / CAST(n AS DOUBLE) END AS ess_ratio,
          |       ess_global, deff_global
          |FROM per, gg
-         |ORDER BY source""".stripMargin,
+         |ORDER BY source""".stripMargin),
     // q370's band/first-attribution shape over the q50 fingerprint
-    "q392_dup_saturation" ->
+    Query("q392_dup_saturation", dupSaturation,
       s"""WITH bounds AS (
          |  SELECT CAST(min(doc_id) AS BIGINT) AS lo,
          |         CAST(max(doc_id) AS BIGINT) AS hi
@@ -11164,9 +11013,9 @@ object LlmOps {
          |       ${ratioSql("n_docs - n_new_fps", "n_docs")} AS band_dup_rate,
          |       ${ratioSql("cum_docs - cum_fps", "cum_docs")} AS cum_dup_rate
          |FROM cums
-         |ORDER BY band""".stripMargin,
+         |ORDER BY band""".stripMargin),
     // exact per-group moments → lang-ordered term fold → the F/η² trees
-    "q393_anova_effect" ->
+    Query("q393_anova_effect", anovaEffect,
       s"""WITH base AS MATERIALIZED (
          |  SELECT lang, CAST(len($toksSql) AS BIGINT) AS x FROM documents
          |), grp AS (
@@ -11207,11 +11056,11 @@ object LlmOps {
          |                    - CAST(CAST(s * s AS VARCHAR) AS DOUBLE)
          |                      / CAST(n AS DOUBLE)) END AS eta_sq
          |FROM st
-         |WHERE n > 0""".stripMargin,
+         |WHERE n > 0""".stripMargin),
     // exact per-half moments → pooled variance → the d and g trees
     // per-lang half census → lang-sorted √(na·nb) fold (products
     // HUGEINT → VARCHAR), BC and H as shared trees
-    "q408_hellinger_lang_drift" -> {
+    Query("q408_hellinger_lang_drift", hellingerLangDrift, {
       val bcSql = "bc_num / sqrt(CAST(CAST(CAST(n_a AS HUGEINT) * n_b " +
         "AS VARCHAR) AS DOUBLE))"
       s"""WITH cells AS MATERIALIZED (
@@ -11235,10 +11084,10 @@ object LlmOps {
          |       CASE WHEN n_a > 0 AND n_b > 0
          |            THEN sqrt(greatest(0.0, 1.0 - $bcSql)) END AS hellinger
          |FROM g""".stripMargin
-    },
+    }),
     // the q403 census → exact lower-median selections per half → q394's
     // moment trees pointed at |v − med| deviations; BF(k=2) = pooled t²
-    "q407_brown_forsythe_drift" -> {
+    Query("q407_brown_forsythe_drift", brownForsytheDrift, {
       val maSql = "sa_d / CAST(n_a AS DOUBLE)"
       val mbSql = "sb_d / CAST(n_b AS DOUBLE)"
       s"""WITH census AS MATERIALIZED (
@@ -11309,8 +11158,8 @@ object LlmOps {
          |           / (sp2 * (1.0 / CAST(n_a AS DOUBLE)
          |                     + 1.0 / CAST(n_b AS DOUBLE))) END AS bf_f
          |FROM p""".stripMargin
-    },
-    "q394_cohens_d" ->
+    }),
+    Query("q394_cohens_d", cohensD,
       s"""WITH g AS (
          |  SELECT ${sumLongSql("CASE WHEN in_a THEN 1 ELSE 0 END")} AS n_a,
          |         CAST(sum(CASE WHEN in_a THEN x ELSE 0 END) AS HUGEINT)
@@ -11361,10 +11210,10 @@ object LlmOps {
          |            / sqrt(sp2))
          |         * (1.0 - 3.0 / (4.0 * CAST(n_a + n_b AS DOUBLE) - 9.0))
          |       END AS hedges_g
-         |FROM p""".stripMargin,
+         |FROM p""".stripMargin),
     // the q332 halves → value census → prefix window → 9 exact
     // ceil-rank selections (the run containing the rank)
-    "q390_qq_decile_drift" ->
+    Query("q390_qq_decile_drift", qqDecileDrift,
       s"""WITH census AS MATERIALIZED (
          |  SELECT ntok,
          |         ${sumLongSql("CASE WHEN in_a THEN 1 ELSE 0 END")} AS nav,
@@ -11407,10 +11256,10 @@ object LlmOps {
          |       CASE WHEN q_a > 0 THEN ${ratioSql("q_b", "q_a")} END
          |         AS qq_ratio
          |FROM sel
-         |ORDER BY decile""".stripMargin,
+         |ORDER BY decile""".stripMargin),
     // global doubled midranks → per-language exact rank sums → the
     // lang-ordered term fold; squares VARCHAR-routed, literal χ² table
-    "q391_kruskal_wallis" ->
+    Query("q391_kruskal_wallis", kruskalWallis,
       s"""WITH cells AS MATERIALIZED (
          |  SELECT lang, ntok, CAST(count(*) AS BIGINT) AS nv
          |  FROM (SELECT lang, CAST(len($toksSql) AS BIGINT) AS ntok
@@ -11474,10 +11323,10 @@ object LlmOps {
          |         > ${chi2CritSql("n_groups - 1")}
          |       END, FALSE) AS rejected
          |FROM st
-         |WHERE n > 1""".stripMargin,
+         |WHERE n > 1""".stripMargin),
     // exact-rational diversity over the (source, lang) census; the big
     // casts route through VARCHAR (HUGEINT→DOUBLE misrounds past 2⁵³)
-    "q388_simpson_diversity" ->
+    Query("q388_simpson_diversity", simpsonDiversity,
       s"""WITH cells AS MATERIALIZED (
          |  SELECT source, lang, CAST(count(*) AS BIGINT) AS n
          |  FROM documents GROUP BY 1, 2
@@ -11510,11 +11359,11 @@ object LlmOps {
          |       END AS effective_langs,
          |       simpson_global
          |FROM per, gg
-         |ORDER BY source""".stripMargin,
+         |ORDER BY source""".stripMargin),
     // the q193 scoring reused: per-probe top-5 → pool-member occurrence
     // counts (zeros kept) → exact n-scaled moments → the one skew tree;
     // big casts go through VARCHAR (DuckDB HUGEINT→DOUBLE misrounds)
-    "q387_knn_hubness" ->
+    Query("q387_knn_hubness", knnHubness,
       s"""WITH pool AS MATERIALIZED (
          |  SELECT vec_id FROM embeddings ORDER BY vec_id LIMIT $LabelPanelK
          |), poole AS MATERIALIZED (
@@ -11565,8 +11414,8 @@ object LlmOps {
          |SELECT f.vid, f.n_occ, n_panel, n_probes, max_occ, n_never,
          |       c2_num, c3_num, hubness_skew
          |FROM fullt f, gg
-         |ORDER BY f.vid""".stripMargin,
-    "q193_knn_label_vote" ->
+         |ORDER BY f.vid""".stripMargin),
+    Query("q193_knn_label_vote", knnLabelVote,
       s"""WITH pool AS MATERIALIZED (
          |  SELECT * FROM embeddings ORDER BY vec_id LIMIT $LabelPanelK
          |), top AS (
@@ -11588,8 +11437,8 @@ object LlmOps {
          |FROM (SELECT *, row_number() OVER (PARTITION BY qid
          |        ORDER BY votes DESC, label ASC) AS r FROM vote)
          |WHERE r = 1
-         |ORDER BY qid""".stripMargin,
-    "q163_hard_negatives" ->
+         |ORDER BY qid""".stripMargin),
+    Query("q163_hard_negatives", hardNegatives,
       s"""SELECT qid, CAST(rn AS INT) AS rn, vid, cos FROM (
          |  SELECT qid, vid, cos,
          |         row_number() OVER (PARTITION BY qid
@@ -11601,8 +11450,8 @@ object LlmOps {
          |    JOIN (SELECT * FROM embeddings) c ON q.vec_id <> c.vec_id)
          |  WHERE cos >= 0.15 AND cos < 0.45
          |) WHERE rn <= 2
-         |ORDER BY qid, rn""".stripMargin,
-    "q196_bpe_encode" ->
+         |ORDER BY qid, rn""".stripMargin),
+    Query("q196_bpe_encode", bpeEncode,
       s"""WITH vocab AS (
          |  SELECT w, CAST(count(*) AS BIGINT) AS freq,
          |         '  ' || regexp_replace(w, '(.)', '\\1  ', 'g') AS seg
@@ -11644,11 +11493,11 @@ object LlmOps {
          |FROM (SELECT w, freq, unnest(string_split(trim(seg), '  ')) AS sym
          |      FROM vocab3)
          |GROUP BY sym
-         |ORDER BY sym""".stripMargin,
-    "q329_bpe_merge_loop" -> bpeLoopOracleSql,
-    "q374_wordpiece_merge_loop" -> wpLoopOracleSql,
-    "q360_unigram_lm_tokenizer" -> ulmOracleSql,
-    "q157_bpe_merges" ->
+         |ORDER BY sym""".stripMargin),
+    Query("q329_bpe_merge_loop", bpeMergeLoop, bpeLoopOracleSql),
+    Query("q374_wordpiece_merge_loop", wordpieceMergeLoop, wpLoopOracleSql),
+    Query("q360_unigram_lm_tokenizer", unigramLmTokenizer, ulmOracleSql),
+    Query("q157_bpe_merges", bpeMerges,
       s"""WITH vocab AS (
          |  SELECT w, CAST(count(*) AS BIGINT) AS freq,
          |         '  ' || regexp_replace(w, '(.)', '\\1  ', 'g') AS seg
@@ -11684,8 +11533,8 @@ object LlmOps {
          |         replace(top_pair, ' ', '') AS merged, top_cnt AS cnt FROM top1
          |  UNION ALL
          |  SELECT 2, top_pair, replace(top_pair, ' ', ''), top_cnt FROM top2)
-         |ORDER BY round""".stripMargin,
-    "q156_curation_funnel" ->
+         |ORDER BY round""".stripMargin),
+    Query("q156_curation_funnel", curationFunnel,
       s"""WITH base AS (
          |  SELECT doc_id, lang,
          |         CAST(len(toks) AS BIGINT) AS ntok,
@@ -11732,8 +11581,8 @@ object LlmOps {
          |  SELECT '2_quality', n1, n2 FROM totals, ranked
          |  UNION ALL
          |  SELECT '3_dedup', n2, n3 FROM ranked)
-         |ORDER BY stage""".stripMargin,
-    "q147_quality_gopher" ->
+         |ORDER BY stage""".stripMargin),
+    Query("q147_quality_gopher", qualityGopherRules,
       s"""WITH base AS (
          |  SELECT doc_id,
          |         CAST(len(toks) AS BIGINT) AS ntok,
@@ -11768,8 +11617,8 @@ object LlmOps {
          |         CASE WHEN NOT r_stop THEN 'stop' END,
          |         CASE WHEN NOT r_rep THEN 'rep' END) AS reasons
          |FROM r
-         |ORDER BY doc_id""".stripMargin,
-    "q148_domain_blocklist" ->
+         |ORDER BY doc_id""".stripMargin),
+    Query("q148_domain_blocklist", domainBlocklist,
       """SELECT doc_id, domain,
         |       CASE WHEN domain = 'src7.fr.site' OR domain LIKE '%.src7.fr.site'
         |              THEN 'src7.fr.site'
@@ -11780,8 +11629,8 @@ object LlmOps {
         |          OR domain = 'es.site' OR domain LIKE '%.es.site') AS blocked
         |FROM (SELECT doc_id, source || '.' || lang || '.site' AS domain
         |      FROM documents)
-        |ORDER BY doc_id""".stripMargin,
-    "q149_inverted_index" ->
+        |ORDER BY doc_id""".stripMargin),
+    Query("q149_inverted_index", invertedIndex,
       s"""WITH tf AS (
          |  SELECT tok, doc_id, CAST(count(*) AS BIGINT) AS tf
          |  FROM (SELECT doc_id, unnest($toksSql) AS tok FROM documents)
@@ -11796,8 +11645,8 @@ object LlmOps {
          |               ORDER BY doc_id))[1:5], ',') AS postings_head
          |FROM tf
          |GROUP BY tok
-         |ORDER BY term""".stripMargin,
-    "q131_quality_unigram_lm" ->
+         |ORDER BY term""".stripMargin),
+    Query("q131_quality_unigram_lm", qualityUnigramLm,
       """WITH toks AS (SELECT doc_id, unnest(string_split(text, ' ')) AS tok
         |              FROM documents),
         |v AS (SELECT tok, count(*) AS cnt FROM toks GROUP BY 1),
@@ -11814,8 +11663,8 @@ object LlmOps {
         |       CAST(surprise_bits AS DOUBLE) / CAST(n_toks AS DOUBLE) AS mean_bits,
         |       (CAST(surprise_bits AS DOUBLE) / CAST(n_toks AS DOUBLE)) <= 6.0 AS keep
         |FROM agg
-        |ORDER BY doc_id""".stripMargin,
-    "q132_bm25_search" ->
+        |ORDER BY doc_id""".stripMargin),
+    Query("q132_bm25_search", bm25Search,
       """WITH d AS (SELECT doc_id, string_split(text, ' ') AS toks FROM documents),
         |d2 AS (SELECT doc_id, CAST(len(toks) AS BIGINT) AS len, toks FROM d),
         |st AS (SELECT count(*) AS n_docs, CAST(sum(len) AS BIGINT) AS sum_len FROM d2),
@@ -11841,8 +11690,8 @@ object LlmOps {
         |       s_join + s_scan + s_window AS score
         |FROM agg
         |ORDER BY score DESC, doc_id ASC
-        |LIMIT 10""".stripMargin,
-    "q133_collocation_pmi" ->
+        |LIMIT 10""".stripMargin),
+    Query("q133_collocation_pmi", collocationPmi,
       """WITH d AS (SELECT string_split(text, ' ') AS toks FROM documents),
         |uni AS (SELECT tok, count(*) AS c1
         |        FROM (SELECT unnest(toks) AS tok FROM d) GROUP BY 1),
@@ -11866,8 +11715,8 @@ object LlmOps {
         |         / (CAST(cx AS DOUBLE) * CAST(cy AS DOUBLE)) AS pmi_ratio
         |FROM j, n
         |ORDER BY pmi_ratio DESC, bg ASC
-        |LIMIT 20""".stripMargin,
-    "q127_mix_rebalance" ->
+        |LIMIT 20""".stripMargin),
+    Query("q127_mix_rebalance", mixRebalance,
       s"""WITH d AS (SELECT doc_id, lang, $docIdDigestSql AS hkey FROM documents),
          |c AS (SELECT lang, count(*) AS n_total FROM d GROUP BY 1),
          |q AS (SELECT min(n_total) AS quota FROM c),
@@ -11883,8 +11732,8 @@ object LlmOps {
          |       CAST(c.n_total AS DOUBLE) / CAST(t.tot AS DOUBLE) AS share_before,
          |       CAST(k.n_kept AS DOUBLE) / CAST(tk.tot_k AS DOUBLE) AS share_after
          |FROM c JOIN k ON c.lang = k.lang, t, tk
-         |ORDER BY c.lang""".stripMargin,
-    "q128_dedup_lines" ->
+         |ORDER BY c.lang""".stripMargin),
+    Query("q128_dedup_lines", dedupLinesRebuild,
       """WITH d AS (SELECT doc_id, string_split(text, ' ') AS toks FROM documents),
         |d2 AS (SELECT doc_id, toks,
         |              (CAST(len(toks) AS BIGINT) + 7) // 8 AS n_lines
@@ -11911,13 +11760,13 @@ object LlmOps {
         |       CAST(length(clean_text) AS BIGINT) AS clean_len,
         |       md5(clean_text) AS clean_md5
         |FROM reb
-        |ORDER BY doc_id""".stripMargin,
-    "q40_dedup_exact" ->
+        |ORDER BY doc_id""".stripMargin),
+    Query("q40_dedup_exact", dedupExact,
       """SELECT count(*) AS n_docs,
         |       count(DISTINCT sha256(text)) AS n_uniq_text,
         |       count(DISTINCT md5(array_to_string(list_sort(list_distinct(string_split(text, ' '))), ' '))) AS n_uniq_tokenset
-        |FROM documents""".stripMargin,
-    "q260_consistent_hash_sample" ->
+        |FROM documents""".stripMargin),
+    Query("q260_consistent_hash_sample", consistentHashSample,
       s"""WITH d AS (
          |  SELECT doc_id,
          |         CAST(('0x' || substr(md5('sample:' || CAST(doc_id AS VARCHAR)), 1, 6)) AS BIGINT) AS hv
@@ -11934,8 +11783,8 @@ object LlmOps {
          |       ${ratioSql("sum(CASE WHEN in5 THEN 1 ELSE 0 END)", "count(*)")} AS rate5,
          |       ${ratioSql("sum(CASE WHEN in10 THEN 1 ELSE 0 END)", "count(*)")} AS rate10,
          |       CAST(sum(CASE WHEN in5 AND NOT in10 THEN 1 ELSE 0 END) AS BIGINT) AS nesting_violations
-         |FROM f""".stripMargin,
-    "q248_quality_mixture_plan" ->
+         |FROM f""".stripMargin),
+    Query("q248_quality_mixture_plan", qualityMixturePlan,
       s"""WITH cells AS (
          |  SELECT lang,
          |         CASE WHEN ntok >= 40 THEN 'long'
@@ -11951,8 +11800,8 @@ object LlmOps {
          |       ${ratioSql("n_docs", "n_total")} AS share,
          |       ${ratioSql("n_total", "n_cells * n_docs")} AS repeat_factor
          |FROM cells CROSS JOIN tot
-         |ORDER BY lang, band""".stripMargin,
-    "q249_ngram_novelty" ->
+         |ORDER BY lang, band""".stripMargin),
+    Query("q249_ngram_novelty", ngramNovelty,
       s"""WITH sh AS MATERIALIZED (
          |  SELECT doc_id, unnest(list_distinct($shingle3Sql)) AS sh
          |  FROM (
@@ -11971,8 +11820,8 @@ object LlmOps {
          |       ${ratioSql("n_novel", "n_shingles")} AS novelty
          |FROM per_doc
          |ORDER BY novelty ASC, doc_id ASC
-         |LIMIT 20""".stripMargin,
-    "q250_embedding_norm_census" ->
+         |LIMIT 20""".stripMargin),
+    Query("q250_embedding_norm_census", embeddingNormCensus,
       """SELECT label, count(*) AS n_vecs,
         |       CAST(sum(CASE WHEN norm2 = 0.0 THEN 1 ELSE 0 END) AS BIGINT) AS n_zero,
         |       min(norm2) AS min_norm2, max(norm2) AS max_norm2
@@ -11983,8 +11832,8 @@ object LlmOps {
         |           (acc, x) -> acc + x * x) AS norm2
         |  FROM embeddings)
         |GROUP BY 1
-        |ORDER BY label""".stripMargin,
-    "q239_token_fertility" ->
+        |ORDER BY label""".stripMargin),
+    Query("q239_token_fertility", tokenFertility,
       s"""SELECT lang, n_docs, sum_words, sum_tokens, sum_chars,
          |       ${ratioSql("sum_tokens", "sum_words")} AS fertility,
          |       ${ratioSql("sum_chars", "sum_tokens")} AS chars_per_token
@@ -12000,8 +11849,8 @@ object LlmOps {
          |    FROM documents)
          |  GROUP BY 1
          |)
-         |ORDER BY lang""".stripMargin,
-    "q240_minhash_accuracy_gate" -> {
+         |ORDER BY lang""".stripMargin),
+    Query("q240_minhash_accuracy_gate", minhashAccuracyGate, {
       import graft.operators.TextOps.{MinhashA, MinhashB, MinhashPrime}
       val aList = MinhashA.mkString("[", ", ", "]")
       val bList = MinhashB.mkString("[", ", ", "]")
@@ -12037,8 +11886,8 @@ object LlmOps {
          |       ${ratioSql("common", "n1 + n2 - common")} AS exact_jac
          |FROM scored
          |ORDER BY doc1, doc2""".stripMargin
-    },
-    "q241_deterministic_shuffle" ->
+    }),
+    Query("q241_deterministic_shuffle", deterministicShuffle,
       """SELECT bucket, lang, count(*) AS n_docs,
         |       min(hkey || ':' || CAST(doc_id AS VARCHAR)) AS first_member
         |FROM (
@@ -12047,8 +11896,8 @@ object LlmOps {
         |         substr(md5('shuf:' || CAST(doc_id AS VARCHAR)), 1, 1) AS bucket
         |  FROM documents)
         |GROUP BY 1, 2
-        |ORDER BY bucket, lang""".stripMargin,
-    "q41_dedup_minhash_lsh" -> {
+        |ORDER BY bucket, lang""".stripMargin),
+    Query("q41_dedup_minhash_lsh", dedupMinhashLsh, {
       import graft.operators.TextOps.{MinhashA, MinhashB, MinhashPrime}
       val aList = MinhashA.mkString("[", ", ", "]")
       val bList = MinhashB.mkString("[", ", ", "]")
@@ -12070,12 +11919,12 @@ object LlmOps {
          |  ) GROUP BY band, bkey
          |) GROUP BY band, bucket_size
          |ORDER BY band, bucket_size""".stripMargin
-    },
+    }),
     // priority-sampling oracle: same salted hash, same single-divide
     // priorities, same top-(k+1)/τ/sample selection, same exact
     // cross-multiplied HT terms — full replica; the accuracy flag is
     // measured, frozen by the hash seed
-    "q321_priority_sample" ->
+    Query("q321_priority_sample", prioritySample,
       s"""WITH d AS (
          |  SELECT doc_id, CAST(len(toks) AS BIGINT) AS w,
          |         CAST(('0x' || substr(md5('psample:' || CAST(doc_id AS VARCHAR)), 1, 6)) AS BIGINT) + 1 AS hv1
@@ -12111,12 +11960,12 @@ object LlmOps {
          |         * (CAST(w_t AS DOUBLE) * 16777216.0 / CAST(hv_t AS DOUBLE))
          |         - CAST(true_total_w AS DOUBLE))
          |         <= 0.15 * CAST(true_total_w AS DOUBLE) AS ht_within_15pct
-         |FROM est, tot, tau""".stripMargin,
+         |FROM est, tot, tau""".stripMargin),
     // fusion oracle: both rankers, both top-10 windows, the exact-integer
     // RRF and the fused re-rank all replayed — the jaccard/cosine sort
     // keys are single IEEE trees over exact inputs (q195 contract), and
     // every rank/score that crosses the hash is an integer
-    "q318_hybrid_rrf_fusion" ->
+    Query("q318_hybrid_rrf_fusion", hybridRrfFusion,
       s"""WITH qd AS (SELECT doc_id AS qid, list_distinct($toksSql) AS qts
          |            FROM documents WHERE doc_id < 8),
          |cd AS (SELECT doc_id AS vid, list_distinct($toksSql) AS ts FROM documents),
@@ -12155,11 +12004,11 @@ object LlmOps {
          |SELECT qid, CAST(fr AS BIGINT) AS fused_rank, vid AS doc_id,
          |       rrf_score, in_both
          |FROM r WHERE fr <= 5
-         |ORDER BY qid, fused_rank""".stripMargin,
+         |ORDER BY qid, fused_rank""".stripMargin),
     // decontamination oracle: same split twin, same zipped positional
     // stream, same islands key — the eval screen is a plain digest
     // semi-join both engines replay exactly
-    "q316_eval_span_decontamination" ->
+    Query("q316_eval_span_decontamination", evalSpanDecontamination,
       s"""WITH hvt AS (
          |  SELECT doc_id,
          |         CAST(('0x' || substr(md5('eval:' || CAST(doc_id AS VARCHAR)), 1, 6)) AS BIGINT) AS hv
@@ -12200,11 +12049,11 @@ object LlmOps {
          |FROM hvt
          |LEFT JOIN agg a ON hvt.doc_id = a.doc_id
          |WHERE NOT (hvt.hv * 10 < 16777216)
-         |ORDER BY hvt.doc_id""".stripMargin,
+         |ORDER BY hvt.doc_id""".stripMargin),
     // skyline oracle: the INDEPENDENT all-pairs dominance formulation
     // (NOT EXISTS) — agreement proves the census decomposition, not just
     // replays it; dominance counts by correlated subquery the same way
-    "q315_pareto_frontier" ->
+    Query("q315_pareto_frontier", paretoFrontier,
       s"""WITH m AS MATERIALIZED (
          |  SELECT doc_id, CAST(len(toks) AS BIGINT) AS x,
          |         CAST(len(list_distinct(toks)) AS BIGINT) AS y
@@ -12218,12 +12067,12 @@ object LlmOps {
          |       (SELECT CAST(count(*) AS BIGINT) FROM m q
          |        WHERE f.x >= q.x AND f.y >= q.y
          |          AND (f.x > q.x OR f.y > q.y)) AS n_dominated
-         |FROM f ORDER BY doc_id""".stripMargin,
+         |FROM f ORDER BY doc_id""".stripMargin),
     // span oracle: the same positional digest stream (zipped parallel
     // unnests), the same df≥2 screen, the same islands key — pure
     // integer arithmetic both engines replay exactly; struct max
     // compares lexicographically on both engines (the q294 idiom)
-    "q314_duplicate_span_extraction" ->
+    Query("q314_duplicate_span_extraction", duplicateSpanExtraction,
       s"""WITH d AS MATERIALIZED (
          |  SELECT doc_id, $shingle3Sql AS hs
          |  FROM (SELECT doc_id, $tokenHashesSql AS th
@@ -12256,13 +12105,13 @@ object LlmOps {
          |       CAST(coalesce(-a.m.ns, -1) AS BIGINT) AS first_max_span_start
          |FROM documents
          |LEFT JOIN agg a ON documents.doc_id = a.doc_id
-         |ORDER BY documents.doc_id""".stripMargin,
+         |ORDER BY documents.doc_id""".stripMargin),
     // Full-recompute oracle for the incremental index (q305's
     // maintained≡recomputed pattern): rebuild the WHOLE band index from
     // scratch, split by the same consistent hash, ask the same two dup
     // questions — agreement proves the delta-structured plan equals the
     // from-scratch run.
-    "q312_incremental_lsh_dedup" -> {
+    Query("q312_incremental_lsh_dedup", incrementalLshDedup, {
       import graft.operators.TextOps.{MinhashA, MinhashB, MinhashPrime}
       val aList = MinhashA.mkString("[", ", ", "]")
       val bList = MinhashB.mkString("[", ", ", "]")
@@ -12303,10 +12152,10 @@ object LlmOps {
          |LEFT JOIN vs ON d.doc_id = vs.doc_id
          |LEFT JOIN ib ON d.doc_id = ib.doc_id
          |ORDER BY d.doc_id""".stripMargin
-    },
+    }),
     // Transitive closure by recursive CTE (min reachable id per doc) —
     // the same unique fixpoint the Spark side reaches by label propagation.
-    "q76_dedup_clusters" -> {
+    Query("q76_dedup_clusters", dedupClusters, {
       import graft.operators.TextOps.{MinhashA, MinhashB, MinhashPrime}
       val aList = MinhashA.mkString("[", ", ", "]")
       val bList = MinhashB.mkString("[", ", ", "]")
@@ -12339,9 +12188,9 @@ object LlmOps {
          |       array_to_string(list_sort(list(doc)), ',') AS members
          |FROM labels GROUP BY lab HAVING count(*) >= 2
          |ORDER BY cluster_id""".stripMargin
-    },
+    }),
     // q76's label CTE chain + the keep-longest survivor window.
-    "q174_cluster_survivorship" -> {
+    Query("q174_cluster_survivorship", clusterSurvivorship, {
       import graft.operators.TextOps.{MinhashA, MinhashB, MinhashPrime}
       val aList = MinhashA.mkString("[", ", ", "]")
       val bList = MinhashB.mkString("[", ", ", "]")
@@ -12387,8 +12236,8 @@ object LlmOps {
          |FROM ranked
          |GROUP BY lab
          |ORDER BY cluster_id""".stripMargin
-    },
-    "q42_dedup_simhash" ->
+    }),
+    Query("q42_dedup_simhash", dedupSimhash,
       s"""SELECT simhash, count(*) AS n_docs, min(doc_id) AS min_doc FROM (
          |  SELECT doc_id,
          |         array_to_string(list_transform(range(1, 17), i ->
@@ -12399,8 +12248,8 @@ object LlmOps {
          |  FROM (SELECT doc_id, $tokenHashesSql AS hs
          |        FROM (SELECT doc_id, $toksSql AS toks FROM documents)
          |) ) GROUP BY simhash
-         |ORDER BY simhash""".stripMargin,
-    "q43_dedup_ngram_jaccard" ->
+         |ORDER BY simhash""".stripMargin),
+    Query("q43_dedup_ngram_jaccard", dedupNgramJaccard,
       s"""WITH ex AS (
          |  SELECT doc_id, block, CAST(len(dshin) AS BIGINT) AS nsh, unnest(dshin) AS sh
          |  FROM (SELECT doc_id, lang || '|' || CAST(n_chars // 500 AS VARCHAR) AS block, list_distinct($shingle3Sql) AS dshin
@@ -12418,8 +12267,8 @@ object LlmOps {
          |  GROUP BY 1, 2, 3, 4
          |)
          |ORDER BY jac DESC, doc1 ASC, doc2 ASC
-         |LIMIT 20""".stripMargin,
-    "q44_dedup_embedding" ->
+         |LIMIT 20""".stripMargin),
+    Query("q44_dedup_embedding", dedupEmbedding,
       s"""SELECT a.vec_id AS vec1, b.vec_id AS vec2,
          |       ${cosSql("a.embedding", "b.embedding")} AS cos
          |FROM (SELECT vec_id, embedding,
@@ -12430,8 +12279,8 @@ object LlmOps {
          |      FROM embeddings) b
          |  ON a.key = b.key AND a.vec_id < b.vec_id
          |ORDER BY cos DESC, vec1 ASC, vec2 ASC
-         |LIMIT 20""".stripMargin,
-    "q64_dedup_embedding_banded" ->
+         |LIMIT 20""".stripMargin),
+    Query("q64_dedup_embedding_banded", dedupEmbeddingBanded,
       s"""WITH keyed AS (
          |  SELECT vec_id, embedding, band,
          |         array_to_string(list_transform(embedding[(16*band+1):(16*band+16)],
@@ -12446,8 +12295,8 @@ object LlmOps {
          |)
          |GROUP BY vec1, vec2
          |ORDER BY cos DESC, vec1 ASC, vec2 ASC
-         |LIMIT 20""".stripMargin,
-    "q45_ann_brute_force" ->
+         |LIMIT 20""".stripMargin),
+    Query("q45_ann_brute_force", annBruteForce,
       s"""SELECT qid, CAST(rn AS INT) AS rn, vid, cos FROM (
          |  SELECT q.vec_id AS qid, c.vec_id AS vid,
          |         ${cosSql("q.embedding", "c.embedding")} AS cos,
@@ -12456,8 +12305,8 @@ object LlmOps {
          |  FROM (SELECT * FROM embeddings WHERE vec_id < 10) q
          |  JOIN (SELECT * FROM embeddings) c ON q.vec_id <> c.vec_id
          |) WHERE rn <= 5
-         |ORDER BY qid, rn""".stripMargin,
-    "q46_ann_lsh_bucketed" ->
+         |ORDER BY qid, rn""".stripMargin),
+    Query("q46_ann_lsh_bucketed", annLshBucketed,
       s"""SELECT qid, CAST(rn AS INT) AS rn, vid, cos FROM (
          |  SELECT q.vec_id AS qid, c.vec_id AS vid,
          |         ${cosSql("q.embedding", "c.embedding")} AS cos,
@@ -12470,8 +12319,8 @@ object LlmOps {
          |               array_to_string(list_transform(embedding[1:8], x -> CASE WHEN x >= 0 THEN '1' ELSE '0' END), '') AS key
          |        FROM embeddings) c ON q.key = c.key AND q.vec_id <> c.vec_id
          |) WHERE rn <= 3
-         |ORDER BY qid, rn""".stripMargin,
-    "q57_ann_custom_topk" ->
+         |ORDER BY qid, rn""".stripMargin),
+    Query("q57_ann_custom_topk", annCustomTopK,
       s"""SELECT qid, CAST(rn AS INT) AS rn, vid, cos FROM (
          |  SELECT q.vec_id AS qid, c.vec_id AS vid,
          |         ${cosSql("q.embedding", "c.embedding")} AS cos,
@@ -12480,8 +12329,8 @@ object LlmOps {
          |  FROM (SELECT * FROM embeddings WHERE vec_id < 10) q
          |  JOIN (SELECT * FROM embeddings) c ON q.vec_id <> c.vec_id
          |) WHERE rn <= 5
-         |ORDER BY qid, rn""".stripMargin,
-    "q53_ann_ivf" ->
+         |ORDER BY qid, rn""".stripMargin),
+    Query("q53_ann_ivf", annIvf,
       s"""WITH cents AS (
          |  SELECT vec_id AS cid, embedding AS ce FROM embeddings WHERE vec_id < 16
          |), assigned AS (
@@ -12500,8 +12349,8 @@ object LlmOps {
          |  FROM (SELECT * FROM assigned WHERE vec_id < 10) q
          |  JOIN assigned c ON q.cid = c.cid AND q.vec_id <> c.vec_id
          |) WHERE rn <= 3
-         |ORDER BY qid, rn""".stripMargin,
-    "q75_ann_ivf_multiprobe" ->
+         |ORDER BY qid, rn""".stripMargin),
+    Query("q75_ann_ivf_multiprobe", annIvfMultiprobe,
       s"""WITH cents AS (
          |  SELECT vec_id AS cid, embedding AS ce FROM embeddings WHERE vec_id < 16
          |), rankedcells AS (
@@ -12522,11 +12371,11 @@ object LlmOps {
          |  FROM (SELECT * FROM probes WHERE vec_id < 10) q
          |  JOIN assigned c ON q.cid = c.cid AND q.vec_id <> c.vec_id
          |) WHERE rn <= 3
-         |ORDER BY qid, rn""".stripMargin,
+         |ORDER BY qid, rn""".stripMargin),
     // Recall replicated exactly (hits/recall columns); recall_ok asserted
     // TRUE — red the moment either approximate path's recall drops below
     // its declared floor in Spark.
-    "q70_ann_recall_gate" ->
+    Query("q70_ann_recall_gate", annRecallGate,
       s"""WITH exact3 AS (
          |  SELECT qid, vid FROM (
          |    SELECT q.vec_id AS qid, c.vec_id AS vid,
@@ -12588,16 +12437,16 @@ object LlmOps {
          |FROM expected x LEFT JOIN approx a
          |  ON x.method = a.method AND x.eqid = a.qid AND x.evid = a.vid
          |GROUP BY x.method
-         |ORDER BY x.method""".stripMargin,
-    "q47_text_stats" ->
+         |ORDER BY x.method""".stripMargin),
+    Query("q47_text_stats", textStats,
       s"""SELECT lang, count(*) AS n_docs,
          |       CAST(sum(ntok) AS BIGINT) AS sum_tokens,
          |       CAST(sum(ndist) AS BIGINT) AS sum_distinct,
          |       ${ratioSql("CAST(sum(ntok) AS BIGINT)", "count(*)")} AS avg_tokens
          |FROM (SELECT lang, len($toksSql) AS ntok, len(list_distinct($toksSql)) AS ndist FROM documents)
          |GROUP BY lang
-         |ORDER BY lang""".stripMargin,
-    "q48_lang_id" ->
+         |ORDER BY lang""".stripMargin),
+    Query("q48_lang_id", langId,
       s"""SELECT lang, predicted, count(*) AS n_docs FROM (
         |  SELECT lang,
         |         ${markerCaseSql("und")} AS predicted
@@ -12606,8 +12455,8 @@ object LlmOps {
         |    FROM (SELECT lang, $toksSql AS toks FROM documents)
         |  )
         |) GROUP BY lang, predicted
-        |ORDER BY lang, predicted""".stripMargin,
-    "q49_quality_score" ->
+        |ORDER BY lang, predicted""".stripMargin),
+    Query("q49_quality_score", qualityScore,
       s"""SELECT doc_id, ntok, nchar,
          |       ${ratioSql("nosp", "ntok")} AS mean_tok_len,
          |       ${ratioSql("nstop", "ntok")} AS stop_ratio,
@@ -12620,8 +12469,8 @@ object LlmOps {
          |         CAST(len(list_filter(toks, t -> t IN ('table','row','value','data','key'))) AS BIGINT) AS nstop
          |  FROM (SELECT doc_id, text, $toksSql AS toks FROM documents)
          |)
-         |ORDER BY doc_id""".stripMargin,
-    "q50_fingerprint" ->
+         |ORDER BY doc_id""".stripMargin),
+    Query("q50_fingerprint", fingerprint,
       s"""SELECT doc_id, fp_tokenset, fp_prefix,
          |       count(*) OVER (PARTITION BY fp_tokenset) AS fp_group
          |FROM (
@@ -12630,17 +12479,17 @@ object LlmOps {
          |         md5(substr(text, 1, 64)) AS fp_prefix
          |  FROM documents
          |)
-         |ORDER BY doc_id""".stripMargin,
-    "q51_token_count" ->
+         |ORDER BY doc_id""".stripMargin),
+    Query("q51_token_count", tokenCount,
       s"""SELECT doc_id,
          |       CAST(len($toksSql) AS BIGINT) AS ws_tokens,
          |       CAST(len(regexp_extract_all(text, '[a-z]+|[0-9]+|[^a-z0-9 ]')) AS BIGINT) AS bpe_tokens,
          |       CAST(length(text) AS BIGINT) AS chars
          |FROM documents
-         |ORDER BY doc_id""".stripMargin,
+         |ORDER BY doc_id""".stripMargin),
     // recon_cos replicated by the identical op tree; recon_ok asserted
     // TRUE (floor 0.999 evaluated in Spark — the q18 pattern).
-    "q78_embed_quantize" ->
+    Query("q78_embed_quantize", embedQuantize,
       s"""WITH qd AS (
          |  SELECT vec_id, embedding,
          |         CASE WHEN absmax = 0.0 THEN 1.0 ELSE absmax / 127.0 END AS scale
@@ -12667,8 +12516,8 @@ object LlmOps {
          |          * sqrt(list_reduce(list_prepend(CAST(0.0 AS DOUBLE), CAST(list_transform(range(1, 65), i -> dq[i] * dq[i]) AS DOUBLE[])), (a, p) -> a + p))) AS recon_cos,
          |       TRUE AS recon_ok
          |FROM zz
-         |ORDER BY vec_id""".stripMargin,
-    "q74_pii_scrub" ->
+         |ORDER BY vec_id""".stripMargin),
+    Query("q74_pii_scrub", piiScrub,
       """SELECT c_custkey, raw,
         |       regexp_replace(regexp_replace(regexp_replace(raw,
         |         'https?://[^ ]+', '<URL>', 'g'),
@@ -12679,8 +12528,8 @@ object LlmOps {
         |               || '@example.com or https://ex.com/p/' || CAST(c_custkey AS VARCHAR)
         |               || ' ref ' || lpad(CAST(c_custkey AS VARCHAR), 9, '7') AS raw
         |      FROM customer)
-        |ORDER BY c_custkey""".stripMargin,
-    "q52_tfidf_top_terms" ->
+        |ORDER BY c_custkey""".stripMargin),
+    Query("q52_tfidf_top_terms", tfidfTop,
       """WITH tfx AS (
         |  SELECT doc_id, term, count(*) AS tf
         |  FROM (SELECT doc_id, unnest(string_split(text, ' ')) AS term FROM documents)
@@ -12696,8 +12545,8 @@ object LlmOps {
         |  FROM tfx JOIN dfx USING (term), nx
         |  WHERE doc_id < 50
         |) WHERE rn <= 3
-        |ORDER BY doc_id, rn""".stripMargin,
-    "q81_quality_repetition" ->
+        |ORDER BY doc_id, rn""".stripMargin),
+    Query("q81_quality_repetition", qualityRepetition,
       s"""WITH pre AS (
          |  SELECT doc_id,
          |         CAST(len(th) AS BIGINT) AS n_tok,
@@ -12729,8 +12578,8 @@ object LlmOps {
          |              ELSE 0.0 END AS dup_trigram_frac
          |  FROM pre p LEFT JOIN topbg t ON p.doc_id = t.doc_id
          |)
-         |ORDER BY doc_id""".stripMargin,
-    "q82_split_assign" ->
+         |ORDER BY doc_id""".stripMargin),
+    Query("q82_split_assign", splitAssign,
       s"""SELECT split, n_docs,
          |       ${ratioSql("n_docs", "sum(n_docs) OVER ()")} AS frac,
          |       sum_chars, min_doc, max_doc
@@ -12744,8 +12593,8 @@ object LlmOps {
          |  FROM (SELECT doc_id, n_chars, $docIdDigestSql % 100 AS bucket FROM documents)
          |  GROUP BY 1
          |)
-         |ORDER BY split""".stripMargin,
-    "q83_chunk_overlap" ->
+         |ORDER BY split""".stripMargin),
+    Query("q83_chunk_overlap", chunkOverlap,
       s"""SELECT doc_id, chunk_idx, chunk_idx * 24 AS chunk_start,
          |       CAST(len(ct) AS BIGINT) AS n_chunk_toks,
          |       array_to_string(ct, ' ') AS chunk_text
@@ -12763,15 +12612,15 @@ object LlmOps {
          |    )
          |  )
          |)
-         |ORDER BY doc_id, chunk_idx""".stripMargin,
-    "q84_sample_stratified" ->
+         |ORDER BY doc_id, chunk_idx""".stripMargin),
+    Query("q84_sample_stratified", sampleStratified,
       s"""SELECT lang, CAST(rn AS INT) AS rn, doc_id, hkey FROM (
          |  SELECT lang, doc_id, hkey,
          |         row_number() OVER (PARTITION BY lang ORDER BY hkey ASC, doc_id ASC) AS rn
          |  FROM (SELECT lang, doc_id, $docIdDigestSql AS hkey FROM documents)
          |) WHERE rn <= 10
-         |ORDER BY lang, rn""".stripMargin,
-    "q96_decontaminate" ->
+         |ORDER BY lang, rn""".stripMargin),
+    Query("q96_decontaminate", decontaminate,
       s"""WITH sh AS (
          |  SELECT doc_id, bucket, list_distinct(tgs) AS shs
          |  FROM (
@@ -12798,8 +12647,8 @@ object LlmOps {
          |  FROM tr JOIN ev USING (sh)
          |  GROUP BY doc_id, n_shingles
          |)
-         |ORDER BY doc_id""".stripMargin,
-    "q98_pack_sequences" ->
+         |ORDER BY doc_id""".stripMargin),
+    Query("q98_pack_sequences", packSequences,
       s"""SELECT lang, bin_id, count(*) AS n_docs,
          |       ${sumLongSql("n_tok")} AS sum_tok,
          |       min(doc_id) AS first_doc, max(doc_id) AS last_doc
@@ -12815,8 +12664,8 @@ object LlmOps {
          |  )
          |)
          |GROUP BY lang, bin_id
-         |ORDER BY lang, bin_id""".stripMargin,
-    "q104_dedup_editdistance" ->
+         |ORDER BY lang, bin_id""".stripMargin),
+    Query("q104_dedup_editdistance", dedupEditDistance,
       """WITH d AS (
         |  SELECT doc_id, substr(text, 1, 16) AS pfx, substr(text, 17, 48) AS body
         |  FROM documents
@@ -12829,8 +12678,8 @@ object LlmOps {
         |       CAST(levenshtein(w.body, r.body) AS INT) AS dist
         |FROM w JOIN d r ON w.rep = r.doc_id AND w.pfx = r.pfx
         |WHERE w.doc_id <> w.rep AND levenshtein(w.body, r.body) <= 12
-        |ORDER BY doc_a, doc_b""".stripMargin,
-    "q106_sample_weighted" ->
+        |ORDER BY doc_a, doc_b""".stripMargin),
+    Query("q106_sample_weighted", sampleWeighted,
       s"""SELECT lang, CAST(rn AS INT) AS rn, doc_id, n_chars, prio FROM (
          |  SELECT lang, doc_id, n_chars, prio,
          |         row_number() OVER (PARTITION BY lang
@@ -12840,8 +12689,8 @@ object LlmOps {
          |                 // ($docIdDigestSql + 1) AS prio
          |        FROM documents)
          |) WHERE rn <= 10
-         |ORDER BY lang, rn""".stripMargin,
-    "q107_profile_corpus" ->
+         |ORDER BY lang, rn""".stripMargin),
+    Query("q107_profile_corpus", profileCorpus,
       """SELECT count(*) AS n_rows,
         |       count(DISTINCT doc_id) AS n_distinct_docs,
         |       count(DISTINCT lang) AS n_distinct_langs,
@@ -12853,8 +12702,8 @@ object LlmOps {
         |       CAST(sum(n_chars) AS BIGINT) AS sum_chars,
         |       min(doc_id) AS min_doc,
         |       max(doc_id) AS max_doc
-        |FROM documents""".stripMargin,
-    "q108_dedup_substring" ->
+        |FROM documents""".stripMargin),
+    Query("q108_dedup_substring", dedupSubstring,
       s"""WITH sh AS (
          |  SELECT doc_id, list_distinct(tgs) AS shs
          |  FROM (
@@ -12882,8 +12731,8 @@ object LlmOps {
          |            THEN ${ratioSql("coalesce(per.n_shared, 0)", "len(sh.shs)")}
          |            ELSE 0.0 END >= 0.5 AS flagged
          |FROM sh LEFT JOIN per ON sh.doc_id = per.doc_id
-         |ORDER BY sh.doc_id""".stripMargin,
-    "q109_kmeans_clusters" ->
+         |ORDER BY sh.doc_id""".stripMargin),
+    Query("q109_kmeans_clusters", kmeansClusters,
       s"""WITH $kmeansA2Sql
          |SELECT CAST(code % $KmeansK AS INT) AS cluster,
          |       count(*) AS n_members,
@@ -12891,8 +12740,8 @@ object LlmOps {
          |       min(vec_id) AS min_vec
          |FROM a2
          |GROUP BY 1
-         |ORDER BY cluster""".stripMargin,
-    "q110_semdedup_prune" -> {
+         |ORDER BY cluster""".stripMargin),
+    Query("q110_semdedup_prune", semdedupPrune, {
       def idotSql(a: String, b: String) =
         s"list_reduce(list_prepend(CAST(0 AS BIGINT), list_transform(range(1, 65), i -> CAST($a[i] AS BIGINT) * $b[i])), (x, y) -> x + y)"
       val cosSql =
@@ -12913,8 +12762,8 @@ object LlmOps {
          |FROM mem m JOIN repq p ON m.cluster = p.cluster
          |GROUP BY m.cluster
          |ORDER BY m.cluster""".stripMargin
-    },
-    "q114_table_checksum" ->
+    }),
+    Query("q114_table_checksum", tableChecksum,
       s"""SELECT count(*) AS n_rows,
          |       bit_xor(digest) AS xor_check,
          |       CAST(CAST(sum(digest) AS HUGEINT) % $ChecksumMod AS BIGINT) AS sum_check
@@ -12923,8 +12772,8 @@ object LlmOps {
          |           concat_ws(chr(1), CAST(doc_id AS VARCHAR), lang, source,
          |                     CAST(n_chars AS VARCHAR), text)), 1, 10)) AS BIGINT) AS digest
          |  FROM documents
-         |)""".stripMargin,
-    "q115_url_normalize" ->
+         |)""".stripMargin),
+    Query("q115_url_normalize", urlNormalize,
       s"""WITH raw AS (
          |  SELECT CASE doc_id % 3
          |           WHEN 0 THEN concat('https://www.', source, '.com/Docs/',
@@ -12953,8 +12802,8 @@ object LlmOps {
          |       ${ratioSql("count(DISTINCT canonical)", "count(*)")} AS dedup_ratio
          |FROM norm
          |GROUP BY 1
-         |ORDER BY host""".stripMargin,
-    "q117_dedup_keep_best" ->
+         |ORDER BY host""".stripMargin),
+    Query("q117_dedup_keep_best", dedupKeepBest,
       """WITH d AS (
         |  SELECT doc_id, n_chars,
         |         md5(array_to_string(list_sort(list_distinct(string_split(text, ' '))), ' ')) AS fp
@@ -12969,8 +12818,8 @@ object LlmOps {
         |       n_members - 1 AS n_dropped
         |FROM r
         |WHERE rn = 1 AND n_members >= 2
-        |ORDER BY fp""".stripMargin,
-    "q119_token_histogram" ->
+        |ORDER BY fp""".stripMargin),
+    Query("q119_token_histogram", tokenHistogram,
       s"""SELECT bin, count(*) AS n_docs,
          |       min(n_tok) AS min_tok, max(n_tok) AS max_tok,
          |       CAST(sum(n_tok) AS BIGINT) AS sum_tok
@@ -12979,7 +12828,7 @@ object LlmOps {
          |  FROM (SELECT CAST(len($toksSql) AS BIGINT) AS n_tok FROM documents)
          |)
          |GROUP BY bin
-         |ORDER BY bin""".stripMargin
+         |ORDER BY bin""".stripMargin)
   )
 
   /** Shared DuckDB CTE chain for the q109/q110 k-means pipeline: quantize

@@ -417,20 +417,12 @@ object Media {
       .orderBy($"fp")
   }
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q283_image_feature_census" -> imageFeatureCensus,
-    "q286_audio_feature_census" -> audioFeatureCensus,
-    "q287_video_structure_census" -> videoStructureCensus,
-    "q371_image_dhash_dedup" -> imageDhashDedup,
-    "q379_audio_fingerprint_dedup" -> audioFingerprintDedup
-  )
-
-  def oracles: Map[String, String] = Map(
+  val declared: Seq[Query] = Seq(
     // The oracle never touches a codec: it re-derives the pixel sums
     // from the same closed form the encoder used. roundtrip_ok is the
     // stated-TRUE contract — if the Spark codec path ever corrupts a
     // payload, the hash compare fails on that cell.
-    "q283_image_feature_census" ->
+    Query("q283_image_feature_census", imageFeatureCensus,
       s"""WITH idx AS (SELECT unnest(generate_series(0, ${W * H - 1})) AS i),
          |px AS (
          |  SELECT p_brand, p_partkey,
@@ -444,8 +436,8 @@ object Media {
          |       TRUE AS roundtrip_ok
          |FROM px
          |GROUP BY 1
-         |ORDER BY 1""".stripMargin,
-    "q286_audio_feature_census" ->
+         |ORDER BY 1""".stripMargin),
+    Query("q286_audio_feature_census", audioFeatureCensus,
       s"""WITH idx AS (SELECT unnest(generate_series(0, ${NSamp - 1})) AS i),
          |sm AS (
          |  SELECT c_mktsegment, c_custkey, i,
@@ -464,11 +456,11 @@ object Media {
          |       TRUE AS roundtrip_ok
          |FROM sm
          |GROUP BY 1
-         |ORDER BY 1""".stripMargin,
+         |ORDER BY 1""".stripMargin),
     // pixels → 2×2 integer block means → 63 adjacent-column compares →
     // hash, all replayed as integer SQL from the closed form; a match
     // proves the codec round-trip AND the downsample bit-exact
-    "q371_image_dhash_dedup" ->
+    Query("q371_image_dhash_dedup", imageDhashDedup,
       s"""WITH cells AS (
          |  SELECT p_partkey, r, c,
          |    ( ((p_partkey % 25) * 37 + ((2*r) * $DhW + 2*c) * 11) % 240
@@ -503,19 +495,19 @@ object Media {
          |SELECT dhash, n_parts, n_variants, first_part,
          |       n_clusters, n_parts_total
          |FROM clusters, tot
-         |ORDER BY dhash""".stripMargin,
-    "q287_video_structure_census" ->
+         |ORDER BY dhash""".stripMargin),
+    Query("q287_video_structure_census", videoStructureCensus,
       """SELECT s_nationkey,
         |       count(*) AS n_videos,
         |       CAST(sum(2 + s_suppkey % 4) AS BIGINT) AS total_frames,
         |       TRUE AS decode_ok
         |FROM supplier
         |GROUP BY 1
-        |ORDER BY 1""".stripMargin,
+        |ORDER BY 1""".stripMargin),
     // the q371 contract on the audio path: samples → frame/band
     // energies → sign comparisons → hash, all pure integer SQL — a
     // hash match proves the encode → decode → fingerprint path exact
-    "q379_audio_fingerprint_dedup" ->
+    Query("q379_audio_fingerprint_dedup", audioFingerprintDedup,
       s"""WITH sm AS MATERIALIZED (
          |  SELECT c_custkey, i,
          |         (1 + c_custkey % 3) *
@@ -571,6 +563,6 @@ object Media {
          |SELECT fp, n_clips, n_variants, first_cust,
          |       n_clusters, n_clips_total
          |FROM clusters, tot
-         |ORDER BY fp""".stripMargin
+         |ORDER BY fp""".stripMargin)
   )
 }

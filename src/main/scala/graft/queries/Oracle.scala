@@ -5,10 +5,11 @@ import graft.Tables
 /** DuckDB-oracle SQL helpers (SURVEY.md §5.3).
   *
   * The driver runs correctness at sf0.01 (TESTDATA.md). It may or may not
-  * register fixture tables as views, so oracle SQL is authored with bare
-  * table names for readability and then rewritten so every `FROM <table>` /
-  * `JOIN <table>` reads the parquet file directly via `read_parquet(...) AS
-  * <table>` — runnable either way.
+  * register fixture tables as views, so each [[Query]]'s oracle SQL is
+  * authored with bare table names for readability, and
+  * `SparkEntry.oracleSqlFor` passes it through [[rewrite]] so every
+  * `FROM <table>` / `JOIN <table>` reads the parquet file directly via
+  * `read_parquet(...) AS <table>` — runnable either way.
   *
   * Authoring rule: never alias a fixture table inline (`FROM lineitem l`);
   * for self-joins wrap in a subselect (`FROM (SELECT * FROM lineitem) a`).
@@ -19,7 +20,7 @@ object Oracle {
     * was invoked with so outputs and oracles can never decouple. */
   val sfDir = "/root/testdata/sf0.01"
 
-  def rewrite(sql: String, dir: String = sfDir): String =
+  def rewrite(sql: String, dir: String): String =
     Tables.names.foldLeft(sql) { (acc, t) =>
       // quoteReplacement: a '$' or '\' in the dir would otherwise be read
       // as a group reference in the replacement string.
@@ -28,7 +29,4 @@ object Oracle {
         "$1 " + java.util.regex.Matcher.quoteReplacement(
           s"read_parquet('$dir/$t.parquet') AS $t"))
     }
-
-  def apply(m: Map[String, String], dir: String = sfDir): Map[String, String] =
-    m.map { case (k, v) => k -> rewrite(v, dir) }
 }

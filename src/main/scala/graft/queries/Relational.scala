@@ -2235,82 +2235,8 @@ object Relational {
       .orderBy($"antecedent", $"consequent")
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q339_dp_noised_histogram" -> dpNoisedHistogram,
-    "q342_apriori_rules" -> aprioriRules,
-    "q333_entity_linkage" -> entityLinkage,
-    "q359_entity_canonicalization" -> entityCanonicalization,
-    "q331_k_anonymity_census" -> kAnonymityCensus,
-    "q357_t_closeness_census" -> tClosenessCensus,
-    "q326_deletion_cascade" -> deletionCascade,
-    "q284_important_parts_value" -> importantPartsValue,
-    "q285_ship_priority_census" -> shipPriorityCensus,
-    "q302_join_discovery" -> joinDiscovery,
-    "q303_inclusion_direction" -> inclusionDirection,
-    "q305_incremental_mv" -> incrementalMv,
-    "q253_join_asof_nearest" -> asofNearestJoin,
-    "q254_min_cost_supplier" -> minCostSupplier,
-    "q257_cdc_apply" -> cdcApply,
-    "q263_entity_reconciliation" -> entityReconciliation,
-    "q258_scd2_asof_lookup" -> scd2AsofLookup,
-    "q233_priority_late_exists" -> priorityLateExists,
-    "q234_scan_only_revenue" -> scanOnlyRevenue,
-    "q235_returned_revenue_topk" -> returnedRevenueTopk,
-    "q236_order_count_distribution" -> orderCountDistribution,
-    "q237_promo_revenue_share" -> promoRevenueShare,
-    "q238_small_qty_revenue" -> smallQtyRevenue,
-    "q228_brand_loyalty" -> brandLoyalty,
-    "q220_item_cooccurrence_cosine" -> itemCooccurrenceCosine,
-    "q214_big_order_customers" -> bigOrderCustomers,
-    "q215_disjunctive_pred_scan" -> disjunctivePredScan,
-    "q216_nation_trade_flow" -> nationTradeFlow,
-    "q217_top_supplier_interval" -> topSupplierInterval,
-    "q218_brand_supplier_census" -> brandSupplierCensus,
-    "q219_profit_decomposition" -> profitDecomposition,
-    "q207_late_supplier_blame" -> lateSupplierBlame,
-    "q208_dormant_high_value" -> dormantHighValue,
-    "q209_promo_supplier_share" -> promoSupplierShare,
-    "q199_brand_affinity" -> brandAffinity,
-    "q150_market_share" -> marketShare,
-    "q176_policy_masking" -> policyMasking,
-    "q178_join_asof_tolerance" -> asofJoinTolerance,
-    "q189_fk_orphan_audit" -> fkOrphanAudit,
-    "q190_pk_uniqueness_audit" -> pkUniquenessAudit,
-    "q151_scd2_build" -> scd2Build,
-    "q152_union_by_name" -> unionByNameEvolved,
-    "q153_intersect_all" -> intersectAllKeys,
-    "q125_join_asof_forward" -> asofForwardJoin,
-    "q29_project_filter" -> projectFilter,
-    "q01_revenue_by_nation" -> revenueByNation,
-    "q02_join_broadcast_dim" -> broadcastDimJoin,
-    "q03_join_left_outer" -> leftOuterJoin,
-    "q72_join_right_outer" -> rightOuterJoin,
-    "q04_join_semi" -> semiJoin,
-    "q05_join_anti" -> antiJoin,
-    "q06_join_equirange" -> equiRangeJoin,
-    "q07_join_asof" -> asofJoin,
-    "q08_join_theta" -> thetaJoin,
-    "q09_join_full_outer" -> fullOuterJoin,
-    "q10_join_cross" -> crossJoinDims,
-    "q54_shipping_priority" -> shippingPriority,
-    "q55_local_supplier_volume" -> localSupplierVolume,
-    "q56_above_brand_avg" -> aboveBrandAverage,
-    "q59_salted_join" -> saltedJoinAgg,
-    "q60_salted_agg" -> saltedAgg,
-    "q205_salted_join_autotuned" -> saltedJoinAutotuned,
-    "q23_sort_multikey_nulls" -> sortMultiKey,
-    "q24_topk_limit" -> topK,
-    "q25_union_all" -> unionAll,
-    "q26_union_distinct" -> unionDistinct,
-    "q27_intersect" -> intersectKeys,
-    "q28_except_all" -> exceptAllKeys,
-    "q100_merge_upsert" -> mergeUpsert,
-    "q116_snapshot_diff" -> snapshotDiff,
-    "q118_join_nullsafe" -> nullSafeJoin
-  )
-
-  val oracles: Map[String, String] = Map(
-    "q339_dp_noised_histogram" ->
+  val declared: Seq[Query] = Seq(
+    Query("q339_dp_noised_histogram", dpNoisedHistogram,
       s"""WITH cells AS (
          |  SELECT CAST(c_nationkey AS BIGINT) AS nation,
          |         c_mktsegment AS mktsegment,
@@ -2328,8 +2254,8 @@ object Relational {
          |SELECT nation, mktsegment,
          |       CAST(greatest(n_true + noise, 0) AS BIGINT) AS n_noised,
          |       greatest(n_true + noise, 0) = 0 AS suppressed
-         |FROM noised ORDER BY nation, mktsegment""".stripMargin,
-    "q342_apriori_rules" ->
+         |FROM noised ORDER BY nation, mktsegment""".stripMargin),
+    Query("q342_apriori_rules", aprioriRules,
       // the oracle generates itemsets by SELF-JOIN (DuckDB has no
       // index-lambda combination idiom) — provably the same multisets
       // the Spark side's within-basket combination transforms produce,
@@ -2382,12 +2308,12 @@ object Relational {
          |         AS lift,
          |       100 * n_both >= $AprioriMinConfPct * n_ante AS strong
          |FROM rules
-         |ORDER BY antecedent, consequent""".stripMargin,
+         |ORDER BY antecedent, consequent""".stripMargin),
     // q333's blocked/capped/scored pairs → match edges → recursive-CTE
     // components (the q76 oracle pattern) → survivor window → size census;
     // the hash compare proves driver-gated propagation ≡ transitive closure
     // AND pins every argmax through the three golden-field sums
-    "q359_entity_canonicalization" ->
+    Query("q359_entity_canonicalization", entityCanonicalization,
       s"""WITH RECURSIVE recs AS MATERIALIZED (
          |  SELECT c_custkey, c_name, bal_c,
          |         concat_ws(':', CAST(c_nationkey AS VARCHAR), c_mktsegment,
@@ -2449,8 +2375,8 @@ object Relational {
          |       n_records_total, n_entities_total, n_merged_records
          |FROM per, tot
          |GROUP BY 1, n_records_total, n_entities_total, n_merged_records
-         |ORDER BY 1""".stripMargin,
-    "q333_entity_linkage" ->
+         |ORDER BY 1""".stripMargin),
+    Query("q333_entity_linkage", entityLinkage,
       s"""WITH recs AS MATERIALIZED (
          |  SELECT c_custkey, c_name, bal_c,
          |         concat_ws(':', CAST(c_nationkey AS VARCHAR), c_mktsegment,
@@ -2491,10 +2417,10 @@ object Relational {
          |       (SELECT n_blocks_skipped FROM stats) AS n_blocks_skipped
          |FROM classed
          |GROUP BY 1
-         |ORDER BY 1""".stripMargin,
+         |ORDER BY 1""".stripMargin),
     // q331's QI grid × the sorted-priority domain; every prefix gap is
     // the exact cross-multiply, one shared divide at the end
-    "q357_t_closeness_census" ->
+    Query("q357_t_closeness_census", tClosenessCensus,
       s"""WITH counts AS MATERIALIZED (
          |  SELECT c_nationkey AS nation, c_mktsegment AS mktsegment,
          |         CAST(year(o_orderdate) AS INT) AS order_year,
@@ -2551,8 +2477,8 @@ object Relational {
          |SELECT nation, mktsegment, order_year, n_rows, emd_num,
          |       t_closeness, above_t, t_max, n_cells_above
          |FROM flagged, tot
-         |ORDER BY nation, mktsegment, order_year""".stripMargin,
-    "q331_k_anonymity_census" ->
+         |ORDER BY nation, mktsegment, order_year""".stripMargin),
+    Query("q331_k_anonymity_census", kAnonymityCensus,
       s"""WITH g AS MATERIALIZED (
          |  SELECT c_nationkey AS nation, c_mktsegment AS mktsegment,
          |         CAST(year(o_orderdate) AS INT) AS order_year,
@@ -2571,13 +2497,13 @@ object Relational {
          |       n_rows < $KAnonK AS below_k,
          |       k_anonymity, l_diversity, n_groups_below_k
          |FROM g, tot
-         |ORDER BY nation, mktsegment, order_year""".stripMargin,
+         |ORDER BY nation, mktsegment, order_year""".stripMargin),
     // Independent path on purpose: the oracle recomputes BEFORE-minus-
     // AFTER totals from scratch (full aggregates over all rows vs over
     // surviving rows), while the declared plan sums the cascade frontier
     // incrementally — agreement proves incremental ≡ recomputed across
     // the two-level cascade.
-    "q326_deletion_cascade" ->
+    Query("q326_deletion_cascade", deletionCascade,
       s"""WITH co AS MATERIALIZED (
          |  SELECT o_orderkey, c_nationkey, (c_custkey % 97 = 0) AS tomb
          |  FROM orders JOIN customer ON o_custkey = c_custkey
@@ -2607,12 +2533,12 @@ object Relational {
          |LEFT JOIN cu ON n_nationkey = cu.nk
          |LEFT JOIN od ON n_nationkey = od.nk
          |LEFT JOIN li ON n_nationkey = li.nk
-         |ORDER BY n_name""".stripMargin,
+         |ORDER BY n_name""".stripMargin),
     // The oracle IS the theorem: full recompute over the post-delta
     // fact set (new orders in; cancelled base orders out) — any
     // double-count, dropped retraction, or surviving empty group in
     // the incremental path breaks the hash.
-    "q305_incremental_mv" ->
+    Query("q305_incremental_mv", incrementalMv,
       s"""SELECT o_custkey AS ck,
          |       count(*) AS n_orders,
          |       CAST(sum(${centsSql("o_totalprice")}) AS BIGINT) AS spend_cents
@@ -2620,8 +2546,8 @@ object Relational {
          |WHERE o_orderdate >= DATE '1997-01-01'
          |   OR (o_orderdate < DATE '1997-01-01' AND o_orderkey % 7 <> 0)
          |GROUP BY 1
-         |ORDER BY 1""".stripMargin,
-    "q303_inclusion_direction" -> {
+         |ORDER BY 1""".stripMargin),
+    Query("q303_inclusion_direction", inclusionDirection, {
       import graft.operators.TextOps.{MinhashA, MinhashB, MinhashPrime}
       val reg = Seq(
         ("customer.c_custkey", "customer", "c_custkey"),
@@ -2671,8 +2597,8 @@ object Relational {
          |            ELSE 'overlap' END AS relation
          |FROM ex JOIN screen ON ex.col_a = screen.col_a AND ex.col_b = screen.col_b
          |ORDER BY ex.col_a, ex.col_b""".stripMargin
-    },
-    "q302_join_discovery" -> {
+    }),
+    Query("q302_join_discovery", joinDiscovery, {
       import graft.operators.TextOps.{MinhashA, MinhashB, MinhashPrime}
       def sigSql(name: String, table: String, c: String): String = {
         val mins = (0 until 12).map(j =>
@@ -2705,8 +2631,8 @@ object Relational {
          |       n_match >= 8 AS joinable
          |FROM pairs
          |ORDER BY col_a, col_b""".stripMargin
-    },
-    "q284_important_parts_value" ->
+    }),
+    Query("q284_important_parts_value", importantPartsValue,
       s"""WITH v AS (
          |  SELECT l_partkey,
          |         ${sumLongSql(centsSql("l_extendedprice * (1 - l_discount)"))} AS value_cents
@@ -2723,8 +2649,8 @@ object Relational {
          |SELECT l_partkey, value_cents
          |FROM v CROSS JOIN t
          |WHERE CAST(value_cents AS HUGEINT) * n_parts > 2 * CAST(total AS HUGEINT)
-         |ORDER BY value_cents DESC, l_partkey ASC""".stripMargin,
-    "q285_ship_priority_census" ->
+         |ORDER BY value_cents DESC, l_partkey ASC""".stripMargin),
+    Query("q285_ship_priority_census", shipPriorityCensus,
       """SELECT l_returnflag,
         |       CAST(sum(CASE WHEN o_orderpriority IN ('1-URGENT', '2-HIGH')
         |                     THEN 1 ELSE 0 END) AS BIGINT) AS high_line_count,
@@ -2736,8 +2662,8 @@ object Relational {
         |  AND l_shipdate > o_orderdate
         |  AND l_shipdate <= o_orderdate + INTERVAL 60 DAY
         |GROUP BY 1
-        |ORDER BY 1""".stripMargin,
-    "q263_entity_reconciliation" ->
+        |ORDER BY 1""".stripMargin),
+    Query("q263_entity_reconciliation", entityReconciliation,
       """WITH c AS (SELECT c_custkey AS k FROM customer),
         |o AS (SELECT DISTINCT o_custkey AS k FROM orders),
         |e AS (SELECT DISTINCT user_id AS k FROM events),
@@ -2751,8 +2677,8 @@ object Relational {
         |LEFT JOIN o ON u.k = o.k
         |LEFT JOIN e ON u.k = e.k
         |GROUP BY 1, 2, 3
-        |ORDER BY 1, 2, 3""".stripMargin,
-    "q257_cdc_apply" ->
+        |ORDER BY 1, 2, 3""".stripMargin),
+    Query("q257_cdc_apply", cdcApply,
       s"""WITH log AS (
          |  SELECT o_custkey AS ck, o_orderdate AS ts, o_orderkey AS seq,
          |         CASE WHEN o_orderkey % 7 = 0 THEN 'D' ELSE 'U' END AS op,
@@ -2773,8 +2699,8 @@ object Relational {
          |FROM (SELECT c_custkey, ${centsSql("c_acctbal")} AS bal_cents FROM customer) base
          |FULL OUTER JOIN last_op ON c_custkey = ck
          |WHERE op IS NULL OR op <> 'D'
-         |ORDER BY k""".stripMargin,
-    "q258_scd2_asof_lookup" ->
+         |ORDER BY k""".stripMargin),
+    Query("q258_scd2_asof_lookup", scd2AsofLookup,
       """WITH dim AS (
         |  SELECT o_custkey AS dk, o_orderstatus AS status_in_force,
         |         o_orderdate AS valid_from,
@@ -2793,8 +2719,8 @@ object Relational {
         |LEFT JOIN dim ON fk = dk AND l_shipdate >= valid_from
         |                         AND l_shipdate < valid_to
         |GROUP BY 1
-        |ORDER BY 1""".stripMargin,
-    "q254_min_cost_supplier" ->
+        |ORDER BY 1""".stripMargin),
+    Query("q254_min_cost_supplier", minCostSupplier,
       s"""WITH unit AS (
          |  SELECT p_partkey, p_brand, l_suppkey,
          |         min(${ratioSql(centsSql("l_extendedprice"),
@@ -2810,8 +2736,8 @@ object Relational {
          |)
          |SELECT p_partkey, p_brand, cheapest_supp, unit_cents
          |FROM best WHERE rn = 1
-         |ORDER BY p_partkey""".stripMargin,
-    "q253_join_asof_nearest" ->
+         |ORDER BY p_partkey""".stripMargin),
+    Query("q253_join_asof_nearest", asofNearestJoin,
       """SELECT purch_id,
         |       CASE WHEN b_id IS NULL THEN f_id WHEN f_id IS NULL THEN b_id
         |            WHEN d_f < d_b THEN f_id ELSE b_id END AS nearest_view,
@@ -2847,8 +2773,8 @@ object Relational {
         |)
         |WHERE (CASE WHEN b_id IS NULL THEN f_id WHEN f_id IS NULL THEN b_id
         |            WHEN d_f < d_b THEN f_id ELSE b_id END) IS NOT NULL
-        |ORDER BY purch_id""".stripMargin,
-    "q233_priority_late_exists" ->
+        |ORDER BY purch_id""".stripMargin),
+    Query("q233_priority_late_exists", priorityLateExists,
       // no table alias: the Oracle rewriter re-aliases each table AS its
       // own name, so the outer reference uses the bare table name.
       """SELECT o_orderpriority, count(*) AS n_orders
@@ -2859,8 +2785,8 @@ object Relational {
         |              WHERE l_orderkey = orders.o_orderkey
         |                AND l_shipdate > orders.o_orderdate + INTERVAL 60 DAY)
         |GROUP BY 1
-        |ORDER BY 1""".stripMargin,
-    "q234_scan_only_revenue" ->
+        |ORDER BY 1""".stripMargin),
+    Query("q234_scan_only_revenue", scanOnlyRevenue,
       s"""SELECT ${sumLongSql(centsSql("l_extendedprice * l_discount"))}
          |         AS revenue_cents,
          |       count(*) AS n_rows
@@ -2868,8 +2794,8 @@ object Relational {
          |WHERE l_shipdate >= TIMESTAMP '1997-01-01 00:00:00'
          |  AND l_shipdate < TIMESTAMP '1998-01-01 00:00:00'
          |  AND l_discount >= 0.05 AND l_discount <= 0.07
-         |  AND l_quantity < 24""".stripMargin,
-    "q235_returned_revenue_topk" ->
+         |  AND l_quantity < 24""".stripMargin),
+    Query("q235_returned_revenue_topk", returnedRevenueTopk,
       s"""SELECT c_custkey, c_name, n_name AS nation,
          |       ${sumLongSql(centsSql("l_extendedprice * (1 - l_discount)"))}
          |         AS rev_cents
@@ -2882,8 +2808,8 @@ object Relational {
          |  AND o_orderdate < TIMESTAMP '1997-07-01 00:00:00'
          |GROUP BY 1, 2, 3
          |ORDER BY rev_cents DESC, c_custkey ASC
-         |LIMIT 20""".stripMargin,
-    "q236_order_count_distribution" ->
+         |LIMIT 20""".stripMargin),
+    Query("q236_order_count_distribution", orderCountDistribution,
       """WITH co AS (
         |  SELECT c_custkey, count(o_orderkey) AS c_count
         |  FROM customer
@@ -2892,8 +2818,8 @@ object Relational {
         |)
         |SELECT c_count, count(*) AS custdist
         |FROM co GROUP BY 1
-        |ORDER BY custdist DESC, c_count DESC""".stripMargin,
-    "q237_promo_revenue_share" ->
+        |ORDER BY custdist DESC, c_count DESC""".stripMargin),
+    Query("q237_promo_revenue_share", promoRevenueShare,
       s"""WITH pc AS (
          |  SELECT p_type, ${centsSql("l_extendedprice * (1 - l_discount)")} AS pc
          |  FROM lineitem JOIN part ON l_partkey = p_partkey
@@ -2905,8 +2831,8 @@ object Relational {
          |       CAST(sum(pc) AS BIGINT) AS total_cents,
          |       ${ratioSql("sum(CASE WHEN p_type = 'PROMO' THEN pc ELSE 0 END)",
                            "sum(pc)")} AS promo_share
-         |FROM pc""".stripMargin,
-    "q238_small_qty_revenue" ->
+         |FROM pc""".stripMargin),
+    Query("q238_small_qty_revenue", smallQtyRevenue,
       s"""WITH li AS (
          |  SELECT l_partkey, CAST(l_quantity AS BIGINT) AS qty,
          |         ${centsSql("l_extendedprice")} AS pc
@@ -2920,8 +2846,8 @@ object Relational {
          |SELECT count(*) AS n_rows, CAST(sum(pc) AS BIGINT) AS rev_cents,
          |       ${ratioSql("sum(pc)", "7")} AS avg_yearly_cents
          |FROM li JOIN pa USING (l_partkey)
-         |WHERE 5 * qty * n < sq""".stripMargin,
-    "q228_brand_loyalty" ->
+         |WHERE 5 * qty * n < sq""".stripMargin),
+    Query("q228_brand_loyalty", brandLoyalty,
       s"""WITH bc AS (
          |  SELECT p_brand, o_custkey, count(*) AS n_ord FROM (
          |    SELECT DISTINCT p_brand, o_custkey, o_orderkey
@@ -2934,8 +2860,8 @@ object Relational {
          |       CAST(sum(CASE WHEN n_ord >= 2 THEN 1 ELSE 0 END) AS BIGINT) AS loyal,
          |       ${ratioSql("sum(CASE WHEN n_ord >= 2 THEN 1 ELSE 0 END)", "count(*)")} AS repeat_rate
          |FROM bc GROUP BY 1
-         |ORDER BY p_brand""".stripMargin,
-    "q220_item_cooccurrence_cosine" ->
+         |ORDER BY p_brand""".stripMargin),
+    Query("q220_item_cooccurrence_cosine", itemCooccurrenceCosine,
       s"""WITH op AS (
          |  SELECT DISTINCT l_orderkey AS ok, l_partkey AS pk FROM lineitem
          |), pairs AS (
@@ -2952,8 +2878,8 @@ object Relational {
          |JOIN sup sa ON pairs.pa = sa.pk
          |JOIN sup sb ON pairs.pb = sb.pk
          |ORDER BY cosine DESC, pa, pb
-         |LIMIT 50""".stripMargin,
-    "q214_big_order_customers" ->
+         |LIMIT 50""".stripMargin),
+    Query("q214_big_order_customers", bigOrderCustomers,
       s"""WITH big AS (
          |  SELECT l_orderkey, CAST(sum(l_quantity) AS BIGINT) AS order_qty
          |  FROM lineitem GROUP BY 1 HAVING sum(l_quantity) > 300
@@ -2964,8 +2890,8 @@ object Relational {
          |JOIN orders ON l_orderkey = o_orderkey
          |JOIN customer ON o_custkey = c_custkey
          |ORDER BY total_cents DESC, o_orderkey
-         |LIMIT 20""".stripMargin,
-    "q215_disjunctive_pred_scan" ->
+         |LIMIT 20""".stripMargin),
+    Query("q215_disjunctive_pred_scan", disjunctivePredScan,
       s"""SELECT ${sumLongSql(centsSql("l_extendedprice * (1 - l_discount)"))} AS revenue_cents,
          |       count(*) AS n_rows
          |FROM lineitem JOIN part ON l_partkey = p_partkey
@@ -2974,8 +2900,8 @@ object Relational {
          |   OR (p_type = 'ECONOMY' AND p_size BETWEEN 10 AND 30
          |        AND l_quantity BETWEEN 10 AND 35)
          |   OR (p_type = 'LARGE' AND p_size BETWEEN 25 AND 50
-         |        AND l_quantity BETWEEN 20 AND 50)""".stripMargin,
-    "q216_nation_trade_flow" ->
+         |        AND l_quantity BETWEEN 20 AND 50)""".stripMargin),
+    Query("q216_nation_trade_flow", nationTradeFlow,
       s"""SELECT sn.n_name AS supp_nation, cn.n_name AS cust_nation,
          |       CAST(year(l_shipdate) AS INT) AS ship_year,
          |       ${sumLongSql(centsSql("l_extendedprice * (1 - l_discount)"))} AS volume_cents
@@ -2987,8 +2913,8 @@ object Relational {
          |JOIN (SELECT * FROM nation) sn ON s_nationkey = sn.n_nationkey
          |WHERE cn.n_name <> sn.n_name
          |GROUP BY 1, 2, 3
-         |ORDER BY 1, 2, 3""".stripMargin,
-    "q217_top_supplier_interval" ->
+         |ORDER BY 1, 2, 3""".stripMargin),
+    Query("q217_top_supplier_interval", topSupplierInterval,
       s"""WITH rev AS (
          |  SELECT l_suppkey,
          |         ${sumLongSql(centsSql("l_extendedprice * (1 - l_discount)"))} AS total_cents
@@ -3000,8 +2926,8 @@ object Relational {
          |SELECT s_suppkey, s_name, total_cents
          |FROM rev JOIN supplier ON l_suppkey = s_suppkey
          |WHERE total_cents = (SELECT max(total_cents) FROM rev)
-         |ORDER BY s_suppkey""".stripMargin,
-    "q218_brand_supplier_census" ->
+         |ORDER BY s_suppkey""".stripMargin),
+    Query("q218_brand_supplier_census", brandSupplierCensus,
       s"""WITH ps AS (
          |  SELECT DISTINCT l_partkey, l_suppkey FROM lineitem
          |)
@@ -3013,8 +2939,8 @@ object Relational {
          |  AND l_suppkey NOT IN (
          |    SELECT s_suppkey FROM supplier WHERE s_acctbal < 0)
          |GROUP BY 1, 2, 3
-         |ORDER BY supplier_cnt DESC, p_brand, p_type, p_size""".stripMargin,
-    "q219_profit_decomposition" ->
+         |ORDER BY supplier_cnt DESC, p_brand, p_type, p_size""".stripMargin),
+    Query("q219_profit_decomposition", profitDecomposition,
       s"""SELECT n_name AS nation, CAST(year(o_orderdate) AS INT) AS o_year,
          |       ${sumLongSql(
                s"${centsSql("l_extendedprice * (1 - l_discount)")}" +
@@ -3026,8 +2952,8 @@ object Relational {
          |JOIN supplier ON l_suppkey = s_suppkey
          |JOIN nation ON s_nationkey = n_nationkey
          |GROUP BY 1, 2
-         |ORDER BY nation, o_year DESC""".stripMargin,
-    "q207_late_supplier_blame" ->
+         |ORDER BY nation, o_year DESC""".stripMargin),
+    Query("q207_late_supplier_blame", lateSupplierBlame,
       s"""WITH osup AS (
          |  SELECT l_orderkey AS ok, l_suppkey AS sk,
          |         max(CASE WHEN l_shipdate > o_orderdate + INTERVAL 90 DAY
@@ -3045,8 +2971,8 @@ object Relational {
          |WHERE late = 1 AND n_late = 1 AND n_supp >= 2
          |GROUP BY s_name
          |ORDER BY numwait DESC, s_name
-         |LIMIT 10""".stripMargin,
-    "q208_dormant_high_value" ->
+         |LIMIT 10""".stripMargin),
+    Query("q208_dormant_high_value", dormantHighValue,
       s"""WITH avg_pos AS (
          |  SELECT ${sumLongSql(centsSql("c_acctbal"))} AS bal_sum,
          |         count(*) AS bal_n
@@ -3062,8 +2988,8 @@ object Relational {
          |        > ${ratioSql("bal_sum", "bal_n")}
          |  AND c_custkey NOT IN (SELECT o_custkey FROM recent)
          |GROUP BY c_mktsegment
-         |ORDER BY c_mktsegment""".stripMargin,
-    "q209_promo_supplier_share" ->
+         |ORDER BY c_mktsegment""".stripMargin),
+    Query("q209_promo_supplier_share", promoSupplierShare,
       s"""WITH sb AS (
          |  SELECT l_suppkey, p_brand,
          |         ${sumIntValuedSql("l_quantity")} AS supp_qty
@@ -3080,8 +3006,8 @@ object Relational {
          |JOIN bt ON p_brand = bb
          |JOIN supplier ON l_suppkey = s_suppkey
          |WHERE supp_qty * 2 * n_supp > 3 * brand_qty
-         |ORDER BY p_brand, s_name""".stripMargin,
-    "q199_brand_affinity" ->
+         |ORDER BY p_brand, s_name""".stripMargin),
+    Query("q199_brand_affinity", brandAffinity,
       s"""WITH ob AS (
          |  SELECT DISTINCT l_orderkey AS ok, p_brand AS brand
          |  FROM lineitem JOIN part ON l_partkey = p_partkey
@@ -3101,8 +3027,8 @@ object Relational {
          |JOIN sup sb ON pairs.brand_b = sb.brand
          |CROSS JOIN tot
          |WHERE n_ab >= 5
-         |ORDER BY brand_a, brand_b""".stripMargin,
-    "q189_fk_orphan_audit" ->
+         |ORDER BY brand_a, brand_b""".stripMargin),
+    Query("q189_fk_orphan_audit", fkOrphanAudit,
       """SELECT fk_edge, n_orphans FROM (
         |  SELECT 'lineitem.orderkey->orders' AS fk_edge,
         |         count(*) FILTER (o_orderkey IS NULL) AS n_orphans
@@ -3119,8 +3045,8 @@ object Relational {
         |  SELECT 'orders.custkey->customer',
         |         count(*) FILTER (c_custkey IS NULL)
         |  FROM orders LEFT JOIN customer ON o_custkey = c_custkey)
-        |ORDER BY fk_edge""".stripMargin,
-    "q190_pk_uniqueness_audit" ->
+        |ORDER BY fk_edge""".stripMargin),
+    Query("q190_pk_uniqueness_audit", pkUniquenessAudit,
       """SELECT pk, n_dup_keys, max_multiplicity FROM (
         |  SELECT 'customer.c_custkey' AS pk,
         |         CAST(count(*) FILTER (c > 1) AS BIGINT) AS n_dup_keys,
@@ -3135,8 +3061,8 @@ object Relational {
         |  UNION ALL
         |  SELECT 'supplier.s_suppkey', CAST(count(*) FILTER (c > 1) AS BIGINT), max(c)
         |  FROM (SELECT count(*) AS c FROM supplier GROUP BY s_suppkey))
-        |ORDER BY pk""".stripMargin,
-    "q178_join_asof_tolerance" ->
+        |ORDER BY pk""".stripMargin),
+    Query("q178_join_asof_tolerance", asofJoinTolerance,
       """SELECT o_orderkey,
         |       CASE WHEN lag_days <= 9400 THEN asof_event ELSE -1 END AS matched_event,
         |       lag_days,
@@ -3161,8 +3087,8 @@ object Relational {
         |                 ROWS BETWEEN CURRENT ROW AND UNBOUNDED FOLLOWING)
         |  ) WHERE o_orderkey IS NOT NULL AND asof_event IS NOT NULL
         |)
-        |ORDER BY o_orderkey""".stripMargin,
-    "q176_policy_masking" ->
+        |ORDER BY o_orderkey""".stripMargin),
+    Query("q176_policy_masking", policyMasking,
       s"""SELECT c_custkey, c_mktsegment,
          |       CASE WHEN c_mktsegment = 'AUTOMOBILE' THEN md5(c_name)
          |            ELSE c_name END AS name_out,
@@ -3173,8 +3099,8 @@ object Relational {
          |FROM (SELECT c_custkey, c_mktsegment, c_name,
          |             ${centsSql("c_acctbal")} AS bc
          |      FROM customer)
-         |ORDER BY c_custkey""".stripMargin,
-    "q150_market_share" ->
+         |ORDER BY c_custkey""".stripMargin),
+    Query("q150_market_share", marketShare,
       s"""SELECT CAST(year(o_orderdate) AS INT) AS o_year,
          |       ${sumLongSql(s"CASE WHEN ns.n_name = 'NATION_3' THEN ${centsSql("l_extendedprice * (1 - l_discount)")} ELSE 0 END")} AS nation_cents,
          |       ${sumLongSql(centsSql("l_extendedprice * (1 - l_discount)"))} AS total_cents,
@@ -3193,8 +3119,8 @@ object Relational {
          |  ON s_nationkey = ns.sn_key
          |WHERE year(o_orderdate) BETWEEN 1995 AND 1996
          |GROUP BY 1
-         |ORDER BY o_year""".stripMargin,
-    "q151_scd2_build" ->
+         |ORDER BY o_year""".stripMargin),
+    Query("q151_scd2_build", scd2Build,
       """SELECT o_custkey,
         |       CAST(row_number() OVER w AS BIGINT) AS version,
         |       o_orderkey, o_orderstatus,
@@ -3204,8 +3130,8 @@ object Relational {
         |       lead(o_orderdate, 1) OVER w IS NULL AS is_current
         |FROM orders
         |WINDOW w AS (PARTITION BY o_custkey ORDER BY o_orderdate ASC, o_orderkey ASC)
-        |ORDER BY o_custkey, version""".stripMargin,
-    "q152_union_by_name" ->
+        |ORDER BY o_custkey, version""".stripMargin),
+    Query("q152_union_by_name", unionByNameEvolved,
       s"""SELECT * FROM (
          |  SELECT l_orderkey AS key, CAST(l_linenumber AS BIGINT) AS line_no,
          |         CAST(l_quantity AS BIGINT) AS qty,
@@ -3215,15 +3141,15 @@ object Relational {
          |  SELECT 'ord' AS src, ${centsSql("o_totalprice")} AS price_cents,
          |         o_orderkey AS key, CAST(-1 AS BIGINT) AS line_no
          |  FROM orders)
-         |ORDER BY src, key, line_no, price_cents, qty""".stripMargin,
-    "q153_intersect_all" ->
+         |ORDER BY src, key, line_no, price_cents, qty""".stripMargin),
+    Query("q153_intersect_all", intersectAllKeys,
       """SELECT o_custkey, count(*) AS n FROM (
         |  SELECT o_custkey FROM orders WHERE o_orderstatus = 'O'
         |  INTERSECT ALL
         |  SELECT o_custkey FROM orders WHERE o_orderstatus = 'F')
         |GROUP BY o_custkey
-        |ORDER BY o_custkey""".stripMargin,
-    "q125_join_asof_forward" ->
+        |ORDER BY o_custkey""".stripMargin),
+    Query("q125_join_asof_forward", asofForwardJoin,
       """SELECT o_orderkey, next_event, next_ts FROM (
         |  SELECT o_orderkey,
         |         first_value(event_id IGNORE NULLS) OVER w AS next_event,
@@ -3240,8 +3166,8 @@ object Relational {
         |               ORDER BY ts ASC, event_id ASC NULLS LAST, o_orderkey ASC NULLS FIRST
         |               ROWS BETWEEN 1 FOLLOWING AND UNBOUNDED FOLLOWING)
         |) WHERE o_orderkey IS NOT NULL AND next_event IS NOT NULL
-        |ORDER BY o_orderkey""".stripMargin,
-    "q29_project_filter" ->
+        |ORDER BY o_orderkey""".stripMargin),
+    Query("q29_project_filter", projectFilter,
       s"""SELECT o_orderkey,
          |       CAST(o_custkey AS INT) AS cust_int,
          |       ${centsSql("o_totalprice")} AS price_cents,
@@ -3254,8 +3180,8 @@ object Relational {
          |  AND (o_orderpriority LIKE '1-%' OR o_orderpriority LIKE '2-%')
          |  AND NOT (o_orderkey % 97 = 0)
          |  AND nullif(o_orderstatus, 'ZZZ') IS NOT NULL
-         |ORDER BY o_orderkey""".stripMargin,
-    "q01_revenue_by_nation" ->
+         |ORDER BY o_orderkey""".stripMargin),
+    Query("q01_revenue_by_nation", revenueByNation,
       s"""SELECT n_name,
          |       ${sumLongSql(centsSql("l_extendedprice * (1 - l_discount)"))} AS revenue_cents,
          |       count(*) AS n_rows
@@ -3264,49 +3190,49 @@ object Relational {
          |JOIN customer ON o_custkey = c_custkey
          |JOIN nation   ON c_nationkey = n_nationkey
          |GROUP BY n_name
-         |ORDER BY n_name""".stripMargin,
-    "q02_join_broadcast_dim" ->
+         |ORDER BY n_name""".stripMargin),
+    Query("q02_join_broadcast_dim", broadcastDimJoin,
       s"""SELECT p_brand,
          |       ${sumLongSql(centsSql("l_extendedprice * (1 - l_discount)"))} AS revenue_cents,
          |       ${sumIntValuedSql("l_quantity")} AS sum_qty,
          |       count(*) AS n_items
          |FROM lineitem JOIN part ON l_partkey = p_partkey
          |GROUP BY p_brand
-         |ORDER BY p_brand""".stripMargin,
-    "q03_join_left_outer" ->
+         |ORDER BY p_brand""".stripMargin),
+    Query("q03_join_left_outer", leftOuterJoin,
       s"""SELECT c_custkey, c_name,
          |       count(o_orderkey) AS n_orders,
          |       coalesce(${sumLongSql(centsSql("o_totalprice"))}, 0) AS total_cents
          |FROM customer LEFT JOIN orders ON c_custkey = o_custkey
          |GROUP BY c_custkey, c_name
-         |ORDER BY c_custkey""".stripMargin,
-    "q72_join_right_outer" ->
+         |ORDER BY c_custkey""".stripMargin),
+    Query("q72_join_right_outer", rightOuterJoin,
       s"""SELECT c_custkey, c_name,
          |       count(o_orderkey) AS n_orders,
          |       coalesce(${sumLongSql(centsSql("o_totalprice"))}, 0) AS total_cents
          |FROM orders RIGHT JOIN customer ON o_custkey = c_custkey
          |GROUP BY c_custkey, c_name
-         |ORDER BY c_custkey""".stripMargin,
-    "q04_join_semi" ->
+         |ORDER BY c_custkey""".stripMargin),
+    Query("q04_join_semi", semiJoin,
       """SELECT c_custkey, c_name, c_acctbal
         |FROM customer
         |WHERE c_mktsegment = 'BUILDING'
         |  AND EXISTS (SELECT 1 FROM orders WHERE o_custkey = c_custkey)
-        |ORDER BY c_custkey""".stripMargin,
-    "q05_join_anti" ->
+        |ORDER BY c_custkey""".stripMargin),
+    Query("q05_join_anti", antiJoin,
       """SELECT c_custkey, c_name, c_mktsegment
         |FROM customer
         |WHERE NOT EXISTS (SELECT 1 FROM orders
         |                  WHERE o_custkey = c_custkey AND o_orderstatus = 'F')
-        |ORDER BY c_custkey""".stripMargin,
-    "q06_join_equirange" ->
+        |ORDER BY c_custkey""".stripMargin),
+    Query("q06_join_equirange", equiRangeJoin,
       s"""SELECT p_brand, count(*) AS n_in_band, ${sumIntValuedSql("l_quantity")} AS sum_qty
          |FROM lineitem JOIN part
          |  ON l_partkey = p_partkey
          | AND l_quantity >= (p_size - 5) AND l_quantity <= (p_size + 5)
          |GROUP BY p_brand
-         |ORDER BY p_brand""".stripMargin,
-    "q07_join_asof" ->
+         |ORDER BY p_brand""".stripMargin),
+    Query("q07_join_asof", asofJoin,
       """SELECT o_orderkey, asof_event, asof_ts FROM (
         |  SELECT o_orderkey,
         |         first_value(event_id IGNORE NULLS) OVER w AS asof_event,
@@ -3323,25 +3249,25 @@ object Relational {
         |               ORDER BY ts ASC, event_id ASC NULLS FIRST, o_orderkey ASC NULLS FIRST
         |               ROWS BETWEEN CURRENT ROW AND UNBOUNDED FOLLOWING)
         |) WHERE o_orderkey IS NOT NULL AND asof_event IS NOT NULL
-        |ORDER BY o_orderkey""".stripMargin,
-    "q08_join_theta" ->
+        |ORDER BY o_orderkey""".stripMargin),
+    Query("q08_join_theta", thetaJoin,
       """SELECT r_name, count(*) AS n_pairs
         |FROM nation JOIN region ON n_regionkey < r_regionkey
         |GROUP BY r_name
-        |ORDER BY r_name""".stripMargin,
-    "q09_join_full_outer" ->
+        |ORDER BY r_name""".stripMargin),
+    Query("q09_join_full_outer", fullOuterJoin,
       """SELECT coalesce(c_nationkey, s_nationkey) AS nationkey,
         |       coalesce(n_cust, 0) AS n_cust,
         |       coalesce(n_supp, 0) AS n_supp
         |FROM (SELECT c_nationkey, count(*) AS n_cust FROM customer GROUP BY c_nationkey) cagg
         |FULL OUTER JOIN (SELECT s_nationkey, count(*) AS n_supp FROM supplier GROUP BY s_nationkey) sagg
         |  ON c_nationkey = s_nationkey
-        |ORDER BY nationkey""".stripMargin,
-    "q10_join_cross" ->
+        |ORDER BY nationkey""".stripMargin),
+    Query("q10_join_cross", crossJoinDims,
       """SELECT r_name, n_name
         |FROM region CROSS JOIN nation
-        |ORDER BY r_name, n_name""".stripMargin,
-    "q54_shipping_priority" ->
+        |ORDER BY r_name, n_name""".stripMargin),
+    Query("q54_shipping_priority", shippingPriority,
       s"""SELECT l_orderkey, o_orderdate, o_orderpriority,
          |       ${sumLongSql(centsSql("l_extendedprice * (1 - l_discount)"))} AS revenue_cents
          |FROM lineitem
@@ -3352,8 +3278,8 @@ object Relational {
          |  AND l_shipdate > TIMESTAMP '1995-03-15 00:00:00'
          |GROUP BY l_orderkey, o_orderdate, o_orderpriority
          |ORDER BY revenue_cents DESC, l_orderkey ASC
-         |LIMIT 10""".stripMargin,
-    "q55_local_supplier_volume" ->
+         |LIMIT 10""".stripMargin),
+    Query("q55_local_supplier_volume", localSupplierVolume,
       s"""SELECT r_name, n_name,
          |       ${sumLongSql(centsSql("l_extendedprice * (1 - l_discount)"))} AS revenue_cents,
          |       count(*) AS n_items
@@ -3365,8 +3291,8 @@ object Relational {
          |JOIN region   ON n_regionkey = r_regionkey
          |WHERE r_name IN ('AMERICA', 'ASIA')
          |GROUP BY r_name, n_name
-         |ORDER BY r_name, revenue_cents DESC, n_name""".stripMargin,
-    "q56_above_brand_avg" ->
+         |ORDER BY r_name, revenue_cents DESC, n_name""".stripMargin),
+    Query("q56_above_brand_avg", aboveBrandAverage,
       s"""SELECT p_partkey, p_brand,
          |       ${centsSql("p_retailprice")} AS price_cents,
          |       ${ratioSql("b_sum", "b_n")} AS brand_avg_cents
@@ -3376,14 +3302,14 @@ object Relational {
          |             count(*) AS b_n
          |      FROM part GROUP BY p_brand) b ON p_brand = b_brand
          |WHERE CAST(${centsSql("p_retailprice")} AS DOUBLE) > ${ratioSql("b_sum", "b_n")}
-         |ORDER BY p_partkey""".stripMargin,
-    "q59_salted_join" ->
+         |ORDER BY p_partkey""".stripMargin),
+    Query("q59_salted_join", saltedJoinAgg,
       s"""SELECT c_mktsegment, count(*) AS n_orders,
          |       ${sumLongSql(centsSql("o_totalprice"))} AS sum_cents
          |FROM orders JOIN customer ON o_custkey = c_custkey
          |GROUP BY c_mktsegment
-         |ORDER BY c_mktsegment""".stripMargin,
-    "q205_salted_join_autotuned" ->
+         |ORDER BY c_mktsegment""".stripMargin),
+    Query("q205_salted_join_autotuned", saltedJoinAutotuned,
       s"""WITH ks AS (SELECT l_suppkey, count(*) AS cnt FROM lineitem GROUP BY 1),
          |b AS (SELECT CAST(max(length(bin(cnt)) - 1) AS INT) AS bucket FROM ks),
          |sl AS (SELECT CAST(LEAST(32, GREATEST(1,
@@ -3395,54 +3321,54 @@ object Relational {
          |FROM lineitem JOIN supplier ON l_suppkey = s_suppkey
          |CROSS JOIN sl
          |GROUP BY s_nationkey, salt_lanes
-         |ORDER BY s_nationkey""".stripMargin,
-    "q60_salted_agg" ->
+         |ORDER BY s_nationkey""".stripMargin),
+    Query("q60_salted_agg", saltedAgg,
       s"""SELECT l_returnflag, count(*) AS n_rows,
          |       ${sumLongSql(centsSql("l_extendedprice"))} AS sum_pc
          |FROM lineitem
          |GROUP BY l_returnflag
-         |ORDER BY l_returnflag""".stripMargin,
-    "q23_sort_multikey_nulls" ->
+         |ORDER BY l_returnflag""".stripMargin),
+    Query("q23_sort_multikey_nulls", sortMultiKey,
       """SELECT o_orderkey, nullif(o_orderstatus, 'O') AS maybe_status,
         |       o_totalprice, o_orderpriority
         |FROM orders
         |ORDER BY maybe_status ASC NULLS FIRST, o_totalprice DESC, o_orderkey ASC
-        |LIMIT 100""".stripMargin,
-    "q24_topk_limit" ->
+        |LIMIT 100""".stripMargin),
+    Query("q24_topk_limit", topK,
       s"""SELECT o_orderkey, o_custkey, ${centsSql("o_totalprice")} AS price_cents
          |FROM orders
          |ORDER BY price_cents DESC, o_orderkey ASC
-         |LIMIT 10""".stripMargin,
-    "q25_union_all" ->
+         |LIMIT 10""".stripMargin),
+    Query("q25_union_all", unionAll,
       """SELECT * FROM (
         |  SELECT c_custkey AS id, c_name AS name, 'customer' AS src FROM customer
         |  UNION ALL
         |  SELECT s_suppkey AS id, s_name AS name, 'supplier' AS src FROM supplier
         |)
-        |ORDER BY src, id""".stripMargin,
-    "q26_union_distinct" ->
+        |ORDER BY src, id""".stripMargin),
+    Query("q26_union_distinct", unionDistinct,
       """SELECT * FROM (
         |  SELECT CAST(c_nationkey AS INT) AS nationkey FROM customer
         |  UNION
         |  SELECT CAST(s_nationkey AS INT) AS nationkey FROM supplier
         |)
-        |ORDER BY nationkey""".stripMargin,
-    "q27_intersect" ->
+        |ORDER BY nationkey""".stripMargin),
+    Query("q27_intersect", intersectKeys,
       """SELECT * FROM (
         |  SELECT c_custkey FROM customer
         |  INTERSECT
         |  SELECT o_custkey AS c_custkey FROM orders
         |)
-        |ORDER BY c_custkey""".stripMargin,
-    "q28_except_all" ->
+        |ORDER BY c_custkey""".stripMargin),
+    Query("q28_except_all", exceptAllKeys,
       """SELECT o_custkey, count(*) AS n FROM (
         |  SELECT o_custkey FROM orders
         |  EXCEPT ALL
         |  SELECT c_custkey AS o_custkey FROM customer
         |)
         |GROUP BY o_custkey
-        |ORDER BY o_custkey""".stripMargin,
-    "q100_merge_upsert" ->
+        |ORDER BY o_custkey""".stripMargin),
+    Query("q100_merge_upsert", mergeUpsert,
       s"""WITH snap AS (
          |  SELECT c_custkey AS k, ${centsSql("c_acctbal")} AS bal_cents,
          |         c_mktsegment AS seg
@@ -3462,8 +3388,8 @@ object Relational {
          |       coalesce(op, '=') AS op
          |FROM snap FULL OUTER JOIN changes ON k = ck
          |WHERE op IS NULL OR op <> 'D'
-         |ORDER BY mkey""".stripMargin,
-    "q116_snapshot_diff" ->
+         |ORDER BY mkey""".stripMargin),
+    Query("q116_snapshot_diff", snapshotDiff,
       s"""WITH base AS (
          |  SELECT c_custkey AS k, ${centsSql("c_acctbal")} AS bal FROM customer
          |), olds AS (
@@ -3483,8 +3409,8 @@ object Relational {
          |  FROM olds FULL OUTER JOIN news ON ok = nk
          |)
          |GROUP BY op
-         |ORDER BY op""".stripMargin,
-    "q118_join_nullsafe" ->
+         |ORDER BY op""".stripMargin),
+    Query("q118_join_nullsafe", nullSafeJoin,
       """SELECT (ck IS NULL) AS key_missing, count(*) AS n_pairs,
         |       count(DISTINCT c_custkey) AS n_cust,
         |       count(DISTINCT o_orderkey) AS n_orders
@@ -3498,6 +3424,6 @@ object Relational {
         |      FROM orders) o
         |  ON ck IS NOT DISTINCT FROM ok
         |GROUP BY 1
-        |ORDER BY key_missing""".stripMargin
+        |ORDER BY key_missing""".stripMargin)
   )
 }

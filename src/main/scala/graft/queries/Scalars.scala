@@ -579,36 +579,8 @@ object Scalars {
       .orderBy($"doc_id")
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q170_fn_array_set" -> arraySetFns,
-    "q142_fn_regex" -> regexFns,
-    "q143_fn_hash" -> hashFns,
-    "q140_fn_hof_finish" -> hofFinishFns,
-    "q135_fn_url" -> urlFns,
-    "q136_fn_bitwise" -> bitwiseFns,
-    "q129_fn_xpath" -> xmlFns,
-    "q123_fn_variant" -> variantFns,
-    "q126_collation_group" -> collationGroup,
-    "q120_fn_try" -> tryFns,
-    "q121_fn_interval" -> intervalFns,
-    "q122_fn_struct" -> structFns,
-    "q30_fn_string" -> stringFns,
-    "q31_fn_date" -> dateFns,
-    "q32_fn_math" -> mathFns,
-    "q33_fn_array" -> arrayFns,
-    "q34_fn_map" -> mapFns,
-    "q71_fn_map_explode" -> mapExplode,
-    "q80_fn_posexplode" -> posExplode,
-    "q86_fn_inline" -> inlineFns,
-    "q95_fn_map_hof" -> mapHofFns,
-    "q35_fn_json" -> jsonFns,
-    "q65_fn_date_extra" -> dateExtraFns,
-    "q66_fn_array_extra" -> arrayExtraFns,
-    "q67_fn_json_tuple" -> jsonTupleFns
-  )
-
-  val oracles: Map[String, String] = Map(
-    "q170_fn_array_set" ->
+  val declared: Seq[Query] = Seq(
+    Query("q170_fn_array_set", arraySetFns,
       """SELECT doc_id,
         |       coalesce(array_to_string(list_sort(list_distinct(list_cat(a, b))), '|'), '') AS ab_union,
         |       coalesce(array_to_string(list_sort(list_filter(a, x -> list_contains(b, x))), '|'), '') AS ab_inter,
@@ -622,8 +594,8 @@ object Scalars {
         |         ws[greatest(len(ws) - 4, 1):greatest(len(ws) - 4, 1) + 4] AS b
         |  FROM (SELECT doc_id, list_sort(list_distinct(string_split(text, ' '))) AS ws
         |        FROM documents))
-        |ORDER BY doc_id""".stripMargin,
-    "q142_fn_regex" ->
+        |ORDER BY doc_id""".stripMargin),
+    Query("q142_fn_regex", regexFns,
       """SELECT p_partkey,
         |       coalesce(array_to_string(regexp_extract_all(p_name, '[a-z]+'), '|'), '') AS words,
         |       CAST(len(regexp_extract_all(p_name, 'd')) AS INT) AS n_d,
@@ -633,8 +605,8 @@ object Scalars {
         |       regexp_replace(p_name, '[aeiou]', '*', 'g') AS masked,
         |       translate(p_brand, '#', '-') AS dashed
         |FROM part
-        |ORDER BY p_partkey""".stripMargin,
-    "q143_fn_hash" ->
+        |ORDER BY p_partkey""".stripMargin),
+    Query("q143_fn_hash", hashFns,
       """SELECT p_partkey,
         |       md5(p_name) AS h_md5,
         |       sha256(p_name) AS h_sha256,
@@ -642,14 +614,14 @@ object Scalars {
         |       to_base64(encode(p_name)) AS b64,
         |       p_name AS rt
         |FROM part
-        |ORDER BY p_partkey""".stripMargin,
-    "q140_fn_hof_finish" ->
+        |ORDER BY p_partkey""".stripMargin),
+    Query("q140_fn_hof_finish", hofFinishFns,
       """SELECT vec_id,
         |       list_reduce(list_prepend(CAST(0.0 AS DOUBLE), CAST(embedding[1:8] AS DOUBLE[])), (acc, x) -> acc + x) / 8.0 AS mean8,
         |       list_reduce(list_prepend(CAST(0.0 AS DOUBLE), CAST(list_transform(embedding[1:8], x -> x * x) AS DOUBLE[])), (acc, p) -> acc + p) AS sumsq8
         |FROM embeddings
-        |ORDER BY vec_id""".stripMargin,
-    "q135_fn_url" ->
+        |ORDER BY vec_id""".stripMargin),
+    Query("q135_fn_url", urlFns,
       """SELECT doc_id,
         |       source || '.example.com' AS host,
         |       '/docs/' || CAST(doc_id AS VARCHAR) AS path,
@@ -657,8 +629,8 @@ object Scalars {
         |       lang AS lang_param,
         |       text AS text_rt
         |FROM documents
-        |ORDER BY doc_id""".stripMargin,
-    "q136_fn_bitwise" ->
+        |ORDER BY doc_id""".stripMargin),
+    Query("q136_fn_bitwise", bitwiseFns,
       """SELECT p_partkey,
         |       p_partkey & 255 AS and255,
         |       p_partkey | 4096 AS or4k,
@@ -667,8 +639,8 @@ object Scalars {
         |       p_partkey >> 2 AS shr2,
         |       CAST(bit_count(p_partkey) AS INT) AS nbits
         |FROM part
-        |ORDER BY p_partkey""".stripMargin,
-    "q129_fn_xpath" ->
+        |ORDER BY p_partkey""".stripMargin),
+    Query("q129_fn_xpath", xmlFns,
       """SELECT c_custkey,
         |       c_mktsegment AS seg,
         |       c_custkey AS k1,
@@ -679,16 +651,16 @@ object Scalars {
         |         CAST(c_custkey AS VARCHAR) || ',' || CAST(c_custkey + 1 AS VARCHAR) END AS xp_ks,
         |       CASE WHEN c_custkey % 10 = 0 THEN TRUE END AS xp_has
         |FROM customer
-        |ORDER BY c_custkey""".stripMargin,
-    "q123_fn_variant" ->
+        |ORDER BY c_custkey""".stripMargin),
+    Query("q123_fn_variant", variantFns,
       """SELECT event_id,
         |       CAST(props->>'$.k' AS INT) AS k_int,
         |       props->>'$.k' AS k_str,
         |       props->>'$.missing' AS miss,
         |       event_id % 5 = 0 AS vnull
         |FROM events
-        |ORDER BY event_id""".stripMargin,
-    "q126_collation_group" ->
+        |ORDER BY event_id""".stripMargin),
+    Query("q126_collation_group", collationGroup,
       """SELECT lower(seg_mixed) AS seg,
         |       count(*) AS n,
         |       count(DISTINCT seg_mixed) AS n_variants
@@ -697,8 +669,8 @@ object Scalars {
         |                  ELSE c_mktsegment END AS seg_mixed
         |      FROM customer)
         |GROUP BY lower(seg_mixed)
-        |ORDER BY seg""".stripMargin,
-    "q120_fn_try" ->
+        |ORDER BY seg""".stripMargin),
+    Query("q120_fn_try", tryFns,
       s"""SELECT p_partkey,
          |       TRY_CAST(CASE WHEN p_partkey % 3 = 0 THEN CAST(p_size AS VARCHAR)
          |                     ELSE p_name END AS INT) AS parsed,
@@ -710,8 +682,8 @@ object Scalars {
          |            ELSE p_partkey + 1 END AS sum_guard,
          |       string_split(p_name, ' ')[20] AS w20
          |FROM part
-         |ORDER BY p_partkey""".stripMargin,
-    "q121_fn_interval" ->
+         |ORDER BY p_partkey""".stripMargin),
+    Query("q121_fn_interval", intervalFns,
       """SELECT event_id,
         |       ts + INTERVAL 90 MINUTE AS plus90m,
         |       ts + INTERVAL 2 MONTH AS plus2mo,
@@ -725,8 +697,8 @@ object Scalars {
         |                      CAST(minute(ts) AS BIGINT), 0.0) AS made,
         |       epoch_us(ts) AS us
         |FROM events
-        |ORDER BY event_id""".stripMargin,
-    "q122_fn_struct" ->
+        |ORDER BY event_id""".stripMargin),
+    Query("q122_fn_struct", structFns,
       """SELECT o_orderkey,
         |       (st).y AS yr,
         |       CAST(to_json(st) AS VARCHAR) AS js,
@@ -736,8 +708,8 @@ object Scalars {
         |             struct_pack(st := o_orderstatus,
         |                         y := CAST(year(o_orderdate) AS INT)) AS st
         |      FROM orders)
-        |ORDER BY o_orderkey""".stripMargin,
-    "q30_fn_string" ->
+        |ORDER BY o_orderkey""".stripMargin),
+    Query("q30_fn_string", stringFns,
       """SELECT c_custkey,
         |       upper(c_mktsegment) AS seg_up,
         |       lower(c_name) AS name_lo,
@@ -751,8 +723,8 @@ object Scalars {
         |       CAST(length(c_name) AS INT) AS name_len,
         |       trim('  x  ') AS trimmed
         |FROM customer
-        |ORDER BY c_custkey""".stripMargin,
-    "q31_fn_date" ->
+        |ORDER BY c_custkey""".stripMargin),
+    Query("q31_fn_date", dateFns,
       """SELECT o_orderkey,
         |       CAST(year(o_orderdate) AS INT) AS yr,
         |       CAST(month(o_orderdate) AS INT) AS mo,
@@ -765,8 +737,8 @@ object Scalars {
         |       CAST(o_orderdate AS DATE) + 30 AS plus30,
         |       last_day(CAST(o_orderdate AS DATE)) AS eom
         |FROM orders
-        |ORDER BY o_orderkey""".stripMargin,
-    "q32_fn_math" ->
+        |ORDER BY o_orderkey""".stripMargin),
+    Query("q32_fn_math", mathFns,
       s"""SELECT p_partkey,
          |       abs(${centsSql("p_retailprice")} - 95000) AS abs_diff,
          |       pow(p_size, 2.0) AS size_sq,
@@ -777,8 +749,8 @@ object Scalars {
          |       CAST(least(p_size, 25) AS INT) AS size_lo,
          |       p_partkey % 7 AS key_mod
          |FROM part
-         |ORDER BY p_partkey""".stripMargin,
-    "q33_fn_array" ->
+         |ORDER BY p_partkey""".stripMargin),
+    Query("q33_fn_array", arrayFns,
       """SELECT vec_id,
         |       CAST(len(embedding) AS INT) AS dim,
         |       embedding[1] AS first_coord,
@@ -787,8 +759,8 @@ object Scalars {
         |       list_reduce(list_prepend(CAST(0.0 AS DOUBLE), CAST(embedding[1:8] AS DOUBLE[])), (acc, x) -> acc + x) AS sum_first8,
         |       list_reduce(list_prepend(CAST(0.0 AS DOUBLE), CAST(list_transform(embedding, x -> x * x) AS DOUBLE[])), (acc, p) -> acc + p) AS norm_sq
         |FROM embeddings
-        |ORDER BY vec_id""".stripMargin,
-    "q34_fn_map" ->
+        |ORDER BY vec_id""".stripMargin),
+    Query("q34_fn_map", mapFns,
       """SELECT event_id,
         |       (m['et'])[1] AS et,
         |       (m['uid'])[1] AS uid,
@@ -797,28 +769,28 @@ object Scalars {
         |FROM (SELECT event_id,
         |             MAP {'et': event_type, 'uid': CAST(user_id AS VARCHAR)} AS m
         |      FROM events)
-        |ORDER BY event_id""".stripMargin,
-    "q71_fn_map_explode" ->
+        |ORDER BY event_id""".stripMargin),
+    Query("q71_fn_map_explode", mapExplode,
       """SELECT event_id, e.key AS k, e.value AS v
         |FROM (SELECT event_id,
         |             unnest(map_entries(MAP {'et': event_type, 'uid': CAST(user_id AS VARCHAR)})) AS e
         |      FROM events)
-        |ORDER BY event_id, k""".stripMargin,
-    "q80_fn_posexplode" ->
+        |ORDER BY event_id, k""".stripMargin),
+    Query("q80_fn_posexplode", posExplode,
       """SELECT doc_id, CAST(i - 1 AS INT) AS pos, words[CAST(i AS INT)] AS word
         |FROM (SELECT doc_id, string_split(text, ' ') AS words
         |      FROM documents WHERE doc_id < 50),
         |     unnest(range(1, len(words) + 1)) AS t(i)
-        |ORDER BY doc_id, pos""".stripMargin,
-    "q86_fn_inline" ->
+        |ORDER BY doc_id, pos""".stripMargin),
+    Query("q86_fn_inline", inlineFns,
       """SELECT p_partkey, unnest(ws) AS w, unnest(hs) AS h
         |FROM (SELECT p_partkey,
         |             string_split(p_name, ' ') AS ws,
         |             list_transform(string_split(p_name, ' '),
         |               t -> CAST(('0x' || substr(md5(t), 1, 10)) AS BIGINT)) AS hs
         |      FROM part)
-        |ORDER BY p_partkey, w, h""".stripMargin,
-    "q95_fn_map_hof" ->
+        |ORDER BY p_partkey, w, h""".stripMargin),
+    Query("q95_fn_map_hof", mapHofFns,
       s"""WITH b AS (SELECT l_orderkey, l_linenumber,
          |                  ${centsSql("l_extendedprice")} AS pc,
          |                  CAST(l_quantity AS BIGINT) AS qty
@@ -832,14 +804,14 @@ object Scalars {
          |       k,
          |       CASE WHEN k = 'price' THEN 3 * pc ELSE 3 * qty END AS v3
          |FROM b, (VALUES ('price'), ('qty')) t(k)
-         |ORDER BY l_orderkey, l_linenumber, k, v3, kept_keys""".stripMargin,
-    "q35_fn_json" ->
+         |ORDER BY l_orderkey, l_linenumber, k, v3, kept_keys""".stripMargin),
+    Query("q35_fn_json", jsonFns,
       """SELECT event_id,
         |       props->>'$.k' AS k_str,
         |       CAST(props->>'$.k' AS INT) AS k_int
         |FROM events
-        |ORDER BY event_id""".stripMargin,
-    "q65_fn_date_extra" ->
+        |ORDER BY event_id""".stripMargin),
+    Query("q65_fn_date_extra", dateExtraFns,
       // date_diff('month', ...) counts month-boundary crossings = calendar
       // month delta, exactly Spark's months_between on two day-1 dates.
       // next_day(Mon): isodow is 1=Monday; (8 - isodow) % 7 days ahead,
@@ -856,8 +828,8 @@ object Scalars {
         |                     ELSE (8 - isodow(o_orderdate)) % 7 END AS INT) AS next_mon,
         |       make_date(CAST(year(o_orderdate) AS INT), CAST(month(o_orderdate) AS INT), 1) AS month_first
         |FROM orders
-        |ORDER BY o_orderkey""".stripMargin,
-    "q66_fn_array_extra" ->
+        |ORDER BY o_orderkey""".stripMargin),
+    Query("q66_fn_array_extra", arrayExtraFns,
       // list_position returns 0 for a missing element (same as Spark's
       // array_position); list_distinct's order is unspecified, so the
       // distinct list is always sorted before joining.
@@ -868,13 +840,13 @@ object Scalars {
         |       CAST(len(list_filter(words, w -> length(w) > 3)) AS INT) AS n_long,
         |       len(list_filter(words, w -> length(w) > 6)) > 0 AS has_very_long
         |FROM (SELECT doc_id, string_split(text, ' ') AS words FROM documents)
-        |ORDER BY doc_id""".stripMargin,
-    "q67_fn_json_tuple" ->
+        |ORDER BY doc_id""".stripMargin),
+    Query("q67_fn_json_tuple", jsonTupleFns,
       """SELECT event_id,
         |       props->>'$.k' AS k_str,
         |       props->>'$.missing' AS miss,
         |       CAST(to_json(struct_pack(k := CAST(props->>'$.k' AS INT))) AS VARCHAR) AS rebuilt
         |FROM events
-        |ORDER BY event_id""".stripMargin
+        |ORDER BY event_id""".stripMargin)
   )
 }

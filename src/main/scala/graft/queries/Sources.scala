@@ -930,37 +930,6 @@ object Sources {
     }
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q244_csv_permissive_census" -> csvPermissiveCensus,
-    "q247_write_audit_publish" -> writeAuditPublish,
-    "q264_schema_drift_census" -> schemaDriftCensus,
-    "q232_aqe_skew_split_proof" -> aqeSkewSplitProof,
-    "q231_observed_write" -> observedWrite,
-    "q206_zorder_skipping_proof" -> zorderSkippingProof,
-    "q139_fn_file_metadata" -> fileMetadata,
-    "q130_orc_roundtrip" -> orcRoundtrip,
-    "q37_csv_roundtrip" -> csvRoundtrip,
-    "q38_json_roundtrip" -> jsonRoundtrip,
-    "q39_stream_tumbling_batch" -> streamTumblingBatch,
-    "q272_stream_two_level_batch" -> streamTwoLevelBatch,
-    "q61_sessionization" -> sessionizationBatch,
-    "q68_stream_sliding_batch" -> streamSlidingBatch,
-    "q69_stream_session_batch" -> streamSessionBatch,
-    "q77_stream_join_batch" -> streamJoinBatch,
-    "q112_stream_outer_join_batch" -> streamOuterJoinBatch,
-    "q138_stream_full_join_batch" -> streamFullJoinBatch,
-    "q145_stream_semi_join_batch" -> streamSemiJoinBatch,
-    "q154_partition_pruned_scan" -> partitionPrunedScan,
-    "q155_dynamic_partition_pruning" -> dynamicPartitionPruning,
-    "q158_corrupt_tolerant_json" -> corruptTolerantJson,
-    "q159_stream_right_join_batch" -> streamRightJoinBatch,
-    "q177_session_dynamic_gap" -> sessionDynamicGap,
-    "q182_dynamic_partition_overwrite" -> dynamicPartitionOverwrite,
-    "q183_merge_schema_read" -> mergeSchemaRead,
-    "q191_extract_listings_census" -> extractListingsCensus,
-    "q192_stream_tws_batch" -> streamTwsBatch
-  )
-
   /** The q206 Morton fold as DuckDB integer SQL — generated from the same
     * (0 until 16) loop as [[graft.operators.Bucketing.mortonInterleave]] so
     * the two engines cannot drift bit-by-bit. */
@@ -968,8 +937,8 @@ object Sources {
     .map(i => s"(((cp >> $i) & 1) << ${2 * i + 1}) | (((cs >> $i) & 1) << ${2 * i})")
     .mkString(" | ")
 
-  val oracles: Map[String, String] = Map(
-    "q264_schema_drift_census" ->
+  val declared: Seq[Query] = Seq(
+    Query("q264_schema_drift_census", schemaDriftCensus,
       // The expected diff as a literal table: the staged schemas are a
       // deterministic function of the code above, so the oracle states
       // them outright — any drift in what the files actually carry (or
@@ -981,8 +950,8 @@ object Sources {
         |  ('o_orderstatus', 'STRING', 'STRING', 'unchanged'),
         |  ('price_cents', 'BIGINT', 'DOUBLE', 'type_changed')
         |) AS t(col_name, v1_type, v2_type, change)
-        |ORDER BY col_name""".stripMargin,
-    "q247_write_audit_publish" ->
+        |ORDER BY col_name""".stripMargin),
+    Query("q247_write_audit_publish", writeAuditPublish,
       // The full WAP decision tree replayed from the fixture: the same
       // three audit sums, publish iff clean, published_rows only then —
       // so a wrong decision OR an unmaterialized publish both fail the
@@ -998,14 +967,14 @@ object Sources {
          |SELECT n_rows, n_violations,
          |       n_violations = 0 AS published,
          |       CASE WHEN n_violations = 0 THEN n_rows ELSE 0 END AS published_rows
-         |FROM audit""".stripMargin,
-    "q244_csv_permissive_census" ->
+         |FROM audit""".stripMargin),
+    Query("q244_csv_permissive_census", csvPermissiveCensus,
       s"""SELECT count(*) AS n_rows,
          |       CAST(sum(CASE WHEN c_custkey % 41 = 0 THEN 1 ELSE 0 END) AS BIGINT) AS n_corrupt,
          |       CAST(sum(CASE WHEN c_custkey % 41 <> 0
          |                     THEN ${centsSql("c_acctbal")} ELSE 0 END) AS BIGINT) AS clean_acct_cents
-         |FROM customer""".stripMargin,
-    "q232_aqe_skew_split_proof" ->
+         |FROM customer""".stripMargin),
+    Query("q232_aqe_skew_split_proof", aqeSkewSplitProof,
       // The census replayed WITHOUT the join (every non-null fact key has
       // exactly one dim match, so the inner join is count-preserving; the
       // k IS NOT NULL filter replays the inner join dropping null keys)
@@ -1019,13 +988,13 @@ object Sources {
          |      FROM events) t
          |WHERE k IS NOT NULL
          |GROUP BY 1
-         |ORDER BY 1""".stripMargin,
-    "q231_observed_write" ->
+         |ORDER BY 1""".stripMargin),
+    Query("q231_observed_write", observedWrite,
       s"""SELECT CAST(count(*) AS BIGINT) AS n_rows,
          |       CAST(sum(CASE WHEN o_orderkey % 97 = 0 THEN 1 ELSE 0 END) AS BIGINT) AS n_null_keys,
          |       ${sumLongSql(centsSql("o_totalprice"))} AS total_cents
-         |FROM orders""".stripMargin,
-    "q206_zorder_skipping_proof" ->
+         |FROM orders""".stripMargin),
+    Query("q206_zorder_skipping_proof", zorderSkippingProof,
       s"""WITH ext AS (
          |  SELECT min(l_orderkey) AS loO, max(l_orderkey) AS hiO,
          |         min(l_partkey) AS loP, max(l_partkey) AS hiP,
@@ -1072,11 +1041,11 @@ object Sources {
          |FROM agg
          |UNION ALL
          |SELECT layout, 'suppkey_band', nS, fhS, fsS, files_total FROM agg
-         |ORDER BY layout, pred""".stripMargin,
+         |ORDER BY layout, pred""".stripMargin),
     // Independent derivation: the census computed straight from the
     // fixture columns, never from HTML — a Spark-side extraction bug
     // cannot be mirrored here.
-    "q191_extract_listings_census" ->
+    Query("q191_extract_listings_census", extractListingsCensus,
       """WITH c AS (
         |  SELECT trim(n_name) AS barrio,
         |         (c_custkey * 7919) % 900000 + 100000 AS price,
@@ -1097,8 +1066,8 @@ object Sources {
         |       CAST(sum(half_m2) AS BIGINT) AS sum_half_m2
         |FROM c
         |GROUP BY 1
-        |ORDER BY Barrio""".stripMargin,
-    "q192_stream_tws_batch" ->
+        |ORDER BY Barrio""".stripMargin),
+    Query("q192_stream_tws_batch", streamTwsBatch,
       s"""WITH ev AS (
          |  SELECT CAST(event_id % 3 AS INT) AS round, user_id, value
          |  FROM events),
@@ -1112,8 +1081,8 @@ object Sources {
          |FROM agg
          |WINDOW w AS (PARTITION BY user_id ORDER BY round
          |             ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-         |ORDER BY round, user_id""".stripMargin,
-    "q182_dynamic_partition_overwrite" ->
+         |ORDER BY round, user_id""".stripMargin),
+    Query("q182_dynamic_partition_overwrite", dynamicPartitionOverwrite,
       s"""SELECT CAST(year(o_orderdate) AS INT) AS o_year,
          |       count(*) AS n,
          |       CAST(sum(CASE WHEN year(o_orderdate) = 1996
@@ -1121,41 +1090,41 @@ object Sources {
          |                     ELSE ${centsSql("o_totalprice")} END) AS BIGINT) AS sum_cents
          |FROM orders
          |GROUP BY 1
-         |ORDER BY o_year""".stripMargin,
-    "q183_merge_schema_read" ->
+         |ORDER BY o_year""".stripMargin),
+    Query("q183_merge_schema_read", mergeSchemaRead,
       s"""SELECT o_orderkey % 2 = 0 AS prio_missing,
          |       count(*) AS n,
          |       ${sumLongSql(centsSql("o_totalprice"))} AS sum_cents
          |FROM orders
          |GROUP BY 1
-         |ORDER BY prio_missing""".stripMargin,
-    "q139_fn_file_metadata" ->
+         |ORDER BY prio_missing""".stripMargin),
+    Query("q139_fn_file_metadata", fileMetadata,
       """SELECT 'lineitem.parquet' AS fname,
         |       count(*) AS n_rows,
         |       max(l_orderkey) AS max_key
         |FROM lineitem
         |GROUP BY 1
-        |ORDER BY fname""".stripMargin,
-    "q130_orc_roundtrip" ->
+        |ORDER BY fname""".stripMargin),
+    Query("q130_orc_roundtrip", orcRoundtrip,
       s"""SELECT o_orderkey, o_orderstatus, o_orderdate,
          |       ${centsSql("o_totalprice")} AS price_cents
          |FROM orders
-         |ORDER BY o_orderkey""".stripMargin,
-    "q37_csv_roundtrip" ->
+         |ORDER BY o_orderkey""".stripMargin),
+    Query("q37_csv_roundtrip", csvRoundtrip,
       s"""SELECT c_custkey, c_name, c_nationkey, c_mktsegment,
          |       ${centsSql("c_acctbal")} AS acct_cents
          |FROM customer
-         |ORDER BY c_custkey""".stripMargin,
-    "q38_json_roundtrip" ->
+         |ORDER BY c_custkey""".stripMargin),
+    Query("q38_json_roundtrip", jsonRoundtrip,
       s"""SELECT event_id, event_type, user_id, props,
          |       ${centsSql("value")} AS value_cents
          |FROM events
-         |ORDER BY event_id""".stripMargin,
+         |ORDER BY event_id""".stripMargin),
     // ts truncated to microseconds in BOTH subqueries so the interval
     // boundary compares on exactly the precision Spark carries (parquet
     // nanos → timestamp_micros in Tables.readEvents); epoch seconds via
     // floor(epoch()) = Spark's truncating unix_timestamp.
-    "q77_stream_join_batch" ->
+    Query("q77_stream_join_batch", streamJoinBatch,
       """SELECT c.event_id AS click_id, v.event_id AS view_id,
         |       c.user_id AS user_id,
         |       CAST(floor(epoch(c.ts)) AS BIGINT) AS click_s,
@@ -1166,10 +1135,10 @@ object Sources {
         |      FROM events WHERE event_type = 'view') v
         |  ON c.user_id = v.user_id
         | AND v.ts >= c.ts AND v.ts <= c.ts + INTERVAL 30 MINUTE
-        |ORDER BY click_id, view_id""".stripMargin,
+        |ORDER BY click_id, view_id""".stripMargin),
     // LEFT JOIN twin: unmatched clicks carry -1 sentinels in both view
     // columns (same micro-truncation rules as q77).
-    "q112_stream_outer_join_batch" ->
+    Query("q112_stream_outer_join_batch", streamOuterJoinBatch,
       """SELECT c.event_id AS click_id,
         |       coalesce(v.event_id, -1) AS view_id,
         |       c.user_id AS user_id,
@@ -1181,10 +1150,10 @@ object Sources {
         |      FROM events WHERE event_type = 'view') v
         |  ON c.user_id = v.user_id
         | AND v.ts >= c.ts AND v.ts <= c.ts + INTERVAL 30 MINUTE
-        |ORDER BY click_id, view_id""".stripMargin,
+        |ORDER BY click_id, view_id""".stripMargin),
     // FULL JOIN twin: -1 sentinels on whichever side is unmatched; user_id
     // coalesces across sides (same micro-truncation rules as q77).
-    "q138_stream_full_join_batch" ->
+    Query("q138_stream_full_join_batch", streamFullJoinBatch,
       """SELECT coalesce(c.event_id, -1) AS click_id,
         |       coalesce(v.event_id, -1) AS view_id,
         |       coalesce(c.user_id, v.user_id) AS user_id,
@@ -1196,13 +1165,13 @@ object Sources {
         |      FROM events WHERE event_type = 'view') v
         |  ON c.user_id = v.user_id
         | AND v.ts >= c.ts AND v.ts <= c.ts + INTERVAL 30 MINUTE
-        |ORDER BY click_id, view_id""".stripMargin,
+        |ORDER BY click_id, view_id""".stripMargin),
     // interval-merge twin at MICROSECOND precision (the merge compare must
     // run on the exact event time — floored-seconds comparisons split or
     // merge one session per ~gap-boundary event, which the sf0.01/sf1 row
     // counts exposed in both directions). Half-open: ts == end starts a
     // new session. Session end = max interval end within the session.
-    "q177_session_dynamic_gap" ->
+    Query("q177_session_dynamic_gap", sessionDynamicGap,
       """WITH ev AS (
         |  SELECT user_id, ts, event_id,
         |         CASE WHEN event_type = 'purchase' THEN 3600 ELSE 600 END AS gap_s
@@ -1234,30 +1203,30 @@ object Sources {
         |       count(*) AS n_events
         |FROM sess
         |GROUP BY user_id, sess_id
-        |ORDER BY user_id, sess_start_s""".stripMargin,
-    "q154_partition_pruned_scan" ->
+        |ORDER BY user_id, sess_start_s""".stripMargin),
+    Query("q154_partition_pruned_scan", partitionPrunedScan,
       s"""SELECT o_orderpriority, count(*) AS n,
          |       ${sumLongSql(centsSql("o_totalprice"))} AS sum_cents
          |FROM orders
          |WHERE year(o_orderdate) = 1996
          |GROUP BY o_orderpriority
-         |ORDER BY o_orderpriority""".stripMargin,
-    "q155_dynamic_partition_pruning" ->
+         |ORDER BY o_orderpriority""".stripMargin),
+    Query("q155_dynamic_partition_pruning", dynamicPartitionPruning,
       s"""SELECT CAST(year(o_orderdate) AS INT) AS o_year, count(*) AS n,
          |       ${sumLongSql(centsSql("o_totalprice"))} AS sum_cents
          |FROM orders
          |WHERE year(o_orderdate) <= 1997
          |GROUP BY 1
-         |ORDER BY o_year""".stripMargin,
-    "q158_corrupt_tolerant_json" ->
+         |ORDER BY o_year""".stripMargin),
+    Query("q158_corrupt_tolerant_json", corruptTolerantJson,
       s"""SELECT count(*) AS n_total,
          |       count(*) FILTER (event_id % 10 = 0) AS n_corrupt,
          |       count(*) FILTER (event_id % 10 <> 0) AS n_good,
          |       ${sumLongSql(s"CASE WHEN event_id % 10 <> 0 THEN ${centsSql("value")} END")} AS good_cents
-         |FROM events""".stripMargin,
+         |FROM events""".stripMargin),
     // RIGHT JOIN twin: unclaimed views carry -1 click sentinels (same
     // micro-truncation rules as q77).
-    "q159_stream_right_join_batch" ->
+    Query("q159_stream_right_join_batch", streamRightJoinBatch,
       """SELECT coalesce(c.event_id, -1) AS click_id,
         |       v.event_id AS view_id,
         |       v.user_id AS user_id,
@@ -1269,10 +1238,10 @@ object Sources {
         |      FROM events WHERE event_type = 'view') v
         |  ON c.user_id = v.user_id
         | AND v.ts >= c.ts AND v.ts <= c.ts + INTERVAL 30 MINUTE
-        |ORDER BY click_id, view_id""".stripMargin,
+        |ORDER BY click_id, view_id""".stripMargin),
     // SEMI twin: each converted click once, click-side columns only (same
     // micro-truncation rules as q77).
-    "q145_stream_semi_join_batch" ->
+    Query("q145_stream_semi_join_batch", streamSemiJoinBatch,
       """SELECT c.event_id AS click_id, c.user_id AS user_id,
         |       CAST(floor(epoch(c.ts)) AS BIGINT) AS click_s
         |FROM (SELECT event_id, user_id, date_trunc('microseconds', ts) AS ts
@@ -1282,8 +1251,8 @@ object Sources {
         |                 FROM events WHERE event_type = 'view') v
         |  WHERE c.user_id = v.user_id
         |    AND v.ts >= c.ts AND v.ts <= c.ts + INTERVAL 30 MINUTE)
-        |ORDER BY click_id""".stripMargin,
-    "q272_stream_two_level_batch" ->
+        |ORDER BY click_id""".stripMargin),
+    Query("q272_stream_two_level_batch", streamTwoLevelBatch,
       """WITH hourly AS (
         |  SELECT date_trunc('hour', ts) AS hws, event_type, count(*) AS n
         |  FROM events GROUP BY 1, 2
@@ -1292,13 +1261,13 @@ object Sources {
         |       CAST(max(n) AS BIGINT) AS max_hourly,
         |       CAST(sum(n) AS BIGINT) AS total
         |FROM hourly GROUP BY 1, 2
-        |ORDER BY day, event_type""".stripMargin,
-    "q39_stream_tumbling_batch" ->
+        |ORDER BY day, event_type""".stripMargin),
+    Query("q39_stream_tumbling_batch", streamTumblingBatch,
       """SELECT date_trunc('hour', ts) AS ws, event_type, count(*) AS n
         |FROM events
         |GROUP BY 1, 2
-        |ORDER BY ws, event_type""".stripMargin,
-    "q61_sessionization" ->
+        |ORDER BY ws, event_type""".stripMargin),
+    Query("q61_sessionization", sessionizationBatch,
       """SELECT n_events, count(*) AS n_sessions FROM (
         |  SELECT user_id, sess_id, count(*) AS n_events FROM (
         |    SELECT user_id,
@@ -1314,8 +1283,8 @@ object Sources {
         |    )
         |  ) GROUP BY user_id, sess_id
         |) GROUP BY n_events
-        |ORDER BY n_events""".stripMargin,
-    "q68_stream_sliding_batch" ->
+        |ORDER BY n_events""".stripMargin),
+    Query("q68_stream_sliding_batch", streamSlidingBatch,
       // Each event belongs to the 4 sliding windows whose starts are the
       // event's 15-minute bucket minus 0..3 slides; window starts are
       // epoch-aligned exactly like Spark's TimeWindow, computed here with
@@ -1325,8 +1294,8 @@ object Sources {
         |       event_type, count(*) AS n
         |FROM events CROSS JOIN generate_series(0, 3) t(g)
         |GROUP BY 1, 2
-        |ORDER BY ws, event_type""".stripMargin,
-    "q69_stream_session_batch" ->
+        |ORDER BY ws, event_type""".stripMargin),
+    Query("q69_stream_session_batch", streamSessionBatch,
       // Gap-based twin of session_window: a session breaks when the
       // inter-event gap reaches the 30-minute horizon (>= — the window
       // union is half-open), session start = min(ts) of the run.
@@ -1344,6 +1313,6 @@ object Sources {
         |      WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
         |    )
         |  ) GROUP BY user_id, sess_id
-        |) ORDER BY ss, user_id""".stripMargin
+        |) ORDER BY ss, user_id""".stripMargin)
   )
 }

@@ -259,21 +259,8 @@ object SqlApi {
   def filterClauseQuery(s: SparkSession, dir: String): DataFrame =
     viaSql(filterClauseSql, Seq("orders"))(s, dir)
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q269_sql_pivot_text" -> pivotTextQuery,
-    "q270_sql_unpivot_text" -> unpivotTextQuery,
-    "q271_sql_filter_clause" -> filterClauseQuery,
-    "q179_sql_lateral_view" -> lateralViewQuery,
-    "q160_sql_session_variable" -> sessionVariableQuery,
-    "q161_sql_parameterized" -> parameterizedQuery,
-    "q90_sql_text_api" -> sqlTextQuery,
-    "q93_sql_lateral" -> lateralQuery,
-    "q94_sql_recursive_cte" -> recursiveQuery,
-    "q99_sql_scalar_subquery" -> scalarSubqueryQuery,
-    "q134_sql_group_by_all" -> groupByAllQuery)
-
-  val oracles: Map[String, String] = Map(
-    "q269_sql_pivot_text" ->
+  val declared: Seq[Query] = Seq(
+    Query("q269_sql_pivot_text", pivotTextQuery,
       """SELECT o_orderpriority,
         |       CAST(sum(CASE WHEN o_orderstatus = 'O' THEN pc END) AS BIGINT) AS st_o,
         |       CAST(sum(CASE WHEN o_orderstatus = 'F' THEN pc END) AS BIGINT) AS st_f,
@@ -284,8 +271,8 @@ object SqlApi {
         |  FROM orders
         |)
         |GROUP BY o_orderpriority
-        |ORDER BY o_orderpriority""".stripMargin,
-    "q270_sql_unpivot_text" ->
+        |ORDER BY o_orderpriority""".stripMargin),
+    Query("q270_sql_unpivot_text", unpivotTextQuery,
       """SELECT o_orderkey, metric, val FROM (
         |  SELECT o_orderkey, 'price_cents' AS metric,
         |         CAST(floor((o_totalprice) * 100.0 + 0.5) AS BIGINT) AS val
@@ -294,9 +281,9 @@ object SqlApi {
         |  SELECT o_orderkey, 'custkey', CAST(o_custkey AS BIGINT)
         |  FROM orders WHERE o_orderkey % 100 = 0
         |)
-        |ORDER BY o_orderkey, metric""".stripMargin,
-    "q271_sql_filter_clause" -> filterClauseSql,
-    "q179_sql_lateral_view" ->
+        |ORDER BY o_orderkey, metric""".stripMargin),
+    Query("q271_sql_filter_clause", filterClauseQuery, filterClauseSql),
+    Query("q179_sql_lateral_view", lateralViewQuery,
       """SELECT doc_id,
         |       CAST(pos1 - 1 AS INT) AS pos,
         |       tok
@@ -306,8 +293,8 @@ object SqlApi {
         |         unnest(string_split(text, ' ')) AS tok
         |  FROM documents
         |  WHERE doc_id % 20 = 0)
-        |ORDER BY doc_id, pos""".stripMargin,
-    "q160_sql_session_variable" ->
+        |ORDER BY doc_id, pos""".stripMargin),
+    Query("q160_sql_session_variable", sessionVariableQuery,
       """WITH v AS (
         |  SELECT max(CAST(floor((o_totalprice) * 100.0 + 0.5) AS BIGINT)) // 2 AS hi_cents
         |  FROM orders)
@@ -317,17 +304,17 @@ object SqlApi {
         |FROM orders, v
         |WHERE CAST(floor((o_totalprice) * 100.0 + 0.5) AS BIGINT) >= hi_cents
         |GROUP BY o_orderpriority, hi_cents
-        |ORDER BY o_orderpriority""".stripMargin,
-    "q161_sql_parameterized" ->
+        |ORDER BY o_orderpriority""".stripMargin),
+    Query("q161_sql_parameterized", parameterizedQuery,
       """SELECT o_orderkey, o_orderpriority,
         |       CAST(floor((o_totalprice) * 100.0 + 0.5) AS BIGINT) AS price_cents
         |FROM orders
         |WHERE o_orderpriority = '1-URGENT'
         |  AND CAST(floor((o_totalprice) * 100.0 + 0.5) AS BIGINT) >= 10000000
-        |ORDER BY o_orderkey""".stripMargin,
-    "q90_sql_text_api" -> customerTiersSql,
-    "q93_sql_lateral" -> lateralTopSuppliersSql,
-    "q94_sql_recursive_cte" -> recursiveAncestorsSql,
-    "q99_sql_scalar_subquery" -> scalarSubquerySql,
-    "q134_sql_group_by_all" -> groupByAllSql)
+        |ORDER BY o_orderkey""".stripMargin),
+    Query("q90_sql_text_api", sqlTextQuery, customerTiersSql),
+    Query("q93_sql_lateral", lateralQuery, lateralTopSuppliersSql),
+    Query("q94_sql_recursive_cte", recursiveQuery, recursiveAncestorsSql),
+    Query("q99_sql_scalar_subquery", scalarSubqueryQuery, scalarSubquerySql),
+    Query("q134_sql_group_by_all", groupByAllQuery, groupByAllSql))
 }

@@ -2459,62 +2459,6 @@ object TimeSeries {
       .orderBy($"day")
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q353_motif_discord" -> motifDiscord,
-    "q354_seasonal_decompose" -> seasonalDecompose,
-    "q346_amoc_changepoint" -> amocChangepoint,
-    "q369_acf_daily_revenue" -> acfDailyRevenue,
-    "q377_holt_winters_seasonal" -> holtWintersSeasonal,
-    "q378_pacf_durbin_levinson" -> pacfDurbinLevinson,
-    "q383_ljung_box" -> ljungBox,
-    "q385_forecast_skill" -> forecastSkill,
-    "q398_ar_fit_backtest" -> arFitBacktest,
-    "q404_mann_kendall" -> mannKendallTrend,
-    "q409_runs_test_daily" -> runsTestDaily,
-    "q421_wilcoxon_signed_rank" -> wilcoxonSignedRank,
-    "q422_durbin_watson" -> durbinWatson,
-    "q426_fpe_order_selection" -> fpeOrderSelection,
-    "q431_seasonal_mann_kendall" -> seasonalMannKendall,
-    "q438_pettitt_changepoint" -> pettittChangepoint,
-    "q439_haar_energy" -> haarEnergyCensus,
-    "q440_log_rank" -> logRankSegments,
-    "q386_ccf_revenue_orders" -> ccfRevenueOrders,
-    "q340_kaplan_meier" -> kaplanMeier,
-    "q341_theil_sen_trend" -> theilSenTrend,
-    "q343_holt_linear" -> holtLinear,
-    "q322_mase_backtest" -> maseBacktest,
-    "q323_position_attribution" -> positionAttribution,
-    "q320_fifo_lot_matching" -> fifoLotMatching,
-    "q317_cusum_shift_alerts" -> cusumShiftAlerts,
-    "q226_interarrival_histogram" -> interarrivalHistogram,
-    "q227_weekday_seasonality" -> weekdaySeasonality,
-    "q211_session_paths" -> sessionPaths,
-    "q203_time_weighted_avg" -> timeWeightedAvg,
-    "q200_peak_concurrency" -> peakConcurrency,
-    "q194_anomaly_zscore" -> anomalyZscore,
-    "q173_period_over_period" -> periodOverPeriod,
-    "q242_last_touch_attribution" -> lastTouchAttribution,
-    "q243_funnel_timeout" -> funnelTimeout,
-    "q245_sequence_pattern_census" -> sequencePatternCensus,
-    "q246_rank_movers" -> rankMovers,
-    "q261_ohlc_bars" -> ohlcBars,
-    "q265_exact_proration" -> exactProration,
-    "q268_clamped_running_inventory" -> clampedRunningInventory,
-    "q273_hysteresis_alerting" -> hysteresisAlerting,
-    "q277_status_transition_matrix" -> statusTransitionMatrix,
-    "q278_customer_growth_curve" -> customerGrowthCurve,
-    "q279_monthly_vwap" -> monthlyVwap,
-    "q262_funnel_cohorted" -> funnelCohorted,
-    "q172_first_touch_attribution" -> firstTouchAttribution,
-    "q164_retention_cohorts" -> retentionCohorts,
-    "q165_event_trigrams" -> eventTrigrams,
-    "q101_gap_fill" -> gapFill,
-    "q102_window_fill" -> forwardFill,
-    "q103_interval_overlap" -> intervalOverlap,
-    "q306_arrival_regularity" -> arrivalRegularity,
-    "q307_dyadic_ewma_alerts" -> dyadicEwmaAlerts,
-    "q105_funnel" -> funnel)
-
   /** Shared q369/q378 oracle prefix: day census → n-scaled centered
     * terms → per-lag exact covariance/variance numerators (HUGEINT
     * folds in ascending-t order). */
@@ -2548,10 +2492,10 @@ object TimeSeries {
        |  WHERE lag < n
        |)""".stripMargin
 
-  val oracles: Map[String, String] = Map(
+  val declared: Seq[Query] = Seq(
     // q343's recursive-CTE stance with VECTOR state: (l, b, sse, s1..s7)
     // ride as columns; every arithmetic tree replicates the Spark fold
-    "q377_holt_winters_seasonal" ->
+    Query("q377_holt_winters_seasonal", holtWintersSeasonal,
       s"""WITH RECURSIVE daily AS MATERIALIZED (
          |  SELECT rn, CAST(rev AS DOUBLE) AS y, rev FROM (
          |    SELECT row_number() OVER (ORDER BY day) AS rn, rev FROM (
@@ -2592,10 +2536,10 @@ object TimeSeries {
          |SELECT k AS n_days, l AS level, b AS trend, sse,
          |       s1, s2, s3, s4, s5, s6, s7,
          |       l + (1.0 * b) + s1 AS fc_1, l + (7.0 * b) + s7 AS fc_7
-         |FROM fin""".stripMargin,
+         |FROM fin""".stripMargin),
     // q377's recursive CTE widened with the raw 7-lag window and the
     // three one-step SSE accumulators
-    "q385_forecast_skill" ->
+    Query("q385_forecast_skill", forecastSkill,
       s"""WITH RECURSIVE daily AS MATERIALIZED (
          |  SELECT rn, CAST(rev AS DOUBLE) AS y, rev FROM (
          |    SELECT row_number() OVER (ORDER BY day) AS rn, rev FROM (
@@ -2646,10 +2590,10 @@ object TimeSeries {
          |         AS skill_vs_snaive,
          |       shw < sen AS hw_beats_naive,
          |       shw < ses AS hw_beats_snaive
-         |FROM fin""".stripMargin,
+         |FROM fin""".stripMargin),
     // the q369 construction on a series PAIR: shared centered arrays,
     // per-lag HUGEINT folds, the two-sqrt denominator
-    "q386_ccf_revenue_orders" ->
+    Query("q386_ccf_revenue_orders", ccfRevenueOrders,
       s"""WITH daily AS MATERIALIZED (
          |  SELECT CAST(o_orderdate AS DATE) AS day,
          |         ${sumLongSql(centsSql("o_totalprice"))} AS rev,
@@ -2702,9 +2646,9 @@ object TimeSeries {
          |           > 2.0 / sqrt(CAST(n AS DOUBLE)) END, FALSE)
          |         AS significant
          |FROM lagt
-         |ORDER BY lag""".stripMargin,
+         |ORDER BY lag""".stripMargin),
     // the q369 chain, then the ascending-k fold and the literal χ² line
-    "q383_ljung_box" ->
+    Query("q383_ljung_box", ljungBox,
       s"""WITH $acfChainSql,
          |rs AS (
          |  SELECT max(n) AS n, count(*) AS n_lags,
@@ -2721,10 +2665,10 @@ object TimeSeries {
          |       CAST(n AS DOUBLE) * CAST(n + 2 AS DOUBLE) * ssum AS q_lb,
          |       CAST(n AS DOUBLE) * CAST(n + 2 AS DOUBLE) * ssum > $LbCrit
          |         AS autocorrelated
-         |FROM rs WHERE n_lags = $AcfMaxLag""".stripMargin,
+         |FROM rs WHERE n_lags = $AcfMaxLag""".stripMargin),
     // day census → exact lower-median selection → one lag window for
     // the run count → fixed z tree (n⁴ moments HUGEINT → VARCHAR)
-    "q409_runs_test_daily" -> {
+    Query("q409_runs_test_daily", runsTestDaily, {
       val muSql = "CAST(2 * n_above * n_below AS DOUBLE) " +
         "/ CAST(n_above + n_below AS DOUBLE) + 1.0"
       val sigSql = "sqrt(CAST(CAST(CAST(2 * n_above * n_below AS HUGEINT) " +
@@ -2781,10 +2725,10 @@ object TimeSeries {
          |                 > ${graft.queries.LlmOps.MwCritAlpha05} END, FALSE)
          |         AS nonrandom
          |FROM g, nd, med WHERE n_days >= 2""".stripMargin
-    },
+    }),
     // the day census self-joined on day−7 → signed diffs → |d| census
     // with doubled midranks → the exact tie-corrected z
-    "q421_wilcoxon_signed_rank" -> {
+    Query("q421_wilcoxon_signed_rank", wilcoxonSignedRank, {
       val var12Sql = "2 * CAST(n AS HUGEINT) * (n + 1) * (2 * n + 1) - tie"
       val zSql = "CAST(wp2 - (n * (n + 1)) // 2 AS DOUBLE) " +
         s"/ sqrt(CAST(CAST($var12Sql AS VARCHAR) AS DOUBLE) / 12.0)"
@@ -2823,10 +2767,10 @@ object TimeSeries {
          |                > ${graft.queries.LlmOps.MwCritAlpha05} END, FALSE)
          |         AS shifted
          |FROM g, pc""".stripMargin
-    },
+    }),
     // the q341 window → exact mean-deviation residuals cleared of /n →
     // one lag window → the single-divide DW tree
-    "q422_durbin_watson" -> {
+    Query("q422_durbin_watson", durbinWatson, {
       val dwSql = "(CAST(CAST(CAST(n AS HUGEINT) * n * sd2 AS VARCHAR) " +
         "AS DOUBLE) / CAST(CAST(den AS VARCHAR) AS DOUBLE))"
       s"""WITH mx AS (SELECT max(CAST(o_orderdate AS DATE)) AS mday FROM orders),
@@ -2859,10 +2803,10 @@ object TimeSeries {
          |                THEN $dwSql < 1.5 OR $dwSql > 2.5 END, FALSE)
          |         AS autocorrelated
          |FROM g WHERE n >= 2""".stripMargin
-    },
+    }),
     // q404's machinery per epoch-mod-7 season: season-keyed pair join,
     // per-season tie-corrected variances, pooled continuity-corrected z
-    "q431_seasonal_mann_kendall" -> {
+    Query("q431_seasonal_mann_kendall", seasonalMannKendall, {
       val zExpr = "CASE WHEN s_tot > 0 THEN CAST(s_tot - 1 AS DOUBLE) " +
         "/ sqrt(CAST(var18_tot AS DOUBLE) / 18.0) " +
         "WHEN s_tot < 0 THEN CAST(s_tot + 1 AS DOUBLE) " +
@@ -2912,10 +2856,10 @@ object TimeSeries {
          |            ELSE 'none' END AS direction
          |FROM per, pool WHERE n_days >= 2
          |ORDER BY per.dow""".stripMargin
-    },
+    }),
     // the q341 window, the same bounded pair join with a sign fold,
     // the exact tie-corrected variance, one continuity-corrected z
-    "q404_mann_kendall" -> {
+    Query("q404_mann_kendall", mannKendallTrend, {
       val zExpr = "CASE WHEN s_stat > 0 THEN CAST(s_stat - 1 AS DOUBLE) " +
         "/ sqrt(CAST(var18 AS DOUBLE) / 18.0) " +
         "WHEN s_stat < 0 THEN CAST(s_stat + 1 AS DOUBLE) " +
@@ -2952,11 +2896,11 @@ object TimeSeries {
          |            WHEN s_stat < 0 THEN 'decreasing'
          |            ELSE 'none' END AS direction
          |FROM g WHERE n >= 2""".stripMargin
-    },
+    }),
     // the q404 pair join decomposed to endpoint censuses → one
     // cumulative window over the day census → earliest-argmax pick →
     // the exact-integer exponent against the ln(40) literal
-    "q438_pettitt_changepoint" ->
+    Query("q438_pettitt_changepoint", pettittChangepoint,
       s"""WITH mx AS (SELECT max(CAST(o_orderdate AS DATE)) AS mday FROM orders),
          |daily AS MATERIALIZED (
          |  SELECT CAST(o_orderdate AS DATE) AS day,
@@ -2999,11 +2943,11 @@ object TimeSeries {
          |       CASE WHEN u_t > 0 THEN 'level_up'
          |            WHEN u_t < 0 THEN 'level_down'
          |            ELSE 'none' END AS direction
-         |FROM best""".stripMargin,
+         |FROM best""".stripMargin),
     // the q340 censored-duration census split by segment → reverse
     // cumulative risk sets → per-time hypergeometric terms → one
     // event-time-ordered list_reduce fold for the pooled O-E and V
-    "q440_log_rank" -> {
+    Query("q440_log_rank", logRankSegments, {
       val eA = "(CAST(CAST(CAST(d AS HUGEINT) * n_a AS VARCHAR) AS DOUBLE)" +
         " / CAST(n AS DOUBLE))"
       val vT = "CASE WHEN n > 1 THEN " +
@@ -3059,11 +3003,11 @@ object TimeSeries {
          |                FALSE) AS groups_differ
          |FROM rows_, pooled
          |ORDER BY t_days""".stripMargin
-    },
+    }),
     // the 256-day grouped census → 8 chained block-sum/difference CTEs
     // (missing days are zero by absence) → per-level HUGEINT energies
     // → the exact Parseval columns + one var_frac divide
-    "q439_haar_energy" -> {
+    Query("q439_haar_energy", haarEnergyCensus, {
       val ladder = (1 to 8).map { l =>
         s"""lvl$l AS MATERIALIZED (
            |  SELECT i // 2 AS i,
@@ -3112,12 +3056,12 @@ object TimeSeries {
          |       CAST(e0 AS VARCHAR) AS sum_sq_cents
          |FROM eng, tot
          |ORDER BY level""".stripMargin
-    },
+    }),
     // the q369 chain, q378's DL recursion keeping every k row, a
     // max(k) order pick, and a linear one-step backtest recursion; the
     // inner yhat sum runs all 7 j-slots with the j ≤ ord gate and a
     // 0.0 seed — the exact Spark fold tree
-    "q398_ar_fit_backtest" -> {
+    Query("q398_ar_fit_backtest", arFitBacktest, {
       val yhatTerms = (1 to AcfMaxLag).map(j =>
         s"""CASE WHEN $j <= ord THEN phi[$j]
            |* (CAST(xs[CAST(b.t - ${j - 1} AS INT)] AS DOUBLE) - mu)
@@ -3193,10 +3137,10 @@ object TimeSeries {
          |         AS theil_u2_ar,
          |       fin.sa < fin.sn AS ar_beats_naive
          |FROM rok, sel, base, fin""".stripMargin
-    },
+    }),
     // the q369 chain, then Durbin–Levinson as a linear recursion with
     // LIST state (immutable per step — never a list_reduce struct fold)
-    "q378_pacf_durbin_levinson" ->
+    Query("q378_pacf_durbin_levinson", pacfDurbinLevinson,
       s"""WITH RECURSIVE $acfChainSql,
          |racf AS MATERIALIZED (
          |  SELECT max(n) AS n, count(*) AS n_lags,
@@ -3233,10 +3177,10 @@ object TimeSeries {
          |SELECT CAST(lag AS BIGINT) AS lag, n AS n_days,
          |       r[CAST(lag AS INT)] AS acf, pacf[CAST(lag AS INT)] AS pacf
          |FROM fin, rok, (SELECT unnest(range(1, ${AcfMaxLag + 1})) AS lag)
-         |ORDER BY lag""".stripMargin,
+         |ORDER BY lag""".stripMargin),
     // q378's DL recursion → the variance-ratio ladder recursion seeded
     // at order 0 → the single-divide FPE tree and a min-k argmin
-    "q426_fpe_order_selection" ->
+    Query("q426_fpe_order_selection", fpeOrderSelection,
       s"""WITH RECURSIVE $acfChainSql,
          |racf AS MATERIALIZED (
          |  SELECT max(n) AS n, count(*) AS n_lags,
@@ -3291,8 +3235,8 @@ object TimeSeries {
          |)
          |SELECT k AS order_k, n AS n_days, pacf, v AS sigma2_ratio,
          |       fpe AS fpe_rel, k = sel_k AS selected
-         |FROM ex, sel ORDER BY k""".stripMargin,
-    "q353_motif_discord" ->
+         |FROM ex, sel ORDER BY k""".stripMargin),
+    Query("q353_motif_discord", motifDiscord,
       s"""WITH mx AS (SELECT max(CAST(o_orderdate AS DATE)) AS mday FROM orders),
          |daily AS (
          |  SELECT CAST(o_orderdate AS DATE) AS day,
@@ -3334,8 +3278,8 @@ object TimeSeries {
          |  FROM nn ORDER BY d2 DESC, i ASC LIMIT 1
          |)
          |SELECT * FROM (SELECT * FROM motif UNION ALL SELECT * FROM discord)
-         |ORDER BY kind""".stripMargin,
-    "q354_seasonal_decompose" ->
+         |ORDER BY kind""".stripMargin),
+    Query("q354_seasonal_decompose", seasonalDecompose,
       // DuckDB dayofweek is Sunday=0; Spark's is Sunday=1 — the +1
       // aligns them
       s"""WITH daily AS (
@@ -3373,11 +3317,11 @@ object TimeSeries {
          |SELECT d.day, d.rev AS rev_cents, d.trend, s.seasonal,
          |       d.detr - s.seasonal AS residual
          |FROM detrended d JOIN seas s ON d.dow = s.dow
-         |ORDER BY d.day""".stripMargin,
+         |ORDER BY d.day""".stripMargin),
     // observed-sequence centered terms scaled by n (denominators
     // cleared), HUGEINT folds per lag in ascending-t order, r_k as the
     // one shared divide (the n² factors cancel)
-    "q369_acf_daily_revenue" ->
+    Query("q369_acf_daily_revenue", acfDailyRevenue,
       s"""WITH $acfChainSql
          |SELECT CAST(lag AS BIGINT) AS lag, n AS n_days,
          |       CAST(cov_n2 AS VARCHAR) AS cov_num,
@@ -3391,8 +3335,8 @@ object TimeSeries {
          |                 > 2.0 / sqrt(CAST(n AS DOUBLE))
          |       END, FALSE) AS significant
          |FROM lagt
-         |ORDER BY lag""".stripMargin,
-    "q346_amoc_changepoint" ->
+         |ORDER BY lag""".stripMargin),
+    Query("q346_amoc_changepoint", amocChangepoint,
       s"""WITH daily AS (
          |  SELECT CAST(o_orderdate AS DATE) AS day,
          |         ${sumLongSql(centsSql("o_totalprice"))} AS rev
@@ -3419,8 +3363,8 @@ object TimeSeries {
          |SELECT day AS cp_day, k AS k_at_max, n_days,
          |       ${ratioSql("s_k", "k")} AS mean_before_cents,
          |       ${ratioSql("s_n - s_k", "n_days - k")} AS mean_after_cents
-         |FROM best""".stripMargin,
-    "q340_kaplan_meier" ->
+         |FROM best""".stripMargin),
+    Query("q340_kaplan_meier", kaplanMeier,
       // DuckDB's 1-based lambda index i ↔ Spark's 0-based transform
       // index: strict prefix = xs[1:i-1] ↔ slice(xs, 1, i); inclusive
       // prefix = xs[1:i] ↔ slice(xs, 1, i+1). Each survival value
@@ -3468,8 +3412,8 @@ object TimeSeries {
          |)
          |SELECT c.t AS t_days, c.n_risk AS n_risk, c.d_ev AS n_events,
          |       c.d_cens AS n_censored, c.survival AS survival
-         |FROM curve WHERE c.d_ev > 0 ORDER BY t_days""".stripMargin,
-    "q341_theil_sen_trend" ->
+         |FROM curve WHERE c.d_ev > 0 ORDER BY t_days""".stripMargin),
+    Query("q341_theil_sen_trend", theilSenTrend,
       s"""WITH mx AS (SELECT max(CAST(o_orderdate AS DATE)) AS mday FROM orders),
          |daily AS MATERIALIZED (
          |  SELECT CAST(o_orderdate AS DATE) AS day,
@@ -3499,8 +3443,8 @@ object TimeSeries {
          |SELECT n_days, n_pairs, slope AS slope_cents_per_day,
          |       intercept AS intercept_cents
          |FROM sm, im
-         |WHERE coalesce(n_pairs, 0) > 0""".stripMargin,
-    "q343_holt_linear" ->
+         |WHERE coalesce(n_pairs, 0) > 0""".stripMargin),
+    Query("q343_holt_linear", holtLinear,
       // RECURSIVE-CTE replay, not a list_reduce struct fold: DuckDB
       // 1.0's list_reduce mutates the accumulator struct IN PLACE field
       // by field, so a later field's formula (trend, which needs the
@@ -3530,11 +3474,11 @@ object TimeSeries {
          |SELECT k AS n_months, l AS level, b AS trend, sse,
          |       l + (1.0 * b) AS fc_1, l + (3.0 * b) AS fc_3,
          |       l + (6.0 * b) AS fc_6, l + (12.0 * b) AS fc_12
-         |FROM fin""".stripMargin,
+         |FROM fin""".stripMargin),
     // same sessionization twin as q242; credits are exact integer basis
     // points with the remainder pinned to the earliest middle touch, so
     // the whole census (including conservation) replays in DuckDB
-    "q323_position_attribution" ->
+    Query("q323_position_attribution", positionAttribution,
       s"""WITH marked AS (
          |  SELECT user_id, ts, event_id, event_type,
          |         CASE WHEN lag(ts) OVER w IS NULL
@@ -3597,9 +3541,9 @@ object TimeSeries {
          |SELECT channel, CAST(count(*) AS BIGINT) AS n_conversions_touched,
          |       CAST(sum(credit_bp) AS BIGINT) AS credit_bp
          |FROM u GROUP BY 1
-         |ORDER BY 1""".stripMargin,
+         |ORDER BY 1""".stripMargin),
     // full-replica oracle: row lags, integer |Δ| sums, one divide
-    "q322_mase_backtest" ->
+    Query("q322_mase_backtest", maseBacktest,
       s"""WITH t AS (
          |  SELECT l_suppkey AS sk,
          |         CAST(datediff('day', DATE '1995-01-01', l_shipdate) AS BIGINT) AS dayi,
@@ -3624,13 +3568,13 @@ object TimeSeries {
          |            THEN CAST(sum(e7) AS DOUBLE) / CAST(sum(e1) AS DOUBLE)
          |            ELSE 0.0 END AS mase
          |FROM e GROUP BY sk
-         |ORDER BY sk""".stripMargin,
+         |ORDER BY sk""".stripMargin),
     // INDEPENDENT oracle: DuckDB's native ASOF JOIN resolves each
     // boundary's covering ledger row (largest prev ≤ b−1 ⟺ smallest
     // cum ≥ b on contiguous positive-qty intervals), where the Spark
     // side uses the LOCF union-window — agreement proves the boundary
     // merge, not just replays it. All integer cents.
-    "q320_fifo_lot_matching" ->
+    Query("q320_fifo_lot_matching", fifoLotMatching,
       s"""WITH rec0 AS (
          |  SELECT l_suppkey AS sk,
          |         CAST(datediff('day', DATE '1995-01-01', l_shipdate) AS BIGINT) AS day,
@@ -3695,11 +3639,11 @@ object TimeSeries {
          |       coalesce(a.max_lot_age_days, -1) AS max_lot_age_days,
          |       coalesce(a.age_qty_days, 0) AS age_qty_days
          |FROM t LEFT JOIN a ON t.sk = a.sk
-         |ORDER BY t.sk""".stripMargin,
+         |ORDER BY t.sk""".stripMargin),
     // full-replica oracle: the prefix-identity CUSUM is pure integer
     // arithmetic (scaled deviations, running sum + running min), so
     // DuckDB re-derives every alarm; HUGEINT stays internal (outputs CAST)
-    "q317_cusum_shift_alerts" ->
+    Query("q317_cusum_shift_alerts", cusumShiftAlerts,
       s"""WITH t AS (
          |  SELECT l_suppkey AS sk,
          |         CAST(datediff('day', DATE '1995-01-01', l_shipdate) AS BIGINT) AS dayi,
@@ -3724,8 +3668,8 @@ object TimeSeries {
          |       CAST(coalesce(min(CASE WHEN alarm THEN dayi END), -1) AS BIGINT) AS first_alarm_day,
          |       sum(CASE WHEN alarm THEN 1 ELSE 0 END) > 0 AS shift_detected
          |FROM a GROUP BY sk
-         |ORDER BY sk""".stripMargin,
-    "q307_dyadic_ewma_alerts" -> {
+         |ORDER BY sk""".stripMargin),
+    Query("q307_dyadic_ewma_alerts", dyadicEwmaAlerts, {
       val num = (1 to 8).map(i => s"coalesce(l$i, 0) * ${1L << (8 - i)}")
         .mkString(" + ")
       val den = (1 to 8).map(i =>
@@ -3754,8 +3698,8 @@ object TimeSeries {
          |       (($np) >= 4 AND qty * ($den) > 2 * ($num)) AS spike
          |FROM lg
          |ORDER BY l_suppkey, day""".stripMargin
-    },
-    "q306_arrival_regularity" -> {
+    }),
+    Query("q306_arrival_regularity", arrivalRegularity, {
       def exceeds(pctSq: Long): String =
         s"(CASE WHEN n_gaps > 0 AND varn * 10000 > $pctSq * s2 THEN 1 ELSE 0 END)"
       s"""WITH g AS (
@@ -3784,8 +3728,8 @@ object TimeSeries {
          |       (n_gaps >= 4 AND cv_band = 0) AS metronomic
          |FROM b
          |ORDER BY user_id""".stripMargin
-    },
-    "q226_interarrival_histogram" ->
+    }),
+    Query("q226_interarrival_histogram", interarrivalHistogram,
       s"""WITH gaps AS (
          |  SELECT o_custkey,
          |         CAST(date_diff('day', CAST(prev AS DATE),
@@ -3800,8 +3744,8 @@ object TimeSeries {
          |       count(*) AS n_gaps, ${sumLongSql("gap_days")} AS sum_days
          |FROM gaps JOIN customer ON o_custkey = c_custkey
          |GROUP BY 1, 2
-         |ORDER BY c_mktsegment, bucket""".stripMargin,
-    "q227_weekday_seasonality" ->
+         |ORDER BY c_mktsegment, bucket""".stripMargin),
+    Query("q227_weekday_seasonality", weekdaySeasonality,
       s"""WITH cells AS (
          |  SELECT event_type,
          |         CAST(date_diff('day', DATE '1995-01-02', CAST(ts AS DATE)) % 7 AS INT) AS dow,
@@ -3814,8 +3758,8 @@ object TimeSeries {
          |SELECT event_type, dow, o, n_type,
          |       ${ratioSql("o * 7", "n_type")} AS lift
          |FROM cells JOIN totals ON event_type = et
-         |ORDER BY event_type, dow""".stripMargin,
-    "q211_session_paths" ->
+         |ORDER BY event_type, dow""".stripMargin),
+    Query("q211_session_paths", sessionPaths,
       """WITH sess AS (
         |  SELECT user_id, ts, event_id, event_type,
         |         sum(new_sess) OVER (PARTITION BY user_id ORDER BY ts, event_id
@@ -3835,8 +3779,8 @@ object TimeSeries {
         |SELECT path, count(*) AS n_sessions
         |FROM p GROUP BY path
         |ORDER BY n_sessions DESC, path ASC
-        |LIMIT 15""".stripMargin,
-    "q203_time_weighted_avg" ->
+        |LIMIT 15""".stripMargin),
+    Query("q203_time_weighted_avg", timeWeightedAvg,
       s"""WITH iv AS (
          |  SELECT user_id, ${centsSql("value")} AS v_cents,
          |         lead(ts, 1) OVER w AS next_ts,
@@ -3850,8 +3794,8 @@ object TimeSeries {
          |       ${ratioSql(s"sum(CAST(v_cents AS HUGEINT) * dur_s)", "sum(dur_s)")} AS twap_cents
          |FROM iv WHERE next_ts IS NOT NULL
          |GROUP BY user_id HAVING sum(dur_s) > 0
-         |ORDER BY user_id""".stripMargin,
-    "q200_peak_concurrency" ->
+         |ORDER BY user_id""".stripMargin),
+    Query("q200_peak_concurrency", peakConcurrency,
       """WITH iv AS (
         |  SELECT l_suppkey AS supp, CAST(l_shipdate AS DATE) AS ship,
         |         CAST(l_orderkey % 7 + 2 AS INT) AS end1
@@ -3873,8 +3817,8 @@ object TimeSeries {
         |SELECT supp, CAST(max(conc) AS BIGINT) AS peak_conc,
         |       min(day) AS peak_day
         |FROM pk WHERE conc = peak
-        |GROUP BY supp ORDER BY supp""".stripMargin,
-    "q194_anomaly_zscore" ->
+        |GROUP BY supp ORDER BY supp""".stripMargin),
+    Query("q194_anomaly_zscore", anomalyZscore,
       """WITH daily AS (
         |  SELECT event_type, CAST(ts AS DATE) AS day, count(*) AS n
         |  FROM events GROUP BY 1, 2
@@ -3889,8 +3833,8 @@ object TimeSeries {
         |SELECT event_type, day, n,
         |       (7 * n - ss) * (7 * n - ss) > 9 * (7 * sq - ss * ss) AS is_anomaly
         |FROM win WHERE win_n = 7
-        |ORDER BY event_type, day""".stripMargin,
-    "q173_period_over_period" ->
+        |ORDER BY event_type, day""".stripMargin),
+    Query("q173_period_over_period", periodOverPeriod,
       s"""WITH monthly AS (
          |  SELECT CAST(date_trunc('month', o_orderdate) AS DATE) AS mon,
          |         count(*) AS n,
@@ -3905,8 +3849,8 @@ object TimeSeries {
          |       END AS rev_growth
          |FROM monthly
          |WINDOW w AS (ORDER BY mon ASC)
-         |ORDER BY mon""".stripMargin,
-    "q277_status_transition_matrix" ->
+         |ORDER BY mon""".stripMargin),
+    Query("q277_status_transition_matrix", statusTransitionMatrix,
       """SELECT prev_status AS from_status, o_orderstatus AS to_status,
         |       count(*) AS n_transitions
         |FROM (
@@ -3917,8 +3861,8 @@ object TimeSeries {
         |)
         |WHERE prev_status IS NOT NULL
         |GROUP BY 1, 2
-        |ORDER BY 1, 2""".stripMargin,
-    "q278_customer_growth_curve" ->
+        |ORDER BY 1, 2""".stripMargin),
+    Query("q278_customer_growth_curve", customerGrowthCurve,
       """WITH monthly AS (
         |  SELECT CAST(year(first_order) * 100 + month(first_order) AS INT) AS mon,
         |         count(*) AS n_new
@@ -3931,8 +3875,8 @@ object TimeSeries {
         |         ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT)
         |         AS cum_customers
         |FROM monthly
-        |ORDER BY mon""".stripMargin,
-    "q279_monthly_vwap" ->
+        |ORDER BY mon""".stripMargin),
+    Query("q279_monthly_vwap", monthlyVwap,
       s"""SELECT CAST(year(l_shipdate) * 100 + month(l_shipdate) AS INT) AS mon,
          |       l_returnflag,
          |       ${sumIntValuedSql("l_quantity")} AS total_qty,
@@ -3941,8 +3885,8 @@ object TimeSeries {
                    "sum(CAST(l_quantity AS BIGINT))")} AS vwap_cents
          |FROM lineitem
          |GROUP BY 1, 2
-         |ORDER BY 1, 2""".stripMargin,
-    "q273_hysteresis_alerting" ->
+         |ORDER BY 1, 2""".stripMargin),
+    Query("q273_hysteresis_alerting", hysteresisAlerting,
       s"""WITH daily AS (
          |  SELECT o_orderpriority AS prio, CAST(o_orderdate AS DATE) AS day,
          |         ${sumLongSql(centsSql("o_totalprice"))} AS cents
@@ -3972,8 +3916,8 @@ object TimeSeries {
          |       CAST(sum(CASE WHEN flap THEN 1 ELSE 0 END) AS BIGINT) AS n_transitions,
          |       count(*) AS n_days
          |FROM al GROUP BY 1
-         |ORDER BY 1""".stripMargin,
-    "q268_clamped_running_inventory" ->
+         |ORDER BY 1""".stripMargin),
+    Query("q268_clamped_running_inventory", clampedRunningInventory,
       """WITH daily AS (
         |  SELECT l_suppkey, CAST(l_shipdate AS DATE) AS day,
         |         CAST(sum(CASE WHEN l_orderkey % 2 = 0
@@ -4012,8 +3956,8 @@ object TimeSeries {
         |         count(*) AS n_days
         |  FROM lv GROUP BY 1
         |) b ON a.l_suppkey = b.l_suppkey
-        |ORDER BY a.l_suppkey""".stripMargin,
-    "q265_exact_proration" ->
+        |ORDER BY a.l_suppkey""".stripMargin),
+    Query("q265_exact_proration", exactProration,
       s"""WITH t AS (
          |  SELECT CAST(year(o_orderdate) * 100 + month(o_orderdate) AS INT) AS mon,
          |         day(last_day(o_orderdate)) AS days,
@@ -4027,8 +3971,8 @@ object TimeSeries {
          |SELECT mon, dom, CAST(sum(alloc) AS BIGINT) AS alloc_cents,
          |       count(*) AS n_orders
          |FROM x GROUP BY 1, 2
-         |ORDER BY 1, 2""".stripMargin,
-    "q261_ohlc_bars" ->
+         |ORDER BY 1, 2""".stripMargin),
+    Query("q261_ohlc_bars", ohlcBars,
       s"""WITH t AS (
          |  SELECT CAST(year(o_orderdate) * 100 + month(o_orderdate) AS INT) AS mon,
          |         o_orderdate AS ts, o_orderkey AS seq,
@@ -4050,8 +3994,8 @@ object TimeSeries {
          |JOIN (SELECT mon, open_cents FROM o WHERE rn = 1) oo ON t.mon = oo.mon
          |JOIN (SELECT mon, close_cents FROM c WHERE rn = 1) cc ON t.mon = cc.mon
          |GROUP BY t.mon
-         |ORDER BY t.mon""".stripMargin,
-    "q262_funnel_cohorted" ->
+         |ORDER BY t.mon""".stripMargin),
+    Query("q262_funnel_cohorted", funnelCohorted,
       """WITH cohort AS (
         |  SELECT user_id, CAST(min(ts) AS DATE) AS cohort_day
         |  FROM events GROUP BY 1
@@ -4080,8 +4024,8 @@ object TimeSeries {
         |LEFT JOIN p ON v.user_id = p.user_id
         |JOIN cohort ON v.user_id = cohort.user_id
         |GROUP BY 1, 2
-        |ORDER BY 1, 2""".stripMargin,
-    "q245_sequence_pattern_census" ->
+        |ORDER BY 1, 2""".stripMargin),
+    Query("q245_sequence_pattern_census", sequencePatternCensus,
       // list_reduce has no init parameter: prepend the 0 start state (the
       // q78 precedent); event types are pre-encoded to automaton symbols
       // so the fold is integer-only on both engines.
@@ -4111,8 +4055,8 @@ object TimeSeries {
         |)
         |SELECT stage_reached, count(*) AS n_sessions
         |FROM folded GROUP BY 1
-        |ORDER BY 1""".stripMargin,
-    "q246_rank_movers" ->
+        |ORDER BY 1""".stripMargin),
+    Query("q246_rank_movers", rankMovers,
       s"""WITH bm AS (
          |  SELECT p_brand,
          |         CAST(year(l_shipdate) * 100 + month(l_shipdate) AS INT) AS mon,
@@ -4133,8 +4077,8 @@ object TimeSeries {
          |       CAST(prev_rnk - rnk AS BIGINT) AS rank_delta
          |FROM moved WHERE prev_rnk IS NOT NULL
          |ORDER BY abs(prev_rnk - rnk) DESC, mon ASC, p_brand ASC
-         |LIMIT 25""".stripMargin,
-    "q242_last_touch_attribution" ->
+         |LIMIT 25""".stripMargin),
+    Query("q242_last_touch_attribution", lastTouchAttribution,
       s"""WITH marked AS (
          |  SELECT user_id, ts, event_id, event_type,
          |         CASE WHEN lag(ts) OVER w IS NULL
@@ -4173,8 +4117,8 @@ object TimeSeries {
          |       count(*) AS n_conversions
          |FROM conv LEFT JOIN credited USING (user_id, sess_id)
          |GROUP BY 1
-         |ORDER BY 1""".stripMargin,
-    "q243_funnel_timeout" ->
+         |ORDER BY 1""".stripMargin),
+    Query("q243_funnel_timeout", funnelTimeout,
       s"""WITH v AS (
          |  SELECT user_id, min(ts) AS t_view FROM events
          |  WHERE event_type = 'view' GROUP BY 1
@@ -4202,8 +4146,8 @@ object TimeSeries {
          |SELECT step_reached, n_users,
          |       ${ratioSql("n_users", "(SELECT sum(n_users) FROM census)")} AS share
          |FROM census
-         |ORDER BY step_reached""".stripMargin,
-    "q172_first_touch_attribution" ->
+         |ORDER BY step_reached""".stripMargin),
+    Query("q172_first_touch_attribution", firstTouchAttribution,
       s"""WITH marked AS (
          |  SELECT user_id, ts, event_id, event_type,
          |         CASE WHEN lag(ts) OVER w IS NULL
@@ -4238,8 +4182,8 @@ object TimeSeries {
          |       ${ratioSql("sum(converted)", "count(*)")} AS conv_rate
          |FROM per_session
          |GROUP BY first_touch
-         |ORDER BY first_touch""".stripMargin,
-    "q164_retention_cohorts" ->
+         |ORDER BY first_touch""".stripMargin),
+    Query("q164_retention_cohorts", retentionCohorts,
       s"""WITH ev AS (
          |  SELECT user_id, CAST(date_trunc('week', ts) AS DATE) AS wk FROM events
          |),
@@ -4260,8 +4204,8 @@ object TimeSeries {
          |SELECT cohort_wk, week_offset, n_active, cohort_size,
          |       ${ratioSql("n_active", "cohort_size")} AS retention
          |FROM cells JOIN sizes USING (cohort_wk)
-         |ORDER BY cohort_wk, week_offset""".stripMargin,
-    "q165_event_trigrams" ->
+         |ORDER BY cohort_wk, week_offset""".stripMargin),
+    Query("q165_event_trigrams", eventTrigrams,
       """SELECT tg, count(*) AS cnt FROM (
         |  SELECT lag(event_type, 2) OVER w || '>' ||
         |         lag(event_type, 1) OVER w || '>' || event_type AS tg,
@@ -4271,8 +4215,8 @@ object TimeSeries {
         |WHERE g2 IS NOT NULL
         |GROUP BY tg
         |ORDER BY cnt DESC, tg ASC
-        |LIMIT 10""".stripMargin,
-    "q101_gap_fill" ->
+        |LIMIT 10""".stripMargin),
+    Query("q101_gap_fill", gapFill,
       """WITH counts AS (
         |  SELECT CAST(date_trunc('month', o_orderdate) AS DATE) AS mon,
         |         o_orderpriority AS prio, count(*) AS n_orders
@@ -4287,8 +4231,8 @@ object TimeSeries {
         |), prios AS (SELECT DISTINCT prio FROM counts)
         |SELECT mon, prio, coalesce(n_orders, 0) AS n_orders
         |FROM months CROSS JOIN prios LEFT JOIN counts USING (mon, prio)
-        |ORDER BY mon, prio""".stripMargin,
-    "q102_window_fill" ->
+        |ORDER BY mon, prio""".stripMargin),
+    Query("q102_window_fill", forwardFill,
       """SELECT user_id, ts, event_id,
         |       last_value(v IGNORE NULLS) OVER (
         |         PARTITION BY user_id ORDER BY ts, event_id
@@ -4299,8 +4243,8 @@ object TimeSeries {
         |         CASE WHEN event_id % 3 = 0 THEN NULL ELSE value END AS v
         |  FROM events WHERE user_id < 50
         |)
-        |ORDER BY user_id, ts, event_id""".stripMargin,
-    "q103_interval_overlap" ->
+        |ORDER BY user_id, ts, event_id""".stripMargin),
+    Query("q103_interval_overlap", intervalOverlap,
       """SELECT day, count(*) AS n_in_transit,
         |       CAST(sum(qty) AS BIGINT) AS sum_qty
         |FROM (
@@ -4316,8 +4260,8 @@ object TimeSeries {
         |  )
         |)
         |GROUP BY day
-        |ORDER BY day""".stripMargin,
-    "q105_funnel" ->
+        |ORDER BY day""".stripMargin),
+    Query("q105_funnel", funnel,
       """WITH v AS (
         |  SELECT user_id, min(ts) AS t_view
         |  FROM events WHERE event_type = 'view' GROUP BY user_id
@@ -4340,5 +4284,5 @@ object TimeSeries {
         |                 ELSE 1 END AS INT) AS step_reached,
         |       t_view, t_click, t_purchase
         |FROM v LEFT JOIN c USING (user_id) LEFT JOIN p USING (user_id)
-        |ORDER BY user_id""".stripMargin)
+        |ORDER BY user_id""".stripMargin))
 }

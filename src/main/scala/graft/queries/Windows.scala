@@ -229,21 +229,8 @@ object Windows {
       .orderBy($"user_id", $"event_id")
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q184_window_reset" -> windowReset,
-    "q175_window_topk_ties" -> topKWithTies,
-    "q146_window_count_distinct" -> countDistinctRunning,
-    "q141_window_nth_value" -> nthValue,
-    "q62_window_range_frame" -> rangeFrame,
-    "q85_window_distribution" -> distribution,
-    "q19_window_rank" -> rankFamily,
-    "q20_window_lag_lead" -> lagLead,
-    "q21_window_frames" -> frames,
-    "q22_window_topk_per_group" -> topKPerGroup
-  )
-
-  val oracles: Map[String, String] = Map(
-    "q184_window_reset" ->
+  val declared: Seq[Query] = Seq(
+    Query("q184_window_reset", windowReset,
       """SELECT user_id, event_id,
         |       CASE WHEN seg_id = 0 THEN -1
         |            ELSE CAST(row_number() OVER (PARTITION BY user_id, seg_id
@@ -255,8 +242,8 @@ object Windows {
         |           OVER (PARTITION BY user_id ORDER BY ts ASC, event_id ASC
         |                 ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS seg_id
         |  FROM events)
-        |ORDER BY user_id, event_id""".stripMargin,
-    "q175_window_topk_ties" ->
+        |ORDER BY user_id, event_id""".stripMargin),
+    Query("q175_window_topk_ties", topKWithTies,
       s"""SELECT s_nationkey, CAST(rnk AS INT) AS rnk, s_suppkey, bal_cents
          |FROM (
          |  SELECT s_nationkey, s_suppkey,
@@ -265,8 +252,8 @@ object Windows {
          |                      ORDER BY ${centsSql("s_acctbal")} DESC) AS rnk
          |  FROM supplier)
          |WHERE rnk <= 3
-         |ORDER BY s_nationkey, rnk, s_suppkey""".stripMargin,
-    "q146_window_count_distinct" ->
+         |ORDER BY s_nationkey, rnk, s_suppkey""".stripMargin),
+    Query("q146_window_count_distinct", countDistinctRunning,
       """SELECT o_orderpriority, o_orderkey,
         |       CAST(sum(is_first) OVER (PARTITION BY o_orderpriority
         |                                ORDER BY o_orderdate ASC, o_orderkey ASC
@@ -277,8 +264,8 @@ object Windows {
         |                                          ORDER BY o_orderdate ASC, o_orderkey ASC) = 1
         |                  THEN 1 ELSE 0 END AS is_first
         |      FROM orders)
-        |ORDER BY o_orderpriority, o_orderkey""".stripMargin,
-    "q141_window_nth_value" ->
+        |ORDER BY o_orderpriority, o_orderkey""".stripMargin),
+    Query("q141_window_nth_value", nthValue,
       s"""SELECT o_custkey, o_orderkey,
          |       nth_value(${centsSql("o_totalprice")}, 2)
          |         OVER (PARTITION BY o_custkey
@@ -289,8 +276,8 @@ object Windows {
          |               ORDER BY o_orderdate ASC, o_orderkey ASC
          |               ROWS BETWEEN UNBOUNDED PRECEDING AND UNBOUNDED FOLLOWING) AS last_cents
          |FROM orders
-         |ORDER BY o_custkey, o_orderkey""".stripMargin,
-    "q85_window_distribution" ->
+         |ORDER BY o_custkey, o_orderkey""".stripMargin),
+    Query("q85_window_distribution", distribution,
       s"""SELECT o_orderpriority, o_orderkey, price_cents,
          |       percent_rank() OVER w AS pct_rank,
          |       cume_dist() OVER w AS cume
@@ -299,8 +286,8 @@ object Windows {
          |      FROM orders)
          |WINDOW w AS (PARTITION BY o_orderpriority
          |             ORDER BY price_cents ASC, o_orderkey ASC)
-         |ORDER BY o_orderpriority, o_orderkey""".stripMargin,
-    "q62_window_range_frame" ->
+         |ORDER BY o_orderpriority, o_orderkey""".stripMargin),
+    Query("q62_window_range_frame", rangeFrame,
       s"""SELECT o_custkey, o_orderkey, epoch_s,
          |       count(*) OVER w AS n_within_30d,
          |       CAST(sum(price_cents) OVER w AS BIGINT) AS cents_within_30d
@@ -310,8 +297,8 @@ object Windows {
          |      FROM orders)
          |WINDOW w AS (PARTITION BY o_custkey ORDER BY epoch_s ASC
          |             RANGE BETWEEN 1296000 PRECEDING AND 1296000 FOLLOWING)
-         |ORDER BY o_custkey, o_orderkey""".stripMargin,
-    "q19_window_rank" ->
+         |ORDER BY o_custkey, o_orderkey""".stripMargin),
+    Query("q19_window_rank", rankFamily,
       """SELECT s_nationkey, s_suppkey, s_name,
         |       CAST(row_number() OVER w AS INT) AS rn,
         |       CAST(rank() OVER w AS INT) AS rnk,
@@ -319,16 +306,16 @@ object Windows {
         |       CAST(ntile(4) OVER w AS INT) AS quartile
         |FROM supplier
         |WINDOW w AS (PARTITION BY s_nationkey ORDER BY s_acctbal DESC, s_suppkey ASC)
-        |ORDER BY s_nationkey, s_suppkey""".stripMargin,
-    "q20_window_lag_lead" ->
+        |ORDER BY s_nationkey, s_suppkey""".stripMargin),
+    Query("q20_window_lag_lead", lagLead,
       s"""SELECT o_custkey, o_orderkey, o_orderdate,
          |       lag(price_cents, 1) OVER w AS prev_cents,
          |       lead(price_cents, 1) OVER w AS next_cents,
          |       first_value(price_cents) OVER w AS first_cents
          |FROM (SELECT *, ${centsSql("o_totalprice")} AS price_cents FROM orders)
          |WINDOW w AS (PARTITION BY o_custkey ORDER BY o_orderdate ASC, o_orderkey ASC)
-         |ORDER BY o_custkey, o_orderkey""".stripMargin,
-    "q21_window_frames" ->
+         |ORDER BY o_custkey, o_orderkey""".stripMargin),
+    Query("q21_window_frames", frames,
       s"""SELECT o_custkey, o_orderkey,
          |       CAST(sum(price_cents) OVER (PARTITION BY o_custkey ORDER BY o_orderdate ASC, o_orderkey ASC
          |                  ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS running_cents,
@@ -336,8 +323,8 @@ object Windows {
              "CAST(sum(price_cents) OVER (PARTITION BY o_custkey ORDER BY o_orderdate ASC, o_orderkey ASC ROWS BETWEEN 3 PRECEDING AND 3 FOLLOWING) AS BIGINT)",
              "count(*) OVER (PARTITION BY o_custkey ORDER BY o_orderdate ASC, o_orderkey ASC ROWS BETWEEN 3 PRECEDING AND 3 FOLLOWING)")} AS sliding_avg_cents
          |FROM (SELECT *, ${centsSql("o_totalprice")} AS price_cents FROM orders)
-         |ORDER BY o_custkey, o_orderkey""".stripMargin,
-    "q22_window_topk_per_group" ->
+         |ORDER BY o_custkey, o_orderkey""".stripMargin),
+    Query("q22_window_topk_per_group", topKPerGroup,
       s"""SELECT n_name, CAST(rn AS INT) AS rn, o_orderkey, price_cents FROM (
          |  SELECT n_name, o_orderkey, price_cents,
          |         row_number() OVER (PARTITION BY n_name
@@ -347,6 +334,6 @@ object Windows {
          |        JOIN customer ON o_custkey = c_custkey
          |        JOIN nation   ON c_nationkey = n_nationkey)
          |) WHERE rn <= 3
-         |ORDER BY n_name, rn""".stripMargin
+         |ORDER BY n_name, rn""".stripMargin)
   )
 }

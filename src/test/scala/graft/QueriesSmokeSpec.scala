@@ -11,8 +11,15 @@ class QueriesSmokeSpec extends SparkSpec {
     assert(SparkEntry.entry(spark).count() > 0)
   }
 
-  test("every oracle key has a matching query") {
-    assert(SparkEntry.oracleSql.keySet.subsetOf(SparkEntry.queries.keySet))
+  test("registry holds 440 distinct names with oracle SQL and rejects a duplicate name") {
+    val names = SparkEntry.declared.map(_.name)
+    assert(names.size === 440)
+    assert(names.distinct.size === 440)
+    assert(SparkEntry.declared.forall(_.oracle.trim.nonEmpty))
+    val q = SparkEntry.declared.head
+    val e = intercept[IllegalArgumentException](
+      SparkEntry.register(Seq(q, SparkEntry.declared(1), q.copy(oracle = "SELECT 1"))))
+    assert(e.getMessage.contains(q.name))
   }
 
   SparkEntry.queries.foreach { case (name, fn) =>
