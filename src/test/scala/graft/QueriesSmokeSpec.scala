@@ -11,6 +11,10 @@ class QueriesSmokeSpec extends SparkSpec {
     assert(SparkEntry.entry(spark).count() > 0)
   }
 
+  test("every oracle key has a matching query") {
+    assert(SparkEntry.oracleSql.keySet.subsetOf(SparkEntry.queries.keySet))
+  }
+
   test("registry holds 440 distinct names with oracle SQL and rejects a duplicate name") {
     val names = SparkEntry.declared.map(_.name)
     assert(names.size === 440)
