@@ -51,8 +51,12 @@ object Bench {
     // plans at the target SF hit the cache).
     val warmDir = "/root/testdata/sf0.001"
     if (new java.io.File(warmDir).isDirectory && warmDir != sfDir)
-      queries.foreach { case (_, fn) =>
-        try exec(fn(spark, warmDir)) catch { case _: Throwable => () }
+      queries.foreach { case (name, fn) =>
+        try exec(fn(spark, warmDir)) catch { case e: Throwable =>
+          val root = org.apache.commons.lang3.exception.ExceptionUtils.getRootCause(e)
+          System.err.println(
+            s"[bench] $name warm-up failed: ${root.getClass.getName}: ${root.getMessage}")
+        }
         Pinned.releaseAll(spark)
       }
     // n timed iterations per query, report the per-query MEDIAN and the

@@ -3,7 +3,14 @@ import org.apache.spark.sql.SparkSession
 
 /** The one SparkSession configuration: every entry point and the test
   * suites start from this builder and add only what differs (app name,
-  * warehouse dir, plan-string width, log level). */
+  * warehouse dir, plan-string width, log level).
+  *
+  * Spark's whole-stage codegen cache gets
+  * [[graft.functions.GraftExtensions.CodegenCacheEntries]] entries from the
+  * extension, not from a `.config` here: the cache is one per JVM and
+  * `withExtensions` sets the size as a JVM default before `getOrCreate`
+  * reads system properties. Override it with a `-D` of Spark's key or a
+  * `.config(...)` on this builder. */
 object GraftSession {
   def builder(cpus: Int): SparkSession.Builder = SparkSession.builder()
     .master(s"local[$cpus]")

@@ -1,6 +1,8 @@
 package graft
 import java.nio.file.{Files, Paths}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import graft.operators.Pinned
+import graft.queries.Graph
 
 /** Optimization-round plan artifacts: write `.explain("formatted")` for the
   * named declared queries (all by default) to <outDir>/<name>_<tag>.txt so
@@ -8,8 +10,15 @@ import graft.operators.Pinned
   *
   *   SPARK_GRAFT_SF_DIR=/root/testdata/sf0.1 SPARK_GRAFT_CPUS=32 \
   *     sbt "runMain graft.PlanDump plans/r19 before q291_reach_sketch_census ..."
+  *
+  * A name may also be one of `subplans`: a part of a query that a plan
+  * guard in PlanAssertionsSpec checks on its own.
   */
 object PlanDump {
+  private val subplans: Map[String, (SparkSession, String) => DataFrame] = Map(
+    // q294/q380's layers: vote rounds 1-2 pinned, round 3 still lazy
+    "lp_vote_round" -> ((s, d) => Graph.lpLayersUnion(s, d, Graph.tradeAdjacency(s, d))))
+
   def main(args: Array[String]): Unit = {
     val outDir = args.headOption.getOrElse("plans/r19")
     val tag = args.drop(1).headOption.getOrElse("before")
@@ -23,7 +32,7 @@ object PlanDump {
     spark.sparkContext.setLogLevel("ERROR")
     Files.createDirectories(Paths.get(outDir))
     names.foreach { n =>
-      val df = SparkEntry.queries(n)(spark, sfDir)
+      val df = (SparkEntry.queries ++ subplans)(n)(spark, sfDir)
       val txt = df.queryExecution.explainString(
         org.apache.spark.sql.execution.FormattedMode)
       Files.writeString(Paths.get(s"$outDir/${n}_$tag.txt"), txt)

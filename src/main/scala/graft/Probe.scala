@@ -1,7 +1,10 @@
 package graft
 import org.apache.spark.scheduler._
+import org.apache.spark.metrics.source.CodegenMetrics
 import graft.operators.Pinned
+import java.lang.management.ManagementFactory
 import java.util.concurrent.atomic.{AtomicInteger, AtomicLong}
+import scala.jdk.CollectionConverters._
 
 /** Optimization-round measurement probe (guide §1): run named queries with
   * the noop sink and decompose wall time into scheduled task work vs
@@ -10,8 +13,12 @@ import java.util.concurrent.atomic.{AtomicInteger, AtomicLong}
   *   SPARK_GRAFT_SF_DIR=/root/testdata/sf0.1 SPARK_GRAFT_CPUS=32 \
   *     sbt "runMain graft.Probe q291_reach_sketch_census ..."
   *
-  * Prints per query: wall seconds (median of SPARK_GRAFT_PROBE_ITERS, def 3),
-  * jobs, stages, tasks, summed task time, summed GC time, shuffle bytes.
+  * Each query first runs one untimed iteration at the timed scale factor,
+  * then SPARK_GRAFT_PROBE_ITERS (def 3) timed ones. Prints per query the
+  * median across the timed iterations of: wall seconds, whole-stage codegen
+  * classes compiled, jobs, stages, tasks, summed task time, summed GC time,
+  * shuffle bytes. The last line gives the classes compiled over the whole
+  * run, the codegen cache size, and heap after a full GC and metaspace.
   */
 object Probe {
   private class Acc extends SparkListener {
@@ -56,28 +63,38 @@ object Probe {
     def run(n: String): Unit =
       SparkEntry.queries(n)(spark, sfDir)
         .write.mode("overwrite").format("noop").save()
-    // warm once at sf0.001 for codegen/JIT
+    def compiles: Long = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    println(f"${"query"}%-38s ${"wall_s"}%7s ${"compiles"}%8s ${"jobs"}%5s ${"stg"}%5s ${"tasks"}%6s ${"task_s"}%8s ${"gc_s"}%6s ${"shufMB"}%7s")
     names.foreach { n =>
-      try SparkEntry.queries(n)(spark, "/root/testdata/sf0.001")
-        .write.mode("overwrite").format("noop").save()
-      catch { case _: Throwable => () }
-      Pinned.releaseAll(spark)
-    }
-    println(f"${"query"}%-38s ${"wall_s"}%7s ${"jobs"}%5s ${"stg"}%5s ${"tasks"}%6s ${"task_s"}%8s ${"gc_s"}%6s ${"shufMB"}%7s")
-    names.foreach { n =>
-      val walls = (1 to iters).map { _ =>
+      try run(n) catch { case e: Throwable =>
+        val root = org.apache.commons.lang3.exception.ExceptionUtils.getRootCause(e)
+        System.err.println(
+          s"[probe] $n warm-up failed: ${root.getClass.getName}: ${root.getMessage}")
+      }
+      val samples = (1 to iters).map { _ =>
         Pinned.releaseAll(spark)
         Thread.sleep(50)
         acc.reset()
+        val c0 = compiles
         val t0 = System.nanoTime()
         run(n)
-        (System.nanoTime() - t0) / 1e9
+        Seq((System.nanoTime() - t0) / 1e9, (compiles - c0).toDouble,
+          acc.jobs.get.toDouble, acc.stages.get.toDouble, acc.tasks.get.toDouble,
+          acc.taskMs.get / 1e3, acc.gcMs.get / 1e3, (acc.shufR.get + acc.shufW.get) / 1e6)
       }
-      val wall = walls.sorted.apply(iters / 2)
-      println(f"$n%-38s $wall%7.2f ${acc.jobs.get}%5d ${acc.stages.get}%5d " +
-        f"${acc.tasks.get}%6d ${acc.taskMs.get / 1e3}%8.2f ${acc.gcMs.get / 1e3}%6.2f " +
-        f"${(acc.shufR.get + acc.shufW.get) / 1e6}%7.1f")
+      val Seq(wall, comp, jobs, stages, tasks, taskS, gcS, shufMb) =
+        samples.transpose.map(_.sorted.apply(iters / 2))
+      println(f"$n%-38s $wall%7.2f $comp%8.0f $jobs%5.0f $stages%5.0f " +
+        f"$tasks%6.0f $taskS%8.2f $gcS%6.2f $shufMb%7.1f")
+      Pinned.releaseAll(spark)
     }
+    System.gc()
+    val heapMb = ManagementFactory.getMemoryMXBean.getHeapMemoryUsage.getUsed / 1e6
+    val metaMb = ManagementFactory.getMemoryPoolMXBeans.asScala
+      .filter(_.getName == "Metaspace").map(_.getUsage.getUsed).sum / 1e6
+    println(f"codegen classes compiled $compiles, cache " +
+      f"${spark.conf.get(graft.functions.GraftExtensions.CodegenCacheKey)} entries, " +
+      f"heap after GC $heapMb%.0f MB, metaspace $metaMb%.0f MB")
     spark.stop()
   }
 }

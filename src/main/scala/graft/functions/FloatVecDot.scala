@@ -86,19 +86,52 @@ case class FloatVecDot(left: Expression, right: Expression)
     copy(left = newLeft, right = newRight)
 }
 
-/** Registration for graft's native expressions.
+/** Registration for graft's native expressions, and the JVM's codegen
+  * cache size.
   *
   * Configure with `.withExtensions(new GraftExtensions)` (or
   * `spark.sql.extensions=graft.functions.GraftExtensions`); callers that
   * may run in a foreign session should dispatch through
   * [[graft.operators.VectorOps.dot]], which falls back to the HOF
   * formulation when the function isn't registered.
+  *
+  * Applying the extension also sizes Spark's whole-stage codegen cache to
+  * [[GraftExtensions.CodegenCacheEntries]] unless the JVM already names a
+  * size. That cache is one per JVM, sized once from the active session's
+  * conf when `CodeGenerator` initializes, so the size is a JVM default:
+  * `withExtensions` runs before `getOrCreate` builds its `SparkConf`,
+  * which reads `spark.*` system properties. An explicit `-D` or builder
+  * `.config(...)` of the same key still wins. Installing the extension
+  * through `spark.sql.extensions` applies it after the `SparkConf` is
+  * built, too late to size the cache.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
+    System.getProperties.putIfAbsent(
+      GraftExtensions.CodegenCacheKey, GraftExtensions.CodegenCacheEntries.toString)
     GraftFunctions.descriptors.foreach(ext.injectFunction)
     ext.injectPlannerStrategy(_ => graft.plans.CosineTopKStrategy)
   }
+}
+
+object GraftExtensions {
+  private[graft] val CodegenCacheKey = "spark.sql.codegen.cache.maxEntries"
+
+  /** Room for every class the 440 declared queries generate, so a pass
+    * over any mix of them, up to the whole suite, compiles only the
+    * classes a query generates afresh on each run.
+    * Spark's default of 100 is fewer than one benchmark workload cycles
+    * through (~130 classes on query-floor, ~159 on iterative-loops), so
+    * its LRU missed on every access and each pass recompiled.
+    *
+    * Measured with `graft.Probe` over all 440 queries at sf0.01 (one warm
+    * and one timed run each, local[4], -Xmx3g): 6,625 distinct classes,
+    * 326 of them regenerated by the timed runs of 49 queries. Holding all
+    * of them left 411 MB of heap after a full GC and 289 MB of metaspace,
+    * against 206 MB and 235 MB with 100 entries (which compiled 11,478).
+    * So a full cache costs ~31 KB of heap and ~8 KB of metaspace a class,
+    * about 250 MB of heap at 8192 entries. */
+  val CodegenCacheEntries = 8192
 }
 
 object GraftFunctions {

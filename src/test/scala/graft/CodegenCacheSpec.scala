@@ -1,0 +1,48 @@
+package graft
+
+import org.apache.spark.metrics.source.CodegenMetrics
+import org.apache.spark.sql.SparkSessionExtensions
+import graft.functions.GraftExtensions
+import graft.operators.Pinned
+
+/** The codegen cache GraftExtensions sizes: a repeated query finds every
+  * generated class it needs, and an explicit size is never overridden. */
+class CodegenCacheSpec extends SparkSpec {
+  import GraftExtensions.{CodegenCacheEntries, CodegenCacheKey}
+
+  test("the session's codegen cache size is the declared constant") {
+    assert(spark.conf.get(CodegenCacheKey) === CodegenCacheEntries.toString)
+  }
+
+  test("a second build-and-collect of q174 then q294 compiles no new classes") {
+    // The iterative-loops pair: with Spark's default 100-entry cache every
+    // pass recompiles 159 of its 164 classes. q294 alone, 92 classes at
+    // this scale factor, would still fit.
+    def compiles: Long = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    def pass(): Long = {
+      val c0 = compiles
+      Seq("q174_cluster_survivorship", "q294_label_propagation").foreach { q =>
+        SparkEntry.queries(q)(spark, sfDir).collect()
+        Pinned.releaseAll(spark)
+      }
+      compiles - c0
+    }
+    pass()
+    assert(pass() === 0L)
+  }
+
+  test("GraftExtensions sets the cache size only when the JVM names none") {
+    val before = sys.props.get(CodegenCacheKey)
+    try {
+      sys.props -= CodegenCacheKey
+      new GraftExtensions()(new SparkSessionExtensions)
+      assert(sys.props.get(CodegenCacheKey) === Some(CodegenCacheEntries.toString))
+      sys.props(CodegenCacheKey) = "123"
+      new GraftExtensions()(new SparkSessionExtensions)
+      assert(sys.props.get(CodegenCacheKey) === Some("123"))
+    } finally before match {
+      case Some(v) => sys.props(CodegenCacheKey) = v
+      case None => sys.props -= CodegenCacheKey
+    }
+  }
+}

@@ -18,6 +18,10 @@ object TestSpark {
 }
 
 abstract class SparkSpec extends AnyFunSuite {
-  lazy val spark: SparkSession = TestSpark.spark
+  // Strict, so the first suite built starts the session before any test
+  // can run codegen: Spark sizes its JVM-wide codegen cache when the
+  // CodeGenerator class initializes, from the session GraftExtensions
+  // configured.
+  val spark: SparkSession = TestSpark.spark
   val sfDir: String = TestSpark.sfDir
 }
