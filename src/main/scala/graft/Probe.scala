@@ -1,7 +1,7 @@
 package graft
 import org.apache.spark.scheduler._
 import org.apache.spark.metrics.source.CodegenMetrics
-import graft.operators.Pinned
+import graft.operators.{Fixpoint, Pinned}
 import java.lang.management.ManagementFactory
 import java.util.concurrent.atomic.{AtomicInteger, AtomicLong}
 import scala.jdk.CollectionConverters._
@@ -13,12 +13,16 @@ import scala.jdk.CollectionConverters._
   *   SPARK_GRAFT_SF_DIR=/root/testdata/sf0.1 SPARK_GRAFT_CPUS=32 \
   *     sbt "runMain graft.Probe q291_reach_sketch_census ..."
   *
-  * Each query first runs one untimed iteration at the timed scale factor,
-  * then SPARK_GRAFT_PROBE_ITERS (def 3) timed ones. Prints per query the
+  * Every named query first runs one untimed iteration at the timed scale
+  * factor, before any is timed, so no query pays the JVM's first-run cost
+  * for its position in the argument list. Then each runs
+  * SPARK_GRAFT_PROBE_ITERS (def 3) timed iterations. Prints per query the
   * median across the timed iterations of: wall seconds, whole-stage codegen
   * classes compiled, jobs, stages, tasks, summed task time, summed GC time,
-  * shuffle bytes. The last line gives the classes compiled over the whole
-  * run, the codegen cache size, and heap after a full GC and metaspace.
+  * shuffle bytes; then, for each min-label fixpoint the last iteration ran
+  * ([[graft.operators.Fixpoint.Run]]), `path:edgeRows:rounds`. The last
+  * line gives the classes compiled over the whole run, the codegen cache
+  * size, and heap after a full GC and metaspace.
   */
 object Probe {
   private class Acc extends SparkListener {
@@ -64,28 +68,36 @@ object Probe {
       SparkEntry.queries(n)(spark, sfDir)
         .write.mode("overwrite").format("noop").save()
     def compiles: Long = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
-    println(f"${"query"}%-38s ${"wall_s"}%7s ${"compiles"}%8s ${"jobs"}%5s ${"stg"}%5s ${"tasks"}%6s ${"task_s"}%8s ${"gc_s"}%6s ${"shufMB"}%7s")
     names.foreach { n =>
       try run(n) catch { case e: Throwable =>
         val root = org.apache.commons.lang3.exception.ExceptionUtils.getRootCause(e)
         System.err.println(
           s"[probe] $n warm-up failed: ${root.getClass.getName}: ${root.getMessage}")
       }
+      Pinned.releaseAll(spark)
+    }
+    println(f"${"query"}%-38s ${"wall_s"}%7s ${"compiles"}%8s ${"jobs"}%5s ${"stg"}%5s ${"tasks"}%6s ${"task_s"}%8s ${"gc_s"}%6s ${"shufMB"}%7s fixpoints")
+    names.foreach { n =>
+      var loops = Seq.empty[Fixpoint.Run]
       val samples = (1 to iters).map { _ =>
         Pinned.releaseAll(spark)
         Thread.sleep(50)
         acc.reset()
         val c0 = compiles
+        Fixpoint.drainRuns()
         val t0 = System.nanoTime()
         run(n)
-        Seq((System.nanoTime() - t0) / 1e9, (compiles - c0).toDouble,
+        val wallS = (System.nanoTime() - t0) / 1e9
+        loops = Fixpoint.drainRuns()
+        Seq(wallS, (compiles - c0).toDouble,
           acc.jobs.get.toDouble, acc.stages.get.toDouble, acc.tasks.get.toDouble,
           acc.taskMs.get / 1e3, acc.gcMs.get / 1e3, (acc.shufR.get + acc.shufW.get) / 1e6)
       }
       val Seq(wall, comp, jobs, stages, tasks, taskS, gcS, shufMb) =
         samples.transpose.map(_.sorted.apply(iters / 2))
       println(f"$n%-38s $wall%7.2f $comp%8.0f $jobs%5.0f $stages%5.0f " +
-        f"$tasks%6.0f $taskS%8.2f $gcS%6.2f $shufMb%7.1f")
+        f"$tasks%6.0f $taskS%8.2f $gcS%6.2f $shufMb%7.1f " +
+        loops.map(r => s"${r.path}:${r.edgeRows}:${r.rounds}").mkString(","))
       Pinned.releaseAll(spark)
     }
     System.gc()

@@ -1,22 +1,62 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.functions.{coalesce, col, lit, min, sum}
-import org.apache.spark.sql.types.DecimalType
+import org.apache.spark.sql.types.{DataType, DecimalType, IntegerType, LongType, StructField, StructType}
+import scala.jdk.CollectionConverters._
 
 /** Connected components by min-label propagation — the one loop behind
   * q76/q174/q328 (LSH near-dup clusters), q345/q361 (DBSCAN cores) and
-  * q359 (entity canonicalization). Each round sets label(v) to the min
-  * label over {v} ∪ neighbors(v), optionally followed by one pointer jump
-  * label(v) ← label(label(v)). The fixpoint is unique (every component
-  * carries its minimum node id), so the round shape changes only the round
-  * count, never the result. */
+  * q359 (entity canonicalization). The fixpoint is unique (every component
+  * carries its minimum node id), so how it is reached changes only the
+  * cost, never the result. Two paths reach it:
+  *
+  *  - local: when the self-looped edge relation holds at most
+  *    [[LocalRows]] rows, one job gathers it and a min-id union-find on the
+  *    driver finishes; the labels come back as a local frame.
+  *  - distributed: otherwise each round sets label(v) to the min label
+  *    over {v} ∪ neighbors(v), optionally followed by one pointer jump
+  *    label(v) ← label(label(v)), until the labels stop falling.
+  *
+  * Each call appends a [[Fixpoint.Run]] (path, edge rows, rounds) that
+  * [[graft.Probe]] reads back with [[Fixpoint.drainRuns]]. */
 object Fixpoint {
 
   private val D38 = DecimalType(38, 0)
 
+  /** The most self-looped edge rows the local path gathers. The bound is a
+    * driver-heap budget: a gathered row is two longs (16 B) and its node
+    * costs ~150 B more on the way back (ids, union-find parent, the `Row`
+    * and its `LocalRelation` copy), so 250,000 rows hold under ~45 MB of
+    * driver heap. */
+  val LocalRows: Int = 250000
+
+  /** One call: `path` is "local" or "distributed"; `edgeRows` the
+    * self-looped edge rows gathered (more than the bound when the relation
+    * was too large, -1 when nothing was gathered); `rounds` the distributed
+    * rounds (0 on the local path). */
+  case class Run(path: String, edgeRows: Long, rounds: Int)
+
+  private val KeptRuns = 64
+  private val runs = scala.collection.mutable.Queue.empty[Run]
+
+  private def record(r: Run): Unit = runs.synchronized {
+    runs.enqueue(r)
+    if (runs.size > KeptRuns) runs.dequeue()
+  }
+
+  /** The runs recorded since the last drain, oldest first (at most 64). */
+  def drainRuns(): Seq[Run] = runs.synchronized(runs.dequeueAll(_ => true).toSeq)
+
   /** `edges(src, dst)` must be symmetric and `nodes(node)` must hold every
-    * endpoint; the kernel adds the self-loops. Returns `(node, lab)`.
+    * endpoint; the kernel adds the self-loops. Returns `(node, lab)`. */
+  def minLabel(edges: DataFrame, nodes: DataFrame, jump: Boolean): DataFrame =
+    minLabel(edges, nodes, jump, LocalRows)
+
+  /** [[minLabel]] with the local bound as a parameter: 0 always runs the
+    * distributed rounds, `Int.MaxValue` always finishes on the driver.
+    * Only int and bigint node ids take the local path.
     *
     * Gate: the label sum as decimal(38,0), monotone decreasing and
     * wrap-free (a BIGINT sum wraps at ~10 max-long labels, and a wrapped
@@ -26,11 +66,12 @@ object Fixpoint {
     *
     * `jump` is valid for every caller (self-loops make every label a node
     * with a row) but costs one more join and exchange per round. Measured
-    * with `graft.Probe`, sf0.1, 4 cores: q345's long core chains need 91
-    * Spark jobs with it and 136 without; q76/q174/q359 (cliques and short
-    * chains) converge in the same rounds either way, so it only adds jobs
-    * (26/29/33 against 23/27/30; q76 2.65–2.95 s against 1.82–2.17 s).
-    * Each call site fixes `jump` for its graph shape.
+    * with `graft.Probe`, sf0.1, 4 cores, all rounds distributed: q345's
+    * long core chains need 91 Spark jobs with it and 136 without;
+    * q76/q174/q359 (cliques and short chains) converge in the same rounds
+    * either way, so it only adds jobs (26/29/33 against 23/27/30; q76
+    * 2.65–2.95 s against 1.82–2.17 s). Each call site fixes `jump` for its
+    * graph shape.
     *
     * Measured SLOWER, kept out: fusing the sum into the checkpoint job as
     * an Observation metric (the listener bus delivers it ~100 ms late per
@@ -40,22 +81,86 @@ object Fixpoint {
     * runs every round at the static partition width instead of ~1 task);
     * a second jump per round on q345 (its pin costs more than the ~3
     * rounds it saves). */
-  def minLabel(edges: DataFrame, nodes: DataFrame, jump: Boolean): DataFrame = {
+  private[graft] def minLabel(edges: DataFrame, nodes: DataFrame, jump: Boolean,
+      localRows: Int): DataFrame = {
     val ed = edges.select(col("src"), col("dst"))
       .unionByName(nodes.select(col("node").as("src"), col("node").as("dst")))
-    var labels = nodes.select(col("node"), col("node").as("lab"))
-      .localCheckpoint(eager = false)
-    def labelSum(): java.math.BigDecimal = labels
-      .agg(coalesce(sum(col("lab").cast(D38)), lit(BigDecimal(0)).cast(D38)))
-      .head.getDecimal(0)
-    var prevSum: java.math.BigDecimal = null
-    var curSum = labelSum()
-    while (prevSum == null || curSum.compareTo(prevSum) < 0) {
-      labels = round(ed, labels, jump).localCheckpoint(eager = false)
-      prevSum = curSum
-      curSum = labelSum()
+    val nodeType = nodes.schema("node").dataType
+    val gathered =
+      if (localRows <= 0 || (nodeType != IntegerType && nodeType != LongType)) None
+      else Some(gather(ed, localRows, nodeType == IntegerType))
+    gathered match {
+      case Some(pairs) if pairs.length / 2 <= localRows =>
+        record(Run("local", pairs.length / 2, 0))
+        unionFind(ed, pairs, nodeType)
+      case _ =>
+        var labels = nodes.select(col("node"), col("node").as("lab"))
+          .localCheckpoint(eager = false)
+        def labelSum(): java.math.BigDecimal = labels
+          .agg(coalesce(sum(col("lab").cast(D38)), lit(BigDecimal(0)).cast(D38)))
+          .head.getDecimal(0)
+        var rounds = 0
+        var prevSum: java.math.BigDecimal = null
+        var curSum = labelSum()
+        while (prevSum == null || curSum.compareTo(prevSum) < 0) {
+          labels = round(ed, labels, jump).localCheckpoint(eager = false)
+          rounds += 1
+          prevSum = curSum
+          curSum = labelSum()
+        }
+        record(Run("distributed", gathered.fold(-1L)(_.length / 2L), rounds))
+        labels
     }
-    labels
+  }
+
+  /** The first `bound + 1` self-looped edges with both ends set, as
+    * interleaved (src, dst) ids, in one job: each task ships at most
+    * `bound + 1` pairs and the driver stops keeping results once it holds
+    * more than `bound`. (A `limit` + `collect` runs several jobs as it
+    * scales up the partitions it reads, and its whole-stage code missed
+    * the codegen cache on every run.) */
+  private def gather(ed: DataFrame, bound: Int, int: Boolean): Array[Long] = {
+    val cap = if (bound == Int.MaxValue) bound else bound + 1
+    val parts = scala.collection.mutable.ArrayBuffer.empty[Array[Long]]
+    var kept = 0L
+    val rdd = ed.queryExecution.toRdd
+    ed.sparkSession.sparkContext.runJob(rdd, (rows: Iterator[InternalRow]) => {
+      val out = Array.newBuilder[Long]
+      var n = 0
+      while (n < cap && rows.hasNext) {
+        val r = rows.next()
+        if (!r.isNullAt(0) && !r.isNullAt(1)) {
+          if (int) { out += r.getInt(0); out += r.getInt(1) }
+          else { out += r.getLong(0); out += r.getLong(1) }
+          n += 1
+        }
+      }
+      out.result()
+    }, (_: Int, part: Array[Long]) =>
+      if (kept <= bound) { parts += part; kept += part.length / 2 })
+    parts.flatten.toArray
+  }
+
+  /** Min-id union-find over the gathered (src, dst) pairs: ids are indexed
+    * in ascending order and a union always links the larger root under the
+    * smaller, so every root is its set's minimum id. */
+  private def unionFind(ed: DataFrame, pairs: Array[Long], nodeType: DataType): DataFrame = {
+    val ids = pairs.distinct.sorted
+    def at(v: Long): Int = java.util.Arrays.binarySearch(ids, v)
+    val parent = Array.tabulate(ids.length)(identity)
+    def find(i: Int): Int = {
+      var x = i
+      while (parent(x) != x) { parent(x) = parent(parent(x)); x = parent(x) }
+      x
+    }
+    for (e <- pairs.indices by 2) {
+      val (ra, rb) = (find(at(pairs(e))), find(at(pairs(e + 1))))
+      if (ra < rb) parent(rb) = ra else if (rb < ra) parent(ra) = rb
+    }
+    val box: Long => Any = if (nodeType == IntegerType) _.toInt else identity
+    val out = ids.indices.map(i => Row(box(ids(i)), box(ids(find(i)))))
+    ed.sparkSession.createDataFrame(out.asJava, StructType(Seq(
+      StructField("node", nodeType), StructField("lab", nodeType))))
   }
 
   /** One round over the self-looped edges `ed`: a keyed `min` over the

@@ -1,15 +1,24 @@
 package graft.operators
 
 import org.apache.spark.sql.Column
+import org.apache.spark.sql.classic.GraftPlanBridgeImpl.mapExpr
 import org.apache.spark.sql.functions._
+
+import graft.functions.{LshBands, MinhashSignature, ShingleDigests, TokenDigests}
 
 /** Text / dedup column operators for the LLM-data-pipeline surface.
   *
-  * Everything here is built from Catalyst higher-order functions (transform/
-  * aggregate/filter) and md5 — no UDFs, no codegen barriers, and every
-  * operator is a pure per-row projection: at 100 TB these run map-side at
-  * scan speed; only the downstream groupBy/join (dedup bucketing, candidate
-  * pairing) shuffles, and it shuffles *short digests*, never the documents.
+  * Every operator is a pure per-row projection: at 100 TB these run
+  * map-side at scan speed; only the downstream groupBy/join (dedup
+  * bucketing, candidate pairing) shuffles, and it shuffles *short
+  * digests*, never the documents. The MinHash-LSH key path
+  * ([[tokenHashes]], [[shingleHashes3]], [[shingleHashes2]],
+  * [[minhashSignature]], [[lshBands]]) is graft's own compiled kernel
+  * ([[graft.functions.MinhashKernel]]), so it stays inside whole-stage
+  * codegen. The rest are built from Catalyst built-ins; the higher-order
+  * functions among them (`transform`/`aggregate`/`filter` in
+  * [[wordShingles]], [[simhash16]], [[markerHits]]) are `CodegenFallback`,
+  * interpreted per row.
   *
   * Determinism: "random" hash functions are md5 with an integer seed prefix,
   * and min-hash minimizes the hex *string* — portable bit-for-bit to any
@@ -48,9 +57,7 @@ object TextOps {
     * Computed ONCE per shingle (bind it with `withColumn` before fanning out
     * to the hash family) — hashing is the per-row hot loop at corpus scale.
     */
-  def shingleHashes(shingles: Column): Column =
-    transform(shingles, sh =>
-      conv(substring(md5(sh), 1, 10), 16, 10).cast("long"))
+  def shingleHashes(shingles: Column): Column = tokenHashes(shingles)
 
   /** Polynomial-combine constants for 3-token shingle digests; with 40-bit
     * token digests, h1*C1 + h2*C2 + h3 < 2^61 — exact BIGINT everywhere. */
@@ -58,8 +65,7 @@ object TextOps {
   val ShingleC2: Long = 10007L
 
   /** 40-bit digest per token (first 10 md5 hex chars as an integer). */
-  def tokenHashes(toks: Column): Column =
-    transform(toks, t => conv(substring(md5(t), 1, 10), 16, 10).cast("long"))
+  def tokenHashes(toks: Column): Column = mapExpr(toks)(TokenDigests(_))
 
   /** 3-token shingle digests straight from token digests — one md5 per
     * TOKEN and three integer ops per shingle, instead of building the
@@ -68,44 +74,29 @@ object TextOps {
     * polynomial rolling is the difference between CPU-bound and scan-bound.
     */
   def shingleHashes3(tokenDigests: Column): Column =
-    // Guarded like wordShingles: <3 tokens → empty array, matching the
-    // DuckDB twin (range(1, n) with n <= 1 is empty there).
-    when(size(tokenDigests) >= 3,
-      transform(sequence(lit(1), size(tokenDigests) - 2), i =>
-        (element_at(tokenDigests, i) * lit(ShingleC1)
-          + element_at(tokenDigests, i + 1) * lit(ShingleC2)
-          + element_at(tokenDigests, i + 2)) % lit(MinhashPrime)))
-      .otherwise(array().cast("array<bigint>"))
+    // <3 tokens → empty array, matching the DuckDB twin (range(1, n) with
+    // n <= 1 is empty there); a null array → empty array too.
+    mapExpr(tokenDigests)(ShingleDigests(_, 3))
 
   /** 2-token shingle (bigram) digests from token digests — same integer
     * polynomial scheme as [[shingleHashes3]] (h1*C1 + h2 < 2^61, exact
     * BIGINT everywhere), for repetition metrics where the unit of
     * repetition is the word pair. */
   def shingleHashes2(tokenDigests: Column): Column =
-    when(size(tokenDigests) >= 2,
-      transform(sequence(lit(1), size(tokenDigests) - 1), i =>
-        (element_at(tokenDigests, i) * lit(ShingleC1)
-          + element_at(tokenDigests, i + 1)) % lit(MinhashPrime)))
-      .otherwise(array().cast("array<bigint>"))
+    mapExpr(tokenDigests)(ShingleDigests(_, 2))
 
   /** MinHash signature from pre-computed shingle digests: element j is
     * min((a_j * h + b_j) mod p) over the digests — 12 passes of cheap
     * integer arithmetic instead of 12 md5 evaluations per shingle. */
   def minhashSignature(hashes: Column, numHashes: Int): Column =
-    array((0 until numHashes).map(j =>
-      array_min(transform(hashes, h =>
-        (lit(MinhashA(j)) * h + lit(MinhashB(j))) % lit(MinhashPrime)))): _*)
+    mapExpr(hashes)(MinhashSignature(_, numHashes))
 
   /** LSH band keys: md5 over each band of `rowsPerBand` signature entries
     * (comma-joined — unambiguous for variable-width integers). Returns
     * array<struct<band:int, bkey:string>> ready to explode; docs sharing
     * any (band, bkey) are near-dup candidates. */
   def lshBands(sig: Column, bands: Int, rowsPerBand: Int): Column =
-    transform(sequence(lit(0), lit(bands - 1)), b =>
-      struct(
-        b.as("band"),
-        md5(concat_ws(",", transform(sequence(lit(1), lit(rowsPerBand)), r =>
-          element_at(sig, b * rowsPerBand + r).cast("string")))).as("bkey")))
+    mapExpr(sig)(LshBands(_, bands, rowsPerBand))
 
   /** 16-bit SimHash over the low bits of 40-bit token digests, as a
     * '0'/'1' string. Bit j is the sign of sum over tokens of ±1 by digest

@@ -328,7 +328,7 @@ object LlmOps {
   /** The (doc_id, band, bkey) pipeline of [[lshKeyed]] over an arbitrary
     * documents slice — shared with [[incrementalLshDedup]], whose index
     * and batch sides key different slices of the same table. */
-  private def lshKeys(docs: DataFrame): DataFrame = {
+  private[graft] def lshKeys(docs: DataFrame): DataFrame = {
     import docs.sparkSession.implicits._
     docs
       .withColumn("toks", TextOps.tokens($"text"))
@@ -1375,8 +1375,8 @@ object LlmOps {
     // shape: ONE doc-keyed exchange, then a single WindowExec computes
     // min/rightmost-pos/frame-count over the [i, i+w-1] frame — all
     // codegen, all per-doc (pid-keyed, plan-hygiene clean).
-    // The digest pipeline is interpreted (HOFs never codegen) and MUST
-    // run exactly once: repartition the raw text by doc_id first (the
+    // The digest pipeline (md5 per token) MUST run exactly once:
+    // repartition the raw text by doc_id first (the
     // fixture ships documents as ONE parquet file, so hashing before an
     // exchange would run single-task — at production scale the scan is
     // file-parallel and this exchange is skippable), hash + explode once
@@ -2588,10 +2588,11 @@ object LlmOps {
     import s.implicits._
     import graft.operators.TextOps.{MinhashA, MinhashB, MinhashPrime}
     // Two landmines, both measured on this query at sf0.1:
-    // (1) th MUST be its own column (the q41 chain): composing
-    //     shingleHashes3(tokenHashes(toks)) inline duplicates the md5
-    //     transform five times in one tree — CSE can't hoist it out of
-    //     the shingle lambda, so every shingle re-digests the document.
+    // (1) th is its own column (the q41 chain). With the old
+    //     higher-order shingle chain an inline
+    //     shingleHashes3(tokenHashes(toks)) re-digested the document per
+    //     shingle; the compiled kernel reads its input once, and the
+    //     bound column keeps the digests computed once per row.
     // (2) explode_outer, NOT explode (the q43 lesson): a plain explode
     //     lets InferFiltersFromGenerate add `size(hs) > 0`, which
     //     pushdown rewrites in terms of text BELOW the projections —
@@ -4212,11 +4213,10 @@ object LlmOps {
     * 3-chain query paid ~6 tokenize passes and 2 md5 token-hash passes
     * over the corpus; the pin trades one corpus-sized local write+read
     * for all of them (tokenize once, hash once, scan once). `th` is
-    * bound as its OWN column before [[TextOps.shingleHashes2]] — the
-    * multi-reference projection barrier that keeps the digest pipeline
-    * from re-evaluating per array element (the q43/q325 O(tokens²)
-    * lesson). Results are unchanged: every chain applies the same
-    * expressions it previously applied directly to the scan.
+    * bound as its OWN column before [[TextOps.shingleHashes2]], so the
+    * digests are computed once per row. Results are unchanged: every
+    * chain applies the same expressions it previously applied directly
+    * to the scan.
     *
     * This is the repo's one CORPUS-SIZED pin (toks + digests per doc) —
     * the local-checkpoint executor-loss caveat and the
@@ -6809,14 +6809,10 @@ object LlmOps {
     * nb = 0, score = 0 (vote = drop). */
   private def qfPerDocScores(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    // th MUST be bound as a column, never composed inline into
-    // shingleHashes2: the shingle lambda references its argument three
-    // times, and an inline tokenHashes tree would be duplicated into the
-    // lambda body and re-evaluated per ELEMENT — O(tokens²) md5, measured
-    // 38 s vs 2 s on the 5 000-doc fixture. As a bound attribute the
-    // multi-reference rule keeps the projection barrier (CollapseProject
-    // only inlines single-use/cheap exprs) and the digest array
-    // materializes once per row — the q43 lesson, scoring-pass edition.
+    // th is bound as a column before shingleHashes2. Under the old
+    // higher-order shingle chain an inline tokenHashes tree was
+    // re-evaluated per ELEMENT (O(tokens²) md5, 38 s vs 2 s on the
+    // 5 000-doc fixture); the compiled kernel reads its input once.
     qfPerDocScoresFrom(Tables.documents(s, dir)
       .withColumn("th", TextOps.tokenHashes(TextOps.tokens($"text")))
       .withColumn("bgs", TextOps.shingleHashes2($"th"))

@@ -5755,11 +5755,52 @@ class OperatorPropertiesSpec extends SparkSpec {
       (Seq(1L, 2L, 3L, 40L), Seq(3L -> 2L)),                       // isolated nodes
       (Seq(8L, 3L, 6L, 1L, 4L), Seq(8L -> 3L, 3L -> 6L, 4L -> 1L)), // two components
       (chain, chain.zip(chain.tail)))
-    for ((ids, es) <- fixed ++ samples(random, 8); jump <- Seq(false, true)) {
+    // bound 0: every round distributed; Int.MaxValue: finished on the driver
+    for ((ids, es) <- fixed ++ samples(random, 8); jump <- Seq(false, true);
+         bound <- Seq(0, Int.MaxValue)) {
       val sym = (es ++ es.map(_.swap)).distinct
-      val got = Fixpoint.minLabel(sym.toDF("src", "dst"), ids.toDF("node"), jump)
+      val got = Fixpoint.minLabel(sym.toDF("src", "dst"), ids.toDF("node"), jump, bound)
         .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-      assert(got === unionFind(ids, es), s"nodes=$ids edges=$es jump=$jump")
+      assert(got === unionFind(ids, es), s"nodes=$ids edges=$es jump=$jump bound=$bound")
     }
+  }
+
+  test("Fixpoint.minLabel keeps int and bigint node types and an empty node set on both paths") {
+    import graft.operators.Fixpoint
+    import org.apache.spark.sql.types.{IntegerType, LongType}
+    val es = Seq(7 -> 3, 3 -> 9, 20 -> 11)
+    val expect = Map(3 -> 3, 7 -> 3, 9 -> 3, 11 -> 11, 20 -> 11, 40 -> 40)
+    for (bound <- Seq(0, Fixpoint.LocalRows, Int.MaxValue)) {
+      Fixpoint.drainRuns()
+      val sym = es ++ es.map(_.swap)
+      val ints = Fixpoint.minLabel(sym.toDF("src", "dst"),
+        expect.keys.toSeq.toDF("node"), jump = false, bound)
+      assert(ints.schema.map(_.dataType) === Seq(IntegerType, IntegerType), s"bound=$bound")
+      assert(ints.collect().map(r => r.getInt(0) -> r.getInt(1)).toMap === expect)
+      val longs = Fixpoint.minLabel(
+        sym.map { case (a, b) => (a.toLong, b.toLong) }.toDF("src", "dst"),
+        expect.keys.toSeq.map(_.toLong).toDF("node"), jump = true, bound)
+      assert(longs.schema.map(_.dataType) === Seq(LongType, LongType), s"bound=$bound")
+      assert(longs.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap ===
+        expect.map { case (k, v) => k.toLong -> v.toLong })
+      val none = Fixpoint.minLabel(Seq.empty[(Long, Long)].toDF("src", "dst"),
+        Seq.empty[Long].toDF("node"), jump = false, bound)
+      assert(none.schema.map(_.dataType) === Seq(LongType, LongType))
+      assert(none.collect().isEmpty, s"bound=$bound")
+      // 6 nodes + 6 directed edges = 12 self-looped edge rows per graph
+      val path = if (bound == 0) "distributed" else "local"
+      val runs = Fixpoint.drainRuns()
+      assert(runs.map(_.path) === Seq(path, path, path), s"bound=$bound")
+      assert(runs.map(_.edgeRows) ===
+        (if (bound == 0) Seq(-1L, -1L, -1L) else Seq(12L, 12L, 0L)))
+      assert(runs.forall(r => (r.rounds == 0) == (path == "local")), runs)
+    }
+    // one row over the bound: gathered, then finished by distributed rounds
+    val sym = es ++ es.map(_.swap)
+    val over = Fixpoint.minLabel(sym.toDF("src", "dst"), expect.keys.toSeq.toDF("node"),
+      jump = false, 11)
+    assert(over.collect().map(r => r.getInt(0) -> r.getInt(1)).toMap === expect)
+    val run = Fixpoint.drainRuns()
+    assert(run.map(r => (r.path, r.edgeRows)) === Seq(("distributed", 12L)), run)
   }
 }

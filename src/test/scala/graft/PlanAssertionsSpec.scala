@@ -185,8 +185,11 @@ class PlanAssertionsSpec extends SparkSpec {
       val filterConds = plan.collect {
         case f: org.apache.spark.sql.execution.FilterExec => f.condition.toString
       }
-      assert(!filterConds.exists(_.contains("md5")),
-        s"$n has md5 inside a Filter: $filterConds")
+      // md5 and the compiled MinHash kernel (graft_token_digests, ...)
+      val hashing = Seq("md5", "graft_token_digests", "graft_shingle",
+        "graft_minhash_signature", "graft_lsh_bands")
+      assert(!filterConds.exists(c => hashing.exists(c.contains)),
+        s"$n has digest hashing inside a Filter: $filterConds")
     }
   }
 
@@ -909,5 +912,24 @@ class PlanAssertionsSpec extends SparkSpec {
     assert(aggs.head.groupingExpressions.flatMap(_.references).map(_.name) ===
       Seq("vnode"))
     assert(plan.collect { case w: Window => w }.isEmpty, plan.treeString)
+  }
+
+  test("q76/q174 LSH key stage: compiled MinHash kernel, no higher-order functions") {
+    import org.apache.spark.sql.catalyst.expressions.HigherOrderFunction
+    import org.apache.spark.sql.execution.WholeStageCodegenExec
+    import graft.functions.{LshBands, MinhashSignature, ShingleDigests, TokenDigests}
+    // the stage both queries share: LlmOps.dedupLabels keys the corpus here
+    val keys = graft.queries.LlmOps.lshKeys(Tables.documents(spark, sfDir))
+    val plan = keys.queryExecution.optimizedPlan
+    val exprs = plan.flatMap(_.expressions.flatMap(_.collect { case e => e }))
+    assert(exprs.collect { case h: HigherOrderFunction => h }.isEmpty, plan.treeString)
+    Seq(classOf[TokenDigests], classOf[ShingleDigests], classOf[MinhashSignature],
+      classOf[LshBands]).foreach { c =>
+      assert(exprs.exists(c.isInstance), s"no ${c.getSimpleName} in\n${plan.treeString}")
+    }
+    // the signature is computed inside a whole-stage codegen subtree
+    val stages = keys.queryExecution.executedPlan.collect { case w: WholeStageCodegenExec => w }
+    assert(stages.exists(_.child.exists(_.expressions.exists(_.exists(
+      _.isInstanceOf[MinhashSignature])))), keys.queryExecution.executedPlan.treeString)
   }
 }
