@@ -16,8 +16,9 @@ import graft.queries.Graph
   */
 object PlanDump {
   private val subplans: Map[String, (SparkSession, String) => DataFrame] = Map(
-    // q294/q380's layers: vote rounds 1-2 pinned, round 3 still lazy
-    "lp_vote_round" -> ((s, d) => Graph.lpLayersUnion(s, d, Graph.tradeAdjacency(s, d))))
+    // q294/q380's distributed layers (bound 0): vote rounds 1-2 pinned,
+    // round 3 still lazy
+    "lp_vote_round" -> ((s, d) => Graph.lpLayersUnion(s, d, Graph.tradeAdjacency(s, d), 0)))
 
   def main(args: Array[String]): Unit = {
     val outDir = args.headOption.getOrElse("plans/r19")

@@ -19,8 +19,9 @@ import scala.jdk.CollectionConverters._
   * SPARK_GRAFT_PROBE_ITERS (def 3) timed iterations. Prints per query the
   * median across the timed iterations of: wall seconds, whole-stage codegen
   * classes compiled, jobs, stages, tasks, summed task time, summed GC time,
-  * shuffle bytes; then, for each min-label fixpoint the last iteration ran
-  * ([[graft.operators.Fixpoint.Run]]), `path:edgeRows:rounds`. The last
+  * shuffle bytes; then, for each min-label fixpoint or label propagation
+  * the last iteration ran ([[graft.operators.Fixpoint.Run]]),
+  * `loop:path:entries:rounds`. The last
   * line gives the classes compiled over the whole run, the codegen cache
   * size, and heap after a full GC and metaspace.
   */
@@ -97,7 +98,7 @@ object Probe {
         samples.transpose.map(_.sorted.apply(iters / 2))
       println(f"$n%-38s $wall%7.2f $comp%8.0f $jobs%5.0f $stages%5.0f " +
         f"$tasks%6.0f $taskS%8.2f $gcS%6.2f $shufMb%7.1f " +
-        loops.map(r => s"${r.path}:${r.edgeRows}:${r.rounds}").mkString(","))
+        loops.mkString(","))
       Pinned.releaseAll(spark)
     }
     System.gc()

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.functions.{coalesce, col, lit, min, sum}
 import org.apache.spark.sql.types.{DataType, DecimalType, IntegerType, LongType, StructField, StructType}
+import scala.collection.mutable
 import scala.jdk.CollectionConverters._
 
 /** Connected components by min-label propagation — the one loop behind
@@ -19,8 +20,10 @@ import scala.jdk.CollectionConverters._
   *    over {v} ∪ neighbors(v), optionally followed by one pointer jump
   *    label(v) ← label(label(v)), until the labels stop falling.
   *
-  * Each call appends a [[Fixpoint.Run]] (path, edge rows, rounds) that
-  * [[graft.Probe]] reads back with [[Fixpoint.drainRuns]]. */
+  * Each call appends a [[Fixpoint.Run]] (loop, path, entries, rounds) that
+  * [[graft.Probe]] reads back with [[Fixpoint.drainRuns]]; label
+  * propagation ([[graft.queries.Graph.lpLayersUnion]]) records its calls
+  * here too and shares [[gather]]. */
 object Fixpoint {
 
   private val D38 = DecimalType(38, 0)
@@ -32,16 +35,21 @@ object Fixpoint {
     * driver heap. */
   val LocalRows: Int = 250000
 
-  /** One call: `path` is "local" or "distributed"; `edgeRows` the
-    * self-looped edge rows gathered (more than the bound when the relation
-    * was too large, -1 when nothing was gathered); `rounds` the distributed
-    * rounds (0 on the local path). */
-  case class Run(path: String, edgeRows: Long, rounds: Int)
+  /** One loop call: `loop` is "minLabel" or "lp" (label propagation,
+    * [[graft.queries.Graph.lpLayersUnion]]); `path` is "local" or
+    * "distributed"; `entries` the entries [[gather]] counted (self-looped
+    * edge rows for minLabel, adjacency entries for lp): more than the bound
+    * when the input was too large, -1 when nothing was gathered (or, for
+    * lp, a row held a null); `rounds` the rounds run (the union-find runs
+    * none). */
+  case class Run(loop: String, path: String, entries: Long, rounds: Int) {
+    override def toString: String = s"$loop:$path:$entries:$rounds"
+  }
 
   private val KeptRuns = 64
   private val runs = scala.collection.mutable.Queue.empty[Run]
 
-  private def record(r: Run): Unit = runs.synchronized {
+  private[graft] def record(r: Run): Unit = runs.synchronized {
     runs.enqueue(r)
     if (runs.size > KeptRuns) runs.dequeue()
   }
@@ -86,14 +94,22 @@ object Fixpoint {
     val ed = edges.select(col("src"), col("dst"))
       .unionByName(nodes.select(col("node").as("src"), col("node").as("dst")))
     val nodeType = nodes.schema("node").dataType
-    val gathered =
-      if (localRows <= 0 || (nodeType != IntegerType && nodeType != LongType)) None
-      else Some(gather(ed, localRows, nodeType == IntegerType))
+    val int = nodeType == IntegerType
+    val (edgeRows, gathered) =
+      if (localRows <= 0 || (!int && nodeType != LongType)) (-1L, None)
+      else gather(ed, localRows) { (r, out) =>
+        if (r.isNullAt(0) || r.isNullAt(1)) 0
+        else {
+          if (int) { out += r.getInt(0); out += r.getInt(1) }
+          else { out += r.getLong(0); out += r.getLong(1) }
+          1
+        }
+      }
     gathered match {
-      case Some(pairs) if pairs.length / 2 <= localRows =>
-        record(Run("local", pairs.length / 2, 0))
+      case Some(pairs) =>
+        record(Run("minLabel", "local", edgeRows, 0))
         unionFind(ed, pairs, nodeType)
-      case _ =>
+      case None =>
         var labels = nodes.select(col("node"), col("node").as("lab"))
           .localCheckpoint(eager = false)
         def labelSum(): java.math.BigDecimal = labels
@@ -108,37 +124,45 @@ object Fixpoint {
           prevSum = curSum
           curSum = labelSum()
         }
-        record(Run("distributed", gathered.fold(-1L)(_.length / 2L), rounds))
+        record(Run("minLabel", "distributed", edgeRows, rounds))
         labels
     }
   }
 
-  /** The first `bound + 1` self-looped edges with both ends set, as
-    * interleaved (src, dst) ids, in one job: each task ships at most
-    * `bound + 1` pairs and the driver stops keeping results once it holds
-    * more than `bound`. (A `limit` + `collect` runs several jobs as it
-    * scales up the partitions it reads, and its whole-stage code missed
-    * the codegen cache on every run.) */
-  private def gather(ed: DataFrame, bound: Int, int: Boolean): Array[Long] = {
-    val cap = if (bound == Int.MaxValue) bound else bound + 1
-    val parts = scala.collection.mutable.ArrayBuffer.empty[Array[Long]]
-    var kept = 0L
-    val rdd = ed.queryExecution.toRdd
-    ed.sparkSession.sparkContext.runJob(rdd, (rows: Iterator[InternalRow]) => {
-      val out = Array.newBuilder[Long]
-      var n = 0
-      while (n < cap && rows.hasNext) {
-        val r = rows.next()
-        if (!r.isNullAt(0) && !r.isNullAt(1)) {
-          if (int) { out += r.getInt(0); out += r.getInt(1) }
-          else { out += r.getLong(0); out += r.getLong(1) }
-          n += 1
+  /** Gathers `df` to the driver in one job when its rows count at most
+    * `bound` entries. `encode` appends one row's longs to the builder and
+    * returns the entries the row counts, or a negative number when the row
+    * cannot be gathered (a null key). Each task ships at most `bound`
+    * entries: past the bound, or at a row it cannot encode, it ships only
+    * its count. The driver stops keeping parts once the total passes the
+    * bound. Returns the entries counted (more than `bound` when `df` is too
+    * large, -1 at a row that cannot be encoded) and, when they fit, the
+    * encoded longs, part by part in the order the tasks finished.
+    *
+    * It plans no `limit`: a `limit` + `collect` runs several jobs as it
+    * scales up the partitions it reads, and its whole-stage class missed
+    * the codegen cache on every run. */
+  private[graft] def gather(df: DataFrame, bound: Int)(
+      encode: (InternalRow, mutable.ArrayBuilder.ofLong) => Int)
+      : (Long, Option[Array[Long]]) = {
+    val parts = mutable.ArrayBuffer.empty[Array[Long]]
+    var entries = 0L
+    df.sparkSession.sparkContext.runJob(df.queryExecution.toRdd,
+      (rows: Iterator[InternalRow]) => {
+        val out = new mutable.ArrayBuilder.ofLong
+        var n = 0L
+        while (n >= 0 && n <= bound && rows.hasNext) {
+          val e = encode(rows.next(), out)
+          n = if (e < 0) -1 else n + e
         }
-      }
-      out.result()
-    }, (_: Int, part: Array[Long]) =>
-      if (kept <= bound) { parts += part; kept += part.length / 2 })
-    parts.flatten.toArray
+        (n, if (n < 0 || n > bound) null else out.result())
+      },
+      (_: Int, part: (Long, Array[Long])) =>
+        if (entries >= 0 && entries <= bound) {
+          entries = if (part._1 < 0) -1 else entries + part._1
+          if (entries >= 0 && entries <= bound) parts += part._2
+        })
+    (entries, if (entries >= 0 && entries <= bound) Some(Array.concat(parts.toSeq: _*)) else None)
   }
 
   /** Min-id union-find over the gathered (src, dst) pairs: ids are indexed

@@ -1,9 +1,11 @@
 package graft.queries
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.DecimalType
+import org.apache.spark.sql.types.{ArrayType, DecimalType, LongType, StringType,
+  StructField, StructType}
+import scala.jdk.CollectionConverters._
 
 import graft.Tables
 import Portable._
@@ -743,36 +745,165 @@ object Graph {
     * builds the seed filter and sizes the packed per-node vote counters. */
   val LpLabelK = 5
 
-  /** Semi-supervised label propagation — the CLASSIFICATION member of
-    * the graph family (components assign CONNECTIVITY q76, PageRank
-    * VALUES q197, BFS REACH q288; this assigns CLASSES): suppliers in
-    * nations 0–4 seed their nation id, and labels spread synchronously
-    * over the undirected trade graph for 3 unrolled rounds — each
-    * unlabeled node adopts the MAJORITY label among its labeled
-    * neighbors (ties → smallest label; labeled nodes never change, the
-    * "clamped seeds" variant, so the result is deterministic and
-    * round-monotone). On the bipartite graph the rounds alternate
-    * frontiers: customers of seed suppliers, then non-seed suppliers,
-    * then second-ring customers — genuinely multi-round. Output is the
-    * (node-kind, label) census, unlabeled reported as label −1.
-    * Scale: state is ONE label per node — |V| rows at ANY seed count
-    * (seeding a fraction of a dimension is safe here precisely where
-    * q288's per-seed pair state was not; nothing is |seeds|-
-    * multiplied). Per round: one keyed join against the pinned
-    * src-partitioned edges (exchange-free), a (node, label) count, a
-    * struct-max majority pick (groupBy, not a window), then a CHAINED
-    * anti-join over the prior LAYERS (the round-14 q288/q290 rework
-    * pattern: the labeled set is the disjoint union of per-round layers,
-    * each already pinned hash-on-node, so the anti chain is exchange-free
-    * in the picks agg's own tasks and the old re-pinned `labeled` union —
-    * a full |labeled| checkpoint per round — is gone). The unlabeled
-    * census is |nodes per kind| MINUS |labeled per kind| (three tiny
-    * aggs), not an anti-join over the union. Pins per run: seeds + rounds
-    * 1–2 (round 3's layer has a single consumer). The census output is
-    * ≤ kinds·labels rows. */
+  /** The most trade-adjacency entries (neighbours listed in `dsts`; a row
+    * with none counts one) label propagation gathers to run its rounds on
+    * the driver. The bound is a driver-heap budget: an entry is one long
+    * shipped by its task (8 B, held twice while the result deserializes),
+    * 8 B in the flattened array, 8 B in the sorted id copy and a 4 B
+    * neighbour index, ~40 B at the peak. A node adds ~200 B (id, label,
+    * vote counters, its output row) but holds tens to hundreds of entries
+    * on the trade graph (see [[tradeAdjacency]]). So 1,000,000 entries
+    * hold under ~45 MB of driver heap, the budget of
+    * [[graft.operators.Fixpoint.LocalRows]]. */
+  val LpLocalEntries: Int = 1000000
+
+  /** How the 3 clamped rounds finished: on the driver, with the arrays
+    * the census reads, or as distributed layers. */
+  private[graft] sealed trait LpLayers
+
+  /** `nodes`: every adjacency `src`; `labeled`/`labels`: the labeled
+    * nodes, ascending, and their labels. */
+  private[graft] final case class LpLocal(nodes: Array[Long], labeled: Array[Long],
+      labels: Array[Long]) extends LpLayers {
+    /** `(node, label)`, as the distributed layers' union. */
+    def frame(s: SparkSession): DataFrame =
+      s.createDataFrame(labeled.indices.map(i => Row(labeled(i), labels(i))).asJava,
+        StructType(Seq(StructField("node", LongType), StructField("label", LongType))))
+
+    /** q294's `(kind, label, n_nodes)` census, ordered by kind and label:
+      * labeled nodes per (kind, label), unlabeled nodes per kind as −1. */
+    def census(s: SparkSession): DataFrame = {
+      def kind(v: Long): String = if (v % 2 == 0) "c" else "s"
+      val lab = labeled.indices.groupMapReduce(i => (kind(labeled(i)), labels(i)))(_ => 1L)(_ + _)
+      val nLab = lab.toSeq.groupMapReduce(_._1._1)(_._2)(_ + _)
+      val unl = nodes.groupMapReduce(kind)(_ => 1L)(_ + _).toSeq.collect {
+        case (k, n) if n - nLab.getOrElse(k, 0L) > 0L => ((k, -1L), n - nLab.getOrElse(k, 0L))
+      }
+      val rows = (lab.toSeq ++ unl).sortBy(_._1).map { case ((k, l), n) => Row(k, l, n) }
+      s.createDataFrame(rows.asJava, StructType(Seq(StructField("kind", StringType, false),
+        StructField("label", LongType), StructField("n_nodes", LongType, false))))
+    }
+  }
+
+  private[graft] final case class LpDistributed(labeled: DataFrame) extends LpLayers
+
   /** q294's layered propagation, factored for reuse: the per-node
     * labeled set (node, label) after the 3 clamped rounds — the census
-    * consumer is q294, the modularity scorer q380. DELTA voting: only
+    * consumer is q294, the modularity scorer q380. Two paths reach it:
+    *
+    *  - local: when the adjacency holds at most [[LpLocalEntries]] entries
+    *    and no null `src` or neighbour, one job gathers it
+    *    ([[graft.operators.Fixpoint.gather]]), the seed panel is
+    *    collected, and the rounds run on the driver; `(node, label)` comes
+    *    back as a local frame.
+    *  - distributed: otherwise the rounds run as Spark jobs, below.
+    *
+    * Each call records a [[graft.operators.Fixpoint.Run]] ("lp"). */
+  private[graft] def lpLayersUnion(s: SparkSession, dir: String,
+      edges: DataFrame): DataFrame = lpLayersUnion(s, dir, edges, LpLocalEntries)
+
+  /** [[lpLayersUnion]] with the local bound as a parameter: 0 always runs
+    * the distributed rounds, `Int.MaxValue` runs them on the driver
+    * whenever no key is null. Only bigint node ids (the trade graph's)
+    * take the local path. */
+  private[graft] def lpLayersUnion(s: SparkSession, dir: String,
+      edges: DataFrame, bound: Int): DataFrame = lpLayers(s, dir, edges, bound) match {
+    case l: LpLocal => l.frame(s)
+    case LpDistributed(labeled) => labeled
+  }
+
+  private def lpLayers(s: SparkSession, dir: String, edges: DataFrame,
+      bound: Int): LpLayers = {
+    import s.implicits._
+    import graft.operators.Fixpoint
+    val panel = Tables.supplier(s, dir).filter($"s_nationkey" < LpLabelK)
+      .select(($"s_suppkey" * 2 + 1).as("node"), $"s_nationkey".cast("long").as("label"))
+    val (entries, gathered) = edges.schema("dsts").dataType match {
+      case ArrayType(LongType, _) if bound > 0 && edges.schema("src").dataType == LongType =>
+        Fixpoint.gather(edges.select($"src", $"dsts"), bound) { (r, out) =>
+          if (r.isNullAt(0) || r.isNullAt(1)) -1
+          else {
+            val a = r.getArray(1)
+            val n = a.numElements()
+            out += r.getLong(0)
+            out += n
+            var i = 0
+            while (i < n && !a.isNullAt(i)) { out += a.getLong(i); i += 1 }
+            if (i < n) -1 else math.max(n, 1)
+          }
+        }
+      case _ => (-1L, None)
+    }
+    val local = gathered.flatMap { adj =>
+      lpLocal(adj, panel.filter($"node".isNotNull).as[(Long, Long)].collect())
+    }
+    Fixpoint.record(Fixpoint.Run("lp", if (local.isDefined) "local" else "distributed",
+      entries, 3))
+    local.getOrElse(LpDistributed(lpDistributed(s, edges, panel)))
+  }
+
+  /** The 3 clamped rounds over a gathered adjacency (`src`, `n`, then `n`
+    * neighbours, per row) and the seed panel, with the distributed rounds'
+    * exact rules. None when a `src` repeats or a seed node is seeded twice:
+    * the distributed joins multiply such rows, so they run there. */
+  private def lpLocal(adj: Array[Long], seeds: Array[(Long, Long)]): Option[LpLocal] = {
+    val rowAt = Array.newBuilder[Int]
+    var p = 0
+    while (p < adj.length) { rowAt += p; p += 2 + adj(p + 1).toInt }
+    val rows = rowAt.result()
+    val nodes = rows.map(adj(_))
+    val sortedNodes = nodes.sorted
+    val ids = {
+      val all = adj.clone()
+      rows.foreach(r => all(r + 1) = adj(r)) // drop the counts, keep every id
+      java.util.Arrays.sort(all)
+      val b = Array.newBuilder[Long]
+      for (i <- all.indices if i == 0 || all(i) != all(i - 1)) b += all(i)
+      b.result()
+    }
+    def at(v: Long): Int = java.util.Arrays.binarySearch(ids, v)
+    val graphSeeds = seeds.filter(sd => java.util.Arrays.binarySearch(sortedNodes, sd._1) >= 0)
+    val repeats = (1 until sortedNodes.length).exists(i => sortedNodes(i) == sortedNodes(i - 1)) ||
+      graphSeeds.map(_._1).distinct.length < graphSeeds.length
+    if (repeats) None
+    else {
+      // each id's neighbour indices; ids that are only neighbours have none
+      val nbrs = Array.fill(ids.length)(Array.emptyIntArray)
+      rows.foreach(r => nbrs(at(adj(r))) = Array.tabulate(adj(r + 1).toInt)(j => at(adj(r + 2 + j))))
+      val has = new Array[Boolean](ids.length)
+      val label = new Array[Long](ids.length)
+      var frontier = graphSeeds.map { case (v, l) =>
+        val i = at(v); has(i) = true; label(i) = l; i }
+      val votes = new Array[Int](ids.length * LpLabelK)
+      val voted = new Array[Boolean](ids.length)
+      (1 to 3).foreach { _ =>
+        // only the previous round's layer votes; a vote outside the label
+        // domain counts for no label, yet its node is still picked
+        val touched = Array.newBuilder[Int]
+        for (f <- frontier; v <- nbrs(f)) {
+          if (!voted(v)) { voted(v) = true; touched += v }
+          if (label(f) >= 0 && label(f) < LpLabelK) votes(v * LpLabelK + label(f).toInt) += 1
+        }
+        frontier = touched.result().filter { v =>
+          voted(v) = false
+          val fresh = !has(v)
+          if (fresh) {
+            // highest count, then smallest label
+            var best = 0
+            for (k <- 1 until LpLabelK) if (votes(v * LpLabelK + k) > votes(v * LpLabelK + best)) best = k
+            has(v) = true
+            label(v) = best
+          }
+          java.util.Arrays.fill(votes, v * LpLabelK, (v + 1) * LpLabelK, 0)
+          fresh
+        }
+      }
+      val labeled = ids.indices.filter(has).toArray
+      Some(LpLocal(nodes, labeled.map(ids), labeled.map(label)))
+    }
+  }
+
+  /** The distributed rounds. DELTA voting: only
     * the PREVIOUS round's newly-labeled nodes cast votes. Equivalent to
     * voting from the full labeled set because round r labels EVERY
     * unlabeled node with ≥1 labeled neighbor, so a node still unlabeled
@@ -783,15 +914,11 @@ object Graph {
     * throughout (round-15): the seed join inherits the adjacency's
     * hash(node) placement, and each round's picks end in their own
     * groupBy(node) exchange carried through the anti-chain. */
-  private[graft] def lpLayersUnion(s: SparkSession, dir: String,
-      edges: DataFrame): DataFrame = {
+  private def lpDistributed(s: SparkSession, edges: DataFrame,
+      panel: DataFrame): DataFrame = {
     import s.implicits._
     val nodes = edges.select($"src".as("node"))
-    val seeds = nodes.join(
-      Tables.supplier(s, dir).filter($"s_nationkey" < LpLabelK)
-        .select(($"s_suppkey" * 2 + 1).as("node"),
-          $"s_nationkey".cast("long").as("label")),
-      Seq("node"))
+    val seeds = nodes.join(panel, Seq("node"))
     var layers = List(graft.operators.Pinned.checkpointAsIs(seeds, "node"))
     (1 to 3).foreach { round =>
       val frontier = layers.head
@@ -822,30 +949,71 @@ object Graph {
     layers.reduce(_ unionAll _)
   }
 
-  def labelPropagation(s: SparkSession, dir: String): DataFrame = {
+  /** Semi-supervised label propagation — the CLASSIFICATION member of
+    * the graph family (components assign CONNECTIVITY q76, PageRank
+    * VALUES q197, BFS REACH q288; this assigns CLASSES): suppliers in
+    * nations 0–4 seed their nation id, and labels spread synchronously
+    * over the undirected trade graph for 3 unrolled rounds — each
+    * unlabeled node adopts the MAJORITY label among its labeled
+    * neighbors (ties → smallest label; labeled nodes never change, the
+    * "clamped seeds" variant, so the result is deterministic and
+    * round-monotone). On the bipartite graph the rounds alternate
+    * frontiers: customers of seed suppliers, then non-seed suppliers,
+    * then second-ring customers — genuinely multi-round. Output is the
+    * (node-kind, label) census, unlabeled reported as label −1.
+    * Scale: state is ONE label per node — |V| rows at ANY seed count
+    * (seeding a fraction of a dimension is safe here precisely where
+    * q288's per-seed pair state was not; nothing is |seeds|-
+    * multiplied). Per round: one keyed join against the pinned
+    * src-partitioned edges (exchange-free), a (node, label) count, a
+    * struct-max majority pick (groupBy, not a window), then a CHAINED
+    * anti-join over the prior LAYERS (the round-14 q288/q290 rework
+    * pattern: the labeled set is the disjoint union of per-round layers,
+    * each already pinned hash-on-node, so the anti chain is exchange-free
+    * in the picks agg's own tasks and the old re-pinned `labeled` union —
+    * a full |labeled| checkpoint per round — is gone). The unlabeled
+    * census is |nodes per kind| MINUS |labeled per kind| (three tiny
+    * aggs), not an anti-join over the union. Pins per run: seeds + rounds
+    * 1–2 (round 3's layer has a single consumer). The census output is
+    * ≤ kinds·labels rows.
+    *
+    * Two paths, as [[lpLayersUnion]]'s: with the adjacency within
+    * [[LpLocalEntries]] entries the rounds and this census run on the
+    * driver from the gathered arrays and come back as a local frame;
+    * otherwise the census aggregates the distributed layers. */
+  def labelPropagation(s: SparkSession, dir: String): DataFrame =
+    labelPropagation(s, dir, LpLocalEntries)
+
+  /** [[labelPropagation]] with the local bound as a parameter, as
+    * [[lpLayersUnion]]'s. */
+  private[graft] def labelPropagation(s: SparkSession, dir: String,
+      bound: Int): DataFrame = {
     import s.implicits._
     val edges = tradeAdjacency(s, dir)
-    // symmetric adjacency: src covers every node, already distinct
-    val nodes = edges.select($"src".as("node"))
-    val labeled = lpLayersUnion(s, dir, edges)
-    // lab is ≤ kinds·labels rows but is consumed twice (output + the
-    // kind totals) — checkpoint the TINY census, not the big union, so
-    // round 3's lazy layer is evaluated exactly once
-    def kind(c: Column): Column =
-      when(c % 2 === 0, lit("c")).otherwise(lit("s"))
-    val lab = labeled
-      .groupBy(kind($"node").as("kind"), $"label")
-      .agg(count(lit(1)).as("n_nodes"))
-      .localCheckpoint(eager = false)
-    val labK = lab.groupBy($"kind").agg(sum($"n_nodes").as("n_lab"))
-    val unl = nodes
-      .groupBy(kind($"node").as("kind"))
-      .agg(count(lit(1)).as("n_all"))
-      .join(broadcast(labK), Seq("kind"), "left")
-      .select($"kind", lit(-1L).as("label"),
-        ($"n_all" - coalesce($"n_lab", lit(0L))).as("n_nodes"))
-      .filter($"n_nodes" > 0L)
-    lab.unionByName(unl).orderBy($"kind", $"label")
+    lpLayers(s, dir, edges, bound) match {
+      case l: LpLocal => l.census(s)
+      case LpDistributed(labeled) =>
+        // symmetric adjacency: src covers every node, already distinct
+        val nodes = edges.select($"src".as("node"))
+        // lab is ≤ kinds·labels rows but is consumed twice (output + the
+        // kind totals) — checkpoint the TINY census, not the big union, so
+        // round 3's lazy layer is evaluated exactly once
+        def kind(c: Column): Column =
+          when(c % 2 === 0, lit("c")).otherwise(lit("s"))
+        val lab = labeled
+          .groupBy(kind($"node").as("kind"), $"label")
+          .agg(count(lit(1)).as("n_nodes"))
+          .localCheckpoint(eager = false)
+        val labK = lab.groupBy($"kind").agg(sum($"n_nodes").as("n_lab"))
+        val unl = nodes
+          .groupBy(kind($"node").as("kind"))
+          .agg(count(lit(1)).as("n_all"))
+          .join(broadcast(labK), Seq("kind"), "left")
+          .select($"kind", lit(-1L).as("label"),
+            ($"n_all" - coalesce($"n_lab", lit(0L))).as("n_nodes"))
+          .filter($"n_nodes" > 0L)
+        lab.unionByName(unl).orderBy($"kind", $"label")
+    }
   }
 
   /** Modularity census (Newman & Girvan 2004, public definition) over

@@ -554,12 +554,82 @@ class OperatorPropertiesSpec extends SparkSpec {
       (3L, 5L), (4L, 6L))
       .toDF("l_orderkey", "l_suppkey")
       .coalesce(1).write.mode("overwrite").parquet(s"$dir/lineitem.parquet")
-    val out = graft.queries.Graph.labelPropagation(spark, dir)
-      .collect().map(r => ((r.getString(0), r.getLong(1)), r.getLong(2))).toMap
     val expected = Map(
       ("c", 1L) -> 1L, ("c", 2L) -> 2L, ("c", -1L) -> 1L,
       ("s", 1L) -> 2L, ("s", 2L) -> 3L, ("s", -1L) -> 1L)
-    assert(out === expected)
+    // bound 0: the distributed rounds; Int.MaxValue: the rounds on the driver
+    for (bound <- Seq(0, Int.MaxValue)) {
+      val out = graft.queries.Graph.labelPropagation(spark, dir, bound)
+        .collect().map(r => ((r.getString(0), r.getLong(1)), r.getLong(2))).toMap
+      assert(out === expected, s"bound=$bound")
+    }
+  }
+
+  /** A trade-graph fixture: `trades` (customer, supplier) pairs, one order
+    * per customer key (a `None` customer gives a null `o_custkey`), and the
+    * supplier panel (suppkey, nation). */
+  private def lpFixture(trades: Seq[(Option[Long], Long)], sup: Seq[(Long, Long)]): String = {
+    val dir = java.nio.file.Files.createTempDirectory("lp_prop").toString
+    val orders = trades.map(_._1).distinct.zipWithIndex.map { case (c, i) => (i + 1L, c) }
+    val orderOf = orders.map(_.swap).toMap
+    sup.toDF("s_suppkey", "s_nationkey")
+      .coalesce(1).write.mode("overwrite").parquet(s"$dir/supplier.parquet")
+    orders.toDF("o_orderkey", "o_custkey")
+      .coalesce(1).write.mode("overwrite").parquet(s"$dir/orders.parquet")
+    trades.map { case (c, sk) => (orderOf(c), sk) }.toDF("l_orderkey", "l_suppkey")
+      .coalesce(1).write.mode("overwrite").parquet(s"$dir/lineitem.parquet")
+    dir
+  }
+
+  test("label propagation: driver rounds equal the distributed rounds on random bipartite graphs") {
+    import graft.operators.Fixpoint
+    import graft.queries.Graph
+    val random = for {
+      nc <- Gen.choose(1, 12)
+      ns <- Gen.choose(1, 10)
+      es <- Gen.listOf(Gen.zip(Gen.choose(1L, nc.toLong), Gen.choose(1L, ns.toLong)))
+      nations <- Gen.listOfN(ns, Gen.choose(0L, 7L))
+    } yield (es.distinct.map { case (c, sk) => (Option(c), sk) },
+      nations.zipWithIndex.map { case (n, i) => (i + 1L, n) })
+    // c1 ties 1 against 2; c2 ties 3,3 against 0,0; c3–s7 has no seed;
+    // s8 → c4 → s9 → c5 needs all 3 rounds and leaves s10 unlabeled; s11
+    // is a seed with no trades, so no graph node
+    val fixed = (
+      Seq(1L -> 1L, 1L -> 2L, 2L -> 3L, 2L -> 4L, 2L -> 5L, 2L -> 6L, 3L -> 7L,
+        4L -> 8L, 4L -> 9L, 5L -> 9L, 5L -> 10L).map { case (c, sk) => (Option(c), sk) },
+      Seq(1L -> 1L, 2L -> 2L, 3L -> 3L, 4L -> 3L, 5L -> 0L, 6L -> 0L, 7L -> 6L,
+        8L -> 4L, 9L -> 5L, 10L -> 7L, 11L -> 2L))
+    // each path's schema, then its rows (the census in its declared order)
+    def layers(dir: String, edges: org.apache.spark.sql.DataFrame, bound: Int) = {
+      val df = Graph.lpLayersUnion(spark, dir, edges, bound)
+      (df.schema, df.collect().map(r => r.getLong(0) -> r.getLong(1)).sorted.toSeq)
+    }
+    def census(dir: String, bound: Int) = {
+      val df = Graph.labelPropagation(spark, dir, bound)
+      (df.schema, df.collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2))).toSeq)
+    }
+    for ((trades, sup) <- fixed +: samples(random, 8)) {
+      val dir = lpFixture(trades, sup)
+      val adj = Graph.tradeAdjacency(spark, dir)
+      // a seed node with no neighbours: s11 as an adjacency row of its own,
+      // pinned hash-placed on src as the distributed rounds require
+      val lonely = graft.operators.Pinned.partitionedCheckpoint(
+        adj.unionByName(Seq((23L, Seq.empty[Long])).toDF("src", "dsts")), $"src")
+      Fixpoint.drainRuns()
+      assert(census(dir, Int.MaxValue) === census(dir, 0), s"trades=$trades sup=$sup")
+      assert(layers(dir, adj, Int.MaxValue) === layers(dir, adj, 0), s"trades=$trades sup=$sup")
+      assert(layers(dir, lonely, Int.MaxValue) === layers(dir, lonely, 0))
+      assert(Fixpoint.drainRuns().map(r => (r.loop, r.path)) === Seq(
+        ("lp", "local"), ("lp", "distributed"), ("lp", "local"), ("lp", "distributed"),
+        ("lp", "local"), ("lp", "distributed")))
+    }
+    // a null customer key is an adjacency row with a null src: the census
+    // counts it as an unlabeled "s", so the driver never guesses and the
+    // distributed rounds run at every bound
+    val dir = lpFixture(fixed._1 :+ (None -> 1L), fixed._2)
+    assert(census(dir, Int.MaxValue) === census(dir, 0))
+    assert(Fixpoint.drainRuns().map(r => (r.loop, r.path, r.entries)) ===
+      Seq(("lp", "distributed", -1L), ("lp", "distributed", -1L)))
   }
 
   test("q294 census conserves nodes and clamps seeds on the fixture graph") {
@@ -5791,7 +5861,8 @@ class OperatorPropertiesSpec extends SparkSpec {
       val path = if (bound == 0) "distributed" else "local"
       val runs = Fixpoint.drainRuns()
       assert(runs.map(_.path) === Seq(path, path, path), s"bound=$bound")
-      assert(runs.map(_.edgeRows) ===
+      assert(runs.map(_.loop) === Seq("minLabel", "minLabel", "minLabel"))
+      assert(runs.map(_.entries) ===
         (if (bound == 0) Seq(-1L, -1L, -1L) else Seq(12L, 12L, 0L)))
       assert(runs.forall(r => (r.rounds == 0) == (path == "local")), runs)
     }
@@ -5801,6 +5872,6 @@ class OperatorPropertiesSpec extends SparkSpec {
       jump = false, 11)
     assert(over.collect().map(r => r.getInt(0) -> r.getInt(1)).toMap === expect)
     val run = Fixpoint.drainRuns()
-    assert(run.map(r => (r.path, r.edgeRows)) === Seq(("distributed", 12L)), run)
+    assert(run.map(r => (r.loop, r.path, r.entries)) === Seq(("minLabel", "distributed", 12L)), run)
   }
 }

@@ -904,14 +904,31 @@ class PlanAssertionsSpec extends SparkSpec {
   test("q294/q380 label propagation: one vnode-keyed aggregate per vote round") {
     import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Window}
     import graft.queries.Graph
-    // the layers both queries share; rounds 1-2 are pinned, round 3 is lazy
-    val plan = Graph.lpLayersUnion(spark, sfDir, Graph.tradeAdjacency(spark, sfDir))
+    // the layers both queries share on the distributed path (bound 0);
+    // rounds 1-2 are pinned, round 3 is lazy
+    val plan = Graph.lpLayersUnion(spark, sfDir, Graph.tradeAdjacency(spark, sfDir), 0)
       .queryExecution.optimizedPlan
     val aggs = plan.collect { case a: Aggregate => a }
     assert(aggs.size === 1, plan.treeString)
     assert(aggs.head.groupingExpressions.flatMap(_.references).map(_.name) ===
       Seq("vnode"))
     assert(plan.collect { case w: Window => w }.isEmpty, plan.treeString)
+  }
+
+  test("q294/q380 label propagation finishes on the driver at the default bound") {
+    import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
+    import graft.operators.Fixpoint
+    import graft.queries.Graph
+    Fixpoint.drainRuns()
+    val census = SparkEntry.queries("q294_label_propagation")(spark, sfDir)
+    val layers = Graph.lpLayersUnion(spark, sfDir, Graph.tradeAdjacency(spark, sfDir))
+    Seq(census, layers).foreach { df =>
+      assert(df.queryExecution.optimizedPlan.isInstanceOf[LocalRelation],
+        df.queryExecution.optimizedPlan.treeString)
+    }
+    val runs = Fixpoint.drainRuns()
+    assert(runs.map(r => (r.loop, r.path, r.rounds)) === Seq(("lp", "local", 3), ("lp", "local", 3)))
+    assert(runs.forall(r => r.entries > 0 && r.entries <= Graph.LpLocalEntries), runs)
   }
 
   test("q76/q174 LSH key stage: compiled MinHash kernel, no higher-order functions") {
